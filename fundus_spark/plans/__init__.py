@@ -13,6 +13,7 @@ from .job import JobResult, run_extraction_job
 from .session import build_session
 
 __all__ = [
+    "CurateJobResult",
     "EXTRACTION_SCHEMA",
     "JobResult",
     "assemble_conversations",
@@ -26,5 +27,6 @@ __all__ = [
     "stream_frozen_relations",
     "write_frozen_state",
     "ordered_turns",
+    "run_curate_job",
     "run_extraction_job",
 ]

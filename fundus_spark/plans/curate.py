@@ -1,22 +1,47 @@
-"""End-to-end corpus curation: the full training-data assembly chain
-composed from the shipped operators, as one declarative plan.
+"""Corpus curation: the training-data assembly chain, written once as
+:func:`_curate` and run by three thin drivers.
 
     raw documents
-      -> quality gate        (Gopher repetition + length filters)
-      -> exact dedup         (first-wins on normalized-text hash)
-      -> near-dup dedup      (LSH candidates -> Jaccard verify ->
-                              connected components -> survivors)
-      -> decontamination     (drop docs colliding with the eval set's
-                              n-grams; benchmark side broadcast)
-      -> split assignment    (deterministic train/val/test buckets)
-      -> sequence packing    (per-shard concat-and-chunk offsets)
+      -> gated      mojibake repair, boilerplate-line removal, length +
+                    Gopher repetition gate, trained quality classifier
+      -> deduped    exact dedup (first-wins on normalized-text hash),
+                    minus fingerprints already in a frozen corpus, then
+                    CCNet perplexity tiering
+      -> survivors  near-dup dedup: LSH candidates -> Jaccard verify ->
+                    connected components -> survivors; against a frozen
+                    corpus, the banded probe + cluster adoption of
+                    :func:`operators.incremental_assign` instead
+      -> final      decontamination vs the eval set (benchmark side
+                    broadcast), deterministic train/val/test split,
+                    per-shard sequence packing
 
-Every stage is the scale-correct shape documented on its operator:
-the quality gate and split are narrow zero-shuffle maps, exact dedup
-is one map-side-combinable aggregation, the near-dup chain is banded
-(never all-pairs) with a broadcast label join, decontamination
-broadcasts the benchmark shingles, and packing shuffles once on the
-shard key. No stage collects to the driver.
+The stages always run in that order, and the signature of
+:func:`_curate` is the one place the chain's options and defaults are
+declared. A driver chooses only its inputs and a boundary policy: a
+callable ``(stage_name, build) -> DataFrame`` the chain calls once per
+named stage, with ``build`` a zero-argument function that builds the
+stage's relation. Passing the builder rather than the relation lets a
+policy skip it: building the survivors stage runs the connected-
+component rounds, which a resumed job must not repeat.
+
+* :func:`curate_corpus` — the full chain, in session. The ``deduped``
+  and ``survivors`` boundaries feed several consumers each, so they are
+  ``localCheckpoint``-ed when ``materialize_stages`` (the default) and
+  passed through otherwise; ``gated`` and ``final`` pass through.
+* :func:`curate_increment` — the same in-session policy, with a frozen
+  corpus as input: the near-dup stage becomes the frozen-fingerprint
+  anti-join plus ``incremental_assign``. The near-dup implementation is
+  read from that input, never from a flag.
+* :func:`plans.curate_job.run_curate_job` — every boundary is written
+  to the lake and committed to a manifest, so a re-submit reads
+  committed stages back instead of rebuilding them.
+
+Every stage is the scale-correct shape documented on its operator: the
+gates and split are narrow zero-shuffle maps, exact dedup is one
+map-side-combinable aggregation, the near-dup chain is banded (never
+all-pairs) with a size-guarded label join, decontamination broadcasts
+the benchmark shingles, and packing shuffles once on the shard key. No
+stage collects to the driver.
 
 The reference has no curation surface (it emits articles one by one;
 `crawler.py` dedups by exact URL only) — this is the 100 TB
@@ -25,28 +50,32 @@ generalization the training pipeline needs.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+import inspect
+from typing import Callable, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import (
+    ccnet_perplexity_buckets,
     contamination_flags,
     dedup_survivors,
     exact_dedup,
+    incremental_assign,
+    line_dedup,
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
     pack_by_budget,
+    quality_classifier_score,
     repetition_score,
     split_assign,
 )
+from ..operators.adaptive import is_cheap_rescan
 from ..operators.dedup import shingle_relation
+from ..operators.textclean import fix_mojibake_col
 
-
-# shared plan predicate (moved to operators.adaptive in round 8 so the
-# Bloom/sketch operators can use it without importing plans); the name
-# here is kept for existing callers/tests
-from ..operators.adaptive import is_cheap_rescan as _is_cheap_rescan  # noqa: E402
+# (stage_name, build) -> the relation the next stage reads
+Boundary = Callable[[str, Callable[[], DataFrame]], DataFrame]
 
 
 def _check_ccnet_drop_tiers(ccnet_drop_tiers: Sequence[str], n_buckets: int) -> None:
@@ -96,9 +125,76 @@ def decontaminate(
     return survivors.join(side, id_col, "left_anti")
 
 
-def curate_corpus(
+def _in_session(materialize_stages: bool) -> Boundary:
+    """The boundary policy of :func:`curate_corpus` and
+    :func:`curate_increment`. ``deduped`` feeds four branches (LSH
+    shingles, Jaccard sizes, survivor join, contamination shingles) and
+    ``survivors`` feeds the contamination check and the split/pack
+    tail, so materializing those two runs each upstream once instead of
+    per branch — exactly what a production pipeline does by writing
+    each stage to the lake (:mod:`plans.curate_job`)."""
+
+    def boundary(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        out = build()
+        if materialize_stages and name in ("deduped", "survivors"):
+            return out.localCheckpoint(eager=True)
+        return out
+
+    return boundary
+
+
+def _drop_frozen_fingerprints(
+    deduped: DataFrame,
+    frozen_docs: DataFrame,
+    frozen_fps: Optional[DataFrame],
+    text_col: str,
+    id_col: str,
+    broadcast_max_rows: int,
+) -> DataFrame:
+    """Drop the docs whose normalized-text fingerprint already exists in
+    the frozen corpus (``frozen_fps`` if stored, else computed from
+    ``frozen_docs``)."""
+    if frozen_fps is None:
+        # materialize the default-constructed relation ONCE: the guard
+        # count below plus the left_anti join would otherwise each run
+        # the frozen-corpus exact-dedup job (review finding — the
+        # dominant frozen-side cost doubled per streaming trigger)
+        frozen_fps = (
+            exact_dedup(frozen_docs, text_col=text_col, id_col=id_col)
+            .select("fp")
+            .localCheckpoint(eager=True)
+        )
+    elif not is_cheap_rescan(frozen_fps):
+        # a CALLER-supplied frozen_fps gets the same protection (round-6
+        # review finding: the guard count + the left_anti join evaluated
+        # an unpersisted caller lineage twice) — but only when re-scan is
+        # actually expensive: the documented 100 TB contract is a stored
+        # parquet fp relation, whose count is metadata-only and which an
+        # eager checkpoint would pointlessly copy in full.
+        frozen_fps = frozen_fps.localCheckpoint(eager=True)
+    # The frozen fingerprint relation is one md5 row PER FROZEN DOC —
+    # at the 100 TB append-only shape that is billions of rows, so a
+    # forced broadcast would OOM the driver. Broadcast only under the
+    # same cap dedup_survivors uses; above it, the left_anti join runs
+    # as a plain shuffle join (same result, one extra exchange). At
+    # scale callers pass a persisted frozen_fps, so the guard count is
+    # a cheap parquet-side count, not a recompute of frozen dedup.
+    fps_rel = frozen_fps.select(F.col("fp").alias("_fp"))
+    if frozen_fps.count() <= broadcast_max_rows:
+        fps_rel = F.broadcast(fps_rel)
+    normalized = F.md5(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    return deduped.withColumn("_fp", normalized).join(
+        fps_rel, "_fp", "left_anti"
+    ).drop("_fp")
+
+
+def _curate(
     docs: DataFrame,
-    benchmark: Optional[DataFrame] = None,
+    frozen_docs: Optional[DataFrame],
+    benchmark: Optional[DataFrame],
+    boundary: Optional[Boundary],
+    /,
+    *,
     text_col: str = "text",
     id_col: str = "doc_id",
     min_chars: int = 20,
@@ -126,22 +222,37 @@ def curate_corpus(
     ccnet_drop_tiers: Sequence[str] = ("tail",),
     ccnet_n_buckets: int = 3,
     ccnet_sample_mod: Optional[int] = None,
+    ccnet_cutoffs: Optional[DataFrame] = None,
+    frozen_fps: Optional[DataFrame] = None,
+    frozen_bands: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Returns the training-ready corpus: quality-gated, exact- and
+    """The curation chain. ``frozen_docs`` (an already-curated corpus,
+    possibly empty) selects the increment's near-dup stage; ``None``
+    runs the full one. ``boundary`` is the stage-boundary policy;
+    ``None`` is the in-session policy, under which
+    ``materialize_stages`` also checkpoints the shingle relation the
+    full near-dup stage shares between banding and verify. A caller's
+    policy replaces every in-session materialization.
+
+    Returns the training-ready corpus: quality-gated, exact- and
     near-dup-deduplicated, decontaminated against ``benchmark`` (if
-    given), with ``split`` and ``pack_offset``/``pack_bin`` columns.
-    Deterministic end to end — every stage is reproducible from
-    (input, parameters) alone, so reruns and incremental jobs agree.
-    ``hash_mode="xxhash64"`` swaps the LSH shingle hash for the ~3-4x
-    cheaper native hash at 100 TB (md5 default keeps the DuckDB oracle
-    exact — same twin-mode contract as the minhash operators).
-    ``lsh_bucket_cap`` bounds the band join's per-bucket quadratic
-    term against near-identical template floods (star pairs above the
-    cap — see :func:`operators.dedup.lsh_candidate_pairs`); the
-    upstream exact-dedup and trivial-doc gates collapse exact floods,
-    and since round 6 the cap is ALSO on by default (1024) as the
-    belt-and-braces for near-identical-but-not-exact floods — pass
-    ``None`` to opt out and get the exact uncapped band join.
+    given), with ``cluster_id``, ``split``, ``n_tokens`` and
+    ``pack_offset``/``pack_bin`` columns. Deterministic end to end —
+    every stage is reproducible from (input, parameters) alone, so
+    reruns and incremental jobs agree. ``hash_mode="xxhash64"`` swaps
+    the LSH shingle hash for the ~3-4x cheaper native hash at 100 TB
+    (md5 default keeps the DuckDB oracle exact — same twin-mode contract
+    as the minhash operators). ``lsh_bucket_cap`` bounds the band join's
+    per-bucket quadratic term against near-identical template floods
+    (star pairs above the cap — see
+    :func:`operators.dedup.lsh_candidate_pairs`); the upstream
+    exact-dedup and trivial-doc gates collapse exact floods, and since
+    round 6 the cap is ALSO on by default (1024) as the belt-and-braces
+    for near-identical-but-not-exact floods — pass ``None`` to opt out
+    and get the exact uncapped band join. ``broadcast_max_rows`` caps
+    every size-guarded broadcast in the chain (frozen fingerprints,
+    component labels, contamination ids, frequent lines); above it each
+    join falls back to a plain shuffle join with the same result.
 
     Incremental contract: the quality gate, exact dedup, split, and
     packing decisions are pure per-row functions of (row, parameters),
@@ -154,182 +265,222 @@ def curate_corpus(
     document that bridges two previously separate clusters merges
     them, and the merged cluster keeps only the smaller of the two old
     minima — demoting at most one prior survivor per merge. An
-    append-only incremental run that must never demote survivors
-    should freeze prior cluster labels and assign new docs to them
-    (union-find against the frozen labels) instead of re-clustering.
+    append-only run that must never demote survivors passes the
+    frozen corpus (:func:`curate_increment`), which assigns new docs to
+    the frozen labels instead of re-clustering.
 
     ``line_dedup_min_occ`` (round 7, default off) prepends the
     MassiveText/RefinedWeb boilerplate-line removal: lines recurring
     corpus-wide >= that many times are stripped from every document
     BEFORE the quality gate and dedup stages, so template chrome
     neither inflates near-dup similarity nor survives into packed
-    training text. Default ``None`` keeps the chain byte-identical to
-    prior releases (and to the driver oracle).
+    training text. The counts span the docs being curated, so an
+    increment refuses it (a batch's line counts shift across appends).
 
     ``ccnet_target`` (round 7, default off) adds CCNet perplexity
-    tiering (Wenzek et al. 2020) after exact dedup: an add-one bigram
-    LM trains on the passed clean corpus, every surviving doc is
-    scored under it, and docs in ``ccnet_drop_tiers`` (default: the
-    tail third) are dropped before the near-dup machinery. Pass
-    ``ccnet_sample_mod`` at scale for the sampled-cutoff regime (no
-    corpus-wide sort). Default ``None`` keeps the chain byte-identical
-    to prior releases.
+    tiering (Wenzek et al. 2020) at the end of the exact-dedup stage,
+    matching the paper's dedup-then-LM order and shrinking both the
+    join-heavy LM scoring and the near-dup machinery downstream: an
+    add-one bigram LM trains on the passed clean corpus, every
+    surviving doc is scored under it, and docs in ``ccnet_drop_tiers``
+    (default: the tail third) are dropped. Docs without a single bigram
+    (<2 tokens) cannot be scored and are dropped with the tail. Tiers
+    computed from the docs being curated are corpus-distribution-
+    dependent (like near-dup survivorship); ``ccnet_sample_mod``
+    switches to the paper's sampled-cutoff regime (no corpus-wide sort)
+    at scale, and ``ccnet_cutoffs`` (a persisted
+    :func:`operators.ccnet_cutoffs` relation) freezes the cutoffs so
+    the tier is a pure per-row function of (row, target, cutoffs). An
+    increment needs BOTH ``ccnet_target`` and ``ccnet_cutoffs``:
+    batch-derived cutoffs would shift across appends.
 
     ``quality_model`` (round 7, default off) adds the TRAINED quality
-    filter (GPT-3/LLaMA classifier family) between the heuristic gate
-    and dedup: pass a fitted model from
-    :func:`operators.quality_classifier_fit` (or a quantized weight
-    sequence) and docs the model scores below ``quality_threshold``
-    are dropped before any shingling — the cheapest place to shed
-    low-quality mass, since every downstream stage shrinks with it.
-    Use the same ``quality_salt``/``quality_feature_mode`` the model
-    was fitted with. Default ``None`` keeps the chain byte-identical
-    to prior releases.
+    filter (GPT-3/LLaMA classifier family) after the heuristic gate:
+    pass a fitted model from :func:`operators.quality_classifier_fit`
+    (or a quantized weight sequence) and docs the model scores below
+    ``quality_threshold`` are dropped before any shingling — the
+    cheapest place to shed low-quality mass, since every downstream
+    stage shrinks with it. Use the same
+    ``quality_salt``/``quality_feature_mode`` the model was fitted with;
+    the increment must use the same model and salt as the full runs so
+    the pure per-row keep decision agrees with any past or future run.
 
     ``repair_mojibake`` (round 7, default off) prepends
     :func:`operators.fix_mojibake` before EVERYTHING — including the
     line-dedup stage — so a mis-decoded copy of a clean page repairs
     to the same bytes and actually deduplicates (corrupted and clean
-    twins otherwise share no shingles). A zero-shuffle projection;
-    default ``False`` keeps the chain byte-identical."""
-    if repair_mojibake:
-        # a pure per-row projection — unlike line_dedup there is no
-        # corpus-wide aggregation, so no join-back is needed (review
-        # finding: the first cut joined the full corpus to itself just
-        # to re-attach untouched columns)
-        from ..operators.textclean import fix_mojibake_col
+    twins otherwise share no shingles). A zero-shuffle projection.
 
-        docs = docs.withColumn(text_col, fix_mojibake_col(F.col(text_col)))
-    if line_dedup_min_occ is not None:
-        from ..operators import line_dedup
+    ``frozen_fps`` / ``frozen_bands`` (increment only) are the stored
+    ``exact_dedup`` fingerprint and :func:`band_relation` relations of
+    the frozen corpus, from :mod:`plans.frozen_store`; passing them
+    skips rereading frozen text. The store writes them as bucketed
+    tables hashed on their join keys (``fp`` / ``(band, key)``), so
+    when a batch is too large to broadcast and the probe joins fall
+    back to sort-merge, the frozen side reads its buckets in place —
+    the shuffled volume stays O(batch) instead of O(corpus) (pinned by
+    ``tests/test_frozen_store.py``'s differential Exchange counts).
 
-        cleaned = line_dedup(
-            docs, min_occurrences=line_dedup_min_occ,
-            text_col=text_col, id_col=id_col,
-            broadcast_max_rows=broadcast_max_rows,
-        ).select(F.col("doc_id").alias(id_col), F.col("kept_text"))
-        docs = docs.drop(text_col).join(cleaned, id_col).withColumnRenamed(
-            "kept_text", text_col
+    Every optional stage defaults off, keeping the chain byte-identical
+    to prior releases (and to the driver oracle)."""
+    frozen = frozen_docs is not None
+    if frozen and line_dedup_min_occ is not None:
+        raise ValueError(
+            "line_dedup_min_occ counts lines across the docs being curated; "
+            "on an increment that is the batch, so kept text would shift across appends"
         )
-    gated = docs.where(F.length(F.trim(F.col(text_col))) >= min_chars)
-    rep = repetition_score(gated, text_col=text_col, id_col=id_col, n=2).where(
-        F.col("dup_gram_frac") <= max_dup_gram_frac
-    )
-    # repetition_score / contamination_flags emit their id as "doc_id";
-    # alias back so a caller's id_col keeps working end to end
-    gated = gated.join(rep.select(F.col("doc_id").alias(id_col)), id_col)
-
-    if quality_model is not None:
-        from ..operators import quality_classifier_score
-
-        kept = quality_classifier_score(
-            gated, quality_model, text_col=text_col, id_col=id_col,
-            salt=quality_salt, threshold=quality_threshold,
-            feature_mode=quality_feature_mode,
-        ).where(F.col("predicted")).select(F.col("doc_id").alias(id_col))
-        gated = gated.join(kept, id_col, "left_semi")
-
-    keep_ids = exact_dedup(gated, text_col=text_col, id_col=id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    deduped = gated.join(keep_ids, id_col, "left_semi")
-    if materialize_stages:
-        # the deduped relation feeds four branches (LSH shingles,
-        # Jaccard sizes, survivor join, contamination shingles);
-        # materializing the stage boundary runs the quality gate +
-        # exact dedup once instead of per branch — exactly what a
-        # production pipeline does by writing each stage to the lake
-        # (swap localCheckpoint for a table write + re-read there)
-        deduped = deduped.localCheckpoint(eager=True)
-
-    if ccnet_target is not None:
-        # CCNet perplexity tiering (Wenzek et al. 2020; default: drop
-        # the tail third) — placed AFTER exact dedup, matching the
-        # paper's dedup-then-LM order AND shrinking both the join-heavy
-        # LM scoring and the LSH machinery downstream. Docs without a
-        # single bigram (<2 tokens) cannot be scored and are dropped
-        # with the tail. Tiers are corpus-distribution-dependent by
-        # nature (like near-dup survivorship, unlike the pure per-row
-        # gates), so this stage lives only in the full-rerun chain;
-        # ``ccnet_sample_mod`` switches to the paper's sampled-cutoff
-        # regime (no corpus-wide sort) at scale.
-        from ..operators.textstats import ccnet_perplexity_buckets
-
+    if not frozen and (frozen_fps is not None or frozen_bands is not None):
+        raise ValueError("frozen_fps/frozen_bands need a frozen corpus (curate_increment)")
+    if ccnet_target is not None or ccnet_cutoffs is not None:
+        if ccnet_target is None or (frozen and ccnet_cutoffs is None):
+            raise ValueError(
+                "CCNet tiering needs ccnet_target; increment-path tiering needs "
+                "BOTH ccnet_target and ccnet_cutoffs (a persisted "
+                "operators.ccnet_cutoffs relation); batch-derived cutoffs "
+                "would shift across appends"
+            )
         _check_ccnet_drop_tiers(ccnet_drop_tiers, ccnet_n_buckets)
-        tiers = ccnet_perplexity_buckets(
-            deduped, ccnet_target, text_col=text_col, id_col=id_col,
-            n_buckets=ccnet_n_buckets, cutoff_sample_mod=ccnet_sample_mod,
+    if boundary is None:
+        boundary = _in_session(materialize_stages)
+    else:
+        # a caller's policy (the lake job) is the materialization: the
+        # shingle relation is then rebuilt per consumer from the stage
+        # table, with no in-session copy
+        materialize_stages = False
+
+    def gate() -> DataFrame:
+        out = docs
+        if repair_mojibake:
+            # a pure per-row projection — unlike line_dedup there is no
+            # corpus-wide aggregation, so no join-back is needed (review
+            # finding: the first cut joined the full corpus to itself just
+            # to re-attach untouched columns)
+            out = out.withColumn(text_col, fix_mojibake_col(F.col(text_col)))
+        if line_dedup_min_occ is not None:
+            cleaned = line_dedup(
+                out, min_occurrences=line_dedup_min_occ,
+                text_col=text_col, id_col=id_col,
+                broadcast_max_rows=broadcast_max_rows,
+            ).select(F.col("doc_id").alias(id_col), F.col("kept_text"))
+            out = out.drop(text_col).join(cleaned, id_col).withColumnRenamed(
+                "kept_text", text_col
+            )
+        out = out.where(F.length(F.trim(F.col(text_col))) >= min_chars)
+        rep = repetition_score(out, text_col=text_col, id_col=id_col, n=2).where(
+            F.col("dup_gram_frac") <= max_dup_gram_frac
         )
-        kept_tiers = tiers.where(~F.col("tier").isin(*ccnet_drop_tiers)).select(
-            F.col("doc_id").alias(id_col)
+        # repetition_score / contamination_flags emit their id as "doc_id";
+        # alias back so a caller's id_col keeps working end to end
+        out = out.join(rep.select(F.col("doc_id").alias(id_col)), id_col)
+        if quality_model is not None:
+            kept = quality_classifier_score(
+                out, quality_model, text_col=text_col, id_col=id_col,
+                salt=quality_salt, threshold=quality_threshold,
+                feature_mode=quality_feature_mode,
+            ).where(F.col("predicted")).select(F.col("doc_id").alias(id_col))
+            out = out.join(kept, id_col, "left_semi")
+        return out
+
+    gated = boundary("gated", gate)
+
+    def dedup() -> DataFrame:
+        keep_ids = exact_dedup(gated, text_col=text_col, id_col=id_col).select(
+            F.col("keep_id").alias(id_col)
         )
-        deduped = deduped.join(kept_tiers, id_col, "left_semi")
+        out = gated.join(keep_ids, id_col, "left_semi")
+        if frozen:
+            out = _drop_frozen_fingerprints(
+                out, frozen_docs, frozen_fps, text_col, id_col, broadcast_max_rows
+            )
+        if ccnet_target is not None:
+            tiers = ccnet_perplexity_buckets(
+                out, ccnet_target, text_col=text_col, id_col=id_col,
+                n_buckets=ccnet_n_buckets, cutoff_sample_mod=ccnet_sample_mod,
+                cutoffs=ccnet_cutoffs,
+            )
+            kept_tiers = tiers.where(~F.col("tier").isin(*ccnet_drop_tiers)).select(
+                F.col("doc_id").alias(id_col)
+            )
+            out = out.join(kept_tiers, id_col, "left_semi")
+        return out
+
+    deduped = boundary("deduped", dedup)
+
+    def near_dedup() -> DataFrame:
+        if frozen:
+            assigned = incremental_assign(
+                deduped, frozen_docs, text_col=text_col, id_col=id_col,
+                n_perm=lsh_perm, bands=lsh_bands, k=shingle_k,
+                threshold=jaccard_threshold, hash_mode=hash_mode,
+                frozen_bands=frozen_bands, broadcast_max_rows=broadcast_max_rows,
+                bucket_cap=lsh_bucket_cap,
+            )
+            return deduped.join(
+                assigned.where(F.col("survives")).select(
+                    F.col("doc_id").alias(id_col), "cluster_id"
+                ),
+                id_col,
+            )
+        # the distinct shingle relation feeds BOTH the banding and the
+        # verify phase; compute it once (Catalyst does not reuse the
+        # explode+distinct exchange across the two consumers)
+        shingles = shingle_relation(deduped, text_col=text_col, id_col=id_col, k=shingle_k).distinct()
         if materialize_stages:
-            deduped = deduped.localCheckpoint(eager=True)
+            shingles = shingles.localCheckpoint(eager=True)
+        cands = lsh_candidate_pairs(
+            deduped, text_col=text_col, id_col=id_col, n_perm=lsh_perm, bands=lsh_bands,
+            k=shingle_k, shingles=shingles, hash_mode=hash_mode, bucket_cap=lsh_bucket_cap,
+        )
+        pairs = ngram_jaccard_pairs(
+            deduped, text_col=text_col, id_col=id_col, k=shingle_k,
+            threshold=jaccard_threshold, candidates=cands, shingles=shingles,
+        )
+        return dedup_survivors(deduped, pairs, id_col=id_col, broadcast_max_rows=broadcast_max_rows)
 
-    # the distinct shingle relation feeds BOTH the banding and the
-    # verify phase; compute it once (Catalyst does not reuse the
-    # explode+distinct exchange across the two consumers)
-    shingles = shingle_relation(deduped, text_col=text_col, id_col=id_col, k=shingle_k).distinct()
-    if materialize_stages:
-        shingles = shingles.localCheckpoint(eager=True)
-    cands = lsh_candidate_pairs(
-        deduped, text_col=text_col, id_col=id_col, n_perm=lsh_perm, bands=lsh_bands,
-        k=shingle_k, shingles=shingles, hash_mode=hash_mode, bucket_cap=lsh_bucket_cap,
-    )
-    pairs = ngram_jaccard_pairs(
-        deduped, text_col=text_col, id_col=id_col, k=shingle_k,
-        threshold=jaccard_threshold, candidates=cands, shingles=shingles,
-    )
-    survivors = dedup_survivors(deduped, pairs, id_col=id_col)
-    if materialize_stages:
-        survivors = survivors.localCheckpoint(eager=True)
+    survivors = boundary("survivors", near_dedup)
 
-    if benchmark is not None:
-        survivors = decontaminate(
-            survivors, benchmark, text_col=text_col, id_col=id_col,
-            contamination_k=contamination_k, broadcast_max_rows=broadcast_max_rows,
+    def finish() -> DataFrame:
+        out = survivors
+        if benchmark is not None:
+            out = decontaminate(
+                out, benchmark, text_col=text_col, id_col=id_col,
+                contamination_k=contamination_k, broadcast_max_rows=broadcast_max_rows,
+            )
+        assigned = split_assign(out, weights=split_weights, salt=split_salt, id_col=id_col)
+        toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+        with_tokens = assigned.withColumn("n_tokens", toks.cast("long"))
+        return pack_by_budget(
+            with_tokens, budget=pack_budget, token_col="n_tokens", part_col=shard_col, order_col=id_col
         )
 
-    assigned = split_assign(survivors, weights=split_weights, salt=split_salt, id_col=id_col)
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    with_tokens = assigned.withColumn("n_tokens", toks.cast("long"))
-    return pack_by_budget(
-        with_tokens, budget=pack_budget, token_col="n_tokens", part_col=shard_col, order_col=id_col
-    )
+    return boundary("final", finish)
+
+
+def chain_options(**options) -> dict:
+    """``options`` with the chain's defaults filled in, for drivers that
+    need an option's value themselves (the LSH parameters of a frozen
+    store). A name the chain does not declare raises ``TypeError`` here,
+    before any Spark job."""
+    bound = inspect.signature(_curate).bind_partial(**options)
+    bound.apply_defaults()
+    return dict(bound.arguments)
+
+
+def curate_corpus(docs: DataFrame, benchmark: Optional[DataFrame] = None, **options) -> DataFrame:
+    """The full curation chain over ``docs``, decontaminated against
+    ``benchmark`` if given, in session (``localCheckpoint`` at the
+    ``deduped`` and ``survivors`` boundaries unless
+    ``materialize_stages=False``). ``options`` are the chain's — see
+    :func:`_curate` for each one and its default; a misspelled name
+    raises ``TypeError`` before any Spark job."""
+    return _curate(docs, None, benchmark, None, **options)
 
 
 def curate_increment(
     new_docs: DataFrame,
     frozen_docs: DataFrame,
     benchmark: Optional[DataFrame] = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_chars: int = 20,
-    max_dup_gram_frac: float = 0.9,
-    jaccard_threshold: float = 0.8,
-    contamination_k: int = 8,
-    split_weights: Sequence[Tuple[str, float]] = (("train", 0.9), ("val", 0.05), ("test", 0.05)),
-    split_salt: str = "split",
-    pack_budget: int = 4096,
-    shard_col: str = "source",
-    lsh_perm: int = 8,
-    lsh_bands: int = 4,
-    shingle_k: int = 4,
-    hash_mode: str = "md5",
-    frozen_fps: Optional[DataFrame] = None,
-    frozen_bands: Optional[DataFrame] = None,
-    materialize_stages: bool = True,
-    broadcast_max_rows: int = 10_000_000,
-    lsh_bucket_cap: Optional[int] = 1024,
-    quality_model: Optional[DataFrame] = None,
-    quality_threshold: float = 0.5,
-    quality_salt: str = "qcls",
-    quality_feature_mode: str = "binary",
-    ccnet_target: Optional[DataFrame] = None,
-    ccnet_cutoffs: Optional[DataFrame] = None,
-    ccnet_drop_tiers: Sequence[str] = ("tail",),
-    ccnet_n_buckets: int = 3,
+    **options,
 ) -> DataFrame:
     """The daily-increment twin of :func:`curate_corpus`: curate a NEW
     batch against a FROZEN, already-curated corpus without touching it.
@@ -337,157 +488,28 @@ def curate_increment(
     re-clustering the world — the frozen partition is immutable, so
     prior survivorship, splits, and packed bins never change (the
     guarantee the full-rerun chain cannot give; see the incremental
-    contract on :func:`curate_corpus`).
+    contract on :func:`_curate`).
 
-    Stages (each the scale-correct shape of its full-run counterpart):
+    The same chain as :func:`curate_corpus`, with the same options and
+    the same in-session boundary policy; the frozen corpus changes two
+    stages:
 
-    1. quality gate (length + Gopher repetition, plus the trained
-       classifier when ``quality_model`` is passed — SAME model and
-       salt as the full runs, so the pure per-row keep decision agrees
-       with any past or future run) — narrow, new batch only;
-    2. exact dedup — first-wins WITHIN the batch, then drop batch docs
-       whose normalized-text fingerprint already exists in the frozen
-       corpus (pass ``frozen_fps`` = the stored ``exact_dedup`` fp
-       relation to skip rereading frozen text);
-    3. near-dup: :func:`operators.dedup.incremental_assign` — banded
-       probe of the frozen corpus (pass ``frozen_bands`` = the stored
-       :func:`band_relation`), exact verify, freeze-respecting cluster
-       adoption; only batch docs that survive stay;
+    * exact dedup stays first-wins WITHIN the batch, then drops batch
+      docs whose normalized-text fingerprint already exists in the
+      frozen corpus (``frozen_fps`` if stored);
+    * near-dup runs :func:`operators.dedup.incremental_assign` — banded
+      probe of the frozen corpus (``frozen_bands`` if stored), exact
+      verify, freeze-respecting cluster adoption; only batch docs that
+      survive stay.
 
-    Pass BOTH frozen relations from :mod:`plans.frozen_store` at scale:
-    the store writes them as bucketed tables hashed on their join keys
-    (``fp`` / ``(band, key)``), so when a batch is too large to
-    broadcast and the probe joins fall back to sort-merge, the frozen
-    side reads its buckets in place — the shuffled volume stays
-    O(batch) instead of O(corpus) (pinned by
-    ``tests/test_frozen_store.py``'s differential Exchange counts).
-    4. decontamination vs ``benchmark`` (broadcast shingles);
-    5. split assignment with the SAME salt as the full runs — the pure
-       (salt, id) decision agrees with any past or future run;
-    6. per-shard sequence packing of the increment. Pack offsets/bins
-       are namespaced to THIS increment (an appending consumer offsets
-       them by its stored per-shard high-water mark — bins are a
-       physical layout, not a semantic identity, so per-increment
-       numbering is the append-friendly contract).
+    Split assignment uses the SAME salt as the full runs, so the pure
+    (salt, id) decision agrees with any past or future run. Pack
+    offsets/bins are namespaced to THIS increment (an appending consumer
+    offsets them by its stored per-shard high-water mark — bins are a
+    physical layout, not a semantic identity, so per-increment
+    numbering is the append-friendly contract).
 
     Returns the curated increment with ``cluster_id``, ``split``,
     ``n_tokens``, ``pack_offset``, ``pack_bin``.
     """
-    from ..operators import incremental_assign
-
-    gated = new_docs.where(F.length(F.trim(F.col(text_col))) >= min_chars)
-    rep = repetition_score(gated, text_col=text_col, id_col=id_col, n=2).where(
-        F.col("dup_gram_frac") <= max_dup_gram_frac
-    )
-    gated = gated.join(rep.select(F.col("doc_id").alias(id_col)), id_col)
-
-    if quality_model is not None:
-        from ..operators import quality_classifier_score
-
-        kept = quality_classifier_score(
-            gated, quality_model, text_col=text_col, id_col=id_col,
-            salt=quality_salt, threshold=quality_threshold,
-            feature_mode=quality_feature_mode,
-        ).where(F.col("predicted")).select(F.col("doc_id").alias(id_col))
-        gated = gated.join(kept, id_col, "left_semi")
-
-    if ccnet_target is not None or ccnet_cutoffs is not None:
-        # CCNet tiering on the APPEND path is only append-safe with
-        # FROZEN cutoffs: tier boundaries computed from the batch would
-        # shift with every batch, violating the increment's pure
-        # per-row contract. Require both artifacts (the persisted
-        # target corpus/model input and the ccnet_cutoffs relation) and
-        # the decision is a pure function of (row, target, cutoffs) —
-        # identical today or replayed next year.
-        if ccnet_target is None or ccnet_cutoffs is None:
-            raise ValueError(
-                "increment-path CCNet tiering needs BOTH ccnet_target and "
-                "ccnet_cutoffs (a persisted operators.ccnet_cutoffs relation); "
-                "batch-derived cutoffs would shift across appends"
-            )
-        from ..operators.textstats import ccnet_perplexity_buckets
-
-        _check_ccnet_drop_tiers(ccnet_drop_tiers, ccnet_n_buckets)
-        tiers = ccnet_perplexity_buckets(
-            gated, ccnet_target, text_col=text_col, id_col=id_col,
-            n_buckets=ccnet_n_buckets, cutoffs=ccnet_cutoffs,
-        )
-        kept_tiers = tiers.where(~F.col("tier").isin(*ccnet_drop_tiers)).select(
-            F.col("doc_id").alias(id_col)
-        )
-        gated = gated.join(kept_tiers, id_col, "left_semi")
-
-    keep_ids = exact_dedup(gated, text_col=text_col, id_col=id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    deduped = gated.join(keep_ids, id_col, "left_semi")
-    if frozen_fps is None:
-        # materialize the default-constructed relation ONCE: the guard
-        # count below plus the left_anti join would otherwise each run
-        # the frozen-corpus exact-dedup job (review finding — the
-        # dominant frozen-side cost doubled per streaming trigger)
-        frozen_fps = (
-            exact_dedup(frozen_docs, text_col=text_col, id_col=id_col)
-            .select("fp")
-            .localCheckpoint(eager=True)
-        )
-    elif not _is_cheap_rescan(frozen_fps):
-        # a CALLER-supplied frozen_fps gets the same protection (round-6
-        # review finding: the guard count + the left_anti join evaluated
-        # an unpersisted caller lineage twice) — but only when re-scan is
-        # actually expensive: the documented 100 TB contract is a stored
-        # parquet fp relation, whose count is metadata-only and which an
-        # eager checkpoint would pointlessly copy in full.
-        frozen_fps = frozen_fps.localCheckpoint(eager=True)
-    # The frozen fingerprint relation is one md5 row PER FROZEN DOC —
-    # at the 100 TB append-only shape that is billions of rows, so a
-    # forced broadcast would OOM the driver. Broadcast only under the
-    # same cap dedup_survivors uses; above it, the left_anti join runs
-    # as a plain shuffle join (same result, one extra exchange). At
-    # scale callers pass a persisted frozen_fps, so the guard count is
-    # a cheap parquet-side count, not a recompute of frozen dedup.
-    fps_rel = frozen_fps.select(F.col("fp").alias("_fp"))
-    if frozen_fps.count() <= broadcast_max_rows:
-        fps_rel = F.broadcast(fps_rel)
-    normalized = F.md5(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    deduped = deduped.withColumn("_fp", normalized).join(
-        fps_rel, "_fp", "left_anti"
-    ).drop("_fp")
-    if materialize_stages:
-        deduped = deduped.localCheckpoint(eager=True)
-
-    assigned_clusters = incremental_assign(
-        deduped,
-        frozen_docs,
-        text_col=text_col,
-        id_col=id_col,
-        n_perm=lsh_perm,
-        bands=lsh_bands,
-        k=shingle_k,
-        threshold=jaccard_threshold,
-        hash_mode=hash_mode,
-        frozen_bands=frozen_bands,
-        broadcast_max_rows=broadcast_max_rows,
-        bucket_cap=lsh_bucket_cap,
-    )
-    survivors = deduped.join(
-        assigned_clusters.where(F.col("survives")).select(
-            F.col("doc_id").alias(id_col), "cluster_id"
-        ),
-        id_col,
-    )
-    if materialize_stages:
-        survivors = survivors.localCheckpoint(eager=True)
-
-    if benchmark is not None:
-        survivors = decontaminate(
-            survivors, benchmark, text_col=text_col, id_col=id_col,
-            contamination_k=contamination_k, broadcast_max_rows=broadcast_max_rows,
-        )
-
-    assigned = split_assign(survivors, weights=split_weights, salt=split_salt, id_col=id_col)
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    with_tokens = assigned.withColumn("n_tokens", toks.cast("long"))
-    return pack_by_budget(
-        with_tokens, budget=pack_budget, token_col="n_tokens", part_col=shard_col, order_col=id_col
-    )
+    return _curate(new_docs, frozen_docs, benchmark, None, **options)

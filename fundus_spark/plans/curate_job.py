@@ -1,19 +1,25 @@
-"""Resumable curation job: the curation chain with STAGE-level durable
-checkpoints — each stage boundary is written to the lake and committed
-in a manifest, so a re-submit resumes from the last completed stage.
+"""Resumable curation job: the curation chain of :mod:`plans.curate`
+under its third boundary policy — each stage boundary is written to the
+lake and committed in a manifest, so a re-submit resumes from the last
+completed stage.
+
+The chain, its stage order and its options are those of
+:func:`plans.curate.curate_corpus`; only the boundary differs. The
+in-session drivers ``localCheckpoint`` two boundaries (or none); this
+job writes all four to ``{workdir}/{stage}`` and reads each back. The
+policy receives each stage's builder, not its relation, so a committed
+stage is read back without being rebuilt.
 
 Why stage-level (vs the extraction job's bucket-level) resume: the
 extraction stage is embarrassingly parallel, so a hash bucket is a
 natural unit of commit/resume. Curation is NOT — exact dedup, the LSH
 pair graph, connected components, and decontamination are corpus-global
 (a pair can span any two buckets), so the honest unit of durability is
-the stage: ``gated`` (quality filter), ``deduped`` (exact dedup),
-``survivors`` (near-dup components + survivor selection, which subsumes
-the pair graph), and ``final`` (decontaminate + split + pack). At
-10^12 docs each boundary is a table a re-submit can read back instead
-of recomputing hours of upstream work — the production realization of
-what ``curate_corpus(materialize_stages=True)`` does in-session with
-``localCheckpoint``.
+the stage: ``gated`` (quality filters), ``deduped`` (exact dedup and
+CCNet tiering), ``survivors`` (near-dup components + survivor
+selection, which subsumes the pair graph), and ``final`` (decontaminate
++ split + pack). At 10^12 docs each boundary is a table a re-submit can
+read back instead of recomputing hours of upstream work.
 
 Commit protocol mirrors ``run_extraction_job``: the stage's parquet
 write lands first, the manifest append is the commit point. A crash
@@ -28,24 +34,11 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from typing import List, Optional, Sequence, Tuple
+from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators import (
-    dedup_survivors,
-    exact_dedup,
-    lsh_candidate_pairs,
-    ngram_jaccard_pairs,
-    pack_by_budget,
-    repetition_score,
-    split_assign,
-)
-from ..operators.dedup import shingle_relation
-from .curate import decontaminate
-
-STAGES = ("gated", "deduped", "survivors", "final")
+from .curate import _curate, chain_options
 
 
 @dataclass
@@ -79,91 +72,41 @@ def run_curate_job(
     docs: DataFrame,
     workdir: str,
     benchmark: Optional[DataFrame] = None,
-    min_chars: int = 20,
-    max_dup_gram_frac: float = 0.9,
-    jaccard_threshold: float = 0.8,
-    contamination_k: int = 8,
-    split_weights: Sequence[Tuple[str, float]] = (("train", 0.9), ("val", 0.05), ("test", 0.05)),
-    split_salt: str = "split",
-    pack_budget: int = 4096,
-    shard_col: str = "source",
-    lsh_perm: int = 8,
-    lsh_bands: int = 4,
-    shingle_k: int = 4,
-    hash_mode: str = "md5",
     freeze_state: bool = False,
     freeze_buckets: int = 64,
-    broadcast_max_rows: int = 10_000_000,
+    **options,
 ) -> CurateJobResult:
     """Runs the curation chain with each stage written to
     ``{workdir}/{stage}`` and committed to the job manifest; committed
     stages are read back, not recomputed. Deterministic inputs +
     parameters mean a resumed run produces the identical corpus.
+    ``options`` are the chain's (every :func:`plans.curate.curate_corpus`
+    option); a misspelled name raises ``TypeError`` before any Spark
+    job.
 
     ``freeze_state=True`` adds a final committed stage that writes the
     curated corpus's dedup state (exact fingerprints + LSH band
     relation, same lsh/shingle/hash parameters as this run) to
-    ``{workdir}/frozen_state`` as bucketed tables via
+    ``{workdir}/frozen_state`` as ``freeze_buckets`` bucketed tables via
     :mod:`plans.frozen_store` — the handoff that turns this full run
     into the frozen side of every later :func:`plans.curate.curate_increment`
     append without recomputing or re-shuffling corpus state."""
+    opts = chain_options(**options)
     os.makedirs(workdir, exist_ok=True)
     done = _committed_stages(workdir)
     result = CurateJobResult(workdir=workdir)
 
-    def _stage(name: str, build) -> DataFrame:
+    def to_lake(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         path = os.path.join(workdir, name)
         if name in done:
             result.stages_resumed.append(name)
-            return spark.read.parquet(path)
-        out = build()
-        out.write.mode("overwrite").parquet(path)
-        _commit_stage(workdir, name)
-        result.stages_run.append(name)
+        else:
+            build().write.mode("overwrite").parquet(path)
+            _commit_stage(workdir, name)
+            result.stages_run.append(name)
         return spark.read.parquet(path)
 
-    def _build_gated() -> DataFrame:
-        base = docs.where(F.length(F.trim(F.col("text"))) >= min_chars)
-        rep = repetition_score(base, n=2).where(F.col("dup_gram_frac") <= max_dup_gram_frac)
-        return base.join(rep.select("doc_id"), "doc_id")
-
-    gated = _stage("gated", _build_gated)
-
-    def _build_deduped() -> DataFrame:
-        keep = exact_dedup(gated).select(F.col("keep_id").alias("doc_id"))
-        return gated.join(keep, "doc_id", "left_semi")
-
-    deduped = _stage("deduped", _build_deduped)
-
-    def _build_survivors() -> DataFrame:
-        shingles = shingle_relation(deduped, k=shingle_k).distinct()
-        cands = lsh_candidate_pairs(
-            deduped, n_perm=lsh_perm, bands=lsh_bands, k=shingle_k,
-            shingles=shingles, hash_mode=hash_mode,
-        )
-        pairs = ngram_jaccard_pairs(
-            deduped, k=shingle_k, threshold=jaccard_threshold,
-            candidates=cands, shingles=shingles,
-        )
-        return dedup_survivors(deduped, pairs)
-
-    survivors = _stage("survivors", _build_survivors)
-
-    def _build_final() -> DataFrame:
-        clean = survivors
-        if benchmark is not None:
-            clean = decontaminate(
-                clean, benchmark, contamination_k=contamination_k,
-                broadcast_max_rows=broadcast_max_rows,
-            )
-        assigned = split_assign(clean, weights=split_weights, salt=split_salt)
-        toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        return pack_by_budget(
-            assigned.withColumn("n_tokens", toks.cast("long")),
-            budget=pack_budget, token_col="n_tokens", part_col=shard_col, order_col="doc_id",
-        )
-
-    final = _stage("final", _build_final)
+    final = _curate(docs, None, benchmark, to_lake, **opts)
     result.rows_out = final.count()
 
     if freeze_state:
@@ -176,10 +119,12 @@ def run_curate_job(
             write_frozen_state(
                 final,
                 store,
-                n_perm=lsh_perm,
-                bands=lsh_bands,
-                k=shingle_k,
-                hash_mode=hash_mode,
+                text_col=opts["text_col"],
+                id_col=opts["id_col"],
+                n_perm=opts["lsh_perm"],
+                bands=opts["lsh_bands"],
+                k=opts["shingle_k"],
+                hash_mode=opts["hash_mode"],
                 num_buckets=freeze_buckets,
             )
             _commit_stage(workdir, "frozen")

@@ -58,12 +58,6 @@ METRICS_SCHEMA = StructType(
 )
 
 
-def partition_metrics(extracted: DataFrame, run_id: str, bucket: int) -> DataFrame:
-    """Aggregate per-partition lineage from the extraction output's
-    lineage columns — one columnar agg, no recompute of the stage."""
-    return bucketed_partition_metrics(extracted.withColumn("bucket", F.lit(bucket).cast("int")), run_id)
-
-
 def bucketed_partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-(bucket, partition) lineage for EVERY bucket present, in one
     aggregation — the job's commit phase calls this once over a single

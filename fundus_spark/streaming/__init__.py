@@ -4,7 +4,6 @@ from .stream import (
     sessionized_conversations,
     stream_extract_articles,
     stream_first_wins_dedup,
-    windowed_turn_counts,
     write_stream_to_parquet,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "sessionized_conversations",
     "stream_extract_articles",
     "stream_first_wins_dedup",
-    "windowed_turn_counts",
     "write_stream_to_parquet",
 ]

@@ -37,7 +37,7 @@ from typing import Optional
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.curate import curate_increment
+from ..plans.curate import chain_options, curate_increment
 
 CORPUS_SCHEMA = "doc_id long, source string, text string"
 
@@ -162,11 +162,12 @@ def _store_lsh(curate_kwargs: dict) -> dict:
     """The LSH parameters curate_increment will use, in the streaming
     store's vocabulary — the store pins them so a probe/append with
     different banding fails loudly instead of mixing key spaces."""
+    opts = chain_options(**curate_kwargs)
     return {
-        "n_perm": curate_kwargs.get("lsh_perm", 8),
-        "bands": curate_kwargs.get("lsh_bands", 4),
-        "k": curate_kwargs.get("shingle_k", 4),
-        "hash_mode": curate_kwargs.get("hash_mode", "md5"),
+        "n_perm": opts["lsh_perm"],
+        "bands": opts["lsh_bands"],
+        "k": opts["shingle_k"],
+        "hash_mode": opts["hash_mode"],
     }
 
 

@@ -41,19 +41,6 @@ def stream_extract_articles(
     return stream.mapInArrow(_extract_batches_arrow, schema=EXTRACTION_SCHEMA)
 
 
-def windowed_turn_counts(extracted_stream: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes") -> DataFrame:
-    """Late-data-tolerant rollup: turns and parse failures per
-    (window, publisher)."""
-    return (
-        extracted_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("publisher"))
-        .agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.sum((~F.col("parse_ok")).cast("long")).alias("parse_failures"),
-        )
-    )
-
-
 def stream_first_wins_dedup(
     stream: DataFrame, keys=("conv_id", "turn_idx"), watermark_col: str = "ts", delay: str = "30 minutes"
 ) -> DataFrame:

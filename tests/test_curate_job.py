@@ -9,6 +9,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from fundus_spark.plans import curate_corpus, run_curate_job
 
 
@@ -188,3 +190,159 @@ def test_increment_trained_quality_stage_agrees_with_full_chain(spark):
     want = {(r.doc_id, r.split, r.n_tokens) for r in full.collect()}
     assert got == want
     assert {r[0] for r in got} == {i for i in range(12) if i % 3 != 0}
+
+
+# ---------------------------------------------------------------------------
+# one chain, three drivers: option parity, size guards, job-count pins
+# ---------------------------------------------------------------------------
+
+
+def _near_dup_docs(spark):
+    """Two near-dup pairs plus one doc the benchmark contaminates, so
+    every size-guarded join in the full chain has a non-empty side."""
+    base = " ".join("alpha%d beta%d gamma%d" % (j, j, j) for j in range(12))
+    fresh = " ".join("fresh%d novel%d material%d" % (j, j, j) for j in range(12))
+    other = " ".join("other%d plain%d words%d" % (j, j, j) for j in range(12))
+    docs = spark.createDataFrame(
+        [
+            (1, "s1", base),
+            (2, "s2", base.replace("alpha3", "changed3")),
+            (3, "s1", fresh),
+            (4, "s2", fresh.replace("novel3", "changed3")),
+            (5, "s1", other),
+        ],
+        "doc_id long, source string, text string",
+    )
+    bench = spark.createDataFrame([(900, "eval", other)], "doc_id long, source string, text string")
+    return docs, bench
+
+
+def test_full_chain_shuffle_fallback_matches_broadcast_path(spark):
+    """The full-chain twin of the increment test above:
+    broadcast_max_rows=0 moves the component-label join and the
+    contamination anti-join onto their shuffle fallbacks, and the rows
+    must not change."""
+    docs, bench = _near_dup_docs(spark)
+    key = lambda r: (r.doc_id, r.cluster_id, r.split, r.pack_offset, r.pack_bin)  # noqa: E731
+    bcast = curate_corpus(docs, benchmark=bench, jaccard_threshold=0.2)
+    shuf = curate_corpus(docs, benchmark=bench, jaccard_threshold=0.2, broadcast_max_rows=0)
+    got_b = {key(r) for r in bcast.collect()}
+    got_s = {key(r) for r in shuf.collect()}
+    assert got_b == got_s
+    # each near-dup pair keeps its min id; 5 is contaminated
+    assert {r[0] for r in got_s} == {1, 3}
+
+    def broadcast_joins(broadcast_max_rows):
+        df = curate_corpus(
+            docs, benchmark=bench, jaccard_threshold=0.2,
+            broadcast_max_rows=broadcast_max_rows, materialize_stages=False,
+        )
+        df.collect()  # the final adaptive plan
+        return df._jdf.queryExecution().executedPlan().toString().count("BroadcastHashJoin")
+
+    # both guarded joins (component labels, contamination ids) left the
+    # broadcast path, not only the contamination one
+    assert broadcast_joins(10_000_000) - broadcast_joins(0) == 2
+
+
+def test_job_applies_trained_quality_stage_like_inline_chain(spark, tmp_path):
+    """run_curate_job takes every curate_corpus option: the same fitted
+    quality model commits the same final rows as the inline chain."""
+    from pyspark.sql import functions as F
+
+    from fundus_spark.operators import quality_classifier_fit
+
+    rows = [
+        (i, "s%d" % (i % 2),
+         (" ".join("junk%d_%d spamtok" % (i, j) for j in range(15))
+          if i % 3 == 0
+          else " ".join("prose%d_%d word" % (i, j) for j in range(15))))
+        for i in range(12)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    labeled = docs.withColumn(
+        "y", (~F.array_contains(F.split(F.col("text"), " "), "spamtok")).cast("int")
+    )
+    model = quality_classifier_fit(labeled, n_features=32, n_iter=32, lr=0.0625, salt="t")
+
+    wd = str(tmp_path / "quality_wd")
+    run_curate_job(spark, docs, wd, jaccard_threshold=0.2, quality_model=model, quality_salt="t")
+    inline = curate_corpus(docs, jaccard_threshold=0.2, quality_model=model, quality_salt="t")
+    key = lambda r: (r.doc_id, r.split, r.n_tokens, r.pack_offset, r.pack_bin)  # noqa: E731
+    got = {key(r) for r in spark.read.parquet(os.path.join(wd, "final")).collect()}
+    want = {key(r) for r in inline.collect()}
+    assert got == want
+    assert {r[0] for r in got} == {i for i in range(12) if i % 3 != 0}
+
+
+def test_misspelled_option_raises_before_any_job(spark, tmp_path):
+    from fundus_spark.plans import curate_increment
+
+    docs = _docs(spark)
+    empty = spark.createDataFrame([], "doc_id long, source string, text string")
+    wd = str(tmp_path / "typo_wd")
+    sc = spark.sparkContext
+    sc.setJobGroup("curate_typo", "misspelled option")
+    try:
+        for call in (
+            lambda: curate_corpus(docs, jacard_threshold=0.2),
+            lambda: curate_increment(docs, empty, jacard_threshold=0.2),
+            lambda: run_curate_job(spark, docs, wd, jacard_threshold=0.2),
+        ):
+            with pytest.raises(TypeError, match="jacard_threshold"):
+                call()
+    finally:
+        sc.setJobGroup("default", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("curate_typo")) == []
+    assert not os.path.exists(wd)
+
+
+def _jobs(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("default", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_job_counts_pinned(spark, tmp_path):
+    """Spark jobs per driver call on the fixture corpus. Each pin is the
+    count measured when the three drivers became one chain; a change
+    that adds a hidden materialization or guard count fails here."""
+    from fundus_spark.plans import curate_increment
+
+    docs = _docs(spark)
+    bench = docs.where("source = 's0'")
+    corpus = docs.where("source <> 's0'")
+    empty = spark.createDataFrame([], "doc_id long, source string, text string")
+
+    built = {}
+    build = _jobs(spark, "pin_corpus_build", lambda: built.setdefault(
+        "df", curate_corpus(corpus, benchmark=bench, jaccard_threshold=0.2)))
+    collect = _jobs(spark, "pin_corpus_collect", lambda: built["df"].collect())
+    assert build <= 27 and build + collect <= 30, (build, collect)
+
+    n = _jobs(spark, "pin_inc_empty", lambda: curate_increment(
+        corpus, empty, benchmark=bench, jaccard_threshold=0.2).collect())
+    assert n <= 42, n
+    n = _jobs(spark, "pin_inc_frozen", lambda: curate_increment(
+        corpus, bench, jaccard_threshold=0.2).collect())
+    assert n <= 40, n
+    n = _jobs(spark, "pin_job", lambda: run_curate_job(
+        spark, corpus, str(tmp_path / "pin_wd"), benchmark=bench, jaccard_threshold=0.2))
+    assert n <= 34, n
+
+
+def test_chain_refuses_options_its_input_cannot_honour(spark):
+    """Options that only make sense with (or without) a frozen corpus
+    fail fast instead of being silently ignored or shifting across
+    appends."""
+    from fundus_spark.plans import curate_increment
+
+    docs = _docs(spark)
+    with pytest.raises(ValueError, match="line_dedup_min_occ"):
+        curate_increment(docs, docs.limit(0), line_dedup_min_occ=2)
+    with pytest.raises(ValueError, match="frozen_fps"):
+        curate_corpus(docs, frozen_fps=docs)

@@ -82,9 +82,9 @@ def test_store_roundtrip_matches_inline_relations(spark, tmp_path):
     assert {key(r) for r in got.collect()} == {key(r) for r in want.collect()}
     # catalog scans count as cheap rescans, so the broadcast guard's
     # count is metadata-only and no localCheckpoint copy was forced
-    from fundus_spark.plans.curate import _is_cheap_rescan
+    from fundus_spark.operators.adaptive import is_cheap_rescan
 
-    assert _is_cheap_rescan(fps) and _is_cheap_rescan(bands)
+    assert is_cheap_rescan(fps) and is_cheap_rescan(bands)
 
 
 def test_band_probe_has_no_frozen_side_exchange(spark, tmp_path):

@@ -254,6 +254,51 @@ def test_curate_increment_ccnet_requires_both_artifacts(spark):
         curate_increment(df, df.limit(0), ccnet_target=df).count()
 
 
+def test_curate_increment_ccnet_drops_frozen_cutoff_tail(spark):
+    """Increment-path CCNet end to end: with frozen cutoffs the output
+    is the no-CCNet increment minus exactly the docs the standalone
+    operator tiers into ``ccnet_drop_tiers`` under the same cutoffs."""
+    from fundus_spark.operators.textstats import ccnet_cutoffs
+    from fundus_spark.plans import curate_increment
+
+    texts = [
+        "the cat sat on the mat and the dog sat on the rug",
+        "the dog ate the fish while the cat sat on the mat",
+        "zx qq vv kk jj ww pp rr tt yy",
+        "the cat ate the fish on the rug today",
+        "fish the on sat rug mat cat dog the",
+        "lorem ipsum dolor sit amet consectetur adipiscing",
+        "the rug sat on the dog and the fish ate the cat",
+        "quantum flux capacitor engages warp drive now",
+        "the mat sat on the cat by the door",
+    ]
+    schema = "doc_id long, source string, text string"
+    batch = spark.createDataFrame(
+        [(10 + i, "s%d" % (i % 2), t) for i, t in enumerate(texts)], schema
+    )
+    frozen = spark.createDataFrame(
+        [(1, "s0", "an unrelated frozen document about gardening tools")], schema
+    )
+    target = spark.createDataFrame(TARGET, ["doc_id", "text"])
+    cuts = ccnet_cutoffs(batch, target, sample_mod=1)
+
+    key = lambda r: (r.doc_id, r.cluster_id, r.split, r.n_tokens)  # noqa: E731
+    base = {key(r) for r in curate_increment(batch, frozen).collect()}
+    tiered = {
+        key(r)
+        for r in curate_increment(
+            batch, frozen, ccnet_target=target, ccnet_cutoffs=cuts
+        ).collect()
+    }
+    dropped = {
+        r["doc_id"]
+        for r in ccnet_perplexity_buckets(batch, target, cutoffs=cuts).collect()
+        if r["tier"] == "tail"
+    }
+    assert dropped and dropped < {k[0] for k in base}
+    assert tiered == {k for k in base if k[0] not in dropped}
+
+
 def test_ccnet_grouped(spark):
     raw = spark.createDataFrame(
         [(i, s, t) for (i, t) in RAW for s in ("a", "b")],
