@@ -22,13 +22,27 @@ partitioning, never from a constant tuned to any one machine.
   stage that follows. The shuffled volume is bounded by the size check
   (< cores x ``per_core_bytes``), so the added exchange is always
   cheap relative to the stage it parallelizes.
+
+Building a plan runs no job: :func:`adaptive_repartition` decides from
+the size estimate and the logical plan, and reads a partition count
+from the planner (``df.rdd`` only for narrow plans, where it runs
+nothing).
+
+Materialization policy: an operator that reads a relation more than
+once calls :func:`materialize` (or :func:`broadcast_if_small` for a
+size-guarded broadcast), never ``localCheckpoint`` and ``count`` by
+hand. A relation that :func:`is_cheap_rescan` is used as-is and
+counted; anything else is checkpointed eagerly, its row count observed
+by the same job. Only per-iteration lineage cuts in loops call
+``localCheckpoint`` directly; a deployment that must survive executor
+loss swaps in a reliable ``checkpoint`` here.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: size-per-core threshold below which an input counts as "small": one
@@ -37,10 +51,11 @@ from pyspark.sql import functions as F
 PER_CORE_BYTES = 32 * 1024 * 1024
 
 
-#: logical-plan node names whose presence means the DataFrame's nominal
-#: (pre-AQE) partition count says nothing about runtime parallelism —
-#: AQE re-coalesces every shuffle those nodes introduce by BYTES, which
-#: for a small input collapses a compute-bound stage onto one core.
+#: logical-plan node names that plan a shuffle, so the DataFrame's
+#: nominal (pre-AQE) partition count says nothing about runtime
+#: parallelism — AQE re-coalesces every shuffle those nodes introduce by
+#: BYTES, which for a small input collapses a compute-bound stage onto
+#: one core — and ``df.rdd`` would run the shuffle to count partitions.
 _WIDE_TOKENS = (
     "Aggregate",
     "Join",
@@ -49,6 +64,22 @@ _WIDE_TOKENS = (
     "Deduplicate",
     "Sort",
     "Repartition",
+    "Rebalance",
+    "GlobalLimit",
+    "FlatMapGroups",
+    "FlatMapCoGroups",
+)
+
+#: plan tokens that make a second evaluation cost a whole job rather
+#: than a scan: the wide nodes, explodes, per-element higher-order
+#: functions, and Python UDF evaluation
+_EXPENSIVE_TOKENS = _WIDE_TOKENS + (
+    "Generate",
+    "lambdafunction",
+    "EvalPython",
+    "MapIn",
+    "InPandas",
+    "InArrow",
 )
 
 
@@ -66,6 +97,12 @@ def _plan_size_bytes(df: DataFrame) -> Optional[int]:
     return size
 
 
+def _nominal_partitions(df: DataFrame) -> int:
+    """Partition count the planner gives ``df`` before AQE coalescing,
+    read from the physical plan without executing it."""
+    return int(df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions())
+
+
 def _has_wide_node(df: DataFrame) -> bool:
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
@@ -79,9 +116,9 @@ def is_cheap_rescan(df: DataFrame) -> bool:
     persisted/cached/checkpointed, or its optimized plan is a bare
     file-source read (scan/project/filter only — a count on it is
     parquet-metadata-cheap). Anything with a shuffle- or generate-class
-    node (Aggregate, Join, Window, Distinct, ...) re-runs the whole job
-    per evaluation and should be checkpointed by the caller of this
-    predicate."""
+    node (Aggregate, Join, Window, Distinct, ...), a per-element
+    higher-order function or a Python UDF re-runs the whole job per
+    evaluation; :func:`materialize` checkpoints it."""
     lvl = df.storageLevel
     if lvl.useMemory or lvl.useDisk:
         return True
@@ -89,8 +126,26 @@ def is_cheap_rescan(df: DataFrame) -> bool:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     except Exception:  # noqa: BLE001 — conservatively treat as expensive
         return False
-    expensive = _WIDE_TOKENS + ("Generate",)
-    return not any(tok in plan for tok in expensive)
+    return not any(tok in plan for tok in _EXPENSIVE_TOKENS)
+
+
+def materialize(df: DataFrame) -> Tuple[DataFrame, int]:
+    """``(relation, row count)`` for a relation the caller reads more
+    than once: ``df`` itself when :func:`is_cheap_rescan`, else an eager
+    ``localCheckpoint`` whose row count is observed by the same job
+    (no second job to count it)."""
+    if is_cheap_rescan(df):
+        return df, df.count()
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return out, int(obs.get["rows"])
+
+
+def broadcast_if_small(df: DataFrame, max_rows: int) -> DataFrame:
+    """:func:`materialize` ``df`` and mark it for broadcast when it has
+    at most ``max_rows`` rows; above that a join on it shuffles."""
+    out, rows = materialize(df)
+    return F.broadcast(out) if rows <= max_rows else out
 
 
 def adaptive_repartition(
@@ -115,9 +170,7 @@ def adaptive_repartition(
     except Exception:  # noqa: BLE001
         pass
     try:
-        sc = df.sparkSession.sparkContext
-        target = sc.defaultParallelism
-        current = df.rdd.getNumPartitions()
+        target = df.sparkSession.sparkContext.defaultParallelism
     except Exception:  # noqa: BLE001 — never let the advisory check fail a plan
         return df
     size = _plan_size_bytes(df)
@@ -127,23 +180,28 @@ def adaptive_repartition(
         # never introduce (guide §8: move heavy bytes once, and not for
         # this). This is the 100 TB branch.
         return df
-    if size is None:
-        # unknown size (checkpoint/RDD-backed plans report inflated or
-        # absent pre-materialization estimates): act only on the
-        # unambiguous starvation case — a single partition, where every
-        # byte already funnels through one task and one redistribution
-        # moves it exactly once (the guide §2.5 unsplittable-input
-        # prescription)
-        if current != 1:
+    wide = _has_wide_node(df)
+    # provably small with a wide node: one tiny exchange buys full-core
+    # parallelism even at a nominal `target` partitions, because AQE
+    # coalesces its shuffles by bytes at runtime. Otherwise decide from
+    # the current partition count — the planner's nominal one for a
+    # wide plan, whose ``df.rdd`` would run its shuffle and broadcast
+    # stages.
+    if size is None or not wide:
+        try:
+            current = _nominal_partitions(df) if wide else df.rdd.getNumPartitions()
+        except Exception:  # noqa: BLE001
             return df
-    else:
-        # provably small: one tiny exchange buys full-core parallelism.
-        # A narrow scan already split >= target ways needs nothing; a
-        # plan with a wide node needs the explicit repartition even at
-        # a nominal `target` partitions, because AQE coalesces its
-        # shuffles by bytes at runtime.
-        if current >= target and not _has_wide_node(df):
+        if size is None and current != 1:
+            # unknown size (checkpoint/RDD-backed plans report inflated
+            # or absent pre-materialization estimates): act only on the
+            # unambiguous starvation case — a single partition, where
+            # every byte already funnels through one task and one
+            # redistribution moves it exactly once (the guide §2.5
+            # unsplittable-input prescription)
             return df
+        if size is not None and current >= target:
+            return df  # a narrow scan already split >= target ways
     if cols:
         return df.repartition(target, *[F.col(c) for c in cols])
     return df.repartition(target)

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .adaptive import broadcast_if_small
+
 #: bits per filter word. 32 (not 64) so the per-bit contribution
 #: ``1 << bit`` stays strictly positive in a signed BIGINT in BOTH
 #: engines — DuckDB's ``<<`` range-checks BIGINT and a 64-bit word's
@@ -173,18 +175,10 @@ def bloom_probe(
         F.expr(f"pos DIV {WORD_BITS}").alias("word_idx"),
         (F.col("pos") % WORD_BITS).cast("int").alias("bit"),
     )
-    # materialize the (bounded, <= n_bits/32-row) filter once so the
-    # guard count and the join read the same relation instead of
-    # recomputing the build twice (the decontaminate lesson) — but only
-    # when re-evaluation is actually expensive: an already-checkpointed
-    # or parquet-backed filter (the production artifact, and any caller
-    # sharing one filter across probe calls) is used as-is instead of
-    # being copied once per probe
-    from .adaptive import is_cheap_rescan
-
-    if not is_cheap_rescan(bloom):
-        bloom = bloom.localCheckpoint(eager=True)
-    bloom_side = F.broadcast(bloom) if bloom.count() <= broadcast_max_rows else bloom
+    # the (bounded, <= n_bits/32-row) filter is built once for the guard
+    # count and the join; a stored filter (the production artifact, or
+    # one shared across probe calls) is read as-is, never copied
+    bloom_side = broadcast_if_small(bloom, broadcast_max_rows)
     hit = pos.join(bloom_side, "word_idx", "left").select(
         "doc_id",
         F.when(

@@ -46,6 +46,8 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .adaptive import adaptive_repartition, materialize
+
 #: symbol separator inside the spaced encoding (U+001F unit separator)
 SEP = "\x1f"
 #: end-of-word marker symbol (U+0017 ETB), appended to every word
@@ -60,8 +62,6 @@ def _word_freq(df: DataFrame, text_col: str) -> DataFrame:
     """Whitespace pre-tokenization -> (word, cnt). Words containing
     the two control characters the encoding reserves are excluded
     (they cannot be represented; real text never contains them)."""
-    from .adaptive import adaptive_repartition
-
     return (
         adaptive_repartition(df)
         .select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"))
@@ -139,17 +139,16 @@ def bpe_train(
     :func:`bpe_token_count` uses so train + apply share one distributed
     agg instead of running it twice — and ``word_freq_count`` (its row
     count, when the caller already ran one for its own broadcast guard)
-    to skip the local-vs-distributed guard's count job too."""
-    from .adaptive import is_cheap_rescan
-
+    to skip the local-vs-distributed guard's count job too; the count
+    must describe ``word_freq``, so passing it alone raises."""
+    if word_freq_count is not None and word_freq is None:
+        raise ValueError("bpe_train: word_freq_count describes word_freq; pass both or neither")
     spark = df.sparkSession
     base = word_freq if word_freq is not None else _word_freq(df, text_col)
     words = base.withColumn("s", _spaced(F.col("word")))
-    if not is_cheap_rescan(base):
-        # materialize once for the count guard + collect/iterations; an
-        # already-materialized caller relation needs no second copy
-        words = words.localCheckpoint(eager=True)
-    n_words = word_freq_count if word_freq_count is not None else words.count()
+    # materialize once for the count guard + collect/iterations; an
+    # already-materialized caller relation is only counted
+    words, n_words = materialize(words) if word_freq_count is None else (words, word_freq_count)
     if n_words <= local_vocab_max_rows:
         merges = _train_local(
             [(row["word"], int(row["cnt"])) for row in words.select("word", "cnt").collect()],
@@ -306,11 +305,9 @@ def bpe_token_count(
     join above — vocabularies usually fit, web-scale tail vocabularies
     may not) -> one map-side-combinable per-doc sum. No UDF anywhere.
     """
-    vocab = _word_freq(df, text_col).localCheckpoint(eager=True)
-    # ONE count job serves the training local-vs-distributed guard AND
-    # the broadcast guard below (round 8: it ran twice on the same
-    # checkpointed relation)
-    n_vocab = vocab.count()
+    # ONE materialization, and the row count it observes, serve the
+    # training local-vs-distributed guard AND the broadcast guard below
+    vocab, n_vocab = materialize(_word_freq(df, text_col))
     if merges is None:
         # train on the SAME materialized frequency table the apply side
         # uses — one distributed agg for both, not two
@@ -334,8 +331,6 @@ def bpe_token_count(
         if n_vocab <= broadcast_max_rows
         else counted
     )
-    from .adaptive import adaptive_repartition
-
     doc_words = adaptive_repartition(df, cols=(id_col,)).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),

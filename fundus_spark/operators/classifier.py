@@ -79,6 +79,8 @@ from typing import Dict, List, Optional, Sequence, Tuple, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .adaptive import adaptive_repartition, materialize
+
 #: fixed-point scales: weights, features
 W_SCALE = 10_000
 X_SCALE = 10_000
@@ -123,8 +125,6 @@ def classifier_features(
     # bucket md5(salt)%n_features on every empty doc (review finding —
     # an empty doc must score bias-only, not inherit whatever real
     # token collides with hash(''))
-    from .adaptive import adaptive_repartition
-
     toks = adaptive_repartition(docs, cols=(id_col,)).select(
         *cols,
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
@@ -189,8 +189,6 @@ def _fit_gram(
     # per-row compute dwarfs bytes, so a byte-coalesced single partition
     # would serialize it; lift a small under-partitioned (checkpointed)
     # relation to full parallelism first (no-op for big inputs)
-    from .adaptive import adaptive_repartition
-
     feats = adaptive_repartition(feats, cols=("doc_id",))
     a = feats.select("doc_id", F.col("j").alias("ja"), F.col("x_q").alias("xa"))
     b = feats.select("doc_id", F.col("j").alias("jb"), F.col("x_q").alias("xb"))
@@ -241,12 +239,10 @@ def _fit_iterative(
     (one bounded array row per doc, integer fold over driver-literal
     weights, map-side-combinable DECIMAL sum). Bit-identical model to
     the gram method; costs one Spark job per iteration."""
-    docf = (
+    docf, n_docs = materialize(
         feats.groupBy("doc_id", "y")
         .agg(F.sort_array(F.collect_list(F.struct("j", "x_q"))).alias("fs"))
-        .localCheckpoint(eager=True)
     )
-    n_docs = docf.count()
     if n_docs == 0:
         raise ValueError("quality_classifier_fit: empty training relation")
     d = n_features + 1
@@ -305,10 +301,10 @@ def quality_classifier_fit(
     """
     if method not in ("gram", "iterative"):
         raise ValueError(f"unknown method {method!r}: expected 'gram' or 'iterative'")
-    feats = classifier_features(
+    feats = materialize(classifier_features(
         docs, text_col=text_col, id_col=id_col, label_col=label_col,
         n_features=n_features, salt=salt, feature_mode=feature_mode,
-    ).localCheckpoint(eager=True)
+    ))[0]
     # a label that CASTS to null (e.g. a 'true'/'false' string column,
     # or nulls from an outer join) would silently train as y=0 in the
     # gram path — its docs enter XᵀX and n but vanish from Xᵀy (review

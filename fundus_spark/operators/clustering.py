@@ -37,6 +37,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .adaptive import materialize
 from .similarity import _dot, ivf_centroids, lit_double_array
 
 #: fixed-point scale for the exact integer centroid update
@@ -78,13 +79,13 @@ def kmeans_fit(
     """
     # one deterministic fixed-point quantization at entry: BIGINT
     # components sum exactly in any order/engine (see module docstring)
-    q = embeddings.select(
+    q = materialize(embeddings.select(
         F.col(id_col).alias("vid"),
         F.transform(
             F.col(vec_col),
             lambda x: F.floor(x.cast("double") * _FP_SCALE + F.lit(0.5)).cast("long"),
         ).alias("qvec"),
-    ).localCheckpoint(eager=True)
+    ))[0]
 
     cents: List[List[float]] = ivf_centroids(dim, k, seed)
     counts: List[int] = [0] * k

@@ -27,6 +27,8 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .adaptive import adaptive_repartition, broadcast_if_small, materialize
+
 
 def _portable_hash32(col: Column, salt: str = "", mode: str = "md5") -> Column:
     """32-bit shingle/token hash.
@@ -88,8 +90,6 @@ def shingle_relation(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     # the explode multiplies per-row work ~|tokens|-fold and every
     # consumer hashes each shingle — lift a small under-partitioned
     # input to full parallelism first (no-op at scale)
-    from .adaptive import adaptive_repartition
-
     df = adaptive_repartition(df, cols=(id_col,))
     return df.select(F.col(id_col).alias("doc_id"), F.explode(word_shingles(F.col(text_col), k)).alias("shingle"))
 
@@ -262,15 +262,13 @@ def ngram_jaccard_pairs(
     with the banding phase (see minhash_signatures scale note).
     """
     if shingles is None:
-        # the distinct shingle relation feeds the sizes agg AND both
-        # sides of the intersection — materialize it once instead of
-        # re-running the explode+distinct per consumer (the same
-        # compute-once contract callers get by passing ``shingles``;
-        # a production run persists this relation to the lake anyway)
-        shingles = shingle_relation(df, text_col, id_col, k).distinct().localCheckpoint(
-            eager=True
-        )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+        shingles = shingle_relation(df, text_col, id_col, k).distinct()
+        if candidates is None:
+            # the self-join path reads the distinct shingles three times
+            # (sizes, both join sides): materialize them once, as a
+            # caller passing ``shingles`` would; the candidates path's
+            # one consumer is its collect_set agg
+            shingles = materialize(shingles)[0]
 
     if candidates is not None:
         # candidates path (round 8): verify via per-doc DISTINCT shingle
@@ -278,7 +276,7 @@ def ngram_jaccard_pairs(
         # the pairs x |shingles(a)| expansion by (b, shingle), shuffled
         # the full shingle relation twice, aggregated it back by (a, b),
         # and then joined two separate size relations; this plan is one
-        # collect_set agg over the (materialized) shingle relation plus
+        # collect_set agg over the shingle relation plus
         # two joins — the intersection AND both sizes fall out of the
         # same row (|arr| is the doc's distinct-shingle count, exactly
         # the old sizes value), with no groupBy after the joins. Bytes
@@ -310,20 +308,20 @@ def ngram_jaccard_pairs(
             )
             .where(F.col("jaccard") >= threshold)
         )
-    else:
-        join_keys = ["shingle"]
-        left = shingles
-        if partition_col is not None:
-            parts = df.select(F.col(id_col).alias("doc_id"), F.col(partition_col).alias("_part"))
-            left = shingles.join(parts, "doc_id")
-            join_keys = ["_part", "shingle"]
-        pair_intersections = (
-            left.alias("l")
-            .join(left.alias("r"), join_keys)
-            .where(F.col("l.doc_id") < F.col("r.doc_id"))
-            .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    join_keys = ["shingle"]
+    left = shingles
+    if partition_col is not None:
+        parts = df.select(F.col(id_col).alias("doc_id"), F.col(partition_col).alias("_part"))
+        left = shingles.join(parts, "doc_id")
+        join_keys = ["_part", "shingle"]
+    pair_intersections = (
+        left.alias("l")
+        .join(left.alias("r"), join_keys)
+        .where(F.col("l.doc_id") < F.col("r.doc_id"))
+        .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
     joined = (
         pair_intersections.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
         .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
@@ -390,11 +388,11 @@ def connected_components(
     Near-dup clusters from LSH banding are quasi-cliques (diameter 2-3),
     so the loop converges in a handful of rounds even at 10^12 edges;
     ``localCheckpoint`` after every round truncates the lineage so the
-    plan does not grow with the iteration count (on a real cluster with
-    unreliable-block concerns, set ``spark.checkpoint.dir`` and swap in
-    ``checkpoint`` — same shape). Convergence is detected by counting
-    label changes, one tiny action per round on the label relation
-    (|nodes| rows, never the documents).
+    plan does not grow with the iteration count (the edge relation and
+    the initial labels go through :func:`operators.adaptive.materialize`,
+    which owns the reliable-checkpoint choice). Convergence is detected
+    by counting label changes, one tiny action per round on the label
+    relation (|nodes| rows, never the documents).
 
     Cache lifecycle: each round's eager checkpoint caches a |clustered
     nodes|-row RDD; superseded rounds are released by Spark's
@@ -402,8 +400,8 @@ def connected_components(
     (``spark.cleaner.referenceTracking``, on by default), so steady
     state holds O(1) label snapshots. On clusters where lazy GC-driven
     cleanup is too slow, set a checkpoint dir with
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` and swap
-    ``localCheckpoint`` for ``checkpoint``.
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` and make
+    the same swap in :func:`operators.adaptive.materialize` and here.
     """
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
@@ -418,19 +416,18 @@ def connected_components(
     # propagation round re-executes the whole upstream pair-producing
     # pipeline (LSH banding + verify) inside its join — measured 43s ->
     # 9s on the sf0.1 curation chain
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges)[0]
     # fused first round: the identity labeling's first propagation is
     # exactly min(own id, neighbor ids), which one groupBy over the
     # edge relation computes directly — saving the identity-label
     # materialization plus a full join+agg round (every node appears as
     # ``src`` since edges carry both directions, so the node set is
     # identical to the old select-distinct init)
-    labels = (
+    labels = materialize(
         edges.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
         .select(F.col("src").alias("node"), "lbl")
-        .localCheckpoint(eager=True)
-    )
+    )[0]
     converged = False
     for _ in range(max_rounds):
         neighbor_min = (
@@ -483,13 +480,10 @@ def dedup_survivors(
     while it is under ``broadcast_max_rows`` (~10M (long, long) rows
     ≈ 160 MB — safely under a 1-2 GiB executor broadcast budget);
     above that it falls back to a plain shuffle hash join on the id —
-    same result, one extra exchange. The count is one action over the
-    already-checkpointed label relation, so it costs no recompute.
+    same result, one extra exchange. The label relation is already
+    checkpointed, so its guard count reads it, not the upstream pipeline.
     """
-    comp = connected_components(pairs, a_col, b_col)
-    # comp is localCheckpoint-materialized by connected_components, so
-    # this count reads the cached relation, not the upstream pipeline
-    comp_side = F.broadcast(comp) if comp.count() <= broadcast_max_rows else comp
+    comp_side = broadcast_if_small(connected_components(pairs, a_col, b_col), broadcast_max_rows)
     out = (
         df.join(comp_side, df[id_col] == comp_side["doc_id"], "left")
         .select(df["*"], F.coalesce(comp_side["cluster_id"], df[id_col]).alias("cluster_id"))
@@ -595,7 +589,9 @@ def incremental_assign(
     pairs_nn = ngram_jaccard_pairs(
         new_docs, text_col, id_col, k, threshold, candidates=cand_nn, shingles=new_sh
     )
-    comp = connected_components(pairs_nn)  # (doc_id, cluster_id) for paired new docs
+    # (doc_id, cluster_id) for paired new docs, already checkpointed;
+    # comp_min has at most as many rows, so one count guards both sides
+    comp, n_comp = materialize(connected_components(pairs_nn))
 
     seeded = (
         new_docs.select(F.col(id_col).alias("doc_id"))
@@ -607,10 +603,7 @@ def incremental_assign(
         .groupBy("cluster_id")
         .agg(F.min("seed").alias("comp_seed"))
     )
-    # comp is localCheckpoint-materialized by connected_components, so
-    # the guard count reads the cached relation; comp_min has at most
-    # as many rows as comp, so one count decides both sides.
-    small = comp.count() <= broadcast_max_rows
+    small = n_comp <= broadcast_max_rows
     comp_side = F.broadcast(comp) if small else comp
     comp_min_side = F.broadcast(comp_min) if small else comp_min
     labeled = (
@@ -1068,11 +1061,8 @@ def line_dedup(
         .agg(F.count(F.lit(1)).alias("n_occ"))
         .where(F.col("n_occ") >= min_occurrences)
         .select("lkey")
-        .localCheckpoint(eager=True)
     )
-    freq_side = (
-        F.broadcast(frequent) if frequent.count() <= broadcast_max_rows else frequent
-    )
+    freq_side = broadcast_if_small(frequent, broadcast_max_rows)
     # removal decision per distinct line key, folded back as a column:
     # collect the per-doc removable flags via a join on the exploded
     # relation, then rebuild with a positional filter

@@ -30,6 +30,8 @@ from typing import Dict, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .adaptive import adaptive_repartition, materialize
+
 _BUCKETS = 2**32
 
 
@@ -136,8 +138,6 @@ def _hashed_ngram_features(
     bucket primitive (engine-portable, so the DuckDB oracle recomputes
     the exact same buckets). One row per token/bigram OCCURRENCE —
     DSIR's feature counts are occurrence counts, not presence."""
-    from .adaptive import adaptive_repartition
-
     df = adaptive_repartition(df, cols=(id_col,))
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     # bind the token array: referencing the split expression inside the
@@ -374,12 +374,11 @@ def domain_mix(
         F.col(token_col) if token_col is not None
         else F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
     )
-    totals = (
+    totals = materialize(
         df.where(F.col(domain_col).isin(*rates.keys()))
         .groupBy(domain_col)
         .agg(F.sum(row_tokens).cast("double").alias("_domain_tokens"))
-        .localCheckpoint(eager=True)
-    )
+    )[0]
     # Fail fast on absurd replication rates BEFORE any row explodes.
     # ``totals`` is bounded by the mixture's domain count (dozens, never
     # millions — it is broadcast below for the same reason), so this is

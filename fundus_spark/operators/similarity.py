@@ -20,6 +20,8 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .adaptive import adaptive_repartition, broadcast_if_small, materialize
+
 
 def lit_double_array(vals) -> Column:
     """Literal ``array<double>`` as ONE parsed SQL expression instead of
@@ -34,15 +36,6 @@ def lit_double_array(vals) -> Column:
     if all(math.isfinite(v) for v in vs):
         return F.expr("array(" + ",".join(repr(v) + "D" for v in vs) + ")")
     return F.array(*[F.lit(v) for v in vs])
-
-
-def _adaptive(df: DataFrame, cols=None) -> DataFrame:
-    """Size-gated parallelism lift for the interpreted per-vector math
-    below (hyperplane/centroid scoring is a higher-order-function
-    expression — compute-bound however few bytes the vectors are)."""
-    from .adaptive import adaptive_repartition
-
-    return adaptive_repartition(df, cols=cols)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -89,8 +82,6 @@ def cosine_topk(
     # them inside the pair loop costs two extra interpreted array folds
     # PER PAIR (higher-order functions are not codegen'd) — 3x the hot
     # path for identical arithmetic.
-    from .adaptive import adaptive_repartition
-
     corpus = adaptive_repartition(embeddings, cols=(id_col,)).select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"), _norm(F.col(vec_col)).alias("cnorm")
     )
@@ -164,7 +155,7 @@ def cosine_neardup_pairs(
         for b in range(bands)
     ]
     banded = (
-        _adaptive(embeddings, cols=(id_col,)).select(
+        adaptive_repartition(embeddings, cols=(id_col,)).select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), _norm(F.col(vec_col)).alias("nrm")
         )
         .select("vid", "vec", "nrm", F.explode(F.array(*band_keys)).alias("bk"))
@@ -262,7 +253,7 @@ def ivf_topk(
     # ties (exactly equal dots) break toward the LOWER centroid id on
     # both engines because (s, i) sorts lexicographically.
     ranked = F.reverse(F.sort_array(scores))
-    base = _adaptive(embeddings, cols=(id_col,)).select(
+    base = adaptive_repartition(embeddings, cols=(id_col,)).select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
     ).withColumn("_ranked", ranked)
     assigned = base.select("vid", "vec", F.col("_ranked")[0]["i"].alias("cell"))
@@ -336,7 +327,7 @@ def lsh_bucketed_topk(
         for b in range(bands)
     ]
     banded = (
-        _adaptive(embeddings, cols=(id_col,)).select(
+        adaptive_repartition(embeddings, cols=(id_col,)).select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), _norm(F.col(vec_col)).alias("nrm")
         )
         .select("vid", "vec", "nrm", F.explode(F.array(*band_keys)).alias("bk"))
@@ -526,12 +517,10 @@ def semantic_dedup(
     # this operator. The relation is one (id, vec, cell) row per input
     # vector; a production run would persist this table anyway (it IS
     # the cluster assignment artifact).
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = materialize(assigned)[0]
     # the within-cell pair join is quadratic per cell — compute-bound,
     # not byte-bound — so keep it parallel when the (small) checkpointed
     # assignment would otherwise ride one byte-coalesced partition
-    from .adaptive import adaptive_repartition
-
     members = adaptive_repartition(assigned, cols=("cell",)).select(
         "vid", "vec", _norm(F.col("vec")).alias("nrm"), "cell"
     )
@@ -560,15 +549,10 @@ def semantic_dedup(
         )
         .groupBy("b_id")
         .agg(F.min("a_id").alias("pruned_by"))
-        # eager checkpoint: the guard count and the join-back read ONE
-        # materialization of the pair scan, not two evaluations
-        .localCheckpoint(eager=True)
     )
-    pruned_side = (
-        F.broadcast(pruned)
-        if pruned.count() <= broadcast_max_rows
-        else pruned
-    )
+    # the guard count and the join-back read ONE materialization of the
+    # pair scan, not two evaluations
+    pruned_side = broadcast_if_small(pruned, broadcast_max_rows)
     return (
         assigned.join(pruned_side, assigned["vid"] == pruned_side["b_id"], "left")
         .select(

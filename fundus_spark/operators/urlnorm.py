@@ -43,6 +43,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .adaptive import broadcast_if_small
+
 #: query parameters that never identify content — analytics/campaign
 #: tags (Google Analytics utm_*, click ids from FB/Google/MS, Mailchimp
 #: mc_*, Instagram igshid, and bare referrer tags). Matched against the
@@ -225,14 +227,8 @@ def host_filter(
                 F.regexp_replace(F.lower(F.col(dom_col)), r"\.+$", ""), r"^\.+", ""
             ).alias("_blk_domain")
         ).distinct()
-        # localCheckpoint so the guard count and the join share one
-        # materialization (the dedup.py:423 pattern)
-        domains = domains.localCheckpoint(eager=False)
-        side = (
-            F.broadcast(domains)
-            if domains.count() <= broadcast_max_rows
-            else domains
-        )
+        # the guard count and the join share one materialization
+        side = broadcast_if_small(domains, broadcast_max_rows)
         hosts = df.select(host.alias("_blk_host")).distinct()
         matches = (
             hosts.withColumn(

@@ -26,8 +26,9 @@ component rounds, which a resumed job must not repeat.
 
 * :func:`curate_corpus` — the full chain, in session. The ``deduped``
   and ``survivors`` boundaries feed several consumers each, so they are
-  ``localCheckpoint``-ed when ``materialize_stages`` (the default) and
-  passed through otherwise; ``gated`` and ``final`` pass through.
+  materialized (:func:`operators.adaptive.materialize`) when
+  ``materialize_stages`` (the default) and passed through otherwise;
+  ``gated`` and ``final`` pass through.
 * :func:`curate_increment` — the same in-session policy, with a frozen
   corpus as input: the near-dup stage becomes the frozen-fingerprint
   anti-join plus ``incremental_assign``. The near-dup implementation is
@@ -70,7 +71,7 @@ from ..operators import (
     repetition_score,
     split_assign,
 )
-from ..operators.adaptive import is_cheap_rescan
+from ..operators.adaptive import broadcast_if_small, materialize
 from ..operators.dedup import shingle_relation
 from ..operators.textclean import fix_mojibake_col
 
@@ -113,16 +114,13 @@ def decontaminate(
     millions of crawled pages — makes it unbounded at 100 TB, so it is
     broadcast only under ``broadcast_max_rows``; above that the
     left_anti join runs as a plain shuffle join (same result, one
-    extra exchange). The flagged relation is eagerly checkpointed
-    first so the guard count and the join read one materialization,
-    not two evaluations of the contamination pipeline.
+    extra exchange).
     """
     flagged = contamination_flags(
         survivors, benchmark, text_col=text_col, id_col=id_col, k=contamination_k
     )
-    ids = flagged.select(F.col("doc_id").alias(id_col)).localCheckpoint(eager=True)
-    side = F.broadcast(ids) if ids.count() <= broadcast_max_rows else ids
-    return survivors.join(side, id_col, "left_anti")
+    ids = flagged.select(F.col("doc_id").alias(id_col))
+    return survivors.join(broadcast_if_small(ids, broadcast_max_rows), id_col, "left_anti")
 
 
 def _in_session(materialize_stages: bool) -> Boundary:
@@ -137,7 +135,7 @@ def _in_session(materialize_stages: bool) -> Boundary:
     def boundary(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         out = build()
         if materialize_stages and name in ("deduped", "survivors"):
-            return out.localCheckpoint(eager=True)
+            return materialize(out)[0]
         return out
 
     return boundary
@@ -155,33 +153,16 @@ def _drop_frozen_fingerprints(
     the frozen corpus (``frozen_fps`` if stored, else computed from
     ``frozen_docs``)."""
     if frozen_fps is None:
-        # materialize the default-constructed relation ONCE: the guard
-        # count below plus the left_anti join would otherwise each run
-        # the frozen-corpus exact-dedup job (review finding — the
-        # dominant frozen-side cost doubled per streaming trigger)
-        frozen_fps = (
-            exact_dedup(frozen_docs, text_col=text_col, id_col=id_col)
-            .select("fp")
-            .localCheckpoint(eager=True)
-        )
-    elif not is_cheap_rescan(frozen_fps):
-        # a CALLER-supplied frozen_fps gets the same protection (round-6
-        # review finding: the guard count + the left_anti join evaluated
-        # an unpersisted caller lineage twice) — but only when re-scan is
-        # actually expensive: the documented 100 TB contract is a stored
-        # parquet fp relation, whose count is metadata-only and which an
-        # eager checkpoint would pointlessly copy in full.
-        frozen_fps = frozen_fps.localCheckpoint(eager=True)
+        frozen_fps = exact_dedup(frozen_docs, text_col=text_col, id_col=id_col)
     # The frozen fingerprint relation is one md5 row PER FROZEN DOC —
     # at the 100 TB append-only shape that is billions of rows, so a
     # forced broadcast would OOM the driver. Broadcast only under the
     # same cap dedup_survivors uses; above it, the left_anti join runs
     # as a plain shuffle join (same result, one extra exchange). At
-    # scale callers pass a persisted frozen_fps, so the guard count is
-    # a cheap parquet-side count, not a recompute of frozen dedup.
-    fps_rel = frozen_fps.select(F.col("fp").alias("_fp"))
-    if frozen_fps.count() <= broadcast_max_rows:
-        fps_rel = F.broadcast(fps_rel)
+    # scale callers pass a stored frozen_fps, which the guard counts
+    # from parquet as-is; the default-constructed relation (frozen
+    # dedup) is materialized once for the guard and the join.
+    fps_rel = broadcast_if_small(frozen_fps.select(F.col("fp").alias("_fp")), broadcast_max_rows)
     normalized = F.md5(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     return deduped.withColumn("_fp", normalized).join(
         fps_rel, "_fp", "left_anti"
@@ -426,7 +407,7 @@ def _curate(
         # explode+distinct exchange across the two consumers)
         shingles = shingle_relation(deduped, text_col=text_col, id_col=id_col, k=shingle_k).distinct()
         if materialize_stages:
-            shingles = shingles.localCheckpoint(eager=True)
+            shingles = materialize(shingles)[0]
         cands = lsh_candidate_pairs(
             deduped, text_col=text_col, id_col=id_col, n_perm=lsh_perm, bands=lsh_bands,
             k=shingle_k, shingles=shingles, hash_mode=hash_mode, bucket_cap=lsh_bucket_cap,
@@ -468,7 +449,7 @@ def chain_options(**options) -> dict:
 
 def curate_corpus(docs: DataFrame, benchmark: Optional[DataFrame] = None, **options) -> DataFrame:
     """The full curation chain over ``docs``, decontaminated against
-    ``benchmark`` if given, in session (``localCheckpoint`` at the
+    ``benchmark`` if given, in session (materialized at the
     ``deduped`` and ``survivors`` boundaries unless
     ``materialize_stages=False``). ``options`` are the chain's — see
     :func:`_curate` for each one and its default; a misspelled name

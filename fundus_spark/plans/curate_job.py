@@ -5,7 +5,7 @@ completed stage.
 
 The chain, its stage order and its options are those of
 :func:`plans.curate.curate_corpus`; only the boundary differs. The
-in-session drivers ``localCheckpoint`` two boundaries (or none); this
+in-session drivers materialize two boundaries (or none); this
 job writes all four to ``{workdir}/{stage}`` and reads each back. The
 policy receives each stage's builder, not its relation, so a committed
 stage is read back without being rebuilt.

@@ -37,6 +37,7 @@ from typing import Optional
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.adaptive import materialize
 from ..plans.curate import chain_options, curate_increment
 
 CORPUS_SCHEMA = "doc_id long, source string, text string"
@@ -246,8 +247,7 @@ def curate_batch_into_corpus(
     # materialize the curated increment ONCE: count + write would
     # otherwise each execute the post-checkpoint stages
     # (contamination join, split, pack window) — twice per trigger
-    out = curated.select("doc_id", "source", "text").localCheckpoint(eager=True)
-    n = out.count()
+    out, n = materialize(curated.select("doc_id", "source", "text"))
     if batch_id is None:
         if n:
             out.write.mode("append").parquet(corpus_path)

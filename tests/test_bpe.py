@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 EOW = "\x17"
@@ -170,6 +171,17 @@ def test_domain_mix_accepts_precomputed_token_col(spark):
     kept_tokens = out.agg(F.sum("n_tokens").alias("t")).collect()[0].t
     assert abs(kept_tokens - 5_000) < 1_200
     assert out.groupBy().agg(F.max("epoch").alias("m")).collect()[0].m == 0
+
+
+def test_bpe_train_refuses_a_count_without_its_relation(spark):
+    """``word_freq_count`` describes ``word_freq``; passing it alone
+    would steer the local-vs-distributed choice by a count of some
+    other relation, so it raises before any job."""
+    from fundus_spark.operators import bpe_train
+
+    df = spark.createDataFrame([(0, "ab ab")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="word_freq_count"):
+        bpe_train(df, n_merges=2, word_freq_count=1)
 
 
 def test_bpe_local_and_distributed_training_paths_agree(spark):

@@ -87,6 +87,61 @@ def test_store_roundtrip_matches_inline_relations(spark, tmp_path):
     assert is_cheap_rescan(fps) and is_cheap_rescan(bands)
 
 
+def _jobs(spark, group, fn):
+    """``(fn(), number of Spark jobs it launched)``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("default", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_counts_like_count(spark):
+    """The observed row count equals ``count()`` on a relation with
+    rows, on an empty one and on one with zero partitions; a cheap
+    relation comes back as-is."""
+    from fundus_spark.operators.adaptive import materialize
+
+    docs = _frozen_docs(spark)
+    per_source = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+    no_parts = spark.createDataFrame(spark.sparkContext.emptyRDD(), "a long").groupBy("a").count()
+    for df in (per_source, per_source.where("n < 0"), no_parts):
+        out, rows = materialize(df)
+        assert rows == df.count() == out.count()
+        assert sorted(out.collect()) == sorted(df.collect())
+    out, rows = materialize(docs)
+    assert out is docs and rows == 40
+
+
+def test_materialize_raises_on_a_failing_udf(spark):
+    from fundus_spark.operators.adaptive import materialize
+
+    @F.udf("long")
+    def boom(_):
+        raise RuntimeError("boom in udf")
+
+    df = _frozen_docs(spark).groupBy("source").count().select(boom("source").alias("b"))
+    with pytest.raises(Exception, match="boom in udf"):
+        materialize(df)
+
+
+def test_materialize_counts_in_the_materializing_job(spark):
+    """On a plan with two shuffles the observed count saves the jobs a
+    ``count()`` after the eager checkpoint runs."""
+    from fundus_spark.operators.adaptive import materialize
+
+    docs = _frozen_docs(spark)
+    two_shuffles = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).join(
+        docs.groupBy("source").agg(F.max("doc_id").alias("m")), "source"
+    )
+    want, old = _jobs(spark, "ckpt_count", lambda: two_shuffles.localCheckpoint(eager=True).count())
+    (_, rows), new = _jobs(spark, "materialize", lambda: materialize(two_shuffles))
+    assert rows == want == 3
+    assert new < old, (new, old)
+
+
 def test_band_probe_has_no_frozen_side_exchange(spark, tmp_path):
     """Differential plan check: the (band, key) probe join against the
     bucketed store needs exactly one fewer Exchange than the same join

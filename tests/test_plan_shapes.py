@@ -143,6 +143,35 @@ def test_media_decode_is_zero_shuffle_by_default(spark, entry):
     assert "Exchange" in _plan(_mf(media, repartition_on="media_id"))
 
 
+def test_adaptive_repartition_builds_without_running_a_job(spark):
+    """Building a plan runs nothing: over the shape of
+    ``incremental_assign``'s frozen-side semi-join (a checkpointed docs
+    relation left-semi joined to a broadcast candidate-id set) and over
+    a grouped pandas map (the WARC source's shape), reading the
+    partition count from ``df.rdd`` would run the broadcast side or the
+    shuffle. The single-partition semi-join input still gets its
+    repartition."""
+    from pyspark.sql import functions as F
+
+    from fundus_spark.operators.adaptive import adaptive_repartition
+
+    rows = spark.createDataFrame(
+        [(i, "text %d" % i) for i in range(40)], "doc_id long, text string"
+    )
+    docs = rows.coalesce(1).localCheckpoint(eager=True)
+    cands = spark.createDataFrame([(i % 7,) for i in range(20)], "doc_id long")
+    needed = docs.join(F.broadcast(cands.distinct()), "doc_id", "left_semi")
+    grouped = rows.groupBy("doc_id").applyInPandas(lambda pdf: pdf, schema=rows.schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("plan_build", "plan_build")
+    try:
+        outs = [adaptive_repartition(df, cols=("doc_id",)) for df in (needed, grouped)]
+    finally:
+        sc.setJobGroup("default", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("plan_build")) == []
+    assert "REPARTITION_BY_NUM" in _plan(outs[0])
+
+
 def test_packing_has_exactly_one_exchange_on_shard_key(spark, entry):
     """Sequence packing = one shuffle on the shard key feeding the
     window; a second Exchange would mean an accidental repartition."""
