@@ -6,6 +6,13 @@ selectors of tag / ``.class`` / ``#id`` / ``[attr]`` / ``[attr=value]``,
 the descendant (whitespace) and child (``>``) combinators, and comma
 groups. Matching starts at the context element's descendants-or-self,
 like CSSSelector's ``descendant-or-self::`` translation.
+
+Results come out unique and in document order by construction: one
+depth-first walk over the context's subtree keeps every element that
+matches any comma group, and each group is checked right to left from
+the candidate, its child combinator against the parent and its
+descendant combinator against the ancestors up to and including the
+context element.
 """
 
 from __future__ import annotations
@@ -14,7 +21,6 @@ import re
 from typing import List, Optional, Tuple
 
 from .dom import Comment, Element
-from .xpath import _document_sort
 
 __all__ = ["CSSSelector"]
 
@@ -55,8 +61,37 @@ class _Simple:
         self.last_of_type: bool = False
 
     def matches(self, el: Element) -> bool:
+        # every check is a pure conjunct: the cheap tag test goes first
         if isinstance(el, Comment):
             return False
+        if self.tag is not None and el.tag != self.tag:
+            return False
+        if self.classes:
+            el_classes = el.classes()
+            if not all(c in el_classes for c in self.classes):
+                return False
+        if self.id is not None and el.get("id") != self.id:
+            return False
+        for name, op, value in self.attrs:
+            actual = el.get(name)
+            if actual is None:
+                return False
+            if value is None:
+                continue
+            if op == "=":
+                ok = actual == value
+            elif op == "*=":
+                ok = value in actual
+            elif op == "^=":
+                ok = actual.startswith(value)
+            elif op == "$=":
+                ok = actual.endswith(value)
+            elif op == "~=":
+                ok = value in actual.split()
+            else:
+                ok = False
+            if not ok:
+                return False
         if any(neg.matches(el) for neg in self.negations):
             return False
         if self.nth_of_type is not None:
@@ -89,34 +124,6 @@ class _Simple:
                 next(it)
                 if not any(inner.matches(d) for d in it):
                     return False
-        if self.tag is not None and el.tag != self.tag:
-            return False
-        if self.classes:
-            el_classes = el.classes()
-            if not all(c in el_classes for c in self.classes):
-                return False
-        if self.id is not None and el.get("id") != self.id:
-            return False
-        for name, op, value in self.attrs:
-            actual = el.get(name)
-            if actual is None:
-                return False
-            if value is None:
-                continue
-            if op == "=":
-                ok = actual == value
-            elif op == "*=":
-                ok = value in actual
-            elif op == "^=":
-                ok = actual.startswith(value)
-            elif op == "$=":
-                ok = actual.endswith(value)
-            elif op == "~=":
-                ok = value in actual.split()
-            else:
-                ok = False
-            if not ok:
-                return False
         return True
 
 
@@ -139,6 +146,8 @@ def _parse_group(selector: str) -> List[List[Tuple[str, _Simple]]]:
         if kind == "comma":
             if current is not None:
                 chain.append((pending_combinator, current))
+            if not chain:
+                raise ValueError(f"Empty selector group in {selector!r}")
             groups.append(chain)
             chain, current, pending_combinator = [], None, "descendant"
         elif kind == "child":
@@ -199,33 +208,42 @@ def _parse_group(selector: str) -> List[List[Tuple[str, _Simple]]]:
     return groups
 
 
+def _chain_matches(chain: List[Tuple[str, _Simple]], i: int, el: Element, context: Element) -> bool:
+    """Whether ``el`` matches ``chain[: i + 1]`` read right to left, with
+    every compound left of ``i`` matched by an ancestor of ``el`` no
+    higher than ``context``. ``chain[i][0]`` is the combinator that
+    joins compound ``i`` to compound ``i - 1``."""
+    combinator, simple = chain[i]
+    if not simple.matches(el):
+        return False
+    if i == 0:
+        return True
+    while el is not context:
+        el = el.getparent()  # type: ignore[assignment]
+        if _chain_matches(chain, i - 1, el, context):
+            return True
+        if combinator == "child":
+            return False
+    return False
+
+
 class CSSSelector:
     def __init__(self, selector: str):
         self.selector = selector
-        self._groups = _parse_group(selector)
+        self._groups = [(chain, len(chain) - 1) for chain in _parse_group(selector)]
+        # the tags a match can have, or None when a group's rightmost
+        # compound takes any tag
+        tags = {chain[last][1].tag for chain, last in self._groups}
+        self._tags = None if None in tags else frozenset(tags)
 
     def __call__(self, context: Element) -> List[Element]:
-        results: List[Element] = []
-        for chain in self._groups:
-            candidates: List[Element] = [n for n in context.iter() if not isinstance(n, Comment)]
-            first = True
-            for combinator, simple in chain:
-                if first:
-                    candidates = [el for el in candidates if simple.matches(el)]
-                    first = False
-                    continue
-                next_candidates: List[Element] = []
-                if combinator == "child":
-                    for el in candidates:
-                        next_candidates.extend(c for c in el.children if simple.matches(c))
-                else:  # descendant
-                    for el in candidates:
-                        it = el.iter()
-                        next(it)
-                        next_candidates.extend(c for c in it if simple.matches(c))
-                candidates = next_candidates
-            results.extend(candidates)
-        return _document_sort(results)  # type: ignore[return-value]
+        groups, tags = self._groups, self._tags
+        return [
+            el
+            for el in context.iter()
+            if (tags is None or el.tag in tags)
+            and any(_chain_matches(chain, last, el, context) for chain, last in groups)
+        ]
 
     def __repr__(self) -> str:
         return f"CSSSelector({self.selector!r})"

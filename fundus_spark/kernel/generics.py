@@ -10,7 +10,9 @@ shared substitution/result-filter helpers.
 
 from __future__ import annotations
 
+import functools
 import re
+import time
 from datetime import datetime, timezone
 from typing import Callable, Dict, Iterable, List, Optional, Pattern, Sequence, Set, Union
 
@@ -139,10 +141,19 @@ class _LocaleAwareParserInfo(_dateutil_parser.parserinfo):
     ]
 
 
+@functools.lru_cache(maxsize=1)
+def _parserinfo_for_year(year: int) -> _LocaleAwareParserInfo:
+    # dateutil reads the current year when a parserinfo is built and
+    # resolves two-digit years against it, so one instance serves one
+    # calendar year, never the whole life of a process
+    return _LocaleAwareParserInfo()
+
+
 def generic_date_parsing(date_str: Optional[str], tz: Optional[timezone] = None) -> Optional[datetime]:
     if date_str is None:
         return None
-    parsed = _dateutil_parser.parse(date_str, tzinfos=_TZ_OFFSETS, parserinfo=_LocaleAwareParserInfo(), fuzzy=True)
+    info = _parserinfo_for_year(time.localtime().tm_year)
+    parsed = _dateutil_parser.parse(date_str, tzinfos=_TZ_OFFSETS, parserinfo=info, fuzzy=True)
     if not parsed:
         return None
     if tz is not None and parsed.tzinfo is None:

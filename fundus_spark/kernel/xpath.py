@@ -23,8 +23,15 @@ XPath 1.0 subset those rules actually use:
 Reverse axes number their positions nearest-first, per spec — relied on
 by rules like ``p[not(preceding-sibling::*[1][self::h2 ...])]``.
 
-Results are node lists in document order without duplicates. Attribute
-hits are returned as :class:`AttrNode`.
+Results are node lists in document order without duplicates. The order
+comes from the walk itself wherever it can: ``//T[preds]`` compiles to
+one ``descendant::T[preds]`` step when no predicate depends on position,
+and a step taken from a single context node along ``child``, ``self``,
+``descendant``, ``descendant-or-self`` or ``following-sibling`` yields
+its nodes in document order already. :func:`_document_sort` runs only
+where two or more nodes come out of a union, a step from several
+context nodes, a reverse axis or an attribute step (attributes order by
+name). Attribute hits are returned as :class:`AttrNode`.
 """
 
 from __future__ import annotations
@@ -180,6 +187,40 @@ def _tokenize(expr: str) -> List[Tuple[str, str]]:
 _FORWARD_AXES = {"child", "descendant", "descendant-or-self", "self", "following-sibling", "attribute"}
 _REVERSE_AXES = {"parent", "ancestor", "ancestor-or-self", "preceding-sibling"}
 _AXES = _FORWARD_AXES | _REVERSE_AXES
+# forward axes whose nodes from ONE context come out in document order
+# ("attribute" is excluded: its nodes sort by name, not dict order)
+_ORDERED_AXES = {"child", "self", "descendant", "descendant-or-self", "following-sibling"}
+# functions that always return a boolean, never a number
+_BOOLEAN_FUNCS = {"not", "contains", "starts-with", "ends-with", "boolean", "hasclass", "re:test"}
+
+
+def _mentions_position(ast: Any) -> bool:
+    if isinstance(ast, tuple):
+        if ast[0] == "func" and ast[1] in ("position", "last"):
+            return True
+        return any(_mentions_position(a) for a in ast[1:])
+    if isinstance(ast, list):
+        return any(_mentions_position(a) for a in ast)
+    return False
+
+
+def _is_order_free(predicate: Any) -> bool:
+    """True when ``predicate`` keeps a node regardless of its position
+    in the candidate list: boolean-valued, and no position()/last()."""
+    op = predicate[0]
+    boolean = op in ("cmp", "and", "or", "path") or (op == "func" and predicate[1] in _BOOLEAN_FUNCS)
+    return boolean and not _mentions_position(predicate)
+
+
+def _descendant_steps(step: Any) -> List[Any]:
+    """``//step`` is ``descendant-or-self::node()/step``; when ``step``
+    is ``child::T[preds]`` with position-free predicates the pair selects
+    exactly ``descendant::T[preds]``, which one context walks in document
+    order. ``//p[1]``, ``//text()`` and ``//@x`` keep the pair."""
+    _, axis, nodetest, predicates = step
+    if axis == "child" and nodetest[0] in ("name", "any") and all(_is_order_free(p) for p in predicates):
+        return [("step", "descendant", nodetest, predicates)]
+    return [("step", "descendant-or-self", ("node",), []), step]
 
 
 class _Parser:
@@ -296,25 +337,22 @@ class _Parser:
 
     def parse_steps_after_base(self) -> List[Any]:
         steps: List[Any] = []
-        while True:
-            if self.at("//"):
-                self.next()
-                steps.append(("step", "descendant-or-self", ("node",), []))
-            elif self.at("/"):
-                self.next()
-            else:
-                break
-            steps.append(self.parse_step())
+        while self.at("/") or self.at("//"):
+            steps.extend(self.parse_slash_step())
         return steps
+
+    def parse_slash_step(self) -> List[Any]:
+        """``/step``, or ``//step`` as :func:`_descendant_steps` compiles it."""
+        if self.next()[1] == "/":
+            return [self.parse_step()]
+        return _descendant_steps(self.parse_step())
 
     def parse_location_path(self) -> Any:
         absolute = False
         steps: List[Any] = []
         if self.at("//"):
             absolute = True
-            self.next()
-            steps.append(("step", "descendant-or-self", ("node",), []))
-            steps.append(self.parse_step())
+            steps.extend(self.parse_slash_step())
         elif self.at("/"):
             absolute = True
             self.next()
@@ -323,13 +361,7 @@ class _Parser:
         else:
             steps.append(self.parse_step())
         while self.at("/") or self.at("//"):
-            if self.at("//"):
-                self.next()
-                steps.append(("step", "descendant-or-self", ("node",), []))
-                steps.append(self.parse_step())
-            else:
-                self.next()
-                steps.append(self.parse_step())
+            steps.extend(self.parse_slash_step())
         return ("path", absolute, steps, None)
 
     def parse_step(self) -> Any:
@@ -586,7 +618,6 @@ class _Evaluator:
     def eval_step(self, step: Any, context: List[XNode]) -> List[XNode]:
         _, axis, nodetest, predicates = step
         results: List[XNode] = []
-        is_reverse = axis in _REVERSE_AXES
         for ctx in context:
             if axis == "attribute":
                 if isinstance(ctx, Element) and not isinstance(ctx, Comment):
@@ -616,8 +647,9 @@ class _Evaluator:
                 candidates = [n for n in _axis_nodes(ctx, axis) if _node_test(n, axis, nodetest)]
             filtered = self.apply_predicates(candidates, predicates)
             results.extend(filtered)
-        ordered = _document_sort(results)
-        return ordered
+        if len(results) < 2 or (len(context) == 1 and axis in _ORDERED_AXES):
+            return results
+        return _document_sort(results)
 
     def apply_predicates(self, nodes: List[XNode], predicates: List[Any]) -> List[XNode]:
         current = nodes

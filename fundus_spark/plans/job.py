@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extract_stage import extract_articles
-from .lineage import MANIFEST_SCHEMA, append_rows, bucketed_partition_metrics, committed_buckets
+from .lineage import append_rows, bucketed_partition_metrics, committed_buckets, manifest_frame
 
 
 @dataclass
@@ -172,7 +172,7 @@ def run_extraction_job(
                         row["committed_at"],
                     )
                 )
-        append_rows(spark, spark.createDataFrame(data, MANIFEST_SCHEMA).coalesce(1), manifest_path)
+        append_rows(spark, manifest_frame(spark, data).coalesce(1), manifest_path)
         result.buckets_run.extend(remaining)
 
     totals = (

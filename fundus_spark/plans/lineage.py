@@ -21,6 +21,7 @@ from __future__ import annotations
 import datetime
 from typing import List, Optional, Set
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -92,6 +93,19 @@ def committed_buckets(spark: SparkSession, manifest_path: str, run_id: str) -> S
         return set()
     rows = manifest.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
     return {r["bucket"] for r in rows}
+
+
+def manifest_frame(spark: SparkSession, rows: List[tuple]) -> DataFrame:
+    """``rows`` (``MANIFEST_SCHEMA`` order) as an Arrow-backed
+    ``LocalRelation``. A list of tuples would plan as a ``LogicalRDD``
+    whose one-task append stage costs most of a second. Timestamps go in
+    as UTC-aware values: a naive one is local time, as Spark returns it
+    from ``collect()``, whatever the session time zone."""
+    frame = pd.DataFrame(
+        [row[:-1] + (row[-1].astimezone(datetime.timezone.utc),) for row in rows],
+        columns=MANIFEST_SCHEMA.fieldNames(),
+    )
+    return spark.createDataFrame(frame, MANIFEST_SCHEMA)
 
 
 def append_rows(spark: SparkSession, df: DataFrame, path: str) -> None:

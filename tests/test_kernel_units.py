@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 from fundus_spark.kernel import (
     CSSSelector,
     LinkedData,
@@ -91,6 +93,101 @@ def test_css_selector_subset():
     assert len(CSSSelector("div > h2, p")(doc)) == 4
 
 
+# nested divs: d2 sits inside d1 between its two <p>s, so a step taken
+# from both divs yields d1's hits before d2's unless it is re-sorted
+_NESTED = (
+    "<html><body><div id='d1'><p id='a'>a</p><div id='d2'><p id='b'>b</p><p id='c'>c</p></div>"
+    "<p id='d'>d</p></div><p id='e'>e</p></body></html>"
+)
+
+
+def _ids(nodes):
+    return [n.get("id") for n in nodes]
+
+
+def test_xpath_double_slash_compiles_to_one_descendant_step_only_when_position_free():
+    def axes(expr):
+        return [step[1] for step in XPath(expr)._ast[2]]
+
+    assert axes("//article//p[not(@class='summary')]") == ["descendant", "descendant"]
+    assert axes("//*[@id and contains(@class, 'x')]") == ["descendant"]
+    assert axes(".//p[.//a]") == ["self", "descendant"]
+    for positional in ("//p[1]", "//p[last()]", "//p[count(a)]", "//div[p[position()=1]]", "//p[@a][2]"):
+        assert axes(positional) == ["descendant-or-self", "child"], positional
+    for other_step in ("//text()", "//@x", "//self::p", "//.."):
+        assert axes(other_step)[0] == "descendant-or-self", other_step
+
+
+def test_xpath_positional_predicates_count_per_parent():
+    doc = parse_html(_NESTED)
+    assert _ids(XPath("//p[1]")(doc)) == ["a", "b", "e"]
+    assert _ids(XPath("//p[last()]")(doc)) == ["c", "d", "e"]
+    assert _ids(XPath("//p[position()>1]")(doc)) == ["c", "d"]
+    assert _ids(XPath("//div[p[1]]")(doc)) == ["d1", "d2"]
+    assert _ids(XPath("(//p)[1]")(doc)) == ["a"]
+
+
+def test_xpath_steps_from_nested_contexts_come_out_in_document_order():
+    doc = parse_html(_NESTED)
+    assert _ids(XPath("//div/p")(doc)) == ["a", "b", "c", "d"]
+    assert _ids(XPath("//div//p")(doc)) == ["a", "b", "c", "d"]
+    d1 = XPath("//div[@id='d1']")(doc)[0]
+    assert _ids(XPath(".//p")(d1)) == ["a", "b", "c", "d"]
+    assert _ids(XPath("./p/following-sibling::*")(d1)) == ["d2", "d"]
+    # attributes order by name within an element, elements by document order
+    doc = parse_html("<body><i zeta='1' alpha='2' mid='3'></i><b beta='4' alpha='5'></b></body>")
+    assert [(a.owner.tag, a.name) for a in XPath("//*/@*")(doc)] == [
+        ("i", "alpha"),
+        ("i", "mid"),
+        ("i", "zeta"),
+        ("b", "alpha"),
+        ("b", "beta"),
+    ]
+    assert [a.name for a in XPath("./@*")(doc.children[-1].children[0])] == ["alpha", "mid", "zeta"]
+
+
+def test_css_matches_are_unique_and_in_document_order():
+    doc = parse_html(_NESTED)
+    assert _ids(CSSSelector("div p")(doc)) == ["a", "b", "c", "d"]
+    assert _ids(CSSSelector("div > p, p")(doc)) == ["a", "b", "c", "d", "e"]
+    assert _ids(CSSSelector("div:has(> div)")(doc)) == ["d1"]
+    assert _ids(CSSSelector("div:has(p)")(doc)) == ["d1", "d2"]
+    assert _ids(CSSSelector("p:nth-of-type(2)")(doc)) == ["c", "d"]
+    # compounds left of the match are looked up no higher than the context
+    d2 = XPath("//div[@id='d2']")(doc)[0]
+    assert _ids(CSSSelector("div p")(d2)) == ["b", "c"]
+    assert _ids(CSSSelector("div > p")(d2)) == ["b", "c"]
+    assert _ids(CSSSelector("body p")(d2)) == []
+    assert _ids(CSSSelector("div div")(d2)) == []
+    with pytest.raises(ValueError):
+        CSSSelector(", p")
+
+
+def test_generic_page_extraction_never_sorts(monkeypatch):
+    """Every selector the generic rule and the shared kernel run on the
+    fixture page yields document order by construction."""
+    import random
+
+    from fundus_spark.kernel import run_extraction, xpath
+    from fundus_spark.rules.generic import GENERIC
+    from fundus_spark.sources.transcripts import synth_article_html
+
+    sorts = []
+    real_sort = xpath._document_sort
+
+    def counting_sort(nodes):
+        sorts.append(1)
+        return real_sort(nodes)
+
+    monkeypatch.setattr(xpath, "_document_sort", counting_sort)
+    out = run_extraction(GENERIC, synth_article_html(random.Random(7), 7))
+    assert out["title"].startswith("Synthetic article 7") and out["body"]["sections"]
+    assert len(sorts) == 0
+    # a union still sorts
+    XPath("//p | //h2")(parse_html(_NESTED))
+    assert len(sorts) == 1
+
+
 def test_meta_harvest_namespacing_and_joining():
     doc = parse_html(
         "<html><head>"
@@ -151,6 +248,27 @@ def test_date_parsing_german_months_and_tz():
     assert d is not None and (d.month, d.day) == (3, 28)
     assert d.utcoffset() == datetime.timedelta(seconds=7200)
     assert generic_date_parsing(None) is None
+
+
+def test_date_parsing_two_digit_years_follow_the_calendar_year(monkeypatch):
+    """The parser info is reused within a year but not across New Year:
+    dateutil resolves two-digit years against the year it was built in."""
+    import time
+
+    from dateutil import parser as dateutil_parser
+
+    from fundus_spark.kernel import generics
+
+    real_localtime = time.localtime
+    year = real_localtime().tm_year
+    assert generics._parserinfo_for_year(year) is generics._parserinfo_for_year(year)
+    this_year = generic_date_parsing("1 January 31").year
+    assert this_year == dateutil_parser.parse("1 January 31").year
+    in_2090 = time.struct_time((2090,) + tuple(real_localtime())[1:])
+    monkeypatch.setattr(time, "localtime", lambda *secs: real_localtime(*secs) if secs else in_2090)
+    assert generic_date_parsing("1 January 31").year == 2131
+    monkeypatch.undo()
+    assert generic_date_parsing("1 January 31").year == this_year
 
 
 def test_srcset_parsing_sorted_by_descriptor():

@@ -303,3 +303,25 @@ def test_semantic_dedup_shape_joins_on_cell(spark, entry):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_manifest_commit_frame_is_a_local_relation(spark):
+    """The manifest commit appends a handful of rows built in Python.
+    From a pandas frame they plan as an Arrow-backed LocalRelation; a
+    list of tuples would plan as a LogicalRDD, whose one-task append
+    stage costs most of a second per job. Values, including a naive
+    (local-time, as ``collect()`` returns it) and an aware timestamp,
+    must come back exactly as the list path gives them."""
+    import datetime
+
+    from fundus_spark.plans.lineage import MANIFEST_SCHEMA, manifest_frame
+
+    rows = [
+        ("run", 0, 0, 0, 0, 0, datetime.datetime(2026, 1, 2, 3, 4, 5, 678901, tzinfo=datetime.timezone.utc)),
+        ("run", 3, 10, 9, 1, 12345, datetime.datetime(2024, 6, 1, 12, 30, 0, 5)),
+    ]
+    df = manifest_frame(spark, rows)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert df.schema == MANIFEST_SCHEMA
+    assert df.collect() == spark.createDataFrame(rows, MANIFEST_SCHEMA).collect()
