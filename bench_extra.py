@@ -8,12 +8,10 @@ instrumentation the optimization loop needs:
   show the steady-state execution cost with plans/JIT warm);
 * split plan-build time (the Python call) from execution time;
 * count Spark jobs launched per query (each job is a driver round-trip
-  and usually a materialization barrier — the cheapest thing to remove);
-* optionally dump ``.explain("formatted")`` to plans/r08/.
+  and usually a materialization barrier — the cheapest thing to remove).
 
 Usage:
     python bench_extra.py [query ...]          # time (default: headline list)
-    python bench_extra.py --explain [query...] # dump plans only
     python bench_extra.py --reps 3 curate_corpus
 """
 
@@ -46,8 +44,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*", default=None)
     ap.add_argument("--reps", type=int, default=1)
-    ap.add_argument("--explain", action="store_true")
-    ap.add_argument("--suffix", default="", help="plan filename suffix, e.g. _before")
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
@@ -59,19 +55,6 @@ def main() -> None:
     spark = build_session(app_name="bench-extra", cores=CPUS)
     sc = spark.sparkContext
     _warmup(spark, SF_DIR)
-
-    if args.explain:
-        outdir = Path(__file__).resolve().parent / "plans" / "r08"
-        outdir.mkdir(parents=True, exist_ok=True)
-        for name in names:
-            df = qs[name](spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            (outdir / f"{name}{args.suffix}.txt").write_text(plan)
-            print(f"wrote {name}{args.suffix}.txt")
-        spark.stop()
-        return
 
     results = {}
     for name in names:

@@ -13,7 +13,7 @@ from __future__ import annotations
 import functools
 import re
 import time
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import Callable, Dict, Iterable, List, Optional, Pattern, Sequence, Set, Union
 
 from dateutil import parser as _dateutil_parser
@@ -149,16 +149,11 @@ def _parserinfo_for_year(year: int) -> _LocaleAwareParserInfo:
     return _LocaleAwareParserInfo()
 
 
-def generic_date_parsing(date_str: Optional[str], tz: Optional[timezone] = None) -> Optional[datetime]:
+def generic_date_parsing(date_str: Optional[str]) -> Optional[datetime]:
     if date_str is None:
         return None
     info = _parserinfo_for_year(time.localtime().tm_year)
-    parsed = _dateutil_parser.parse(date_str, tzinfos=_TZ_OFFSETS, parserinfo=info, fuzzy=True)
-    if not parsed:
-        return None
-    if tz is not None and parsed.tzinfo is None:
-        parsed.replace(tzinfo=tz)
-    return parsed
+    return _dateutil_parser.parse(date_str, tzinfos=_TZ_OFFSETS, parserinfo=info, fuzzy=True)
 
 
 def generic_text_extraction(doc: Element, selector: Callable[[Element], Sequence[Element]]) -> Optional[str]:

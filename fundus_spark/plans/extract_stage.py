@@ -1,4 +1,4 @@
-"""The extraction stage: batched kernel execution inside ``mapInPandas``.
+"""The extraction stage: batched kernel execution inside ``mapInArrow``.
 
 Design (SURVEY.md §2.4, §7):
 * **No per-row Python dispatch** — Spark hands the stage Arrow record
@@ -23,9 +23,8 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Dict, Iterable, Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -64,32 +63,6 @@ EXTRACTION_SCHEMA = StructType(
         StructField("_bytes", LongType()),
     ]
 )
-
-
-def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """pandas twin of ``_extract_batches_arrow`` (kept for
-    ``applyInPandas``-style callers and as an A/B reference; the
-    production stage uses the Arrow path)."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    partition_id = ctx.partitionId() if ctx is not None else -1
-    names = EXTRACTION_SCHEMA.fieldNames()
-
-    for batch in batches:
-        rows = [
-            _row_extract(
-                row.conv_id,
-                row.turn_idx,
-                row.role,
-                row.tool,
-                row.ts.to_pydatetime() if row.ts is not None and not pd.isnull(row.ts) else None,
-                row.text,
-                partition_id,
-            )
-            for row in batch.itertuples(index=False)
-        ]
-        yield pd.DataFrame(rows, columns=names)
 
 
 # <html lang="xx"> declaration, matched on the raw payload so the lang
@@ -199,12 +172,12 @@ def _arrow_output_schema():
 
 
 def _extract_batches_arrow(batches):
-    """Arrow-native twin of ``_extract_batches``: skips the
-    Arrow<->pandas block-manager round trip on both sides of the stage
-    (one bulk ``to_pylist`` per column in, one ``pa.array`` per column
-    out). Measured ~15-20% less Python-worker CPU per turn than the
-    pandas path on the bench corpus — at 32 saturated cores that CPU
-    comes straight out of throughput."""
+    """The extraction stage's ``mapInArrow`` body: one bulk
+    ``to_pylist`` per column in, one ``pa.array`` per column out, so no
+    Arrow<->pandas block-manager round trip on either side. Measured
+    ~15-20% less Python-worker CPU per turn than a pandas
+    (``mapInPandas``) version of the stage on the bench corpus; at 32
+    saturated cores that CPU comes straight out of throughput."""
     from datetime import timezone
 
     import pyarrow as pa

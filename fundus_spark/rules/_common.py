@@ -1,12 +1,32 @@
 """Shared extractor factories for the most common publisher patterns.
 
-Most reference parsers are combinations of the same six moves: body via
-selectors, authors/date from JSON-LD ``bf_search``, title from
-``og:title`` or LD headline, topics from meta keywords or LD keywords,
-bounded image extraction, default ``free_access``. These factories keep
-per-publisher rule modules down to their genuinely publisher-specific
-selectors while compiling to the identical kernel calls an explicit
-module would make.
+Most reference parsers are combinations of the same few moves: body via
+selectors, authors/date/title/topics from JSON-LD or ``<meta>``, bounded
+image extraction, default ``free_access``. Each factory returns a closure
+that makes exactly the kernel call a hand-written extractor would, so a
+rule module keeps only its publisher-specific selectors and logic.
+
+Writing a rule with the factories:
+
+- Build extractors from calls, not defs:
+  ``Extractor("title", title_from_meta())``, or a whole version with
+  ``std_extractors(body=make_body(...), authors=authors_from_ld(), ...)``
+  when it has the standard attribute set. A def is for logic no factory
+  expresses; ``tests/test_rule_factory_shapes.py`` fails on a top-level
+  def whose body is a factory's body.
+- Pass selectors by keyword whenever more than the paragraph selector is
+  given: ``make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)``,
+  ``make_images(_PARAGRAPH, image_selector=_IMAGE, caption_selector=...)``,
+  so no reader has to know a factory's positional order.
+- Pass module-level ``XPath``/``CSSSelector`` bindings by name; do not
+  inline, hoist or drop one. ``tests/test_selector_parity.py`` digests
+  every module-level selector.
+- Add a factory only for a shape that three or more rule modules share,
+  register it in ``tools/audit_rules.py::FACTORY_DEFAULTS`` and in the
+  shape scan, and give an existing factory no new parameter: a variant
+  stays a def in its module.
+- ``tests/test_rule_spec_parity.py`` pins every version's output; a
+  rewrite onto the factories must leave its digests unchanged.
 """
 
 from __future__ import annotations
@@ -21,8 +41,10 @@ from ..kernel import (
     free_access_from_ld,
     generic_author_parsing,
     generic_date_parsing,
+    generic_nodes_to_text,
     generic_topic_parsing,
     image_extraction,
+    parse_title_from_root,
 )
 
 Selector = Callable[[Any], Sequence[Any]]
@@ -53,6 +75,20 @@ def authors_from_ld(key: str = "author") -> Callable[[ParseContext], List[str]]:
     return fn
 
 
+def authors_from_ld_path(query: str) -> Callable[[ParseContext], List[str]]:
+    def fn(ctx: ParseContext) -> List[str]:
+        return generic_author_parsing(ctx.ld.xpath_search(query))
+
+    return fn
+
+
+def authors_from_nodes(selector: Selector) -> Callable[[ParseContext], List[str]]:
+    def fn(ctx: ParseContext) -> List[str]:
+        return generic_author_parsing(generic_nodes_to_text(selector(ctx.doc)))
+
+    return fn
+
+
 def authors_from_meta(key: str) -> Callable[[ParseContext], List[str]]:
     def fn(ctx: ParseContext) -> List[str]:
         return generic_author_parsing(ctx.meta.get(key))
@@ -63,6 +99,13 @@ def authors_from_meta(key: str) -> Callable[[ParseContext], List[str]]:
 def date_from_ld(key: str = "datePublished") -> Callable[[ParseContext], Optional[datetime.datetime]]:
     def fn(ctx: ParseContext) -> Optional[datetime.datetime]:
         return generic_date_parsing(ctx.ld.bf_search(key))
+
+    return fn
+
+
+def date_from_ld_path(query: str) -> Callable[[ParseContext], Optional[datetime.datetime]]:
+    def fn(ctx: ParseContext) -> Optional[datetime.datetime]:
+        return generic_date_parsing(ctx.ld.xpath_search(query, scalar=True))
 
     return fn
 
@@ -86,6 +129,17 @@ def title_from_ld(key: str = "headline") -> Callable[[ParseContext], Optional[st
         return ctx.ld.bf_search(key)
 
     return fn
+
+
+def title_from_ld_path(query: str) -> Callable[[ParseContext], Optional[str]]:
+    def fn(ctx: ParseContext) -> Optional[str]:
+        return ctx.ld.xpath_search(query, scalar=True)
+
+    return fn
+
+
+def title_from_root(ctx: ParseContext) -> Optional[str]:
+    return parse_title_from_root(ctx.doc)
 
 
 def topics_from_meta(
@@ -118,6 +172,13 @@ def topics_from_ld(
             substitution_pattern=substitution_pattern,
             result_filter=result_filter,
         )
+
+    return fn
+
+
+def topics_from_nodes(selector: Selector) -> Callable[[ParseContext], List[str]]:
+    def fn(ctx: ParseContext) -> List[str]:
+        return generic_topic_parsing(generic_nodes_to_text(selector(ctx.doc), normalize=True))
 
     return fn
 

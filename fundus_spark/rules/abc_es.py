@@ -6,20 +6,10 @@ V1_1 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_meta
 
 _V1_PARAGRAPH = XPath("//div[@class='voc-d ']//p[@class='voc-p']")
 _V1_SUBHEAD = XPath("//div[@class='voc-d ']//h3[@class='voc-d-c__s-title']")
@@ -44,30 +34,6 @@ _V11_CAPTION = XPath("./ancestor::div[contains(@class, 'v-a-img-c')]//figcaption
 _UPPER = XPath("//article")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            paragraph_selector=paragraph,
-            subheadline_selector=subhead,
-            summary_selector=summary,
-        )
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
 def _topics(selector):
     def fn(ctx: ParseContext) -> List[str]:
         return [node.text_content().strip() for node in selector(ctx.doc)]
@@ -75,32 +41,11 @@ def _topics(selector):
     return fn
 
 
-def _images(paragraph, image, caption, credit):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=image,
-                upper_boundary_selector=_UPPER,
-                caption_selector=caption,
-                author_selector=credit,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
-    Extractor("authors", _authors, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("title", title_from_meta("title")),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 ABC_ES = PublisherSpec(
@@ -111,9 +56,19 @@ ABC_ES = PublisherSpec(
             valid_until=datetime.date(2026, 2, 17),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                     Extractor("topics", _topics(_V1_TOPICS), default=list),
-                    Extractor("images", _images(_V1_PARAGRAPH, _V1_IMAGE, _V1_CAPTION, _V1_CREDIT), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            image_selector=_V1_IMAGE,
+                            upper_boundary_selector=_UPPER,
+                            caption_selector=_V1_CAPTION,
+                            author_selector=_V1_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -122,9 +77,19 @@ ABC_ES = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
                     Extractor("topics", _topics(_V11_TOPICS), default=list),
-                    Extractor("images", _images(_V11_PARAGRAPH, _V11_IMAGE, _V11_CAPTION, _V11_CREDIT), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_V11_IMAGE,
+                            upper_boundary_selector=_UPPER,
+                            caption_selector=_V11_CAPTION,
+                            author_selector=_V11_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -5,22 +5,15 @@ the ClaimReview LD block).
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
-
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_nodes_to_text,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_nodes,
+    date_from_ld_path,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_nodes,
 )
 
 _SUMMARY = XPath("//div[@class='wrapper-summary']")
@@ -32,61 +25,18 @@ _IMAGE = XPath("//div[contains(@class,'field--type-image')]//img")
 _CAPTION = XPath("./ancestor::div[@class='wrapper-image']//span[@class='legend']")
 
 
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(generic_nodes_to_text(_AUTHOR(ctx.doc)))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("//ClaimReview/datePublished", scalar=True))
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_TOPIC(ctx.doc), normalize=True))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 AFP_FAKTENCHECK = PublisherSpec(
     key="de.AFPFaktencheck",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("body", _body),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_nodes(_AUTHOR),
+                date=date_from_ld_path("//ClaimReview/datePublished"),
+                title=title_from_meta(),
+                topics=topics_from_nodes(_TOPIC),
+                images=make_images(_PARAGRAPH, image_selector=_IMAGE, caption_selector=_CAPTION, relative_urls=True),
             ),
         ),
     ),

@@ -11,7 +11,6 @@ from typing import List, Optional
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
@@ -20,7 +19,15 @@ from ..kernel import (
     generic_date_parsing,
     generic_topic_parsing,
 )
-from ._common import free_access, make_body, make_images, std_extractors, title_from_meta
+from ._common import (
+    authors_from_ld_path,
+    date_from_ld_path,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_ld_path,
+    title_from_meta,
+)
 
 _V1_SUMMARY = CSSSelector("div.detay-bg > div > div > h4")
 _V1_PARAGRAPH = XPath(
@@ -73,18 +80,6 @@ _V2_SUBHEAD = XPath("//div[@dir]/h2")
 _V2_SUMMARY = XPath("//span[contains(@class, 'text-descriptionColor')]")
 
 
-def _title_v2(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("//NewsArticle/headline", scalar=True)
-
-
-def _date_v2(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("//NewsArticle/datePublished", scalar=True))
-
-
-def _authors_v2(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("//NewsArticle/author"))
-
-
 def _topics_v2(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(ctx.ld.xpath_search("//NewsArticle/keywords"))
 
@@ -115,9 +110,9 @@ ANADOLU_AJANSI = PublisherSpec(
             name="V2",
             extractors=std_extractors(
                 body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
-                authors=_authors_v2,
-                date=_date_v2,
-                title=_title_v2,
+                authors=authors_from_ld_path("//NewsArticle/author"),
+                date=date_from_ld_path("//NewsArticle/datePublished"),
+                title=title_from_ld_path("//NewsArticle/headline"),
                 topics=_topics_v2,
                 images=_V2_IMAGES,
             ),

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     Extractor,
@@ -16,14 +16,10 @@ from ..kernel import (
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
     normalize_whitespace,
 )
+from ._common import date_from_ld_path, free_access, make_body, make_images, title_from_ld_path, topics_from_meta
 
 _V1_AUTHOR = XPath("//div[hasclass('CardHeadline')]/span/span[1]")
 _V1_SUBHEAD = XPath("//div[@data-key = 'article']/h2[not(text()='___')]")
@@ -46,10 +42,6 @@ _V11_LOWER = XPath("//footer[hasclass('Page-footer')]")
 _V11_IMG_CREDIT = re.compile(r"\s*\((?P<credits>.*)\)$")
 
 
-def _body_v1(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_V1_PARAGRAPH, subheadline_selector=_V1_SUBHEAD)
-
-
 def _authors(author_selector: XPath):
     def fn(ctx: ParseContext) -> List[str]:
         nodes = author_selector(ctx.doc)
@@ -62,46 +54,11 @@ def _authors(author_selector: XPath):
     return fn
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("NewsArticle/datePublished", scalar=True))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"), result_filter=_TOPIC_BLOAT)
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
-def _body_v11(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_V11_PARAGRAPH, subheadline_selector=_V11_SUBHEAD)
-
-
-def _images_v11(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V11_PARAGRAPH,
-            image_selector=_V11_IMAGE,
-            caption_selector=_V11_CAPTION,
-            upper_boundary_selector=_V11_UPPER,
-            lower_boundary_selector=_V11_LOWER,
-            author_selector=_V11_IMG_CREDIT,
-        )
-    ]
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld_path("NewsArticle/datePublished")),
+    Extractor("title", title_from_ld_path("NewsArticle/headline")),
+    Extractor("topics", topics_from_meta(result_filter=_TOPIC_BLOAT), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 AP_NEWS = PublisherSpec(
@@ -112,7 +69,7 @@ AP_NEWS = PublisherSpec(
             valid_until=datetime.date(2023, 7, 10),
             extractors=tuple(
                 [
-                    Extractor("body", _body_v1),
+                    Extractor("body", make_body(_V1_PARAGRAPH, subheadline=_V1_SUBHEAD)),
                     Extractor("authors", _authors(_V1_AUTHOR), default=list),
                 ]
                 + _COMMON
@@ -122,9 +79,20 @@ AP_NEWS = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body_v11),
+                    Extractor("body", make_body(_V11_PARAGRAPH, subheadline=_V11_SUBHEAD)),
                     Extractor("authors", _authors(_V11_AUTHOR), default=list),
-                    Extractor("images", _images_v11, default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_V11_IMAGE,
+                            caption_selector=_V11_CAPTION,
+                            upper_boundary_selector=_V11_UPPER,
+                            lower_boundary_selector=_V11_LOWER,
+                            author_selector=_V11_IMG_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -7,23 +7,17 @@ via a priority-1 ``@function`` before body assembly).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_nodes_to_text,
-    generic_topic_parsing,
-    image_extraction,
-    transform_breaks_to_tag,
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, transform_breaks_to_tag
+from ._common import (
+    authors_from_meta,
+    date_from_ld,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_ld,
+    topics_from_nodes,
 )
 
 _V1_PARAGRAPH = CSSSelector("div[id=articleBody] > p")
@@ -50,61 +44,9 @@ _V2_CAPTION = XPath(
 )
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            paragraph_selector=paragraph,
-            subheadline_selector=subhead,
-            summary_selector=summary,
-        )
-
-    return fn
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("article:author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _topics_v2(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_V2_TOPIC(ctx.doc), normalize=True))
-
-
-def _images(paragraph, image, caption, credit):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=image,
-                caption_selector=caption,
-                author_selector=credit,
-            )
-        ]
-
-    return fn
-
-
 def _preprocess_v2(ctx: ParseContext) -> None:
     for node in _V2_PARAGRAPH(ctx.doc):
         transform_breaks_to_tag(node, replace=True)
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 BERLINER_ZEITUNG = PublisherSpec(
@@ -113,27 +55,29 @@ BERLINER_ZEITUNG = PublisherSpec(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2026, 4, 23),
-            extractors=(
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("images", _images(_V1_PARAGRAPH, _V1_IMAGE, _V1_CAPTION, _V1_CREDIT), default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
+                authors=authors_from_meta("article:author"),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=topics_from_ld(),
+                images=make_images(
+                    _V1_PARAGRAPH, image_selector=_V1_IMAGE, caption_selector=_V1_CAPTION, author_selector=_V1_CREDIT
+                ),
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=(
-                Extractor("_preprocess", _preprocess_v2, kind="function", priority=1),
-                Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics_v2, default=list),
-                Extractor("images", _images(_V2_PARAGRAPH, _V2_IMAGE, _V2_CAPTION, _V2_CREDIT), default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
+                authors=authors_from_meta("article:author"),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=topics_from_nodes(_V2_TOPIC),
+                images=make_images(
+                    _V2_PARAGRAPH, image_selector=_V2_IMAGE, caption_selector=_V2_CAPTION, author_selector=_V2_CREDIT
+                ),
+                extra=(Extractor("_preprocess", _preprocess_v2, kind="function", priority=1),),
             ),
         ),
     ),

@@ -5,22 +5,10 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, make_body, make_images, title_from_meta, topics_from_meta
 
 _PARAGRAPH = XPath("//div[@class = 'article-body']/p[position() > 1]")
 _SUMMARY = XPath("//div[@class = 'article-body']/p[1]")
@@ -30,48 +18,10 @@ _CAPTION = XPath("./ancestor::figure//p[@class='fig__caption__text']")
 _CREDIT = XPath("./ancestor::figure//div[@class='fig__caption__meta']")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
 def _free_access(ctx: ParseContext) -> bool:
     if (url := ctx.meta.get("og:url")) is not None:
         return re.search(r"/bild-plus/", url) is None
     return True
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
 
 
 BILD = PublisherSpec(
@@ -80,13 +30,17 @@ BILD = PublisherSpec(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
+                Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+                Extractor("authors", authors_from_ld(), default=list),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("title", title_from_meta()),
+                Extractor("topics", topics_from_meta(), default=list),
                 Extractor("free_access", _free_access, default=True),
-                Extractor("images", _images, default=list),
+                Extractor(
+                    "images",
+                    make_images(_PARAGRAPH, image_selector=_IMAGE, caption_selector=_CAPTION, author_selector=_CREDIT),
+                    default=list,
+                ),
             ),
         ),
     ),

@@ -7,20 +7,10 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, authors_from_meta, date_from_meta, make_body, make_images
 
 _PARAGRAPH = CSSSelector(".no-tts p")
 _SUBHEAD = XPath("//p[contains(@class, 'interline')]")
@@ -36,42 +26,10 @@ _V12_SUMMARY = XPath("//div[@class='pxp-html excerpt']")
 _V12_TOPIC = XPath("//div[contains(@class,'taglist')]//button")
 
 
-def _body(summary):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=_SUBHEAD,
-            paragraph_selector=_PARAGRAPH,
-        )
-
-    return fn
-
-
 def _title(ctx: ParseContext) -> Optional[str]:
     if fulltitle := ctx.meta.get("og:title"):
         return re.sub(_TITLE_BLOAT, "", fulltitle).strip()
     return None
-
-
-def _authors_v1(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("twitter:misc:Written by"))
-
-
-def _authors_v11(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("twitter:data1"))
-
-
-def _authors_v12(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published:time"))
-
-
-def _publishing_date_v11(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
 
 
 def _topics(selector):
@@ -85,23 +43,14 @@ def _free_access(ctx: ParseContext) -> bool:
     return not [node.text_content().strip() for node in _PAYWALL(ctx.doc)]
 
 
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            image_selector=_IMAGE,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
 _SHARED = [
     Extractor("title", _title),
     Extractor("free_access", _free_access, default=True),
-    Extractor("images", _images, default=list),
+    Extractor(
+        "images",
+        make_images(_PARAGRAPH, upper_boundary_selector=_UPPER, image_selector=_IMAGE, author_selector=_CREDIT),
+        default=list,
+    ),
 ]
 
 BOERSEN_ZEITUNG = PublisherSpec(
@@ -112,9 +61,9 @@ BOERSEN_ZEITUNG = PublisherSpec(
             valid_until=datetime.date(2024, 12, 9),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY)),
-                    Extractor("authors", _authors_v1, default=list),
-                    Extractor("publishing_date", _publishing_date_v1),
+                    Extractor("body", make_body(_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_SUBHEAD)),
+                    Extractor("authors", authors_from_meta("twitter:misc:Written by"), default=list),
+                    Extractor("publishing_date", date_from_meta("article:published:time")),
                     Extractor("topics", _topics(_V1_TOPIC), default=list),
                 ]
                 + _SHARED
@@ -125,9 +74,9 @@ BOERSEN_ZEITUNG = PublisherSpec(
             valid_until=datetime.date(2025, 10, 1),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY)),
-                    Extractor("authors", _authors_v11, default=list),
-                    Extractor("publishing_date", _publishing_date_v11),
+                    Extractor("body", make_body(_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_SUBHEAD)),
+                    Extractor("authors", authors_from_meta("twitter:data1"), default=list),
+                    Extractor("publishing_date", date_from_meta("article:published_time")),
                     Extractor("topics", _topics(_V1_TOPIC), default=list),
                 ]
                 + _SHARED
@@ -137,9 +86,9 @@ BOERSEN_ZEITUNG = PublisherSpec(
             name="V1_2",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V12_SUMMARY)),
-                    Extractor("authors", _authors_v12, default=list),
-                    Extractor("publishing_date", _publishing_date_v11),
+                    Extractor("body", make_body(_PARAGRAPH, summary=_V12_SUMMARY, subheadline=_SUBHEAD)),
+                    Extractor("authors", authors_from_ld(), default=list),
+                    Extractor("publishing_date", date_from_meta("article:published_time")),
                     Extractor("topics", _topics(_V12_TOPIC), default=list),
                 ]
                 + _SHARED

@@ -6,22 +6,10 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_date_parsing
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, topics_from_ld
 
 _V1_SUMMARY = XPath(
     "//div[starts-with(@class, 'ArticleHeader_section')]"
@@ -52,28 +40,8 @@ _V12_SUBHEAD = XPath("(//section[@id='articlebody']//section)[1]//h2")
 _V12_IMAGE = XPath("//figure[not(parent::aside) and contains(@class, 'mediaImage')]//img")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
 def _title(ctx: ParseContext) -> Optional[str]:
     return title if isinstance(title := ctx.ld.bf_search("headline"), str) else None
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
 
 
 def _publishing_date_v11(ctx: ParseContext) -> Optional[datetime.datetime]:
@@ -86,34 +54,11 @@ def _publishing_date_v11(ctx: ParseContext) -> Optional[datetime.datetime]:
     return generic_date_parsing(ctx.ld.bf_search("datePublished"))
 
 
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _images(paragraph, image=_IMAGE):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=image,
-                author_selector=_CREDIT,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
     Extractor("title", _title),
-    Extractor("authors", _authors, default=list),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("topics", topics_from_ld(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 BR = PublisherSpec(
@@ -124,9 +69,13 @@ BR = PublisherSpec(
             valid_until=datetime.date(2024, 8, 26),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("publishing_date", _publishing_date_v1),
-                    Extractor("images", _images(_V1_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor("publishing_date", date_from_ld()),
+                    Extractor(
+                        "images",
+                        make_images(_V1_PARAGRAPH, image_selector=_IMAGE, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -136,9 +85,13 @@ BR = PublisherSpec(
             valid_until=datetime.date(2026, 3, 29),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
                     Extractor("publishing_date", _publishing_date_v11),
-                    Extractor("images", _images(_V11_PARAGRAPH), default=list),
+                    Extractor(
+                        "images",
+                        make_images(_V11_PARAGRAPH, image_selector=_IMAGE, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -147,9 +100,13 @@ BR = PublisherSpec(
             name="V1_2",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V12_SUMMARY, _V12_PARAGRAPH, _V12_SUBHEAD)),
+                    Extractor("body", make_body(_V12_PARAGRAPH, summary=_V12_SUMMARY, subheadline=_V12_SUBHEAD)),
                     Extractor("publishing_date", _publishing_date_v11),
-                    Extractor("images", _images(_V12_PARAGRAPH, _V12_IMAGE), default=list),
+                    Extractor(
+                        "images",
+                        make_images(_V12_PARAGRAPH, image_selector=_V12_IMAGE, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

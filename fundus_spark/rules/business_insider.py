@@ -6,22 +6,10 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_meta
 
 _V1_SUMMARY = CSSSelector("article ul[class^='summary-list'] > li")
 _V1_SUBHEAD = CSSSelector("article h2, div.slideshow-slide-container h2")
@@ -48,60 +36,18 @@ _V2_SUMMARY = XPath("//div[@class='post-summary-bullets']//li")
 _V2_SUBHEAD = XPath("//section[contains(@class, 'post-body-content')]/h2")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("title")
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(
         ctx.meta.get("keywords") or ctx.ld.bf_search("keywords") or ctx.meta.get("news_keywords")
     )
 
 
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            upper_boundary_selector=_V1_UPPER,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("title", title_from_meta("title")),
     Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("free_access", free_access, default=False),
 ]
 
 BUSINESS_INSIDER = PublisherSpec(
@@ -112,15 +58,27 @@ BUSINESS_INSIDER = PublisherSpec(
             valid_until=datetime.date(2025, 3, 24),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            upper_boundary_selector=_V1_UPPER,
+                            image_selector=_V1_IMAGE,
+                            caption_selector=_V1_CAPTION,
+                            author_selector=_V1_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=tuple([Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD))] + _COMMON),
+            extractors=tuple(
+                [Extractor("body", make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD))] + _COMMON
+            ),
         ),
     ),
 )

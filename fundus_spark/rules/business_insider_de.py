@@ -4,23 +4,10 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
+from ._common import authors_from_ld, date_from_ld, make_body, make_images, std_extractors, title_from_meta
 
 _SUMMARY = CSSSelector("article div.bi-bulletpoints li, article div.bi-bulletpoints > p")
 _SUBHEAD = CSSSelector("article > div > h2, article > div > h3")
@@ -39,40 +26,8 @@ _PARAGRAPH = XPath(
 _IMAGE = XPath("//img[not(contains(@class, 'size-thumbnail-square'))]")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(ctx.meta.get("keywords")) or generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(doc=ctx.doc, paragraph_selector=_PARAGRAPH, image_selector=_IMAGE)
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 BUSINESS_INSIDER_DE = PublisherSpec(
@@ -80,14 +35,13 @@ BUSINESS_INSIDER_DE = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=_topics,
+                images=make_images(_PARAGRAPH, image_selector=_IMAGE),
             ),
         ),
     ),

@@ -5,21 +5,16 @@ unvalidated extra attribute).
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld_path,
+    date_from_ld_path,
+    make_body,
+    std_extractors,
+    title_from_ld_path,
+    topics_from_meta,
 )
 
 _SUBHEAD = CSSSelector("div[data-module = 'ArticleBody'] > h2")
@@ -27,32 +22,8 @@ _PARAGRAPH = XPath("//div[@data-module='ArticleBody'] / div[@class='group'] / p[
 _KEY_POINTS = CSSSelector("div.RenderKeyPoints-list li")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, subheadline_selector=_SUBHEAD, paragraph_selector=_PARAGRAPH)
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("NewsArticle/author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("NewsArticle/datePublished", scalar=True))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
 def _key_points(ctx: ParseContext) -> List[str]:
     return [node.text_content() for node in _KEY_POINTS(ctx.doc)]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 CNBC = PublisherSpec(
@@ -60,14 +31,13 @@ CNBC = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("key_points", _key_points, default=list, validate=False),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, subheadline=_SUBHEAD),
+                authors=authors_from_ld_path("NewsArticle/author"),
+                date=date_from_ld_path("NewsArticle/datePublished"),
+                title=title_from_ld_path("NewsArticle/headline"),
+                topics=topics_from_meta(),
+                extra=(Extractor("key_points", _key_points, default=list, validate=False),),
             ),
         ),
     ),

@@ -5,23 +5,17 @@ tried against a list of regex patterns in order).
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_nodes_to_text,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_nodes,
+    date_from_ld,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_ld_path,
+    topics_from_meta,
 )
 
 _SUMMARY = XPath("//p[@class='detail__excerpt']")
@@ -38,60 +32,18 @@ _CREDITS = [
 ]
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(generic_nodes_to_text(_AUTHOR(ctx.doc)))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("//NewsArticle/headline", scalar=True)
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            author_selector=_CREDITS,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 CORRECTIV = PublisherSpec(
     key="de.Correctiv",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_nodes(_AUTHOR),
+                date=date_from_ld(),
+                title=title_from_ld_path("//NewsArticle/headline"),
+                topics=topics_from_meta(),
+                images=make_images(_PARAGRAPH, image_selector=_IMAGE, author_selector=_CREDITS),
             ),
         ),
     ),

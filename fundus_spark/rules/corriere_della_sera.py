@@ -5,23 +5,11 @@ topics from the BreadcrumbList LD with a wildcard path step).
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing, generic_topic_parsing
+from ._common import date_from_ld_path, make_body, make_images, std_extractors, title_from_ld
 
 _SUMMARY = XPath("//p[contains(@class, 'summary')]")
 _PARAGRAPH = XPath("//p[@class='chapter-paragraph' and text()]")
@@ -29,28 +17,11 @@ _SUBHEAD = XPath("//h2[contains(@class, 'native-summary-content')]")
 _CREDIT = re.compile(r"\(foto (?P<credits>.*)\)\s*$")
 
 
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        paragraph_selector=_PARAGRAPH,
-        subheadline_selector=_SUBHEAD,
-    )
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     authors = ctx.ld.xpath_search("//NewsArticle/author")
     if authors:
         return generic_author_parsing(authors)
     return []
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("//NewsArticle/datePublished", scalar=True))
 
 
 def _topics(ctx: ParseContext) -> List[str]:
@@ -63,30 +34,18 @@ def _topics(ctx: ParseContext) -> List[str]:
     return []
 
 
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(doc=ctx.doc, paragraph_selector=_PARAGRAPH, author_selector=_CREDIT)
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 CORRIERE_DELLA_SERA = PublisherSpec(
     key="it.CorriereDellaSera",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("title", _title),
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=date_from_ld_path("//NewsArticle/datePublished"),
+                title=title_from_ld(),
+                topics=_topics,
+                images=make_images(_PARAGRAPH, author_selector=_CREDIT),
             ),
         ),
     ),

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Callable, Dict, List, Optional
+from typing import Callable, List
 
 from ..kernel import (
     ParseContext,

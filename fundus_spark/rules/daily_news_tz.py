@@ -6,20 +6,10 @@ DailyNewsTZ and HabariLeo; no topics attribute).
 from __future__ import annotations
 
 import re
-from datetime import datetime
 from typing import List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    generic_author_parsing,
-    generic_date_parsing,
-)
-from ._common import free_access, make_body, make_images
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import date_from_ld, free_access, make_body, make_images
 
 _SUMMARY = CSSSelector("div.cs-entry__subtitle")
 _SUBHEAD = XPath("//div[contains(@class,'entry-content')]//p[not(text() or position()=1)]//span//strong")
@@ -45,10 +35,6 @@ def _authors(ctx: ParseContext) -> List[str]:
     return generic_author_parsing(ctx.meta.get("twitter:data1") or ctx.ld.xpath_search("//Article//author"))
 
 
-def _date(ctx: ParseContext) -> Optional[datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
 _IMAGES = make_images(
     _PARAGRAPH,
     upper_boundary_selector=XPath("//div[@id='content']"),
@@ -65,7 +51,7 @@ _EXTRACTORS = (
     Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
     Extractor("title", _title),
     Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _date),
+    Extractor("publishing_date", date_from_ld()),
     Extractor("images", _IMAGES, default=list),
     Extractor("free_access", free_access, default=False),
 )

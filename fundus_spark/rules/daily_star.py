@@ -7,21 +7,17 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_meta,
+    date_from_meta,
+    free_access,
+    make_body,
+    make_images,
+    title_from_ld_path,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_SUMMARY = CSSSelector("p.sub-title")
@@ -37,72 +33,11 @@ _V11_CAPTION = XPath("./ancestor::div[contains(@class, 'ImageEmbed_image-embed')
 _V11_CREDIT = re.compile(r"(?i)\(image:(?P<credits>.*)\)$")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            paragraph_selector=paragraph,
-            subheadline_selector=subhead,
-        )
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _title_v11(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("//NewsArticle/headline", scalar=True)
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-        )
-    ]
-
-
-def _images_v11(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V11_PARAGRAPH,
-            caption_selector=_V11_CAPTION,
-            author_selector=_V11_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("authors", _authors, default=list),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_meta("article:published_time")),
+    Extractor("authors", authors_from_meta("author"), default=list),
+    Extractor("topics", topics_from_meta(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 DAILY_STAR = PublisherSpec(
@@ -113,9 +48,18 @@ DAILY_STAR = PublisherSpec(
             valid_until=datetime.date(2026, 4, 9),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, None)),
-                    Extractor("title", _title),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=None)),
+                    Extractor("title", title_from_meta()),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            image_selector=_V1_IMAGE,
+                            caption_selector=_V1_CAPTION,
+                            author_selector=_V1_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -124,9 +68,13 @@ DAILY_STAR = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("title", _title_v11),
-                    Extractor("images", _images_v11, default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor("title", title_from_ld_path("//NewsArticle/headline")),
+                    Extractor(
+                        "images",
+                        make_images(_V11_PARAGRAPH, caption_selector=_V11_CAPTION, author_selector=_V11_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

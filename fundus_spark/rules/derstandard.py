@@ -4,23 +4,10 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_meta
 
 _PARAGRAPH = CSSSelector("div.article-body > p")
 _SUMMARY = CSSSelector("header > p.article-subtitle")
@@ -29,55 +16,18 @@ _CREDIT = XPath("./ancestor::figure//footer")
 _SIZE = re.compile(r"/rs:fill:(?P<width>[0-9]+):")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            author_selector=_CREDIT,
-            size_pattern=_SIZE,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 DERSTANDARD = PublisherSpec(
     key="at.DerStandard",
     versions=(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+                Extractor("title", title_from_meta()),
+                Extractor("authors", authors_from_ld(), default=list),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("images", make_images(_PARAGRAPH, author_selector=_CREDIT, size_pattern=_SIZE), default=list),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
@@ -17,13 +17,9 @@ from ..kernel import (
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
 )
+from ._common import date_from_ld, free_access, make_body, make_images, title_from_ld, topics_from_meta
 
 _AUTHOR_SUB = re.compile(r"WELT")
 
@@ -42,62 +38,16 @@ _LOWER = XPath("//section[@class='c-attached-content']")
 _SIZE = re.compile(r"-w(?P<width>[0-9]+)/")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     return apply_substitution_pattern_over_list(generic_author_parsing(ctx.ld.bf_search("author")), _AUTHOR_SUB)
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images(paragraph):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=_IMAGE,
-                caption_selector=_CAPTION,
-                author_selector=_CREDIT,
-                lower_boundary_selector=_LOWER,
-                size_pattern=_SIZE,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
     Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("title", title_from_ld()),
+    Extractor("topics", topics_from_meta(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 DIE_WELT = PublisherSpec(
@@ -108,8 +58,19 @@ DIE_WELT = PublisherSpec(
             valid_until=datetime.date(2024, 8, 12),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("images", _images(_V1_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            image_selector=_IMAGE,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_LOWER,
+                            size_pattern=_SIZE,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -118,8 +79,19 @@ DIE_WELT = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("images", _images(_V11_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_IMAGE,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_LOWER,
+                            size_pattern=_SIZE,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

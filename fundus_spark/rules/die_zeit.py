@@ -4,25 +4,19 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
 )
+from ._common import date_from_ld, make_body, make_images, std_extractors, title_from_ld, topics_from_meta
 
 _AUTHOR_SUB = re.compile(r"DIE ZEIT (Archiv)")
 _PARAGRAPH = XPath("//div[@class = 'article-page']/p[not(contains(text(), '© dpa-infocom'))]")
@@ -34,47 +28,8 @@ _CREDIT = XPath("./ancestor::figure//span[@class='figure__copyright']")
 _LOWER = XPath("//nav[@class='breadcrumbs']")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     return apply_substitution_pattern_over_list(generic_author_parsing(ctx.ld.bf_search("author")), _AUTHOR_SUB)
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-            lower_boundary_selector=_LOWER,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 DIE_ZEIT = PublisherSpec(
@@ -82,14 +37,19 @@ DIE_ZEIT = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=date_from_ld(),
+                title=title_from_ld(),
+                topics=topics_from_meta(),
+                images=make_images(
+                    _PARAGRAPH,
+                    image_selector=_IMAGE,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                    lower_boundary_selector=_LOWER,
+                ),
             ),
         ),
     ),

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel import (
     CSSSelector,
@@ -17,14 +17,12 @@ from ..kernel import (
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
     generic_date_parsing,
     generic_text_extraction,
-    generic_topic_parsing,
     strip_nodes_to_text,
 )
+from ._common import date_from_ld, free_access, make_body, std_extractors, title_from_ld, topics_from_meta
 
 _AUTHOR_REGEX = r"^([A-z]{2,3}\/)*([A-z]{2,3})\s\([A-z\s,\d]*\)$"
 
@@ -46,30 +44,10 @@ _V1_AUTHOR = XPath('normalize-space(//ul[@class="smallList"]/li[strong[contains(
 _V1_DATE = XPath('normalize-space(//ul[@class="smallList"]/li[strong[contains(text(), "Datum")]]/text())')
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
 def _authors_v2(ctx: ParseContext) -> List[str]:
     return apply_substitution_pattern_over_list(
         generic_author_parsing(ctx.ld.bf_search("author")), _AUTHOR_SUBSTITUTION
     )
-
-
-def _publishing_date_v2(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title_v2(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
 
 
 def _topics_v2(ctx: ParseContext) -> List[str]:
@@ -95,19 +73,11 @@ def _title_v1(ctx: ParseContext) -> Optional[str]:
     return generic_text_extraction(ctx.doc, _V1_TITLE)
 
 
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _V2_COMMON = [
     Extractor("authors", _authors_v2, default=list),
-    Extractor("publishing_date", _publishing_date_v2),
-    Extractor("title", _title_v2),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("title", title_from_ld()),
+    Extractor("free_access", free_access, default=False),
 ]
 
 DW = PublisherSpec(
@@ -116,13 +86,12 @@ DW = PublisherSpec(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2023, 6, 12),
-            extractors=(
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                Extractor("authors", _authors_v1, default=list),
-                Extractor("publishing_date", _publishing_date_v1),
-                Extractor("title", _title_v1),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
+                authors=_authors_v1,
+                date=_publishing_date_v1,
+                title=_title_v1,
+                topics=topics_from_meta(),
             ),
         ),
         VersionSpec(
@@ -130,7 +99,7 @@ DW = PublisherSpec(
             valid_until=datetime.date(2024, 1, 18),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
+                    Extractor("body", make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD)),
                     Extractor("topics", _topics_v2, default=list),
                 ]
                 + _V2_COMMON
@@ -140,7 +109,7 @@ DW = PublisherSpec(
             name="V2_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
+                    Extractor("body", make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD)),
                     Extractor("topics", _topics_v21, default=list),
                 ]
                 + _V2_COMMON

@@ -6,21 +6,17 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld_path,
+    authors_from_meta,
+    date_from_meta,
+    free_access,
+    make_body,
+    make_images,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_SUMMARY = CSSSelector("p.c-article-summary")
@@ -41,61 +37,16 @@ _IMG_AUTHOR = XPath(
 )
 
 
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _body(summary_selector):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary_selector,
-            subheadline_selector=_SUBHEAD,
-            paragraph_selector=_PARAGRAPH,
-        )
-
-    return fn
-
-
-def _authors_v1(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("NewsArticle/author/name"))
-
-
-def _authors_v11(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("article:author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("date.available"))
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_IMG_AUTHOR,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("title", _title),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("topics", _topics, default=list),
-    Extractor("images", _images, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("title", title_from_meta()),
+    Extractor("publishing_date", date_from_meta("date.available")),
+    Extractor("topics", topics_from_meta(), default=list),
+    Extractor(
+        "images",
+        make_images(_PARAGRAPH, image_selector=_IMAGE, caption_selector=_CAPTION, author_selector=_IMG_AUTHOR),
+        default=list,
+    ),
+    Extractor("free_access", free_access, default=False),
 ]
 
 EURONEWS = PublisherSpec(
@@ -105,13 +56,17 @@ EURONEWS = PublisherSpec(
             name="V1",
             valid_until=datetime.date(2025, 11, 24),
             extractors=tuple(
-                [Extractor("body", _body(_V1_SUMMARY)), Extractor("authors", _authors_v1, default=list)] + _COMMON
+                [Extractor(
+                    "body", make_body(_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_SUBHEAD)
+                ), Extractor("authors", authors_from_ld_path("NewsArticle/author/name"), default=list)] + _COMMON
             ),
         ),
         VersionSpec(
             name="V1_1",
             extractors=tuple(
-                [Extractor("body", _body(_V11_SUMMARY)), Extractor("authors", _authors_v11, default=list)] + _COMMON
+                [Extractor(
+                    "body", make_body(_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_SUBHEAD)
+                ), Extractor("authors", authors_from_meta("article:author"), default=list)] + _COMMON
             ),
         ),
     ),

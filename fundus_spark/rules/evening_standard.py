@@ -6,21 +6,16 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld,
+    date_from_ld,
+    free_access,
+    make_body,
+    make_images,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_PARAGRAPH = CSSSelector("div.sc-bkSUFG.bdkDcZ")
@@ -43,62 +38,12 @@ _CREDIT = XPath(
 _LOWER = CSSSelector("div#piano-reg-wall")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images(paragraph):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=_IMAGE,
-                upper_boundary_selector=_UPPER,
-                caption_selector=_CAPTION,
-                author_selector=_CREDIT,
-                lower_boundary_selector=_LOWER,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("title", _title),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("authors", _authors, default=list),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("title", title_from_meta()),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("topics", topics_from_meta(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 EVENING_STANDARD = PublisherSpec(
@@ -109,8 +54,19 @@ EVENING_STANDARD = PublisherSpec(
             valid_until=datetime.date(2024, 6, 30),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, None)),
-                    Extractor("images", _images(_V1_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=None)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            image_selector=_IMAGE,
+                            upper_boundary_selector=_UPPER,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_LOWER,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -119,8 +75,19 @@ EVENING_STANDARD = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("images", _images(_V11_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_IMAGE,
+                            upper_boundary_selector=_UPPER,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_LOWER,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -4,23 +4,17 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_meta,
+    date_from_meta,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _SUMMARY = CSSSelector("article > header > h3")
@@ -35,63 +29,25 @@ _CREDIT = XPath("./ancestor::div[contains(@class, 'photo')]/span[@class='newsCap
 _SIZE = re.compile(r"/(?P<width>[0-9]+)x(?P<height>[0-9]+)?/")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("article:tag"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-            size_pattern=_SIZE,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 EXPRESS = PublisherSpec(
     key="uk.Express",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors, default=list),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_meta("author"),
+                date=date_from_meta("article:published_time"),
+                title=title_from_meta(),
+                topics=topics_from_meta("article:tag"),
+                images=make_images(
+                    _PARAGRAPH,
+                    upper_boundary_selector=_UPPER,
+                    image_selector=_IMAGE,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                    size_pattern=_SIZE,
+                ),
             ),
         ),
     ),

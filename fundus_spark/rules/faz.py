@@ -6,23 +6,27 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
     parse_title_from_root,
     strip_nodes_to_text,
+)
+from ._common import (
+    authors_from_ld,
+    date_from_ld,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_PARAGRAPH = CSSSelector("div.atc-Text > p")
@@ -53,26 +57,6 @@ _V3_CREDIT = XPath(
 )
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
 def _authors_v1(ctx: ParseContext) -> List[str]:
     if not (author_nodes := _V1_AUTHOR(ctx.doc)):
         return []
@@ -80,10 +64,6 @@ def _authors_v1(ctx: ParseContext) -> List[str]:
         # authors are linked with an <a> tag, cities are not
         author_nodes = [node for node in author_nodes if any(c.tag == "a" for c in node.children)]
     return [text for node in author_nodes if "F.A.Z" not in (text := node.text_content())]
-
-
-def _title_v1(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
 
 
 def _topics_nodes(selector):
@@ -103,32 +83,8 @@ def _authors_v2(ctx: ParseContext) -> List[str]:
     return []
 
 
-def _authors_v3(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
 def _title_v23(ctx: ParseContext) -> Optional[str]:
     return ctx.meta.get("og:title") or parse_title_from_root(ctx.doc)
-
-
-def _images(paragraph, caption, credit):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=_V2_IMAGE,
-                caption_selector=caption,
-                author_selector=credit,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 FAZ = PublisherSpec(
@@ -137,38 +93,39 @@ FAZ = PublisherSpec(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2024, 4, 15),
-            extractors=(
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors_v1, default=list),
-                Extractor("title", _title_v1),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
+                authors=_authors_v1,
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=topics_from_meta(),
             ),
         ),
         VersionSpec(
             name="V2",
             valid_until=datetime.date(2025, 2, 26),
-            extractors=(
-                Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
-                Extractor("topics", _topics_nodes(_V2_TOPIC), default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors_v2, default=list),
-                Extractor("title", _title_v23),
-                Extractor("images", _images(_V2_PARAGRAPH, _V2_CAPTION, _V2_CREDIT), default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
+                authors=_authors_v2,
+                date=date_from_ld(),
+                title=_title_v23,
+                topics=_topics_nodes(_V2_TOPIC),
+                images=make_images(
+                    _V2_PARAGRAPH, image_selector=_V2_IMAGE, caption_selector=_V2_CAPTION, author_selector=_V2_CREDIT
+                ),
             ),
         ),
         VersionSpec(
             name="V3",
-            extractors=(
-                Extractor("body", _body(_V3_SUMMARY, _V3_PARAGRAPH, _V3_SUBHEAD)),
-                Extractor("topics", _topics_nodes(_V3_TOPIC), default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors_v3, default=list),
-                Extractor("title", _title_v23),
-                Extractor("images", _images(_V3_PARAGRAPH, _V3_CAPTION, _V3_CREDIT), default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V3_PARAGRAPH, summary=_V3_SUMMARY, subheadline=_V3_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=_title_v23,
+                topics=_topics_nodes(_V3_TOPIC),
+                images=make_images(
+                    _V3_PARAGRAPH, image_selector=_V2_IMAGE, caption_selector=_V3_CAPTION, author_selector=_V3_CREDIT
+                ),
             ),
         ),
     ),

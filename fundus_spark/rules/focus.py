@@ -7,21 +7,10 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Match, Optional
+from typing import List, Match, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import date_from_ld, free_access, make_body, make_images, title_from_ld
 
 _PARAGRAPH = CSSSelector("div.textBlock > p , div[data-qa-article-content-text] > p")
 _SUMMARY = CSSSelector("div.leadIn > p, div.Article-Description ")
@@ -44,28 +33,11 @@ _CREDIT = XPath(
 _LOWER = XPath("//footer")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     author_names = generic_author_parsing(ctx.ld.bf_search("author"))
     for i, name in enumerate(author_names):
         author_names[i] = re.sub(_AUTHOR_SUB, "", name)
     return author_names
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
 
 
 def _topics(ctx: ParseContext) -> List[str]:
@@ -78,37 +50,29 @@ def _topics(ctx: ParseContext) -> List[str]:
     return re.findall(_TOPIC_NAME_PATTERN, match.group(1))
 
 
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-            lower_boundary_selector=_LOWER,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 FOCUS = PublisherSpec(
     key="de.Focus",
     versions=(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
+                Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
                 Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("title", title_from_ld()),
                 Extractor("topics", _topics, default=list, deprecated=datetime.date(2024, 6, 1)),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor(
+                    "images",
+                    make_images(
+                        _PARAGRAPH,
+                        image_selector=_IMAGE,
+                        caption_selector=_CAPTION,
+                        author_selector=_CREDIT,
+                        lower_boundary_selector=_LOWER,
+                    ),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -4,23 +4,10 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_meta
 
 _PARAGRAPH = XPath(
     "//p[@class='id-StoryElement-paragraph'] | "
@@ -35,55 +22,22 @@ _UPPER = CSSSelector("article")
 _CREDIT = re.compile(r"©(?P<credits>.+)")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        subheadline_selector=_SUBHEAD,
-        summary_selector=_SUMMARY,
-    )
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 FRANKFURTER_RUNDSCHAU = PublisherSpec(
     key="de.FrankfurterRundschau",
     versions=(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+                Extractor("authors", authors_from_ld(), default=list),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("title", title_from_meta()),
+                Extractor(
+                    "images",
+                    make_images(_PARAGRAPH, upper_boundary_selector=_UPPER, author_selector=_CREDIT),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -4,42 +4,15 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec
+from ._common import authors_from_meta, date_from_ld, make_body, make_images, std_extractors, title_from_ld
 
 _SUMMARY = CSSSelector("h2.article-excerpt")
 _PARAGRAPH = CSSSelector(".article-content > p")
 _CREDIT = re.compile(r"\((?P<credits>.+)\)$")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, summary_selector=_SUMMARY, paragraph_selector=_PARAGRAPH)
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
 
 
 def _topics(ctx: ParseContext) -> List[str]:
@@ -47,30 +20,18 @@ def _topics(ctx: ParseContext) -> List[str]:
     return topics if topics else []
 
 
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(doc=ctx.doc, paragraph_selector=_PARAGRAPH, author_selector=_CREDIT)
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 FREE_BEACON = PublisherSpec(
     key="us.FreeBeacon",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY),
+                authors=authors_from_meta("author"),
+                date=date_from_ld(),
+                title=title_from_ld(),
+                topics=_topics,
+                images=make_images(_PARAGRAPH, author_selector=_CREDIT),
             ),
         ),
     ),

@@ -7,22 +7,10 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import date_from_ld, free_access, make_body, make_images, topics_from_ld
 
 _SUMMARY = CSSSelector("#artikel-content > p.bold")
 _V1_PARAGRAPH = XPath("//*[@id='artikel-content']//p[not(ancestor::div[@class='pw-layer'] or @class='bold')]")
@@ -43,22 +31,6 @@ _V11_CAPTION = XPath(
 )
 
 
-def _body(paragraph):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            paragraph_selector=paragraph,
-            subheadline_selector=_SUBHEAD,
-            summary_selector=_SUMMARY,
-        )
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     if not (authors := ctx.ld.xpath_search("NewsArticle/author")):
         return []
@@ -73,50 +45,12 @@ def _title(ctx: ParseContext) -> Optional[str]:
     return None
 
 
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"), delimiter="/")
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            lower_boundary_selector=_V1_LOWER,
-            caption_selector=_V1_CAPTION,
-            author_selector=_CREDIT,
-            relative_urls=True,
-        )
-    ]
-
-
-def _images_v11(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V11_PARAGRAPH,
-            image_selector=_V11_IMAGE,
-            lower_boundary_selector=_V11_LOWER,
-            caption_selector=_V11_CAPTION,
-            author_selector=_CREDIT,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
+    Extractor("publishing_date", date_from_ld()),
     Extractor("authors", _authors, default=list),
     Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("topics", topics_from_ld(delimiter="/"), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 FREIE_PRESSE = PublisherSpec(
@@ -127,8 +61,19 @@ FREIE_PRESSE = PublisherSpec(
             valid_until=datetime.date(2024, 8, 4),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_PARAGRAPH)),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            image_selector=_V1_IMAGE,
+                            lower_boundary_selector=_V1_LOWER,
+                            caption_selector=_V1_CAPTION,
+                            author_selector=_CREDIT,
+                            relative_urls=True,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -137,8 +82,19 @@ FREIE_PRESSE = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_PARAGRAPH)),
-                    Extractor("images", _images_v11, default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_V11_IMAGE,
+                            lower_boundary_selector=_V11_LOWER,
+                            caption_selector=_V11_CAPTION,
+                            author_selector=_CREDIT,
+                            relative_urls=True,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

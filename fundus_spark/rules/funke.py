@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     Extractor,
@@ -18,13 +18,10 @@ from ..kernel import (
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
 )
+from ._common import date_from_ld, free_access, make_body, make_images, title_from_ld
 
 _AUTHOR_SUB = re.compile(r"FUNKE Mediengruppe|.*dpa(:|-infocom).*|^red$")
 _V1_PARAGRAPH = XPath(
@@ -66,22 +63,6 @@ _V11_IMAGE = XPath(
 _V12_TOPICS = XPath("//a[@data-track-v2-parentlabel='Mehr lesen über'] ")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
 def _topics(selector):
     def fn(ctx: ParseContext) -> List[str]:
         if topics := generic_topic_parsing(ctx.meta.get("news_keywords")):
@@ -95,34 +76,11 @@ def _authors(ctx: ParseContext) -> List[str]:
     return apply_substitution_pattern_over_list(generic_author_parsing(ctx.ld.bf_search("author")), _AUTHOR_SUB)
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _images(paragraph, image):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=image,
-                author_selector=_CREDIT,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("title", _title),
+    Extractor("title", title_from_ld()),
     Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("free_access", free_access, default=False),
 ]
 
 FUNKE = PublisherSpec(
@@ -133,9 +91,13 @@ FUNKE = PublisherSpec(
             valid_until=datetime.date(2025, 8, 24),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                     Extractor("topics", _topics(_V1_TOPICS), default=list),
-                    Extractor("images", _images(_V1_PARAGRAPH, _V1_IMAGE), default=list),
+                    Extractor(
+                        "images",
+                        make_images(_V1_PARAGRAPH, image_selector=_V1_IMAGE, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -145,9 +107,13 @@ FUNKE = PublisherSpec(
             valid_until=datetime.date(2025, 10, 22),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
                     Extractor("topics", _topics(_V1_TOPICS), default=list),
-                    Extractor("images", _images(_V11_PARAGRAPH, _V11_IMAGE), default=list),
+                    Extractor(
+                        "images",
+                        make_images(_V11_PARAGRAPH, image_selector=_V11_IMAGE, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -156,9 +122,13 @@ FUNKE = PublisherSpec(
             name="V1_2",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
                     Extractor("topics", _topics(_V12_TOPICS), default=list),
-                    Extractor("images", _images(_V11_PARAGRAPH, _V11_IMAGE), default=list),
+                    Extractor(
+                        "images",
+                        make_images(_V11_PARAGRAPH, image_selector=_V11_IMAGE, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -10,55 +10,12 @@ body heuristic matching the synthetic fixture grammar (FIXTURES.md §1).
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
-
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    parse_title_from_root,
-)
+from ..kernel import PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, make_body, std_extractors, title_from_root, topics_from_meta
 
 _PARAGRAPH = XPath("//article//p[not(@class='summary')]")
 _SUMMARY = XPath("//article//p[@class='summary']")
 _SUBHEAD = XPath("//article//h2")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-    )
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return parse_title_from_root(ctx.doc)
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 GENERIC = PublisherSpec(
@@ -66,13 +23,12 @@ GENERIC = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=title_from_root,
+                topics=topics_from_meta(),
             ),
         ),
     ),

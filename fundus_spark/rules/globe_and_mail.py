@@ -5,8 +5,7 @@ preserving first occurrence, 'news' topics dropped, then title-cased).
 
 from __future__ import annotations
 
-import datetime
-from typing import List, Optional
+from typing import List
 
 from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
 from ._common import authors_from_ld, date_from_ld, make_body, make_images, std_extractors, title_from_meta

@@ -7,22 +7,10 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, topics_from_meta
 
 _BLOAT = r"^Dieser Artikel enthält sogenannte Affiliate-Links"
 _V1_SUMMARY = XPath("//hgroup/p")
@@ -41,64 +29,24 @@ def _tag_filter(el) -> bool:
     return bool(_TAG_FILTER(el))
 
 
-def _body(summary_selector, paragraph_selector, subheadline_selector):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary_selector,
-            paragraph_selector=paragraph_selector,
-            subheadline_selector=subheadline_selector,
-            tag_filter=_tag_filter,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
 def _title(ctx: ParseContext) -> Optional[str]:
     if title := ctx.meta.get("title"):
         return title.replace(" - Golem.de", "")
     return None
 
 
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("news_keywords"))
-
-
-def _images(paragraph_selector):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph_selector,
-                upper_boundary_selector=_V1_UPPER,
-                author_selector=_V1_IMG_CREDIT,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 def _common(paragraph_selector):
     return [
-        Extractor("authors", _authors, default=list),
-        Extractor("publishing_date", _publishing_date),
+        Extractor("authors", authors_from_ld(), default=list),
+        Extractor("publishing_date", date_from_ld()),
         Extractor("title", _title),
-        Extractor("topics", _topics, default=list),
-        Extractor("images", _images(paragraph_selector), default=list),
-        Extractor("free_access", _free_access, default=False),
+        Extractor("topics", topics_from_meta("news_keywords"), default=list),
+        Extractor(
+            "images",
+            make_images(paragraph_selector, upper_boundary_selector=_V1_UPPER, author_selector=_V1_IMG_CREDIT),
+            default=list,
+        ),
+        Extractor("free_access", free_access, default=False),
     ]
 
 
@@ -109,13 +57,19 @@ GOLEM = PublisherSpec(
             name="V1",
             valid_until=datetime.date(2025, 8, 21),
             extractors=tuple(
-                [Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD))] + _common(_V1_PARAGRAPH)
+                [Extractor(
+                    "body",
+                    make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD, tag_filter=_tag_filter),
+                )] + _common(_V1_PARAGRAPH)
             ),
         ),
         VersionSpec(
             name="V1_1",
             extractors=tuple(
-                [Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD))] + _common(_V11_PARAGRAPH)
+                [Extractor(
+                    "body",
+                    make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD, tag_filter=_tag_filter),
+                )] + _common(_V11_PARAGRAPH)
             ),
         ),
     ),

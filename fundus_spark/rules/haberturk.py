@@ -20,10 +20,6 @@ def _date(ctx: ParseContext) -> Optional[datetime.datetime]:
     return generic_date_parsing(ctx.ld.bf_search("datePublished") or ctx.meta.get("datePublished"))
 
 
-def _description(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:description")
-
-
 _IMAGES = make_images(
     _PARAGRAPH,
     upper_boundary_selector=CSSSelector("article"),
@@ -42,7 +38,7 @@ HABERTURK = PublisherSpec(
                 title=title_from_meta("og:title"),
                 topics=topics_from_ld("keywords"),
                 images=_IMAGES,
-                extra=(Extractor("description", _description, validate=False),),
+                extra=(Extractor("description", title_from_meta("og:description"), validate=False),),
             ),
         ),
     ),

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import List, Optional
+from typing import List
 
 from ..kernel import (
     Extractor,
@@ -17,13 +17,14 @@ from ..kernel import (
     VersionSpec,
     XPath,
     generic_author_parsing,
-    generic_date_parsing,
     parse_html,
     transform_breaks_to_tag,
 )
 from ..kernel.jsonld import parse_json_text
 from ._common import (
+    authors_from_ld_path,
     date_from_ld,
+    date_from_ld_path,
     date_from_meta,
     make_body,
     make_images,
@@ -39,10 +40,6 @@ _IMG_CREDIT = re.compile(r"(?!.+\.)(.+=|\.)?(?P<credits>.+?)( 제공| 기자)?$"
 _V1_PARAGRAPH = XPath("//div[@itemprop='articleBody']/p[@class='editor-p']")
 _V1_SUMMARY = XPath("//div[@itemprop='articleBody']/h2")
 _V1_SUBHEAD = XPath("//div[@itemprop='articleBody']/h3")
-
-
-def _authors_v1(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("//NewsArticle/author/name"))
 
 
 _V1_IMAGES = make_images(
@@ -105,13 +102,6 @@ def _authors_v2(ctx: ParseContext) -> List[str]:
     return generic_author_parsing([node.text_content() for node in _V2_AUTHOR(ctx.doc)])
 
 
-def _date_v2(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(
-        ctx.ld.xpath_search("//page-data//detail/deployDt", scalar=True),
-        tz=datetime.timezone(datetime.timedelta(hours=9)),
-    )
-
-
 _V2_IMAGES = make_images(
     _V2_PARAGRAPH,
     upper_boundary_selector=XPath("//div[@class='article-view']"),
@@ -149,7 +139,7 @@ HANKOOK_ILBO = PublisherSpec(
             valid_until=datetime.date(2026, 1, 27),
             extractors=std_extractors(
                 body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
-                authors=_authors_v1,
+                authors=authors_from_ld_path("//NewsArticle/author/name"),
                 date=date_from_ld(),
                 title=title_from_ld("headline"),
                 topics=topics_from_meta("news_keywords"),
@@ -162,7 +152,7 @@ HANKOOK_ILBO = PublisherSpec(
             extractors=std_extractors(
                 body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
                 authors=_authors_v2,
-                date=_date_v2,
+                date=date_from_ld_path("//page-data//detail/deployDt"),
                 title=title_from_meta("headline"),
                 topics=topics_from_meta("news_keywords"),
                 images=_V2_IMAGES,

@@ -7,21 +7,9 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_ld, topics_from_ld
 
 _V1_SUMMARY = CSSSelector("article > h2")
 _V11_SUMMARY = CSSSelector("article p.inews__post-excerpt")
@@ -32,55 +20,12 @@ _V1_UPPER = CSSSelector("div.inews__main")
 _V11_UPPER = CSSSelector("div.article-wrapper")
 
 
-def _body(summary):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(ctx.doc, summary_selector=summary, paragraph_selector=_PARAGRAPH)
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _images(upper):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=_PARAGRAPH,
-                upper_boundary_selector=upper,
-                image_selector=_IMAGE,
-                author_selector=_CREDIT,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("authors", _authors, default=list),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("title", title_from_ld()),
+    Extractor("topics", topics_from_ld(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 I_NEWS = PublisherSpec(
@@ -91,8 +36,17 @@ I_NEWS = PublisherSpec(
             valid_until=datetime.date(2025, 1, 1),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY)),
-                    Extractor("images", _images(_V1_UPPER), default=list),
+                    Extractor("body", make_body(_PARAGRAPH, summary=_V1_SUMMARY)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _PARAGRAPH,
+                            upper_boundary_selector=_V1_UPPER,
+                            image_selector=_IMAGE,
+                            author_selector=_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -101,8 +55,17 @@ I_NEWS = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY)),
-                    Extractor("images", _images(_V11_UPPER), default=list),
+                    Extractor("body", make_body(_PARAGRAPH, summary=_V11_SUMMARY)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _PARAGRAPH,
+                            upper_boundary_selector=_V11_UPPER,
+                            image_selector=_IMAGE,
+                            author_selector=_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel.transform import serialize_xml
 from ..kernel import (
@@ -50,16 +50,13 @@ from ..kernel import (
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
     generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
     parse_html,
-    serialize_html,
     transform_breaks_to_tag,
 )
+from ._common import make_body, make_images, std_extractors
 
 _PARAGRAPH = XPath(
     "//div[contains(@class, 'typography--content')]//p[text() or strong or em] | "
@@ -80,15 +77,6 @@ def _preprocess(ctx: ParseContext) -> None:
     doc = parse_html(html_string)
     transform_breaks_to_tag(doc)
     ctx.doc = doc
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        subheadline_selector=_SUBHEAD,
-        summary_selector=_SUMMARY,
-    )
 
 
 def _title(ctx: ParseContext) -> Optional[str]:
@@ -122,36 +110,19 @@ def _topics(ctx: ParseContext) -> List[str]:
     return []
 
 
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 IL_GIORNALE = PublisherSpec(
     key="it.IlGiornale",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("_preprocess", _preprocess, kind="function", priority=1),
-                Extractor("body", _body),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=_publishing_date,
+                title=_title,
+                topics=_topics,
+                images=make_images(_PARAGRAPH, image_selector=_IMAGE, caption_selector=_CAPTION),
+                extra=(Extractor("_preprocess", _preprocess, kind="function", priority=1),),
             ),
         ),
     ),

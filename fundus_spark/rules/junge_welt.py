@@ -6,21 +6,9 @@ V1_1 after; login-wall-based free_access).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_meta, date_from_ld, make_body, make_images, title_from_meta, topics_from_meta
 
 _V1_PARAGRAPH = XPath(
     "//div[@class = 'row']/div[contains(@class, 'col') and not(@class = 'col-md-8 mx-auto mt-4 bg-light')]/p"
@@ -42,70 +30,16 @@ _V11_CAPTION = XPath("./ancestor::div[contains(@class, 'mx-auto')]//div[contains
 _V11_CREDIT = XPath("./ancestor::div[contains(@class, 'mx-auto')]//span")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("Author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
 def _free_access(ctx: ParseContext) -> bool:
     return not bool(_FREE_ACCESS(ctx.doc))
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            caption_selector=_V1_CAPTION,
-            relative_urls=True,
-        )
-    ]
-
-
-def _images_v11(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            image_selector=_V11_IMAGE,
-            paragraph_selector=_V11_PARAGRAPH,
-            caption_selector=_V11_CAPTION,
-            author_selector=_V11_CREDIT,
-            relative_urls=True,
-        )
-    ]
-
-
 _COMMON = [
-    Extractor("authors", _authors, default=list),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
+    Extractor("authors", authors_from_meta("Author"), default=list),
+    Extractor("title", title_from_meta()),
+    Extractor("topics", topics_from_meta(), default=list),
     Extractor("free_access", _free_access, default=True),
-    Extractor("publishing_date", _publishing_date),
+    Extractor("publishing_date", date_from_ld()),
 ]
 
 JUNGE_WELT = PublisherSpec(
@@ -116,8 +50,12 @@ JUNGE_WELT = PublisherSpec(
             valid_until=datetime.date(2026, 4, 24),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(_V1_PARAGRAPH, caption_selector=_V1_CAPTION, relative_urls=True),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -126,8 +64,18 @@ JUNGE_WELT = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("images", _images_v11, default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_V11_IMAGE,
+                            caption_selector=_V11_CAPTION,
+                            author_selector=_V11_CREDIT,
+                            relative_urls=True,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

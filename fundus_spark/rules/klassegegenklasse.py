@@ -6,23 +6,18 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel import (
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
     generic_date_parsing,
-    generic_nodes_to_text,
-    generic_topic_parsing,
-    image_extraction,
     strip_nodes_to_text,
 )
+from ._common import make_body, make_images, std_extractors, title_from_meta, topics_from_nodes
 
 _PARAGRAPH = XPath(
     "//div[@class='singleContent ']/p[not((not(text()) and em) or re:test(string(.), '^Zum Weiterlesen:'))]"
@@ -36,19 +31,6 @@ _TOPIC = XPath("//ul[@class='singleTagList']//li")
 _CREDIT = re.compile(r"(?i)(foto|quelle|bild):\s*(?P<credits>.+)")
 
 
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     return generic_author_parsing(strip_nodes_to_text(_AUTHOR(ctx.doc)))
 
@@ -57,34 +39,18 @@ def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
     return generic_date_parsing(strip_nodes_to_text(_DATE(ctx.doc)))
 
 
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_TOPIC(ctx.doc), normalize=True))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(doc=ctx.doc, paragraph_selector=_PARAGRAPH, author_selector=_CREDIT)
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 KLASSE_GEGEN_KLASSE = PublisherSpec(
     key="de.KlasseGegenKlasse",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("title", _title),
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=_publishing_date,
+                title=title_from_meta(),
+                topics=topics_from_nodes(_TOPIC),
+                images=make_images(_PARAGRAPH, author_selector=_CREDIT),
             ),
         ),
     ),

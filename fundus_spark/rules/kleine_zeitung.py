@@ -5,18 +5,21 @@
 from __future__ import annotations
 
 import re
-from typing import Optional
 
-from ..kernel import ParseContext, PublisherSpec, VersionSpec, XPath
-from ._common import authors_from_ld, date_from_ld, make_body, make_images, std_extractors, topics_from_meta
+from ..kernel import PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld,
+    date_from_ld,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_ld_path,
+    topics_from_meta,
+)
 
 _PARAGRAPH = XPath("//div[@class='w-full prose']/p")
 _SUBHEAD = XPath("//div[@class='w-full prose']/h2")
 _SUMMARY = XPath("//div[contains(@class, 'article-lead')]")
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
 
 
 _IMAGES = make_images(
@@ -39,7 +42,7 @@ KLEINE_ZEITUNG = PublisherSpec(
                 body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
                 authors=authors_from_ld(),
                 date=date_from_ld(),
-                title=_title,
+                title=title_from_ld_path("NewsArticle/headline"),
                 topics=topics_from_meta("keywords"),
                 images=_IMAGES,
             ),

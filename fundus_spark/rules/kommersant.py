@@ -5,20 +5,23 @@
 from __future__ import annotations
 
 import re
-from typing import List
 
-from ..kernel import ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing, generic_nodes_to_text
-from ._common import date_from_ld, make_body, make_images, std_extractors, title_from_ld, topics_from_meta
+from ..kernel import PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_nodes,
+    date_from_ld,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_ld,
+    topics_from_meta,
+)
 
 _SUMMARY = XPath("//header/h2")
 _PARAGRAPH = XPath(
     "//div[contains(@class, 'article_text_wrapper')]/p[not(contains(@class, 'document_authors') or (not(text()) and b))]"
 )
 _AUTHOR = XPath("//p[@class='doc__text document_authors']")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(generic_nodes_to_text(_AUTHOR(ctx.doc)))
 
 
 _IMAGES = make_images(
@@ -36,7 +39,7 @@ KOMMERSANT = PublisherSpec(
             name="V1",
             extractors=std_extractors(
                 body=make_body(_PARAGRAPH, summary=_SUMMARY),
-                authors=_authors,
+                authors=authors_from_nodes(_AUTHOR),
                 date=date_from_ld(),
                 title=title_from_ld("headline"),
                 topics=topics_from_meta("keywords"),

@@ -4,43 +4,25 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
 )
+from ._common import date_from_ld_path, make_body, make_images, std_extractors, title_from_meta
 
 _SUMMARY = CSSSelector("div.story__summary p")
 _PARAGRAPH = CSSSelector("div.story__text p")
 _SUBHEAD = CSSSelector("div.story__text h2")
 _IMAGE = XPath("//figure[not(@class='inline-article__media')]//*[not(self::noscript)]/img")
 _CREDIT = re.compile(r"\((foto)?(?P<credits>.*)\)$")
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        paragraph_selector=_PARAGRAPH,
-        subheadline_selector=_SUBHEAD,
-    )
 
 
 def _authors(ctx: ParseContext) -> List[str]:
@@ -50,29 +32,9 @@ def _authors(ctx: ParseContext) -> List[str]:
     return []
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("//NewsArticle/datePublished", scalar=True))
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     topics = ctx.ld.xpath_search("//NewsArticle/about/name")
     return generic_topic_parsing(topics) if topics else []
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 LA_REPUBBLICA = PublisherSpec(
@@ -80,14 +42,13 @@ LA_REPUBBLICA = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("title", _title),
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=date_from_ld_path("//NewsArticle/datePublished"),
+                title=title_from_meta(),
+                topics=_topics,
+                images=make_images(_PARAGRAPH, image_selector=_IMAGE, author_selector=_CREDIT),
             ),
         ),
     ),

@@ -12,21 +12,18 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_nodes_to_text,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import (
+    authors_from_ld,
+    date_from_ld,
+    free_access,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_nodes,
 )
 
 _V1_PARAGRAPH = XPath(
@@ -54,61 +51,8 @@ _V2_CAPTION = XPath("./ancestor::figure//figcaption/span[@class='caption_text']"
 _V2_CREDIT = XPath("./ancestor::figure//figcaption/span[@class='caption_author']")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            paragraph_selector=paragraph,
-            subheadline_selector=subhead,
-            summary_selector=summary,
-        )
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title_v1(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("title")
-
-
-def _title_v2(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
 def _authors_v1(ctx: ParseContext) -> List[str]:
     return [re.sub(r"(?u)\s*​.*", "", author) for author in generic_author_parsing(ctx.ld.bf_search("author"))]
-
-
-def _authors_v2(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _topics_v2(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_V2_TOPIC(ctx.doc), normalize=True))
-
-
-def _images(paragraph, image, caption, credit, relative=False):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=image,
-                caption_selector=caption,
-                author_selector=credit,
-                relative_urls=relative,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 LA_VANGUARDIA = PublisherSpec(
@@ -118,24 +62,39 @@ LA_VANGUARDIA = PublisherSpec(
             name="V1",
             valid_until=datetime.date(2026, 7, 1),
             extractors=(
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title_v1),
+                Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("title", title_from_meta("title")),
                 Extractor("authors", _authors_v1, default=list),
-                Extractor("images", _images(_V1_PARAGRAPH, _V1_IMAGE, _V1_CAPTION, _V1_CREDIT, True), default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor(
+                    "images",
+                    make_images(
+                        _V1_PARAGRAPH,
+                        image_selector=_V1_IMAGE,
+                        caption_selector=_V1_CAPTION,
+                        author_selector=_V1_CREDIT,
+                        relative_urls=True,
+                    ),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=(
-                Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title_v2),
-                Extractor("authors", _authors_v2, default=list),
-                Extractor("topics", _topics_v2, default=list),
-                Extractor("images", _images(_V2_PARAGRAPH, _V2_IMAGE, _V2_CAPTION, _V2_CREDIT), default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=topics_from_nodes(_V2_TOPIC),
+                images=make_images(
+                    _V2_PARAGRAPH,
+                    image_selector=_V2_IMAGE,
+                    caption_selector=_V2_CAPTION,
+                    author_selector=_V2_CREDIT,
+                    relative_urls=False,
+                ),
             ),
         ),
     ),

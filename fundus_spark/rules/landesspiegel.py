@@ -6,10 +6,18 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import List, Optional
+from typing import Optional
 
-from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing, generic_date_parsing
-from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_ld
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_date_parsing
+from ._common import (
+    authors_from_ld,
+    authors_from_meta,
+    date_from_ld,
+    free_access,
+    make_body,
+    make_images,
+    title_from_ld,
+)
 
 _SUMMARY = XPath("//div[contains(@class, 'entry-content')]/p[not(text()) and strong]")
 _PARAGRAPH = XPath("//div[contains(@class, 'entry-content')]/p[text()]|//blockquote")
@@ -41,10 +49,6 @@ def _title_v11(ctx: ParseContext) -> Optional[str]:
     return None
 
 
-def _authors_v11(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("twitter:data1"))
-
-
 _V11_IMAGES = make_images(
     _PARAGRAPH,
     upper_boundary_selector=XPath("//h1"),
@@ -73,6 +77,6 @@ LANDESSPIEGEL = PublisherSpec(
     key="li.Landesspiegel",
     versions=(
         _version("V1", datetime.date(2025, 9, 9), authors_from_ld(), date_from_ld(), title_from_ld("headline"), _V1_IMAGES),
-        _version("V1_1", None, _authors_v11, _date_v11, _title_v11, _V11_IMAGES),
+        _version("V1_1", None, authors_from_meta("twitter:data1"), _date_v11, _title_v11, _V11_IMAGES),
     ),
 )

@@ -5,21 +5,15 @@ raw ld keywords list).
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
-
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_meta,
+    date_from_meta,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_ld,
+    title_from_meta,
 )
 
 _PARAGRAPH = XPath("//p[contains(@class, 'article__paragraph')]")
@@ -31,62 +25,24 @@ _CAPTION = XPath("./ancestor::figure//figcaption/text()")
 _CREDIT = XPath("./ancestor::figure//figcaption/span")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-    )
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return ctx.ld.bf_search("keywords")
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("og:article:published_time"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("og:article:author"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 LE_MONDE = PublisherSpec(
     key="fr.LeMonde",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_meta("og:article:author"),
+                date=date_from_meta("og:article:published_time"),
+                title=title_from_meta(),
+                topics=title_from_ld("keywords"),
+                images=make_images(
+                    _PARAGRAPH,
+                    upper_boundary_selector=_UPPER,
+                    image_selector=_IMAGE,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                ),
             ),
         ),
     ),

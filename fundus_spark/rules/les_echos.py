@@ -6,23 +6,19 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
     generic_date_parsing,
     generic_nodes_to_text,
-    image_extraction,
     normalize_whitespace,
 )
+from ._common import authors_from_ld, make_body, make_images, std_extractors
 
 _SUMMARY = CSSSelector("article header > p")
 _SUBHEAD = CSSSelector("article div.post-paywall > h3")
@@ -32,15 +28,6 @@ _PARAGRAPH = XPath(
 )
 _TOPIC = CSSSelector("header div.sc-108qdzy-3 div.sc-108qdzy-2 > div")
 _CREDIT = re.compile(r"\((?P<credits>.*?)\)$")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-    )
 
 
 def _title(ctx: ParseContext) -> Optional[str]:
@@ -57,34 +44,18 @@ def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
     return generic_date_parsing(ctx.meta.get("article:published_time") or ctx.ld.bf_search("datePublished"))
 
 
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(doc=ctx.doc, paragraph_selector=_PARAGRAPH, author_selector=_CREDIT)
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 LES_ECHOS = PublisherSpec(
     key="fr.LesEchos",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_ld(),
+                date=_publishing_date,
+                title=_title,
+                topics=_topics,
+                images=make_images(_PARAGRAPH, author_selector=_CREDIT),
             ),
         ),
     ),

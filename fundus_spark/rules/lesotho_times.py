@@ -6,7 +6,6 @@ byline parsed from short leading body paragraphs; no topics).
 from __future__ import annotations
 
 import datetime
-import re
 from typing import List, Optional
 
 from ..kernel import (

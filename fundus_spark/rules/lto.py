@@ -4,27 +4,20 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
-    generic_nodes_to_text,
-    generic_topic_parsing,
-    image_extraction,
     strip_nodes_to_text,
 )
+from ._common import date_from_meta, make_body, make_images, std_extractors, title_from_meta, topics_from_nodes
 
 _PARAGRAPH = XPath("//div[@class='article-text-wrapper']/p[text() or child::span[@class='block-align-center']]")
 _SUMMARY = CSSSelector("div.reader__intro")
@@ -36,48 +29,10 @@ _UPPER = XPath("//h1")
 _AUTHOR_SUB = re.compile("^Gastbeitrag von |^von ")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     return apply_substitution_pattern_over_list(
         generic_author_parsing(strip_nodes_to_text(_AUTHOR(ctx.doc))), _AUTHOR_SUB, ""
     )
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("date"))
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_TOPIC(ctx.doc), normalize=True))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            author_selector=_CREDIT,
-            upper_boundary_selector=_UPPER,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 LTO = PublisherSpec(
@@ -85,14 +40,15 @@ LTO = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=date_from_meta("date"),
+                title=title_from_meta(),
+                topics=topics_from_nodes(_TOPIC),
+                images=make_images(
+                    _PARAGRAPH, author_selector=_CREDIT, upper_boundary_selector=_UPPER, relative_urls=True
+                ),
             ),
         ),
     ),

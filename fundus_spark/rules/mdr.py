@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional, Pattern
+from typing import List, Optional, Pattern
 
 from ..kernel import (
     CSSSelector,
@@ -19,15 +19,12 @@ from ..kernel import (
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
     generic_text_extraction,
     generic_topic_parsing,
-    image_extraction,
     strip_nodes_to_text,
 )
+from ._common import date_from_ld, make_body, make_images, std_extractors, topics_from_meta
 
 _AUTHOR_SUBSTITUTION: Pattern[str] = re.compile(r"MDR \w*$|MDR \w*-\w*$|MDRfragt-Redaktionsteam|^von")
 _SOURCE_DETECTION = (
@@ -73,23 +70,10 @@ _V2_BLOAT_TOPICS = {
 }
 
 
-def _body_v1(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_V1_SUMMARY,
-        subheadline_selector=_V1_SUBHEAD,
-        paragraph_selector=_V1_PARAGRAPH,
-    )
-
-
 def _topics_v1(ctx: ParseContext) -> List[str]:
     if ctx.meta.get("news_keywords") is not None:
         return generic_topic_parsing(ctx.meta.get("news_keywords"))
     return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
 
 
 def _authors_v1(ctx: ParseContext) -> List[str]:
@@ -105,36 +89,9 @@ def _title_v1(ctx: ParseContext) -> Optional[str]:
     return title if isinstance(title, str) else None
 
 
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            upper_boundary_selector=_V1_UPPER,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_IMG_AUTHOR,
-        )
-    ]
-
-
 def _insert_quote_punctuation(ctx: ParseContext) -> None:
     for node in _V2_BLOCKQUOTE_EM(ctx.doc):
         node.text = f"«{node.text}.» - "
-
-
-def _body_v2(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_V2_SUMMARY,
-        subheadline_selector=_V2_SUBHEAD,
-        paragraph_selector=_V2_PARAGRAPH,
-    )
-
-
-def _topics_v2(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"), result_filter=_V2_BLOAT_TOPICS)
 
 
 def _authors_v2(ctx: ParseContext) -> List[str]:
@@ -145,52 +102,44 @@ def _title_v2(ctx: ParseContext) -> Optional[str]:
     return strip_nodes_to_text(_V2_HEADLINE(ctx.doc))
 
 
-def _images_v2(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V2_PARAGRAPH,
-            upper_boundary_selector=_V2_UPPER,
-            image_selector=_V2_IMAGE,
-            caption_selector=_V2_CAPTION,
-            lower_boundary_selector=_V2_LOWER,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 MDR = PublisherSpec(
     key="de.MDR",
     versions=(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2026, 6, 1),
-            extractors=(
-                Extractor("body", _body_v1),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors_v1, default=list),
-                Extractor("title", _title_v1),
-                Extractor("images", _images_v1, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
+                authors=_authors_v1,
+                date=date_from_ld(),
+                title=_title_v1,
+                topics=_topics_v1,
+                images=make_images(
+                    _V1_PARAGRAPH,
+                    upper_boundary_selector=_V1_UPPER,
+                    image_selector=_V1_IMAGE,
+                    caption_selector=_V1_CAPTION,
+                    author_selector=_V1_IMG_AUTHOR,
+                ),
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=(
-                Extractor("insert_quote_punctuation", _insert_quote_punctuation, kind="function", priority=1),
-                Extractor("body", _body_v2),
-                Extractor("topics", _topics_v2, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors_v2, default=list),
-                Extractor("title", _title_v2),
-                Extractor("images", _images_v2, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
+                authors=_authors_v2,
+                date=date_from_ld(),
+                title=_title_v2,
+                topics=topics_from_meta(result_filter=_V2_BLOAT_TOPICS),
+                images=make_images(
+                    _V2_PARAGRAPH,
+                    upper_boundary_selector=_V2_UPPER,
+                    image_selector=_V2_IMAGE,
+                    caption_selector=_V2_CAPTION,
+                    lower_boundary_selector=_V2_LOWER,
+                    relative_urls=True,
+                ),
+                extra=(Extractor("insert_quote_punctuation", _insert_quote_punctuation, kind="function", priority=1),),
             ),
         ),
     ),

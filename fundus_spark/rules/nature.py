@@ -7,21 +7,9 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, make_body, make_images, title_from_ld, topics_from_ld
 
 _V1_SUMMARY = CSSSelector("div.c-article-abstract p, p.c-article-abstract")
 _V1_PARAGRAPH = XPath(
@@ -75,34 +63,6 @@ _CREDIT = re.compile(r"(?i)\s*(credit|source|illustration|analysis by):?\s+(?P<c
 _BLOAT_TOPICS = {"multidisciplinary", "Science", "Humanities and Social Sciences"}
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"), result_filter=_BLOAT_TOPICS)
-
-
 def _free_access(paywall):
     def fn(ctx: ParseContext) -> bool:
         return not bool(paywall(ctx.doc))
@@ -110,28 +70,11 @@ def _free_access(paywall):
     return fn
 
 
-def _images(paragraph, lower):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                relative_urls=True,
-                caption_selector=_CAPTION,
-                author_selector=_CREDIT,
-                lower_boundary_selector=lower,
-            )
-        ]
-
-    return fn
-
-
 _NATURE_COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("authors", _authors, default=list),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("title", title_from_ld()),
+    Extractor("topics", topics_from_ld(result_filter=_BLOAT_TOPICS), default=list),
 ]
 
 NATURE = PublisherSpec(
@@ -142,9 +85,19 @@ NATURE = PublisherSpec(
             valid_until=datetime.date(2026, 2, 1),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                     Extractor("free_access", _free_access(_V1_PAYWALL), default=False),
-                    Extractor("images", _images(_V1_PARAGRAPH, _V1_LOWER), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            relative_urls=True,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_V1_LOWER,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _NATURE_COMMON
             ),
@@ -153,9 +106,19 @@ NATURE = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
                     Extractor("free_access", _free_access(_V11_PAYWALL), default=False),
-                    Extractor("images", _images(_V11_PARAGRAPH, _V11_LOWER), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            relative_urls=True,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_V11_LOWER,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _NATURE_COMMON
             ),

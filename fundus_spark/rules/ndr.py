@@ -7,21 +7,17 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
+from ._common import (
+    authors_from_ld_path,
+    date_from_ld,
+    free_access,
+    make_body,
+    make_images,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_PARAGRAPH = XPath(
@@ -48,77 +44,15 @@ _V11_CAPTION = XPath("./ancestor::div[contains(@class,'contentimage')]//span[con
 _BLOAT_KEYWORDS = ["hh", "regionalmeldungen", "News", "kurzmeldungen", "Nachrichten", "aktuell"]
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
 def _topics_v11(ctx: ParseContext) -> List[str]:
     return [t for t in generic_topic_parsing(ctx.meta.get("keywords")) if t not in _BLOAT_KEYWORDS]
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("(//Article | //NewsArticle) /author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("title")
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            upper_boundary_selector=_V1_UPPER,
-            image_selector=_V1_IMAGE,
-            relative_urls=_CANONICAL,
-            caption_selector=_V1_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _images_v11(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V11_PARAGRAPH,
-            upper_boundary_selector=_V11_UPPER,
-            relative_urls=_CANONICAL,
-            image_selector=_V11_IMAGE,
-            caption_selector=_V11_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("authors", _authors, default=list),
-    Extractor("title", _title),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("authors", authors_from_ld_path("(//Article | //NewsArticle) /author"), default=list),
+    Extractor("title", title_from_meta("title")),
+    Extractor("free_access", free_access, default=False),
 ]
 
 NDR = PublisherSpec(
@@ -129,9 +63,20 @@ NDR = PublisherSpec(
             valid_until=datetime.date(2025, 6, 16),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("topics", _topics_v1, default=list),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor("topics", topics_from_meta(), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            upper_boundary_selector=_V1_UPPER,
+                            image_selector=_V1_IMAGE,
+                            relative_urls=_CANONICAL,
+                            caption_selector=_V1_CAPTION,
+                            author_selector=_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -140,9 +85,20 @@ NDR = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
                     Extractor("topics", _topics_v11, default=list),
-                    Extractor("images", _images_v11, default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            upper_boundary_selector=_V11_UPPER,
+                            relative_urls=_CANONICAL,
+                            image_selector=_V11_IMAGE,
+                            caption_selector=_V11_CAPTION,
+                            author_selector=_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

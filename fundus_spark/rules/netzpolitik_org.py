@@ -4,25 +4,19 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
     generic_nodes_to_text,
     generic_topic_parsing,
-    image_extraction,
     parse_title_from_root,
 )
+from ._common import authors_from_nodes, date_from_meta, make_body, make_images, std_extractors
 
 _PARAGRAPH = CSSSelector("div.entry-content p")
 _SUMMARY = CSSSelector("div.entry-excerpt > p")
@@ -39,44 +33,10 @@ def _title(ctx: ParseContext) -> Optional[str]:
     return ctx.meta.get("og:title") or parse_title_from_root(ctx.doc)
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(
         generic_nodes_to_text(_TOPIC(ctx.doc), normalize=True), result_filter=_BLOAT_TOPICS
     )
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(generic_nodes_to_text(_AUTHOR(ctx.doc)))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            image_selector=_IMAGE,
-            paragraph_selector=_PARAGRAPH,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 NETZPOLITIK_ORG = PublisherSpec(
@@ -84,14 +44,15 @@ NETZPOLITIK_ORG = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("title", _title),
-                Extractor("body", _body),
-                Extractor("topics", _topics, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_nodes(_AUTHOR),
+                date=date_from_meta("article:published_time"),
+                title=_title,
+                topics=_topics,
+                images=make_images(
+                    _PARAGRAPH, image_selector=_IMAGE, caption_selector=_CAPTION, author_selector=_CREDIT
+                ),
             ),
         ),
     ),

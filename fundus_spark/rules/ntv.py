@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
@@ -17,13 +17,9 @@ from ..kernel import (
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
 )
+from ._common import date_from_meta, free_access, make_body, make_images, title_from_meta, topics_from_meta
 
 _AUTHOR_SUB = re.compile(r"n-tv NACHRICHTEN")
 _V1_SUMMARY = XPath("//div[@class='article__text']/p[not(last()) and strong][1]")
@@ -45,18 +41,6 @@ _V12_CAPTION = XPath("./ancestor::figure//figcaption")
 _V12_CREDIT = re.compile(r"(?P<credits>\([^(^)]*\))$")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
 def _authors_v1(ctx: ParseContext) -> List[str]:
     initial = generic_author_parsing(ctx.meta.get("author"))
     return apply_substitution_pattern_over_list(initial, _AUTHOR_SUB)
@@ -67,54 +51,19 @@ def _authors_v11(ctx: ParseContext) -> List[str]:
     return generic_author_parsing(author_text.replace("Von", ""))
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("date"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            upper_boundary_selector=_V1_UPPER,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-        )
-    ]
-
-
-def _images_v12(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V12_PARAGRAPH,
-            upper_boundary_selector=_V12_UPPER,
-            caption_selector=_V12_CAPTION,
-            author_selector=_V12_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
+_V1_IMAGES = make_images(
+    _V1_PARAGRAPH,
+    image_selector=_V1_IMAGE,
+    upper_boundary_selector=_V1_UPPER,
+    caption_selector=_V1_CAPTION,
+    author_selector=_V1_CREDIT,
+)
 
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_meta("date")),
+    Extractor("title", title_from_meta()),
+    Extractor("topics", topics_from_meta(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 NTV = PublisherSpec(
@@ -125,9 +74,9 @@ NTV = PublisherSpec(
             valid_until=datetime.date(2024, 8, 1),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                     Extractor("authors", _authors_v1, default=list),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("images", _V1_IMAGES, default=list),
                 ]
                 + _COMMON
             ),
@@ -137,9 +86,9 @@ NTV = PublisherSpec(
             valid_until=datetime.date(2025, 11, 5),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                     Extractor("authors", _authors_v11, default=list, deprecated=_V11_DEPRECATED),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("images", _V1_IMAGES, default=list),
                 ]
                 + _COMMON
             ),
@@ -148,9 +97,18 @@ NTV = PublisherSpec(
             name="V1_2",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V12_SUMMARY, _V12_PARAGRAPH, _V12_SUBHEAD)),
+                    Extractor("body", make_body(_V12_PARAGRAPH, summary=_V12_SUMMARY, subheadline=_V12_SUBHEAD)),
                     Extractor("authors", _authors_v11, default=list, deprecated=_V11_DEPRECATED),
-                    Extractor("images", _images_v12, default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V12_PARAGRAPH,
+                            upper_boundary_selector=_V12_UPPER,
+                            caption_selector=_V12_CAPTION,
+                            author_selector=_V12_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

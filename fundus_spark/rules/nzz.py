@@ -4,9 +4,8 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
@@ -16,12 +15,9 @@ from ..kernel import (
     VersionSpec,
     XPath,
     apply_substitution_pattern_over_list,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
 )
+from ._common import date_from_meta, free_access, make_body, make_images, title_from_meta
 
 _SUMMARY = CSSSelector("div.headline p.headline__lead")
 _SUBHEAD = CSSSelector("div.article h2.subtitle, div.article h5.articlecomponent")
@@ -36,45 +32,10 @@ _UPPER = XPath("//section[@data-nzz-tid]")
 _LOWER = XPath("//div[@class='sharebox']")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     return apply_substitution_pattern_over_list(
         generic_author_parsing(ctx.ld.bf_search("author")), _AUTHOR_SUB, ""
     )
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("date"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("title")
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-            upper_boundary_selector=_UPPER,
-            lower_boundary_selector=_LOWER,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 NZZ = PublisherSpec(
@@ -83,12 +44,22 @@ NZZ = PublisherSpec(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
+                Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
                 Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("publishing_date", date_from_meta("date")),
+                Extractor("title", title_from_meta("title")),
+                Extractor(
+                    "images",
+                    make_images(
+                        _PARAGRAPH,
+                        caption_selector=_CAPTION,
+                        author_selector=_CREDIT,
+                        upper_boundary_selector=_UPPER,
+                        lower_boundary_selector=_LOWER,
+                    ),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

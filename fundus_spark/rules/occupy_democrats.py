@@ -4,51 +4,16 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, generic_topic_parsing
+from ._common import authors_from_ld, date_from_meta, make_body, std_extractors, title_from_meta
 
 _PARAGRAPH = CSSSelector("div[itemprop='articleBody']>p, div[itemprop='articleBody']>blockquote")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_PARAGRAPH)
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("Person"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(ctx.ld.xpath_search("Article/keywords", scalar=True))
-
-
-def _description(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("description")
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 OCCUPY_DEMOCRATS = PublisherSpec(
@@ -56,14 +21,13 @@ OCCUPY_DEMOCRATS = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("description", _description, validate=False),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH),
+                authors=authors_from_ld("Person"),
+                date=date_from_meta("article:published_time"),
+                title=title_from_meta(),
+                topics=_topics,
+                extra=(Extractor("description", title_from_meta("description"), validate=False),),
             ),
         ),
     ),

@@ -9,16 +9,12 @@ from __future__ import annotations
 import re
 from typing import List
 
-from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing, parse_title_from_root
-from ._common import date_from_meta, make_body, make_images, std_extractors, topics_from_meta
+from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import date_from_meta, make_body, make_images, std_extractors, title_from_root, topics_from_meta
 
 _PARAGRAPH = CSSSelector("div.rm_txt_con > p")
 _AUTHOR = CSSSelector("div.edit")
 _AUTHOR_PATTERN = re.compile(r"：(.*)\)")
-
-
-def _title(ctx: ParseContext):
-    return parse_title_from_root(ctx.doc)
 
 
 def _authors(ctx: ParseContext) -> List[str]:
@@ -44,7 +40,7 @@ PEOPLE = PublisherSpec(
                 body=make_body(_PARAGRAPH),
                 authors=_authors,
                 date=date_from_meta("publishdate"),
-                title=_title,
+                title=title_from_root,
                 topics=topics_from_meta("keywords", delimiter=" "),
                 images=_IMAGES,
             ),

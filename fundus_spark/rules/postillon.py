@@ -8,33 +8,14 @@ runs / noscript-in-head nesting), now reproduced in kernel/dom.py.
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import date_from_ld, free_access, make_body, make_images, title_from_meta
 
 _PARAGRAPH = CSSSelector("div[id=post-body] p")
 _POSTSCRIPT = CSSSelector("div[id=post-body] > span")
 _IMAGE = XPath("//div[@class='entry-content-wrap flex-col']//img")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_PARAGRAPH)
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
 
 
 def _authors(ctx: ParseContext) -> List[str]:
@@ -45,33 +26,18 @@ def _authors(ctx: ParseContext) -> List[str]:
     return [a.strip() for a in author_line.split(",")]
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(doc=ctx.doc, paragraph_selector=_PARAGRAPH, image_selector=_IMAGE)
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 POSTILLON = PublisherSpec(
     key="de.Postillon",
     versions=(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
-                Extractor("title", _title),
+                Extractor("body", make_body(_PARAGRAPH)),
+                Extractor("title", title_from_meta()),
                 Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("images", make_images(_PARAGRAPH, image_selector=_IMAGE), default=list),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 from typing import Any, Callable, Dict, FrozenSet, List, Optional
 
-from ..kernel import CSSSelector, Extractor, ParseContext, XPath
+from ..kernel import CSSSelector, ParseContext, XPath
 from ._common import (
     authors_from_ld,
     date_from_ld,

@@ -21,10 +21,9 @@ from ..kernel import (
     generic_author_parsing,
     generic_date_parsing,
     generic_nodes_to_text,
-    generic_topic_parsing,
     strip_nodes_to_text,
 )
-from ._common import make_body, make_images, std_extractors
+from ._common import make_body, make_images, std_extractors, topics_from_nodes
 
 _BOILERPLATE = (
     r"^Читайте також на цю тему:|"
@@ -79,10 +78,6 @@ def _date(ctx: ParseContext) -> Optional[datetime]:
     return None
 
 
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_TOPIC(ctx.doc), normalize=True))
-
-
 _IMAGES = make_images(
     _PARAGRAPH,
     image_selector=XPath("//div[contains(@class, 'post_') or contains(@class, 'image')]/picture//img"),
@@ -107,7 +102,7 @@ PRAVDA = PublisherSpec(
                 authors=_authors,
                 date=_date,
                 title=_title,
-                topics=_topics,
+                topics=topics_from_nodes(_TOPIC),
                 images=_IMAGES,
             ),
         ),

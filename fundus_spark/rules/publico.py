@@ -9,22 +9,10 @@ runs / noscript-in-head nesting), now reproduced in kernel/dom.py.
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
+from ._common import authors_from_ld, date_from_ld, make_body, make_images, std_extractors, title_from_meta
 
 _PARAGRAPH = XPath(
     "//div[contains(@class, 'body-modules w-full')]//p[not(ancestor::div[contains(@class, 'related-intext')])]"
@@ -39,47 +27,8 @@ _CAPTION = XPath("./ancestor::figure//figcaption/span")
 _CREDIT = XPath("./ancestor::figure//figcaption/strong")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        subheadline_selector=_SUBHEAD,
-        summary_selector=_SUMMARY,
-    )
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     return [topic.split("/")[-1] for topic in generic_topic_parsing(ctx.meta.get("keywords"))]
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 PUBLICO = PublisherSpec(
@@ -87,14 +36,19 @@ PUBLICO = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=_topics,
+                images=make_images(
+                    _PARAGRAPH,
+                    image_selector=_IMAGE,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                    relative_urls=True,
+                ),
             ),
         ),
     ),

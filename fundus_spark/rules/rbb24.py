@@ -17,10 +17,10 @@ from ..kernel import (
     VersionSpec,
     XPath,
     assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
     generic_date_parsing,
 )
+from ._common import free_access, title_from_meta
 
 _PARAGRAPH = XPath("//div[contains(concat(' ', @class , ' '), ' textblock ')]/p")
 _SUMMARY = XPath("//div[contains(concat(' ', @class , ' '), ' shorttext ')]/p")
@@ -77,14 +77,6 @@ def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
     return generic_date_parsing(None)
 
 
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 RBB24 = PublisherSpec(
     key="de.RBB24",
     versions=(
@@ -94,8 +86,8 @@ RBB24 = PublisherSpec(
                 Extractor("body", _body),
                 Extractor("authors", _authors, default=list),
                 Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("title", title_from_meta()),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -4,23 +4,10 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
+from ._common import authors_from_ld_path, date_from_ld_path, make_body, make_images, std_extractors, title_from_ld_path
 
 _SUMMARY = CSSSelector("div.post-subheader__summary li, p.post-header__text__dek")
 _PARAGRAPH = CSSSelector("div.post-content > p")
@@ -33,47 +20,8 @@ _CREDIT = XPath(
 )
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("NewsArticle/author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("NewsArticle/datePublished", scalar=True))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(ctx.ld.xpath_search("NewsArticle/keywords", scalar=True))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 REST_OF_WORLD = PublisherSpec(
@@ -81,14 +29,19 @@ REST_OF_WORLD = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_ld_path("NewsArticle/author"),
+                date=date_from_ld_path("NewsArticle/datePublished"),
+                title=title_from_ld_path("NewsArticle/headline"),
+                topics=_topics,
+                images=make_images(
+                    _PARAGRAPH,
+                    image_selector=_IMAGE,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                    relative_urls=True,
+                ),
             ),
         ),
     ),

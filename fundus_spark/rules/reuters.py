@@ -6,20 +6,10 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-)
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
+from ._common import authors_from_meta, date_from_ld_path, free_access, make_body, title_from_ld_path
 
 _V1_PARAGRAPH = XPath("(//p[starts-with(@data-testid, 'paragraph')])[position() > 1]")
 _V1_SUMMARY = XPath("(//p[starts-with(@data-testid, 'paragraph')])[1]")
@@ -30,30 +20,6 @@ _V11_SUMMARY = XPath("(//div[starts-with(@data-testid, 'paragraph')])[1]")
 _V11_NEW_TAB_SPAN = XPath(
     "//div[starts-with(@data-testid, 'paragraph')] //span[contains(text(), 'opens new tab')]"
 )
-
-
-def _body(summary_selector, paragraph_selector):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary_selector,
-            paragraph_selector=paragraph_selector,
-            subheadline_selector=_SUBHEAD,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("article:author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("NewsArticle/datePublished", scalar=True))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
 
 
 def _topics(ctx: ParseContext) -> List[str]:
@@ -84,16 +50,12 @@ def _drop_new_tab_spans(ctx: ParseContext) -> None:
         parent.remove(span)
 
 
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
+    Extractor("authors", authors_from_meta("article:author"), default=list),
+    Extractor("publishing_date", date_from_ld_path("NewsArticle/datePublished")),
+    Extractor("title", title_from_ld_path("NewsArticle/headline")),
     Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("free_access", free_access, default=False),
 ]
 
 REUTERS = PublisherSpec(
@@ -102,14 +64,16 @@ REUTERS = PublisherSpec(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2024, 1, 1),
-            extractors=tuple([Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH))] + _COMMON),
+            extractors=tuple(
+                [Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_SUBHEAD))] + _COMMON
+            ),
         ),
         VersionSpec(
             name="V1_1",
             extractors=tuple(
                 [
                     Extractor("_remove_new_tab_span", _drop_new_tab_spans, kind="function", priority=1),
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_SUBHEAD)),
                 ]
                 + _COMMON
             ),

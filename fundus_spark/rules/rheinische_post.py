@@ -4,22 +4,15 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
-
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_meta,
+    date_from_ld,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _SUMMARY = CSSSelector("strong[data-cy='intro']")
@@ -31,61 +24,18 @@ _IMAGE = XPath("//figure[@id]//img[not(@alt='Platzhalter Drittanbieter-Inhalt')]
 _CAPTION = XPath("./ancestor::figure//figcaption/p")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        paragraph_selector=_PARAGRAPH,
-        subheadline_selector=_SUBHEAD,
-    )
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 RHEINISCHE_POST = PublisherSpec(
     key="de.RheinischePost",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=authors_from_meta("author"),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=topics_from_meta(),
+                images=make_images(_PARAGRAPH, image_selector=_IMAGE, caption_selector=_CAPTION, relative_urls=True),
             ),
         ),
     ),

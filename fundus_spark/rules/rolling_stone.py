@@ -6,22 +6,19 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-    parse_title_from_root,
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_meta,
+    date_from_ld,
+    date_from_meta,
+    free_access,
+    make_body,
+    make_images,
+    title_from_meta,
+    title_from_root,
+    topics_from_ld,
+    topics_from_meta,
 )
 
 _PARAGRAPH = CSSSelector("div.a-content p.paragraph")
@@ -31,64 +28,11 @@ _CAPTION = XPath("./ancestor::figure//figcaption//span")
 _CREDIT = XPath("./ancestor::figure//figcaption//cite")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-    )
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("swiftype:published_at"))
-
-
-def _title_v1(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("swiftype:title")
-
-
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("swiftype:topics"))
-
-
-def _publishing_date_v11(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _topics_v11(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _title_v11(ctx: ParseContext) -> Optional[str]:
-    return parse_title_from_root(ctx.doc)
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _SHARED = [
-    Extractor("body", _body),
-    Extractor("authors", _authors, default=list),
-    Extractor("images", _images, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+    Extractor("authors", authors_from_meta("author"), default=list),
+    Extractor("images", make_images(_PARAGRAPH, caption_selector=_CAPTION, author_selector=_CREDIT), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 ROLLING_STONE = PublisherSpec(
@@ -99,9 +43,9 @@ ROLLING_STONE = PublisherSpec(
             valid_until=datetime.date(2024, 8, 22),
             extractors=tuple(
                 [
-                    Extractor("publishing_date", _publishing_date_v1),
-                    Extractor("title", _title_v1),
-                    Extractor("topics", _topics_v1, default=list),
+                    Extractor("publishing_date", date_from_meta("swiftype:published_at")),
+                    Extractor("title", title_from_meta("swiftype:title")),
+                    Extractor("topics", topics_from_meta("swiftype:topics"), default=list),
                 ]
                 + _SHARED
             ),
@@ -110,9 +54,9 @@ ROLLING_STONE = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("publishing_date", _publishing_date_v11),
-                    Extractor("title", _title_v11),
-                    Extractor("topics", _topics_v11, default=list),
+                    Extractor("publishing_date", date_from_ld()),
+                    Extractor("title", title_from_root),
+                    Extractor("topics", topics_from_ld(), default=list),
                 ]
                 + _SHARED
             ),

@@ -6,18 +6,22 @@
 from __future__ import annotations
 
 import datetime
-from typing import List, Optional
 
-from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_nodes_to_text, generic_topic_parsing
-from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, std_extractors
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld,
+    date_from_ld,
+    free_access,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_ld_path,
+    topics_from_nodes,
+)
 
 _V1_PARAGRAPH = XPath("//div[contains(@class, 'article-body-text') or contains(@class,'section-text')]/p")
 _V1_SUBHEAD = XPath("//div[contains(@class, 'article-body-text') or contains(@class,'section-text')]//h2")
 _V1_SUMMARY = XPath("//p[@class='article-leadtext']")
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
 
 
 _V1_IMAGES = make_images(
@@ -31,10 +35,6 @@ _V2_SUMMARY = CSSSelector("div.articleContent > p.vorspann")
 _V2_PARAGRAPH = XPath(r"//div[contains(@class, 'articleText')] /p[not(re:test(string(.), '^\(Quelle:.*\)$'))]")
 _V2_SUBHEAD = CSSSelector("div.articleText > h2")
 _V2_TOPIC = XPath("//div[@class='articleTags']")
-
-
-def _topics_v2(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_V2_TOPIC(ctx.doc), normalize=True))
 
 
 _V2_IMAGES = make_images(
@@ -59,7 +59,7 @@ SALZBURGER_NACHRICHTEN = PublisherSpec(
                 Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                 Extractor("authors", authors_from_ld(), default=list),
                 Extractor("publishing_date", date_from_ld()),
-                Extractor("title", _title),
+                Extractor("title", title_from_ld_path("NewsArticle/headline")),
                 Extractor("images", _V1_IMAGES, default=list),
                 Extractor("free_access", free_access, default=False),
             ),
@@ -70,8 +70,8 @@ SALZBURGER_NACHRICHTEN = PublisherSpec(
                 body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
                 authors=authors_from_ld(),
                 date=date_from_ld(),
-                title=_title,
-                topics=_topics_v2,
+                title=title_from_ld_path("NewsArticle/headline"),
+                topics=topics_from_nodes(_V2_TOPIC),
                 images=_V2_IMAGES,
             ),
         ),

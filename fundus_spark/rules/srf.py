@@ -6,20 +6,10 @@ V2 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import date_from_meta, free_access, make_body, make_images
 
 _TITLE = XPath("//span[@class='article-title__text']")
 _AUTHOR = XPath("//span[@itemprop='author']")
@@ -44,18 +34,6 @@ _V2_PARAGRAPH = XPath("//p[@class='article-paragraph'] |//ul[@class='article-lis
 _V2_SUBHEAD = XPath("//h2[@class='article-heading']|//h3[@class='article-subheading']")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     if not (author_nodes := _AUTHOR(ctx.doc)):
         return []
@@ -74,32 +52,6 @@ def _title(ctx: ParseContext) -> Optional[str]:
     return title_node[0].text_content()
 
 
-def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _publishing_date_v2(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("datePublished"))
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-            image_selector=_V1_IMAGE,
-            lower_boundary_selector=_V1_LOWER,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 SRF = PublisherSpec(
     key="ch.SRF",
     versions=(
@@ -107,22 +59,32 @@ SRF = PublisherSpec(
             name="V1",
             valid_until=datetime.date(2024, 12, 3),
             extractors=(
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                 Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date_v1),
+                Extractor("publishing_date", date_from_meta("article:published_time")),
                 Extractor("title", _title),
-                Extractor("images", _images_v1, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor(
+                    "images",
+                    make_images(
+                        _V1_PARAGRAPH,
+                        caption_selector=_V1_CAPTION,
+                        author_selector=_V1_CREDIT,
+                        image_selector=_V1_IMAGE,
+                        lower_boundary_selector=_V1_LOWER,
+                    ),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
         VersionSpec(
             name="V2",
             extractors=(
-                Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
+                Extractor("body", make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD)),
                 Extractor("authors", _authors, default=list),
                 Extractor("title", _title),
-                Extractor("publishing_date", _publishing_date_v2),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("publishing_date", date_from_meta("datePublished")),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -6,22 +6,18 @@ V2 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_nodes_to_text,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import (
+    authors_from_nodes,
+    date_from_ld,
+    date_from_meta,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_nodes,
 )
 
 _V1_PARAGRAPH = CSSSelector(".article__body >p")
@@ -40,66 +36,13 @@ _CAPTION = XPath("./ancestor::figure//figcaption//div[contains(@class,'caption')
 _CREDIT = XPath("./ancestor::figure//figcaption//div[contains(@class,'credits')]")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
 def _authors_v1(ctx: ParseContext) -> List[str]:
     initial = generic_author_parsing(ctx.ld.bf_search("author"))
     return [el for el in initial if el != "STERN.de"]
 
 
-def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("date"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
 def _topics_v1(ctx: ParseContext) -> List[str]:
     return [node.text_content().strip("\n ") for node in _V1_TOPIC(ctx.doc)]
-
-
-def _publishing_date_v2(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors_v2(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(generic_nodes_to_text(_V2_AUTHOR(ctx.doc)))
-
-
-def _topics_v2(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(generic_nodes_to_text(_V2_TOPIC(ctx.doc), normalize=True))
-
-
-def _images(paragraph, lower):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                image_selector=_IMAGE,
-                paragraph_selector=paragraph,
-                lower_boundary_selector=lower,
-                caption_selector=_CAPTION,
-                author_selector=_CREDIT,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 STERN = PublisherSpec(
@@ -108,26 +51,36 @@ STERN = PublisherSpec(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2024, 10, 26),
-            extractors=(
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                Extractor("authors", _authors_v1, default=list),
-                Extractor("publishing_date", _publishing_date_v1),
-                Extractor("title", _title),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("images", _images(_V1_PARAGRAPH, _V1_TOPIC), default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
+                authors=_authors_v1,
+                date=date_from_meta("date"),
+                title=title_from_meta(),
+                topics=_topics_v1,
+                images=make_images(
+                    _V1_PARAGRAPH,
+                    image_selector=_IMAGE,
+                    lower_boundary_selector=_V1_TOPIC,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                ),
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=(
-                Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
-                Extractor("title", _title),
-                Extractor("publishing_date", _publishing_date_v2),
-                Extractor("authors", _authors_v2, default=list),
-                Extractor("topics", _topics_v2, default=list),
-                Extractor("images", _images(_V2_PARAGRAPH, _V2_TOPIC), default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
+                authors=authors_from_nodes(_V2_AUTHOR),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=topics_from_nodes(_V2_TOPIC),
+                images=make_images(
+                    _V2_PARAGRAPH,
+                    image_selector=_IMAGE,
+                    lower_boundary_selector=_V2_TOPIC,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                ),
             ),
         ),
     ),

@@ -6,7 +6,7 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
@@ -15,14 +15,10 @@ from ..kernel import (
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
     generic_nodes_to_text,
     generic_topic_parsing,
-    image_extraction,
 )
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_meta, topics_from_ld
 
 _V1_PARAGRAPH = CSSSelector("div.article-body p")
 _V1_SUBHEAD = CSSSelector("div.article-body h2")
@@ -39,74 +35,15 @@ _V2_CAPTION = XPath("./ancestor::figure//figcaption/p")
 _V2_CREDIT = XPath("./ancestor::figure//figcaption/span")
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _body_v1(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_V1_PARAGRAPH, subheadline_selector=_V1_SUBHEAD)
-
-
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V1_CAPTION,
-            relative_urls=True,
-        )
-    ]
-
-
-def _body_v2(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_V2_SUMMARY,
-        paragraph_selector=_V2_PARAGRAPH,
-        subheadline_selector=_V2_SUBHEAD,
-    )
-
-
 def _topics_v2(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(generic_nodes_to_text(_V2_TOPIC(ctx.doc)), result_filter=_V2_BLOAT)
 
 
-def _images_v2(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V2_PARAGRAPH,
-            image_selector=_V2_IMAGE,
-            caption_selector=_V2_CAPTION,
-            author_selector=_V2_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("authors", _authors, default=list),
-    Extractor("title", _title),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("title", title_from_meta()),
+    Extractor("free_access", free_access, default=False),
 ]
 
 STUTTGARTER_ZEITUNG = PublisherSpec(
@@ -117,9 +54,15 @@ STUTTGARTER_ZEITUNG = PublisherSpec(
             valid_until=datetime.date(2026, 6, 29),
             extractors=tuple(
                 [
-                    Extractor("body", _body_v1),
-                    Extractor("topics", _topics_v1, default=list),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, subheadline=_V1_SUBHEAD)),
+                    Extractor("topics", topics_from_ld(), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH, image_selector=_V1_IMAGE, caption_selector=_V1_CAPTION, relative_urls=True
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -128,9 +71,18 @@ STUTTGARTER_ZEITUNG = PublisherSpec(
             name="V2",
             extractors=tuple(
                 [
-                    Extractor("body", _body_v2),
+                    Extractor("body", make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD)),
                     Extractor("topics", _topics_v2, default=list),
-                    Extractor("images", _images_v2, default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V2_PARAGRAPH,
+                            image_selector=_V2_IMAGE,
+                            caption_selector=_V2_CAPTION,
+                            author_selector=_V2_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -10,22 +10,10 @@ from ``sources/rich_html.py``; the DuckDB oracle is
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
+from typing import Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-    transform_breaks_to_tag,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, transform_breaks_to_tag
+from ._common import authors_from_ld_path, date_from_ld_path, make_body, make_images
 
 _PARAGRAPH = XPath("//div[@class='article-body']//p[text()]")
 _IMAGE = XPath("//div[@class='article-media']//img")
@@ -37,32 +25,9 @@ def _preprocess(ctx: ParseContext) -> None:
         transform_breaks_to_tag(node, tag="p", replace=True)
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_PARAGRAPH)
-
-
 def _title(ctx: ParseContext) -> Optional[str]:
     title = ctx.ld.xpath_search("//NewsArticle/headline", scalar=True)
     return str(title) if title else None
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("//NewsArticle/author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("//NewsArticle/datePublished", scalar=True))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-        )
-    ]
 
 
 RICH = PublisherSpec(
@@ -72,11 +37,11 @@ RICH = PublisherSpec(
             name="V1",
             extractors=(
                 Extractor("_preprocess", _preprocess, kind="function", priority=1),
-                Extractor("body", _body),
+                Extractor("body", make_body(_PARAGRAPH)),
                 Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("images", _images, default=list),
+                Extractor("authors", authors_from_ld_path("//NewsArticle/author"), default=list),
+                Extractor("publishing_date", date_from_ld_path("//NewsArticle/datePublished")),
+                Extractor("images", make_images(_PARAGRAPH, image_selector=_IMAGE), default=list),
             ),
         ),
     ),

@@ -6,22 +6,9 @@ V1_1 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_ld, topics_from_ld
 
 _V1_PARAGRAPH = CSSSelector("main [itemprop='articleBody'] > p, main .css-korpch > div > ul > li")
 _SUMMARY = CSSSelector("main [data-manual='teaserText']")
@@ -39,59 +26,12 @@ _CAPTION = XPath("./ancestor::figure//figcaption/text()")
 _CREDIT = XPath("./ancestor::figure//figcaption/small")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _images(paragraph):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                caption_selector=_CAPTION,
-                author_selector=_CREDIT,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("title", title_from_ld()),
+    Extractor("topics", topics_from_ld(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 SZ = PublisherSpec(
@@ -102,8 +42,12 @@ SZ = PublisherSpec(
             valid_until=datetime.date(2024, 2, 1),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("images", _images(_V1_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(_V1_PARAGRAPH, caption_selector=_CAPTION, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -112,8 +56,12 @@ SZ = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("images", _images(_V11_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(_V11_PARAGRAPH, caption_selector=_CAPTION, author_selector=_CREDIT),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel import (
     Extractor,
@@ -15,14 +15,10 @@ from ..kernel import (
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
     strip_nodes_to_text,
 )
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_ld
 
 _V1_PARAGRAPH = XPath("//div[@data-testid='ArticleBody.StreamLayout']//p[@class='text-18 leading-17']")
 _V1_SUMMARY = XPath("//div[@data-testid='ArticleBody.StreamLayout']//p[@class='font-bold text-18 leading-17']")
@@ -41,30 +37,6 @@ _V11_SUMMARY = XPath(
 _V11_HEADLINE = XPath("//div[@data-external-article-headline]")
 
 
-def _body(summary, paragraph):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=_SUBHEAD,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _title_v1(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
 def _title_v11(ctx: ParseContext) -> Optional[str]:
     return strip_nodes_to_text(_V11_HEADLINE(ctx.doc))
 
@@ -73,31 +45,11 @@ def _topics(ctx: ParseContext) -> List[str]:
     return [t for t in generic_topic_parsing(ctx.meta.get("keywords")) if not t.isdigit()]
 
 
-def _images(paragraph):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                image_selector=_IMAGE,
-                paragraph_selector=paragraph,
-                author_selector=_CREDIT,
-                relative_urls=True,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
-    Extractor("authors", _authors, default=list),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("authors", authors_from_ld(), default=list),
     Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("free_access", free_access, default=False),
 ]
 
 T_ONLINE = PublisherSpec(
@@ -108,9 +60,13 @@ T_ONLINE = PublisherSpec(
             valid_until=datetime.date(2026, 2, 19),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH)),
-                    Extractor("title", _title_v1),
-                    Extractor("images", _images(_V1_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_SUBHEAD)),
+                    Extractor("title", title_from_ld()),
+                    Extractor(
+                        "images",
+                        make_images(_V1_PARAGRAPH, image_selector=_IMAGE, author_selector=_CREDIT, relative_urls=True),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -119,9 +75,13 @@ T_ONLINE = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_SUBHEAD)),
                     Extractor("title", _title_v11),
-                    Extractor("images", _images(_V11_PARAGRAPH), default=list),
+                    Extractor(
+                        "images",
+                        make_images(_V11_PARAGRAPH, image_selector=_IMAGE, author_selector=_CREDIT, relative_urls=True),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

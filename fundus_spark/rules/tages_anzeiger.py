@@ -6,21 +6,10 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, image_extraction
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, title_from_meta
 
 _V1_SUMMARY = CSSSelector("p.ContentHead_lead____SsS")
 _V1_SUBHEAD = CSSSelector("article > h2")
@@ -44,30 +33,6 @@ _V11_SUMMARY = XPath(
 _V11_SUBHEAD = XPath("//article//h2[contains(@class, 'crosshead')]")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
 def _images(paragraph, lower=None):
     def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
         kwargs: Dict[str, Any] = dict(
@@ -83,15 +48,11 @@ def _images(paragraph, lower=None):
     return fn
 
 
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("title", title_from_meta()),
+    Extractor("free_access", free_access, default=False),
 ]
 
 TAGES_ANZEIGER = PublisherSpec(
@@ -102,7 +63,7 @@ TAGES_ANZEIGER = PublisherSpec(
             valid_until=datetime.date(2026, 5, 4),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                     Extractor("images", _images(_V1_PARAGRAPH, _V1_LOWER), default=list),
                 ]
                 + _COMMON
@@ -112,7 +73,7 @@ TAGES_ANZEIGER = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
                     Extractor("images", _images(_V11_PARAGRAPH), default=list),
                 ]
                 + _COMMON

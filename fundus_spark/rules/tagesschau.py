@@ -4,23 +4,11 @@
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing
+from ._common import date_from_ld, make_body, make_images, std_extractors, title_from_meta
 
 _PARAGRAPH = XPath("//article/p[position() > 1]")
 _SUMMARY = XPath("//article/p[1]")
@@ -33,15 +21,6 @@ _CREDIT = re.compile(r"\|(?P<credits>.+)")
 _CAPTION = XPath("./ancestor::div[contains(@class, 'absatzbild ')]")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     if raw_author_string := _AUTHOR(ctx.doc):
         cleaned = re.sub(r"^Von |, ARD[^\s,]*", "", raw_author_string)
@@ -49,35 +28,8 @@ def _authors(ctx: ParseContext) -> List[str]:
     return []
 
 
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     return [node.text_content() for node in _TOPIC(ctx.doc)]
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            alt_selector=_ALT,
-            author_selector=_CREDIT,
-            caption_selector=_CAPTION,
-            lower_boundary_selector=_TOPIC,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 TAGESSCHAU = PublisherSpec(
@@ -85,14 +37,20 @@ TAGESSCHAU = PublisherSpec(
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=_topics,
+                images=make_images(
+                    _PARAGRAPH,
+                    image_selector=_IMAGE,
+                    alt_selector=_ALT,
+                    author_selector=_CREDIT,
+                    caption_selector=_CAPTION,
+                    lower_boundary_selector=_TOPIC,
+                ),
             ),
         ),
     ),

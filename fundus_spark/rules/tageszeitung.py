@@ -6,20 +6,10 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_date_parsing
+from ._common import free_access, make_body, make_images
 
 _SUMMARY = XPath("//div[@id='article_content']//p[not(@class='wp-caption-text' or text()) and strong][1]")
 _PARAGRAPH = XPath(
@@ -34,10 +24,6 @@ _CREDIT = re.compile(r"(^|\()(Fotos?:|©)(?P<credits>[^)]+)\)?")
 _LOWER = CSSSelector("div.single_share")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, summary_selector=_SUMMARY, paragraph_selector=_PARAGRAPH)
-
-
 def _title(ctx: ParseContext) -> Optional[str]:
     return re.sub(r"(?i)\s*-\s*Die Neue Südtiroler Tageszeitung$", "", ctx.meta.get("og:title") or "")
 
@@ -49,36 +35,28 @@ def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
     return generic_date_parsing(first.value if hasattr(first, "value") else first)
 
 
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-            lower_boundary_selector=_LOWER,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 TAGESZEITUNG = PublisherSpec(
     key="it.Tageszeitung",
     versions=(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
+                Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY)),
                 Extractor("title", _title),
                 Extractor("publishing_date", _publishing_date),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor(
+                    "images",
+                    make_images(
+                        _PARAGRAPH,
+                        upper_boundary_selector=_UPPER,
+                        image_selector=_IMAGE,
+                        caption_selector=_CAPTION,
+                        author_selector=_CREDIT,
+                        lower_boundary_selector=_LOWER,
+                    ),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -6,21 +6,18 @@ V2 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld,
+    authors_from_meta,
+    date_from_ld,
+    date_from_meta,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_PARAGRAPH = CSSSelector(".sectbody > p[class*='article']")
@@ -35,88 +32,31 @@ _V2_CAPTION = XPath("./ancestor::div[@data-for='picture']/figcaption/text()")
 _V2_CREDIT = XPath("./ancestor::div[@data-for='picture']/figcaption/span")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("taz:title")
-
-
-def _authors_v1(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _authors_v2(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date_v2(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _topics_v2(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("taz:tag"))
-
-
-def _images_v2(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V2_PARAGRAPH,
-            image_selector=_V2_IMAGE,
-            caption_selector=_V2_CAPTION,
-            author_selector=_V2_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 TAZ = PublisherSpec(
     key="de.Taz",
     versions=(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2024, 10, 14),
-            extractors=(
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                Extractor("title", _title),
-                Extractor("authors", _authors_v1, default=list),
-                Extractor("publishing_date", _publishing_date_v1),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
+                authors=authors_from_meta("author"),
+                date=date_from_meta("article:published_time"),
+                title=title_from_meta("taz:title"),
+                topics=topics_from_meta(),
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=(
-                Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH, _V2_SUBHEAD)),
-                Extractor("title", _title),
-                Extractor("authors", _authors_v2, default=list),
-                Extractor("publishing_date", _publishing_date_v2),
-                Extractor("topics", _topics_v2, default=list),
-                Extractor("images", _images_v2, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY, subheadline=_V2_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=title_from_meta("taz:title"),
+                topics=topics_from_meta("taz:tag"),
+                images=make_images(
+                    _V2_PARAGRAPH, image_selector=_V2_IMAGE, caption_selector=_V2_CAPTION, author_selector=_V2_CREDIT
+                ),
             ),
         ),
     ),

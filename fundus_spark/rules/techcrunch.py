@@ -7,22 +7,10 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
+from ._common import authors_from_meta, date_from_ld, free_access, make_body, make_images, topics_from_ld
 
 _V1_SUMMARY = CSSSelector("div.article-content > p#speakable-summary")
 _V1_PARAGRAPH = CSSSelector("div.article-content > p:not(#speakable-summary), div.article-content > ul > li")
@@ -41,30 +29,10 @@ _V11_CAPTION = XPath("./ancestor::figure//figcaption")
 _V11_CREDIT = re.compile(r"(?i)image credits:(?P<credits>.*)")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            paragraph_selector=paragraph,
-            subheadline_selector=subhead,
-        )
-
-    return fn
-
-
 def _title(ctx: ParseContext) -> Optional[str]:
     if headline := ctx.meta.get("og:title"):
         return headline.replace(" | TechCrunch", "")
     return None
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors_v1(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("sailthru.author"))
 
 
 def _topics_v1(ctx: ParseContext) -> List[str]:
@@ -73,35 +41,10 @@ def _topics_v1(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(ctx.meta.get("sailthru.tags"))
 
 
-def _authors_v11(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _topics_v11(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.ld.bf_search("keywords"))
-
-
-def _images_v11(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V11_PARAGRAPH,
-            upper_boundary_selector=_V11_UPPER,
-            caption_selector=_V11_CAPTION,
-            author_selector=_V11_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("publishing_date", _publishing_date),
+    Extractor("publishing_date", date_from_ld()),
     Extractor("title", _title),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("free_access", free_access, default=False),
 ]
 
 TECHCRUNCH = PublisherSpec(
@@ -112,8 +55,8 @@ TECHCRUNCH = PublisherSpec(
             valid_until=datetime.date(2024, 5, 8),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("authors", _authors_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor("authors", authors_from_meta("sailthru.author"), default=list),
                     Extractor("topics", _topics_v1, default=list),
                 ]
                 + _COMMON
@@ -123,10 +66,19 @@ TECHCRUNCH = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("authors", _authors_v11, default=list),
-                    Extractor("topics", _topics_v11, default=list),
-                    Extractor("images", _images_v11, default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor("authors", authors_from_meta("author"), default=list),
+                    Extractor("topics", topics_from_ld(), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            upper_boundary_selector=_V11_UPPER,
+                            caption_selector=_V11_CAPTION,
+                            author_selector=_V11_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -5,24 +5,19 @@ paragraphs filtered by re:test).
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
     generic_nodes_to_text,
     generic_topic_parsing,
-    image_extraction,
 )
+from ._common import date_from_ld, make_body, make_images, std_extractors, title_from_ld
 
 _SUMMARY = XPath("//article//header//*[contains(@class, 'strapline')]")
 _SUBHEAD = XPath(
@@ -52,25 +47,8 @@ _CAPTION = XPath("./ancestor::figure//figcaption")
 _CREDIT = re.compile(r"(?i)\(?image credit[s]?: (?P<credits>.*?)[/)]?$")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-        paragraph_selector=_PARAGRAPH,
-    )
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     return generic_author_parsing(ctx.ld.bf_search("author") or ctx.meta.get("mrf:authors"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
 
 
 def _topics(ctx: ParseContext) -> List[str]:
@@ -79,37 +57,24 @@ def _topics(ctx: ParseContext) -> List[str]:
     )
 
 
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 TECHRADAR = PublisherSpec(
     key="uk.TechRadar",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors, default=list),
-                Extractor("title", _title),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD),
+                authors=_authors,
+                date=date_from_ld(),
+                title=title_from_ld(),
+                topics=_topics,
+                images=make_images(
+                    _PARAGRAPH,
+                    upper_boundary_selector=_UPPER,
+                    image_selector=_IMAGE,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                ),
             ),
         ),
     ),

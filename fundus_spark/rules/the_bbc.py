@@ -6,25 +6,20 @@ V2 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List, Optional
 
 from ..kernel import (
     CSSSelector,
-    Extractor,
     ParseContext,
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
     generic_nodes_to_text,
     generic_topic_parsing,
-    image_extraction,
     normalize_whitespace,
     strip_nodes_to_text,
 )
+from ._common import authors_from_ld, date_from_ld, make_body, make_images, std_extractors, title_from_ld
 
 _V1_SUBHEAD = XPath(
     "//div[@data-component='subheadline-block' or @data-component='text-block' or contains(@class, 'ebmt73l0')]"
@@ -49,46 +44,8 @@ _V2_TOPIC = XPath("//div[@data-component='tag-list-block' or @data-block='topicL
 _V2_H1 = XPath("//h1")
 
 
-def _body_v1(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        subheadline_selector=_V1_SUBHEAD,
-        summary_selector=_V1_SUMMARY,
-        paragraph_selector=_V1_PARAGRAPH,
-    )
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _title_v1(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
 def _topics_v1(ctx: ParseContext) -> List[str]:
     return [normalize_whitespace(node.text_content()) for node in _V1_TOPIC(ctx.doc)]
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-        )
-    ]
-
-
-def _body_v2(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, subheadline_selector=_V2_SUBHEAD, paragraph_selector=_V2_PARAGRAPH)
 
 
 def _title_v2(ctx: ParseContext) -> Optional[str]:
@@ -99,48 +56,32 @@ def _topics_v2(ctx: ParseContext) -> List[str]:
     return generic_topic_parsing(generic_nodes_to_text(_V2_TOPIC(ctx.doc)))
 
 
-def _images_v2(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V2_PARAGRAPH,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 THE_BBC = PublisherSpec(
     key="uk.BBC",
     versions=(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2026, 2, 3),
-            extractors=(
-                Extractor("body", _body_v1),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors, default=list),
-                Extractor("title", _title_v1),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("images", _images_v1, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=title_from_ld(),
+                topics=_topics_v1,
+                images=make_images(
+                    _V1_PARAGRAPH, image_selector=_V1_IMAGE, caption_selector=_V1_CAPTION, author_selector=_V1_CREDIT
+                ),
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=(
-                Extractor("body", _body_v2),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("authors", _authors, default=list),
-                Extractor("title", _title_v2),
-                Extractor("topics", _topics_v2, default=list),
-                Extractor("images", _images_v2, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, subheadline=_V2_SUBHEAD),
+                authors=authors_from_ld(),
+                date=date_from_ld(),
+                title=_title_v2,
+                topics=_topics_v2,
+                images=make_images(_V2_PARAGRAPH, caption_selector=_V1_CAPTION, author_selector=_V1_CREDIT),
             ),
         ),
     ),

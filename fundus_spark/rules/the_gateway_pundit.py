@@ -7,20 +7,17 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_nodes_to_text,
-    image_extraction,
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld_path,
+    authors_from_nodes,
+    date_from_meta,
+    free_access,
+    make_body,
+    make_images,
+    title_from_ld_path,
 )
 
 _V1_RELATED = r"^Click\s$"
@@ -50,63 +47,10 @@ _V2_CAPTION = XPath("./ancestor::figure//figcaption")
 _V2_CREDIT = re.compile(r"(?i)photo by(?P<credits>.*)$")
 
 
-def _body_v1(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_V1_PARAGRAPH)
-
-
-def _authors_v1(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("Article/author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
 def _title_v1(ctx: ParseContext) -> Optional[str]:
     if (title := ctx.meta.get("og:title")) is not None:
         title = title.split("|")[0].strip()
     return title
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            author_selector=_V1_CREDIT,
-        )
-    ]
-
-
-def _body_v2(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, summary_selector=_V2_SUMMARY, paragraph_selector=_V2_PARAGRAPH)
-
-
-def _title_v2(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("Article/headline", scalar=True)
-
-
-def _authors_v2(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(generic_nodes_to_text(_V2_AUTHOR(ctx.doc)))
-
-
-def _images_v2(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V2_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V2_CAPTION,
-            author_selector=_V2_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 THE_GATEWAY_PUNDIT = PublisherSpec(
@@ -116,23 +60,36 @@ THE_GATEWAY_PUNDIT = PublisherSpec(
             name="V1",
             valid_until=datetime.date(2026, 5, 27),
             extractors=(
-                Extractor("body", _body_v1),
-                Extractor("authors", _authors_v1, default=list),
-                Extractor("publishing_date", _publishing_date),
+                Extractor("body", make_body(_V1_PARAGRAPH)),
+                Extractor("authors", authors_from_ld_path("Article/author"), default=list),
+                Extractor("publishing_date", date_from_meta("article:published_time")),
                 Extractor("title", _title_v1),
-                Extractor("images", _images_v1, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor(
+                    "images",
+                    make_images(_V1_PARAGRAPH, image_selector=_V1_IMAGE, author_selector=_V1_CREDIT),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
         VersionSpec(
             name="V2",
             extractors=(
-                Extractor("body", _body_v2),
-                Extractor("title", _title_v2),
-                Extractor("authors", _authors_v2, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("images", _images_v2, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("body", make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY)),
+                Extractor("title", title_from_ld_path("Article/headline")),
+                Extractor("authors", authors_from_nodes(_V2_AUTHOR), default=list),
+                Extractor("publishing_date", date_from_meta("article:published_time")),
+                Extractor(
+                    "images",
+                    make_images(
+                        _V2_PARAGRAPH,
+                        image_selector=_V1_IMAGE,
+                        caption_selector=_V2_CAPTION,
+                        author_selector=_V2_CREDIT,
+                    ),
+                    default=list,
+                ),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

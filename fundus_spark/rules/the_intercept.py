@@ -6,21 +6,10 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld_path, date_from_ld_path, free_access, make_body, make_images, title_from_ld_path
 
 _V1_SUMMARY = CSSSelector("h2.Post-excerpt")
 _V1_PARAGRAPH = CSSSelector("div.PostContent > div > p:not(p.caption):not(p.PhotoGrid-description)")
@@ -44,58 +33,17 @@ _V11_CREDIT = XPath(
 )
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("NewsArticle/author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("NewsArticle/datePublished", scalar=True))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     keywords: List[str] = ctx.ld.xpath_search("NewsArticle/keywords")
     return [keyword[9:] for keyword in keywords if keyword.startswith("Subject: ")]
 
 
-def _images_v11(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V11_PARAGRAPH,
-            image_selector=_V11_IMAGE,
-            caption_selector=_V11_CAPTION,
-            author_selector=_V11_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
+    Extractor("authors", authors_from_ld_path("NewsArticle/author"), default=list),
+    Extractor("publishing_date", date_from_ld_path("NewsArticle/datePublished")),
+    Extractor("title", title_from_ld_path("NewsArticle/headline")),
     Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("free_access", free_access, default=False),
 ]
 
 THE_INTERCEPT = PublisherSpec(
@@ -104,14 +52,25 @@ THE_INTERCEPT = PublisherSpec(
         VersionSpec(
             name="V1",
             valid_until=datetime.date(2024, 2, 1),
-            extractors=tuple([Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD))] + _COMMON),
+            extractors=tuple(
+                [Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD))] + _COMMON
+            ),
         ),
         VersionSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("images", _images_v11, default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_V11_IMAGE,
+                            caption_selector=_V11_CAPTION,
+                            author_selector=_V11_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -6,21 +6,18 @@ V1_1 until 2025-11-19, V1_2 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_date_parsing
+from ._common import (
+    authors_from_meta,
+    date_from_ld,
+    date_from_meta,
+    free_access,
+    make_body,
+    make_images,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_PARAGRAPH = XPath(
@@ -53,80 +50,25 @@ _V12_CREDIT = XPath(
 )
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            paragraph_selector=paragraph,
-            subheadline_selector=subhead,
-        )
-
-    return fn
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("parsely-pub-date"))
-
-
 def _publishing_date_v11(ctx: ParseContext) -> Optional[datetime.datetime]:
     if date_nodes := _V11_DATETIME(ctx.doc):
         return generic_date_parsing(date_nodes[0].attrib.get("content"))
     return None
 
 
-def _publishing_date_v12(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-            lower_boundary_selector=_V1_LOWER,
-        )
-    ]
-
-
-def _images_v12(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V12_PARAGRAPH,
-            lower_boundary_selector=_V12_LOWER,
-            caption_selector=_V12_CAPTION,
-            author_selector=_V12_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
+_V1_IMAGES = make_images(
+    _V1_PARAGRAPH,
+    image_selector=_V1_IMAGE,
+    caption_selector=_V1_CAPTION,
+    author_selector=_V1_CREDIT,
+    lower_boundary_selector=_V1_LOWER,
+)
 
 _COMMON = [
-    Extractor("title", _title),
-    Extractor("authors", _authors, default=list),
-    Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("title", title_from_meta()),
+    Extractor("authors", authors_from_meta("author"), default=list),
+    Extractor("topics", topics_from_meta(), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 THE_MIRROR = PublisherSpec(
@@ -137,9 +79,9 @@ THE_MIRROR = PublisherSpec(
             valid_until=datetime.date(2024, 7, 26),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("publishing_date", _publishing_date_v1),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor("publishing_date", date_from_meta("parsely-pub-date")),
+                    Extractor("images", _V1_IMAGES, default=list),
                 ]
                 + _COMMON
             ),
@@ -149,9 +91,9 @@ THE_MIRROR = PublisherSpec(
             valid_until=datetime.date(2025, 11, 19),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
                     Extractor("publishing_date", _publishing_date_v11),
-                    Extractor("images", _images_v1, default=list),
+                    Extractor("images", _V1_IMAGES, default=list),
                 ]
                 + _COMMON
             ),
@@ -160,9 +102,18 @@ THE_MIRROR = PublisherSpec(
             name="V1_2",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V12_SUMMARY, _V12_PARAGRAPH, _V12_SUBHEAD)),
-                    Extractor("publishing_date", _publishing_date_v12),
-                    Extractor("images", _images_v12, default=list),
+                    Extractor("body", make_body(_V12_PARAGRAPH, summary=_V12_SUMMARY, subheadline=_V12_SUBHEAD)),
+                    Extractor("publishing_date", date_from_ld()),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V12_PARAGRAPH,
+                            lower_boundary_selector=_V12_LOWER,
+                            caption_selector=_V12_CAPTION,
+                            author_selector=_V12_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

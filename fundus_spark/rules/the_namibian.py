@@ -8,19 +8,10 @@ from __future__ import annotations
 
 import re
 from datetime import date
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    generic_author_parsing,
-    parse_html,
-)
-from ._common import date_from_meta, free_access, make_body, make_images
+from ..kernel import Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, assemble_body, parse_html
+from ._common import authors_from_ld_path, date_from_meta, free_access, make_body, make_images
 
 _V1_SUMMARY = XPath("//div[contains(@class, 'tdb-block-inner')]/p[position()=1]")
 _V1_PARAGRAPH = XPath("//div[contains(@class, 'tdb-block-inner')]/p[position()>1]")
@@ -33,10 +24,6 @@ def _title(ctx: ParseContext) -> Optional[str]:
     if title is not None:
         return re.sub(_TITLE_SUB, "", title)
     return title
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("//Person/name"))
 
 
 _V1_IMAGES = make_images(_V1_PARAGRAPH, upper_boundary_selector=XPath("//h1[@class='tdb-title-text']"))
@@ -63,7 +50,7 @@ THE_NAMIBIAN = PublisherSpec(
                 Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY)),
                 Extractor("publishing_date", date_from_meta("article:published_time")),
                 Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
+                Extractor("authors", authors_from_ld_path("//Person/name"), default=list),
                 Extractor("images", _V1_IMAGES, default=list),
                 Extractor("free_access", free_access, default=False),
             ),
@@ -74,7 +61,7 @@ THE_NAMIBIAN = PublisherSpec(
                 Extractor("body", _body_v11),
                 Extractor("publishing_date", date_from_meta("article:published_time")),
                 Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
+                Extractor("authors", authors_from_ld_path("//Person/name"), default=list),
                 Extractor("images", _V11_IMAGES, default=list),
                 Extractor("free_access", free_access, default=False),
             ),

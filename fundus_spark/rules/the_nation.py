@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
@@ -21,13 +21,18 @@ from ..kernel import (
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
     parse_html,
+)
+from ._common import (
+    authors_from_meta,
+    date_from_ld,
+    free_access,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _V1_SUMMARY = CSSSelector(".article-header-content > h2")
@@ -60,63 +65,10 @@ def _remove_aside(ctx: ParseContext) -> None:
             parent.remove(aside)
 
 
-def _body(summary, paragraph):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(ctx.doc, summary_selector=summary, paragraph_selector=paragraph)
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("sailthru.author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics_v1(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
 def _topics_v2(ctx: ParseContext) -> List[str]:
     if topics := generic_topic_parsing(ctx.meta.get("keywords")):
         return topics
     return generic_topic_parsing(ctx.meta.get("sailthru.tags"))
-
-
-def _images_v1(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V1_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            image_selector=_V1_IMAGE,
-            caption_selector=_V1_CAPTION,
-            author_selector=_V1_CREDIT,
-        )
-    ]
-
-
-def _images_v2(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_V2_PARAGRAPH,
-            upper_boundary_selector=_UPPER,
-            caption_selector=_V2_CAPTION,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 THE_NATION = PublisherSpec(
@@ -127,27 +79,37 @@ THE_NATION = PublisherSpec(
             valid_until=datetime.date(2023, 7, 22),
             extractors=(
                 Extractor("_fix_malformed_html", _fix_malformed_html, kind="function", priority=1),
-                Extractor("images", _images_v1, default=list, priority=2),
+                Extractor(
+                    "images",
+                    make_images(
+                        _V1_PARAGRAPH,
+                        upper_boundary_selector=_UPPER,
+                        image_selector=_V1_IMAGE,
+                        caption_selector=_V1_CAPTION,
+                        author_selector=_V1_CREDIT,
+                    ),
+                    default=list,
+                    priority=2,
+                ),
                 Extractor("_remove_aside", _remove_aside, kind="function", priority=3),
-                Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH)),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics_v1, default=list),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY)),
+                Extractor("authors", authors_from_meta("sailthru.author"), default=list),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("title", title_from_meta()),
+                Extractor("topics", topics_from_meta(), default=list),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
         VersionSpec(
             name="V2",
-            extractors=(
-                Extractor("_fix_malformed_html", _fix_malformed_html, kind="function", priority=1),
-                Extractor("body", _body(_V2_SUMMARY, _V2_PARAGRAPH)),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("topics", _topics_v2, default=list),
-                Extractor("images", _images_v2, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_V2_PARAGRAPH, summary=_V2_SUMMARY),
+                authors=authors_from_meta("sailthru.author"),
+                date=date_from_ld(),
+                title=title_from_meta(),
+                topics=_topics_v2,
+                images=make_images(_V2_PARAGRAPH, upper_boundary_selector=_UPPER, caption_selector=_V2_CAPTION),
+                extra=(Extractor("_fix_malformed_html", _fix_malformed_html, kind="function", priority=1),),
             ),
         ),
     ),

@@ -5,22 +5,16 @@ unvalidated extras).
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
-
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import (
+    authors_from_ld_path,
+    date_from_ld_path,
+    make_body,
+    make_images,
+    std_extractors,
+    title_from_ld_path,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _SUMMARY = XPath("//div[contains(@class, 'ContentHeaderDek')]")
@@ -37,76 +31,28 @@ _CREDIT = XPath(
 )
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, summary_selector=_SUMMARY, paragraph_selector=_PARAGRAPH)
-
-
-def _description(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:description")
-
-
-def _alternative_description(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/description", scalar=True)
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.xpath_search("NewsArticle/author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("NewsArticle/datePublished", scalar=True))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/headline", scalar=True)
-
-
-def _alternative_title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/alternativeHeadline", scalar=True)
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _section(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("NewsArticle/articleSection", scalar=True)
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 THE_NEW_YORKER = PublisherSpec(
     key="us.TheNewYorker",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("body", _body),
-                Extractor("description", _description, validate=False),
-                Extractor("alternative_description", _alternative_description, validate=False),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("alternative_title", _alternative_title, validate=False),
-                Extractor("topics", _topics, default=list),
-                Extractor("section", _section, validate=False),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=make_body(_PARAGRAPH, summary=_SUMMARY),
+                authors=authors_from_ld_path("NewsArticle/author"),
+                date=date_from_ld_path("NewsArticle/datePublished"),
+                title=title_from_ld_path("NewsArticle/headline"),
+                topics=topics_from_meta(),
+                images=make_images(
+                    _PARAGRAPH, image_selector=_IMAGE, caption_selector=_CAPTION, author_selector=_CREDIT
+                ),
+                extra=(
+                    Extractor("description", title_from_meta("og:description"), validate=False),
+                    Extractor("alternative_description", title_from_ld_path("NewsArticle/description"), validate=False),
+                    Extractor(
+                        "alternative_title", title_from_ld_path("NewsArticle/alternativeHeadline"), validate=False
+                    ),
+                    Extractor("section", title_from_ld_path("NewsArticle/articleSection"), validate=False),
+                ),
             ),
         ),
     ),

@@ -6,21 +6,17 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import Optional
 
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
+from ..kernel import CSSSelector, Extractor, ParseContext, PublisherSpec, VersionSpec, XPath, generic_date_parsing
+from ._common import (
+    authors_from_meta,
+    date_from_ld,
+    free_access,
+    make_body,
+    make_images,
+    title_from_meta,
+    topics_from_meta,
 )
 
 _PARAGRAPH = CSSSelector("div.articleBodyText p")
@@ -30,15 +26,6 @@ _DATETIME = CSSSelector("time[itemprop='datePublished']")
 _CAPTION = XPath("./ancestor::figure//figcaption/span[1]")
 
 
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        summary_selector=_SUMMARY,
-        paragraph_selector=_PARAGRAPH,
-        subheadline_selector=_SUBHEAD,
-    )
-
-
 def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
     nodes = _DATETIME(ctx.doc)
     if nodes:
@@ -46,45 +33,13 @@ def _publishing_date_v1(ctx: ParseContext) -> Optional[datetime.datetime]:
     return None
 
 
-def _publishing_date_v11(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("DCSext.author"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("keywords"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            caption_selector=_CAPTION,
-            relative_urls=True,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _SHARED = [
-    Extractor("body", _body),
-    Extractor("authors", _authors, default=list),
-    Extractor("title", _title),
-    Extractor("topics", _topics, default=list),
-    Extractor("images", _images, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+    Extractor("authors", authors_from_meta("DCSext.author"), default=list),
+    Extractor("title", title_from_meta()),
+    Extractor("topics", topics_from_meta(), default=list),
+    Extractor("images", make_images(_PARAGRAPH, caption_selector=_CAPTION, relative_urls=True), default=list),
+    Extractor("free_access", free_access, default=False),
 ]
 
 THE_TELEGRAPH = PublisherSpec(
@@ -97,7 +52,7 @@ THE_TELEGRAPH = PublisherSpec(
         ),
         VersionSpec(
             name="V1_1",
-            extractors=tuple([Extractor("publishing_date", _publishing_date_v11)] + _SHARED),
+            extractors=tuple([Extractor("publishing_date", date_from_ld())] + _SHARED),
         ),
     ),
 )

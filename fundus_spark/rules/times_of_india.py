@@ -23,7 +23,7 @@ from ..kernel import (
     parse_html,
     serialize_html,
 )
-from ._common import date_from_ld, make_images, std_extractors, title_from_ld
+from ._common import date_from_ld, make_images, std_extractors
 
 _V1_SUBHEAD = XPath(
     "(//div[@class='_s30J clearfix  '])[1]/div/b |"

@@ -9,7 +9,7 @@ import re
 from typing import List
 
 from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_topic_parsing
-from ._common import authors_from_ld, date_from_ld, make_body, make_images, std_extractors, title_from_ld
+from ._common import date_from_ld, make_body, make_images, std_extractors, title_from_ld
 
 _PARAGRAPH = XPath("//main//div[@class='block' and not(descendant::div or descendant::h2)]")
 _SUBHEAD = XPath("//main//div[@class='block']//h2")

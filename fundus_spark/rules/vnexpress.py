@@ -5,27 +5,26 @@
 from __future__ import annotations
 
 import re
-from datetime import datetime
-from typing import List, Optional
+from typing import List
 
-from ..kernel import CSSSelector, ParseContext, PublisherSpec, VersionSpec, XPath, generic_author_parsing, generic_date_parsing, strip_nodes_to_text
-from ._common import make_body, make_images, std_extractors, topics_from_meta
+from ..kernel import (
+    CSSSelector,
+    ParseContext,
+    PublisherSpec,
+    VersionSpec,
+    XPath,
+    generic_author_parsing,
+    strip_nodes_to_text,
+)
+from ._common import date_from_ld_path, make_body, make_images, std_extractors, title_from_ld_path, topics_from_meta
 
 _SUMMARY = CSSSelector("p.description")
 _PARAGRAPH = XPath("//article[@class='fck_detail ']//p[not(@style or @class='author_mail')]")
 _AUTHOR = XPath("//article[@class='fck_detail ']//p[@style='text-align:right;' or @class='author_mail']")
 
 
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.xpath_search("//NewsArticle/headline", scalar=True)
-
-
 def _authors(ctx: ParseContext) -> List[str]:
     return generic_author_parsing(strip_nodes_to_text(_AUTHOR(ctx.doc)))
-
-
-def _date(ctx: ParseContext) -> Optional[datetime]:
-    return generic_date_parsing(ctx.ld.xpath_search("//NewsArticle/datePublished", scalar=True))
 
 
 _IMAGES = make_images(
@@ -42,8 +41,8 @@ VNEXPRESS = PublisherSpec(
             extractors=std_extractors(
                 body=make_body(_PARAGRAPH, summary=_SUMMARY),
                 authors=_authors,
-                date=_date,
-                title=_title,
+                date=date_from_ld_path("//NewsArticle/datePublished"),
+                title=title_from_ld_path("//NewsArticle/headline"),
                 topics=topics_from_meta("keywords", result_filter={"Tin nóng"}),
                 images=_IMAGES,
             ),

@@ -4,49 +4,12 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
-
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-)
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec
+from ._common import authors_from_ld, date_from_meta, free_access, make_body, title_from_meta
 
 _PARAGRAPH = CSSSelector("div[data-qa='article-body'] > p, div[class='story relative'] > p")
 _SUMMARY = CSSSelector("h2[data-qa='subheadline']")
 _SUBHEAD = CSSSelector("div[data-qa='article-body'] > h3[data-qa='article-header']> div")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(
-        ctx.doc,
-        paragraph_selector=_PARAGRAPH,
-        summary_selector=_SUMMARY,
-        subheadline_selector=_SUBHEAD,
-    )
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 WASHINGTON_POST = PublisherSpec(
@@ -55,11 +18,11 @@ WASHINGTON_POST = PublisherSpec(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
-                Extractor("title", _title),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("body", make_body(_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+                Extractor("title", title_from_meta()),
+                Extractor("authors", authors_from_ld(), default=list),
+                Extractor("publishing_date", date_from_meta("article:published_time")),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

@@ -4,42 +4,10 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, List, Optional
-
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-)
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, title_from_ld
 
 _PARAGRAPH = CSSSelector(".bigtext > p")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_PARAGRAPH)
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.ld.bf_search("headline")
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 WASHINGTON_TIMES = PublisherSpec(
@@ -48,11 +16,11 @@ WASHINGTON_TIMES = PublisherSpec(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("body", make_body(_PARAGRAPH)),
+                Extractor("authors", authors_from_ld(), default=list),
+                Extractor("publishing_date", date_from_ld()),
+                Extractor("title", title_from_ld()),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

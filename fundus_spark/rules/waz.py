@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
@@ -16,13 +16,10 @@ from ..kernel import (
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
     generic_author_parsing,
-    generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
 )
+from ._common import authors_from_meta, date_from_ld, free_access, make_body, make_images, title_from_meta
 from .funke import FUNKE
 
 _V1_PARAGRAPH = CSSSelector(".article__body > p")
@@ -40,30 +37,6 @@ _V11_SUMMARY = XPath("//div[@class='article-body'] /p[position()=1]")
 _V11_SUBHEAD = XPath("//div[@class='article-body'] / h3[not(text()='Auch interessant')]")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.meta.get("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
 def _topics(ctx: ParseContext) -> List[str]:
     authors = generic_author_parsing(ctx.meta.get("author"))
     if topics := generic_topic_parsing(ctx.meta.get("keywords")):
@@ -71,32 +44,12 @@ def _topics(ctx: ParseContext) -> List[str]:
     return [re.sub(r"\s*:.+", "", node.text_content()).strip() for node in _TOPICS(ctx.doc)]
 
 
-def _images(paragraph):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                lower_boundary_selector=_LOWER,
-                caption_selector=_CAPTION,
-                author_selector=_CREDIT,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("title", _title),
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
+    Extractor("title", title_from_meta()),
+    Extractor("authors", authors_from_meta("author"), default=list),
+    Extractor("publishing_date", date_from_ld()),
     Extractor("topics", _topics, default=list),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("free_access", free_access, default=False),
 ]
 
 # reuse Funke's later versions wholesale (reference WAZ.V2 = Funke.V1_1,
@@ -111,8 +64,17 @@ WAZ = PublisherSpec(
             valid_until=datetime.date(2024, 2, 21),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("images", _images(_V1_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            lower_boundary_selector=_LOWER,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -122,8 +84,17 @@ WAZ = PublisherSpec(
             valid_until=datetime.date(2025, 8, 24),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("images", _images(_V11_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            lower_boundary_selector=_LOWER,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

@@ -6,25 +6,11 @@ paragraph tags with the reference's regex cascade, and re-parsing).
 
 from __future__ import annotations
 
-import datetime
 import re
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    generic_topic_parsing,
-    image_extraction,
-    parse_html,
-    serialize_html,
-)
+from ..kernel import ParseContext, PublisherSpec, VersionSpec, XPath, assemble_body, parse_html, serialize_html
+from ._common import authors_from_ld, date_from_meta, make_images, std_extractors, title_from_meta, topics_from_meta
 
 _PARAGRAPH = XPath("//div[@id='news_content']/p")
 _SUMMARY = XPath("//div[@id='news_content']//div[@class='teaser_text']")
@@ -34,10 +20,6 @@ _UPPER = XPath("//div[@class='primary_content']")
 _LOWER = XPath("//div[@class='mb20 more_links']")
 _CAPTION = XPath("./ancestor::span[contains(@class,'hmedia')]//a")
 _CREDIT = XPath("./ancestor::div[@class='teaser_img_container']//div[@class='teaser_img_source']")
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
 
 
 def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
@@ -60,50 +42,25 @@ def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
     )
 
 
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _topics(ctx: ParseContext) -> List[str]:
-    return generic_topic_parsing(ctx.meta.get("article:tag"))
-
-
-def _images(ctx: ParseContext) -> List[Dict[str, Any]]:
-    return [
-        img.serialize()
-        for img in image_extraction(
-            doc=ctx.doc,
-            paragraph_selector=_PARAGRAPH,
-            image_selector=_IMAGE,
-            upper_boundary_selector=_UPPER,
-            lower_boundary_selector=_LOWER,
-            caption_selector=_CAPTION,
-            author_selector=_CREDIT,
-        )
-    ]
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 WINFUTURE = PublisherSpec(
     key="de.WinFuture",
     versions=(
         VersionSpec(
             name="V1",
-            extractors=(
-                Extractor("title", _title),
-                Extractor("body", _body),
-                Extractor("authors", _authors, default=list),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("topics", _topics, default=list),
-                Extractor("images", _images, default=list),
-                Extractor("free_access", _free_access, default=False),
+            extractors=std_extractors(
+                body=_body,
+                authors=authors_from_ld(),
+                date=date_from_meta("article:published_time"),
+                title=title_from_meta(),
+                topics=topics_from_meta("article:tag"),
+                images=make_images(
+                    _PARAGRAPH,
+                    image_selector=_IMAGE,
+                    upper_boundary_selector=_UPPER,
+                    lower_boundary_selector=_LOWER,
+                    caption_selector=_CAPTION,
+                    author_selector=_CREDIT,
+                ),
             ),
         ),
     ),

@@ -4,37 +4,10 @@
 
 from __future__ import annotations
 
-import datetime
-from typing import Any, Dict, Optional
-
-from ..kernel import (
-    CSSSelector,
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    assemble_body,
-    free_access_from_ld,
-    generic_date_parsing,
-)
+from ..kernel import CSSSelector, Extractor, PublisherSpec, VersionSpec
+from ._common import date_from_meta, free_access, make_body, title_from_meta
 
 _PARAGRAPH = CSSSelector(".td-post-content > p")
-
-
-def _body(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-    return assemble_body(ctx.doc, paragraph_selector=_PARAGRAPH)
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.meta.get("article:published_time"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
 
 
 WORLD_TRUTH = PublisherSpec(
@@ -43,10 +16,10 @@ WORLD_TRUTH = PublisherSpec(
         VersionSpec(
             name="V1",
             extractors=(
-                Extractor("body", _body),
-                Extractor("publishing_date", _publishing_date),
-                Extractor("title", _title),
-                Extractor("free_access", _free_access, default=False),
+                Extractor("body", make_body(_PARAGRAPH)),
+                Extractor("publishing_date", date_from_meta("article:published_time")),
+                Extractor("title", title_from_meta()),
+                Extractor("free_access", free_access, default=False),
             ),
         ),
     ),

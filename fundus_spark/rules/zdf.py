@@ -6,7 +6,7 @@ V1_1 after).
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
+from typing import List
 
 from ..kernel import (
     CSSSelector,
@@ -15,14 +15,10 @@ from ..kernel import (
     PublisherSpec,
     VersionSpec,
     XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
     generic_topic_parsing,
-    image_extraction,
     strip_nodes_to_text,
 )
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_meta
 
 _V1_PARAGRAPH = XPath("//div[contains(@class,'r1nj4qn5')]")
 _SUMMARY = CSSSelector("p.c1bdz7f4")
@@ -47,30 +43,6 @@ _CREDIT = XPath(
 _LOWER = XPath("//div[@class='s1am5zo f1uhhdhr']")
 
 
-def _body(paragraph):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            paragraph_selector=paragraph,
-            summary_selector=_SUMMARY,
-            subheadline_selector=_SUBHEAD,
-        )
-
-    return fn
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
 def _topics_v11(ctx: ParseContext) -> List[str]:
     topic_string = strip_nodes_to_text(_V11_TOPIC(ctx.doc), join_on=",")
     if topic_string is not None:
@@ -78,32 +50,11 @@ def _topics_v11(ctx: ParseContext) -> List[str]:
     return []
 
 
-def _images(paragraph):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                image_selector=_IMAGE,
-                caption_selector=_CAPTION,
-                author_selector=_CREDIT,
-                lower_boundary_selector=_LOWER,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("title", _title),
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("title", title_from_meta()),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("free_access", free_access, default=False),
 ]
 
 ZDF = PublisherSpec(
@@ -114,8 +65,18 @@ ZDF = PublisherSpec(
             valid_until=datetime.date(2025, 8, 1),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_PARAGRAPH)),
-                    Extractor("images", _images(_V1_PARAGRAPH), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            image_selector=_IMAGE,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_LOWER,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -124,9 +85,19 @@ ZDF = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_PARAGRAPH)),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_SUMMARY, subheadline=_SUBHEAD)),
                     Extractor("topics", _topics_v11, default=list),
-                    Extractor("images", _images(_V11_PARAGRAPH), default=list),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            image_selector=_IMAGE,
+                            caption_selector=_CAPTION,
+                            author_selector=_CREDIT,
+                            lower_boundary_selector=_LOWER,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

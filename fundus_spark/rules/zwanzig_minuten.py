@@ -6,20 +6,9 @@
 from __future__ import annotations
 
 import datetime
-from typing import Any, Dict, List, Optional
 
-from ..kernel import (
-    Extractor,
-    ParseContext,
-    PublisherSpec,
-    VersionSpec,
-    XPath,
-    assemble_body,
-    free_access_from_ld,
-    generic_author_parsing,
-    generic_date_parsing,
-    image_extraction,
-)
+from ..kernel import Extractor, PublisherSpec, VersionSpec, XPath
+from ._common import authors_from_ld, date_from_ld, free_access, make_body, make_images, title_from_meta
 
 _V1_SUMMARY = XPath("//div[@class='Article_elementLead__N3pGr']/p | (//div[@type='typeInfoboxSummary'])[1]//li")
 _V1_SUBHEAD = XPath("//section[@class='Article_body__60Liu']//h2[contains(@class, 'crosshead')]")
@@ -36,55 +25,11 @@ _V11_CREDIT = XPath("./ancestor::figure//figcaption/span[@class='sc-b3c65b9d-3 e
 _UPPER = XPath("//article")
 
 
-def _body(summary, paragraph, subhead):
-    def fn(ctx: ParseContext) -> Optional[Dict[str, Any]]:
-        return assemble_body(
-            ctx.doc,
-            summary_selector=summary,
-            subheadline_selector=subhead,
-            paragraph_selector=paragraph,
-        )
-
-    return fn
-
-
-def _authors(ctx: ParseContext) -> List[str]:
-    return generic_author_parsing(ctx.ld.bf_search("author"))
-
-
-def _publishing_date(ctx: ParseContext) -> Optional[datetime.datetime]:
-    return generic_date_parsing(ctx.ld.bf_search("datePublished"))
-
-
-def _title(ctx: ParseContext) -> Optional[str]:
-    return ctx.meta.get("og:title")
-
-
-def _images(paragraph, caption, credit):
-    def fn(ctx: ParseContext) -> List[Dict[str, Any]]:
-        return [
-            img.serialize()
-            for img in image_extraction(
-                doc=ctx.doc,
-                paragraph_selector=paragraph,
-                upper_boundary_selector=_UPPER,
-                caption_selector=caption,
-                author_selector=credit,
-            )
-        ]
-
-    return fn
-
-
-def _free_access(ctx: ParseContext) -> bool:
-    return free_access_from_ld(ctx.ld)
-
-
 _COMMON = [
-    Extractor("authors", _authors, default=list),
-    Extractor("publishing_date", _publishing_date),
-    Extractor("title", _title),
-    Extractor("free_access", _free_access, default=False),
+    Extractor("authors", authors_from_ld(), default=list),
+    Extractor("publishing_date", date_from_ld()),
+    Extractor("title", title_from_meta()),
+    Extractor("free_access", free_access, default=False),
 ]
 
 ZWANZIG_MINUTEN = PublisherSpec(
@@ -95,8 +40,17 @@ ZWANZIG_MINUTEN = PublisherSpec(
             valid_until=datetime.date(2025, 10, 5),
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V1_SUMMARY, _V1_PARAGRAPH, _V1_SUBHEAD)),
-                    Extractor("images", _images(_V1_PARAGRAPH, _V1_CAPTION, _V1_CREDIT), default=list),
+                    Extractor("body", make_body(_V1_PARAGRAPH, summary=_V1_SUMMARY, subheadline=_V1_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V1_PARAGRAPH,
+                            upper_boundary_selector=_UPPER,
+                            caption_selector=_V1_CAPTION,
+                            author_selector=_V1_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),
@@ -105,8 +59,17 @@ ZWANZIG_MINUTEN = PublisherSpec(
             name="V1_1",
             extractors=tuple(
                 [
-                    Extractor("body", _body(_V11_SUMMARY, _V11_PARAGRAPH, _V11_SUBHEAD)),
-                    Extractor("images", _images(_V11_PARAGRAPH, _V11_CAPTION, _V11_CREDIT), default=list),
+                    Extractor("body", make_body(_V11_PARAGRAPH, summary=_V11_SUMMARY, subheadline=_V11_SUBHEAD)),
+                    Extractor(
+                        "images",
+                        make_images(
+                            _V11_PARAGRAPH,
+                            upper_boundary_selector=_UPPER,
+                            caption_selector=_V11_CAPTION,
+                            author_selector=_V11_CREDIT,
+                        ),
+                        default=list,
+                    ),
                 ]
                 + _COMMON
             ),

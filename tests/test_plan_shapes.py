@@ -7,6 +7,7 @@ here rather than at 100 TB.
 from __future__ import annotations
 
 import importlib.util
+import re
 import sys
 from pathlib import Path
 
@@ -325,3 +326,43 @@ def test_manifest_commit_frame_is_a_local_relation(spark):
     assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
     assert df.schema == MANIFEST_SCHEMA
     assert df.collect() == spark.createDataFrame(rows, MANIFEST_SCHEMA).collect()
+
+
+#: Exchange operators (shuffle and broadcast) in the executed plan of the
+#: queries whose plans the round-8 optimization pass reworked; its
+#: ``explain("formatted")`` dumps (in the git history of ``plans/r08/``)
+#: show the same counts
+EXCHANGES = {
+    "assemble_conversations": 4,
+    "bloom_dedup": 8,
+    "boilerplate_strip": 1,
+    "bpe_token_count": 2,
+    "cosine_neardup": 6,
+    "cosine_topk": 3,
+    "countmin_heavy": 8,
+    "curate_corpus": 2,
+    "curate_corpus_xxhash": 2,
+    "dsir_select": 6,
+    "dup_substring_spans": 3,
+    "extract_documents": 2,
+    "hll_ngram_distinct": 7,
+    "language_id": 0,
+    "media_decode": 1,
+    "minhash_signatures": 1,
+    "minhash_xxhash": 1,
+    "ngram_jaccard": 9,
+    "pdf_extract": 1,
+    "quality_classifier": 2,
+    "robots_gate": 3,
+    "semantic_dedup": 1,
+}
+
+
+def _exchange_count(plan: str) -> int:
+    return sum(1 for line in plan.splitlines() if re.match(r"^[\s:+\-|]*\w*Exchange\b", line))
+
+
+@pytest.mark.parametrize("name", sorted(EXCHANGES))
+def test_query_exchange_count(spark, entry, name):
+    queries = {**entry.queries(), **entry.extra_queries()}
+    assert _exchange_count(_plan(queries[name](spark, SF_DIR))) == EXCHANGES[name]

@@ -22,16 +22,23 @@ from collections import Counter
 REF_GLOB = "/root/reference/src/fundus/publishers/*/{name}.py"
 OURS = "/root/repo/fundus_spark/rules/{name}.py"
 
-#: _common.py factory -> (key kind, default key when called bare)
+#: _common.py factory -> (key kind, default key when called bare); the
+#: factories taking a selector, or nothing, read no key (kind None)
 FACTORY_DEFAULTS = {
     "authors_from_ld": ("bf_search", "author"),
+    "authors_from_ld_path": ("xpath_search", None),
     "authors_from_meta": ("meta.get", None),
+    "authors_from_nodes": (None, None),
     "date_from_ld": ("bf_search", "datePublished"),
+    "date_from_ld_path": ("xpath_search", None),
     "date_from_meta": ("meta.get", None),
     "title_from_meta": ("meta.get", "og:title"),
     "title_from_ld": ("bf_search", "headline"),
+    "title_from_ld_path": ("xpath_search", None),
+    "title_from_root": (None, None),
     "topics_from_meta": ("meta.get", "keywords"),
     "topics_from_ld": ("bf_search", "keywords"),
+    "topics_from_nodes": (None, None),
 }
 
 
@@ -69,10 +76,11 @@ def key_multiset(path: str, resolve_factories: bool = False) -> Counter:
     out = _direct_keys(src)
     if resolve_factories:
         for fac, (kind, default) in FACTORY_DEFAULTS.items():
-            for m in re.finditer(fac + r"\(([^)]*)\)", src):
-                km = re.match(r'(?:key\s*=\s*)?"([^"]*)"', m.group(1).strip())
-                if km:
-                    out.append((kind, km.group(1)))
+            if kind is None:
+                continue
+            for m in re.finditer(r'\b' + fac + r'\(\s*(?:(?:key|query)\s*=\s*)?(?:"([^"]*)")?', src):
+                if m.group(1) is not None:
+                    out.append((kind, m.group(1)))
                 elif default is not None:
                     out.append((kind, default))
     return Counter(out)
