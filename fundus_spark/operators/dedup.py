@@ -18,13 +18,18 @@ Scale notes (the part the judge grades):
 * **ngram_jaccard_pairs** — exact verification on candidate pairs
   (distinct-shingle intersection/union), the classic
   LSH-candidates -> exact-verify two-phase design.
+
+Each near-dup step is written once: ``_same_bucket`` is the band-bucket
+join behind both the LSH self-join and the incremental new x frozen
+probe, and ``_verify_pairs`` is the exact Jaccard verify behind both
+``ngram_jaccard_pairs(candidates=…)`` and ``incremental_assign``.
 """
 
 from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .adaptive import adaptive_repartition, broadcast_if_small, materialize
@@ -191,35 +196,32 @@ def lsh_candidate_pairs(
     get the uncapped exact join.
     """
     banded = band_relation(df, text_col, id_col, n_perm, bands, k, hash_mode, shingles)
+    star = None
     if bucket_cap is not None:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("band", "key")
         banded = banded.withColumn("_n", F.count(F.lit(1)).over(w)).withColumn(
             "_min", F.min("doc_id").over(w)
         )
-        small = banded.where(F.col("_n") <= bucket_cap).drop("_n", "_min")
         star = (
             banded.where((F.col("_n") > bucket_cap) & (F.col("doc_id") != F.col("_min")))
             .select(F.col("_min").alias("a"), F.col("doc_id").alias("b"))
         )
-        left = small.alias("l")
-        right = small.alias("r")
-        dense = (
-            left.join(
-                right, (F.col("l.band") == F.col("r.band")) & (F.col("l.key") == F.col("r.key"))
-            )
-            .where(F.col("l.doc_id") < F.col("r.doc_id"))
-            .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        )
-        return dense.unionByName(star).distinct()
-    left = banded.alias("l")
-    right = banded.alias("r")
+        banded = banded.where(F.col("_n") <= bucket_cap).drop("_n", "_min")
+    pairs = _same_bucket(banded, banded).where(F.col("a") < F.col("b"))
+    if star is not None:
+        pairs = pairs.unionByName(star)
+    return pairs.distinct()
+
+
+def _same_bucket(left: DataFrame, right: DataFrame) -> DataFrame:
+    """``(a, b)`` for every ``left`` doc ``a`` and ``right`` doc ``b``
+    sharing an LSH band bucket, one row per shared bucket. The equi-join
+    keys are exactly ``(band, key)``, so a ``right`` side stored bucketed
+    on them (the frozen store) is read in place without an Exchange."""
     return (
-        left.join(right, (F.col("l.band") == F.col("r.band")) & (F.col("l.key") == F.col("r.key")))
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
+        left.alias("l")
+        .join(right.alias("r"), (F.col("l.band") == F.col("r.band")) & (F.col("l.key") == F.col("r.key")))
         .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
     )
 
 
@@ -239,18 +241,8 @@ def ngram_jaccard_pairs(
     Scale shape — three regimes, most-scalable first:
     * ``candidates`` (a, b) given (the LSH two-phase path): the
       intersection is computed FROM the candidate list — never from a
-      shingle self-join, so hot shingles cannot blow up the plan.
-      Since round 8 this joins per-doc distinct-shingle ARRAYS and
-      takes ``size(array_intersect(...))`` per pair: two joins, no
-      post-join aggregation, and both set sizes ride the same rows
-      (plan went 6 exchanges + groupBy -> 3 exchanges). Bytes through
-      the candidate joins are the same order as the old
-      pairs x shingles row expansion; the granularity trade is one
-      array row per (pair, side) instead of |shingles| small rows.
-      For web-scale text (documents up to a few hundred KB) an array
-      row is tens of KB — harmless; a corpus with pathological
-      multi-MB single documents should clip or split them before
-      shingling (the winnowing operators' ``max_chars`` precedent).
+      shingle self-join, so hot shingles cannot blow up the plan (see
+      :func:`_verify_pairs`, which :func:`incremental_assign` shares).
     * ``partition_col`` given: pairs are formed only within a partition
       value (dedup within a domain / crawl batch — how a 100 TB job is
       sharded anyway); the self-join keys on (partition, shingle), so
@@ -271,43 +263,7 @@ def ngram_jaccard_pairs(
             shingles = materialize(shingles)[0]
 
     if candidates is not None:
-        # candidates path (round 8): verify via per-doc DISTINCT shingle
-        # ARRAYS instead of the row-expansion join. The old plan shuffled
-        # the pairs x |shingles(a)| expansion by (b, shingle), shuffled
-        # the full shingle relation twice, aggregated it back by (a, b),
-        # and then joined two separate size relations; this plan is one
-        # collect_set agg over the shingle relation plus
-        # two joins — the intersection AND both sizes fall out of the
-        # same row (|arr| is the doc's distinct-shingle count, exactly
-        # the old sizes value), with no groupBy after the joins. Bytes
-        # through the candidate joins are the same order (a doc's full
-        # shingle set traveled per pair before too, as rows); per-pair
-        # values are identical: array_intersect over distinct arrays ==
-        # the old count of matching distinct shingles, and inter > 0
-        # reproduces the old inner join's "no row for disjoint pairs".
-        arrays = shingles.groupBy("doc_id").agg(
-            F.collect_set("shingle").alias("arr")
-        )
-        aa = arrays.select(F.col("doc_id").alias("a"), F.col("arr").alias("arr_a"))
-        ab = arrays.select(F.col("doc_id").alias("b"), F.col("arr").alias("arr_b"))
-        return (
-            candidates.join(aa, "a")
-            .join(ab, "b")
-            .select(
-                "a",
-                "b",
-                F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
-                F.size("arr_a").alias("na"),
-                F.size("arr_b").alias("nb"),
-            )
-            .where(F.col("inter") > 0)
-            .select(
-                "a",
-                "b",
-                F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
+        return _verify_pairs(candidates, shingles, shingles, threshold)
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     join_keys = ["shingle"]
     left = shingles
@@ -322,17 +278,56 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    joined = (
+    return (
         pair_intersections.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("n", "na"), "a")
         .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
+        .select("a", "b", _jaccard())
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _jaccard() -> Column:
+    """``jaccard`` from a pair's shared (``inter``) and per-side
+    (``na``, ``nb``) distinct-shingle counts, rounded to 4 places."""
+    return F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4).alias("jaccard")
+
+
+def _verify_pairs(candidates: DataFrame, left: DataFrame, right: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard verify of candidate pairs: ``(a, b, jaccard)`` for
+    every ``(a, b)`` in ``candidates`` scoring >= ``threshold``, where
+    ``a`` is a doc of the ``left`` and ``b`` of the ``right``
+    ``(doc_id, shingle)`` relation (distinct rows). The two sides are
+    never pooled, so one id may name different docs on each side.
+
+    Each side becomes one row per doc holding its distinct-shingle
+    array (built once when ``right is left``), and the pair takes
+    ``size(array_intersect(...))``: two joins from the candidate list,
+    no aggregation after them, and both set sizes ride the same row.
+    The trade is one array row per (pair, side): tens of KB for
+    web-scale text, but a corpus of multi-MB single documents should
+    clip or split them before shingling (the winnowing operators'
+    ``max_chars`` precedent). A pair sharing no shingle gets no row,
+    even at ``threshold`` 0.
+    """
+    def arrays(shingles: DataFrame) -> DataFrame:
+        return shingles.groupBy("doc_id").agg(F.collect_set("shingle").alias("arr"))
+
+    arrays_l = arrays(left)
+    arrays_r = arrays_l if right is left else arrays(right)
+    return (
+        candidates.join(arrays_l.select(F.col("doc_id").alias("a"), F.col("arr").alias("arr_a")), "a")
+        .join(arrays_r.select(F.col("doc_id").alias("b"), F.col("arr").alias("arr_b")), "b")
         .select(
             "a",
             "b",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4).alias("jaccard"),
+            F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
+            F.size("arr_a").alias("na"),
+            F.size("arr_b").alias("nb"),
         )
+        .where(F.col("inter") > 0)
+        .select("a", "b", _jaccard())
         .where(F.col("jaccard") >= threshold)
     )
-    return joined
 
 
 def simhash(
@@ -534,7 +529,12 @@ def incremental_assign(
     pass ``frozen_bands`` (the persisted :func:`band_relation` of the
     frozen corpus — one row per doc per band, written once at its own
     dedup time) so an append probes the corpus WITHOUT rereading its
-    text; the verify joins touch only candidate pairs; the final
+    text, and only the batch shuffles for the probe when that relation
+    is stored bucketed on ``(band, key)``; the verify joins touch only
+    candidate pairs. Both phases share one candidate join
+    (:func:`_same_bucket`) and one Jaccard verify
+    (:func:`_verify_pairs`) with :func:`lsh_candidate_pairs` and
+    :func:`ngram_jaccard_pairs`; the final
     propagation runs on the (tiny) new-batch pair graph via
     :func:`connected_components`. The component/seed relations are
     bounded by the append batch — tiny for a daily increment — but a
@@ -549,37 +549,21 @@ def incremental_assign(
         frozen_bands = band_relation(frozen_docs, text_col, id_col, n_perm, bands, k, hash_mode)
 
     # phase 1: new x frozen candidates -> exact Jaccard verify -> seeds
-    cand_nf = (
-        nb.alias("n")
-        .join(frozen_bands.alias("f"), (F.col("n.band") == F.col("f.band")) & (F.col("n.key") == F.col("f.key")))
-        .select(F.col("n.doc_id").alias("new_id"), F.col("f.doc_id").alias("frozen_id"))
-        .distinct()
-    )
+    cand_nf = _same_bucket(nb, frozen_bands).distinct()
     # shingle ONLY the frozen docs that some band bucket proposed:
     # without the semi-join, a daily append against a 100 TB frozen
     # corpus would re-shingle all frozen text every batch even when
     # frozen_bands is persisted — exactly the cost that parameter
     # exists to avoid. Candidate frozen ids are a tiny relation
     # (bounded by the batch's bucket collisions), so it broadcasts.
-    cand_frozen = cand_nf.select(F.col("frozen_id").alias(id_col)).distinct()
+    cand_frozen = cand_nf.select(F.col("b").alias(id_col)).distinct()
     frozen_needed = frozen_docs.join(F.broadcast(cand_frozen), id_col, "left_semi")
     frozen_sh = shingle_relation(frozen_needed, text_col, id_col, k).distinct()
-    n_sizes = new_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nn"))
-    f_sizes = frozen_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nf"))
-    inters = (
-        cand_nf.join(new_sh.select(F.col("doc_id").alias("new_id"), "shingle"), "new_id")
-        .join(frozen_sh.select(F.col("doc_id").alias("frozen_id"), "shingle"), ["frozen_id", "shingle"])
-        .groupBy("new_id", "frozen_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    seeds = (
+        _verify_pairs(cand_nf, new_sh, frozen_sh, threshold)
+        .groupBy(F.col("a").alias("doc_id"))
+        .agg(F.min("b").alias("seed"))
     )
-    verified_nf = (
-        inters.join(n_sizes.withColumnRenamed("doc_id", "new_id"), "new_id")
-        .join(f_sizes.withColumnRenamed("doc_id", "frozen_id"), "frozen_id")
-        .where(
-            F.round(F.col("inter") / (F.col("nn") + F.col("nf") - F.col("inter")), 4) >= threshold
-        )
-    )
-    seeds = verified_nf.groupBy("new_id").agg(F.min("frozen_id").alias("seed"))
 
     # phase 2: new-new pairs -> components -> min seed per component
     cand_nn = lsh_candidate_pairs(
@@ -595,7 +579,7 @@ def incremental_assign(
 
     seeded = (
         new_docs.select(F.col(id_col).alias("doc_id"))
-        .join(seeds.withColumnRenamed("new_id", "doc_id"), "doc_id", "left")
+        .join(seeds, "doc_id", "left")
         .select("doc_id", F.coalesce(F.col("seed"), F.col("doc_id")).alias("seed"))
     )
     comp_min = (
@@ -770,18 +754,8 @@ def sentence_span_dedup(
     spans = docs.select(
         "doc_id", F.posexplode(span_hashes).alias("pos", "span_hash")
     )
-    # struct min orders by (doc_id, pos) natively — no fixed-width
-    # string key, so ids >= 10^12 and >10^6 spans/doc stay exact
-    firsts = spans.groupBy("span_hash").agg(
-        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("first_occ"),
-        F.count(F.lit(1)).alias("n_occ"),
-    )
     removed = (
-        spans.join(firsts.where(F.col("n_occ") > 1), "span_hash")
-        .where(
-            (F.col("doc_id") != F.col("first_occ.doc_id"))
-            | (F.col("pos") != F.col("first_occ.pos"))
-        )
+        _repeat_occurrences(spans, "span_hash")
         .select("doc_id", F.explode(F.sequence(F.col("pos") + 1, F.col("pos") + span)).alias("sent_idx"))
         .groupBy("doc_id")
         .agg(F.collect_set("sent_idx").alias("removed_idx"))
@@ -833,8 +807,6 @@ def dup_substring_spans(
     Output: ``(doc_id, span_start, span_end, span_len, n_grams)`` —
     1-based char offsets into the whitespace-normalized, clipped text.
     """
-    from pyspark.sql.window import Window
-
     from .textstats import winnowing_fingerprints
 
     fps = winnowing_fingerprints(
@@ -855,29 +827,8 @@ def dup_substring_spans(
         .where(F.col("n_occ") > 1)
         .select("doc_id", "pos")
     )
-    by_pos = Window.partitionBy("doc_id").orderBy("pos")
-    # Winnowing guarantees consecutive SELECTED positions inside one
-    # duplicated region are <= window apart (one selection per window),
-    # and adjacent duplicated k-grams overlap within k — so the island
-    # merge gap must be max(k, window), not k alone, or window > k
-    # (non-default params) fragments a single duplicated region into
-    # multiple spans and breaks the >= k+window-1 localization
-    # guarantee.
-    gap = max(k, window)
-    islands = dups.withColumn(
-        "brk",
-        F.when(F.col("pos") - F.lag("pos").over(by_pos) > gap, F.lit(1)).otherwise(F.lit(0)),
-    ).withColumn(
-        "island",
-        F.sum("brk").over(by_pos.rowsBetween(Window.unboundedPreceding, 0)),
-    )
     return (
-        islands.groupBy("doc_id", "island")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(k - 1)).alias("span_end"),
-            F.count(F.lit(1)).cast("long").alias("n_grams"),
-        )
+        _merge_spans(dups, k, window)
         .select(
             "doc_id",
             "span_start",
@@ -919,8 +870,6 @@ def remove_dup_substrings(
     text — EVERY input doc is returned (docs with nothing to remove
     pass through intact).
     """
-    from pyspark.sql.window import Window
-
     from .textstats import winnowing_fingerprints
 
     base = df.select(
@@ -935,41 +884,19 @@ def remove_dup_substrings(
     )
     if id_col != "doc_id":
         fps = fps.withColumnRenamed(id_col, "doc_id")
-    firsts = fps.groupBy("fp").agg(
-        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("first_occ"),
-        F.count(F.lit(1)).alias("n_occ"),
-    )
-    removals = (
-        fps.join(firsts.where(F.col("n_occ") > 1), "fp")
-        .where(
-            (F.col("doc_id") != F.col("first_occ.doc_id"))
-            | (F.col("pos") != F.col("first_occ.pos"))
-        )
-        .select("doc_id", "pos")
-    )
-    gap = max(k, window)
-    by_pos = Window.partitionBy("doc_id").orderBy("pos")
-    spans = (
-        removals.withColumn(
-            "brk",
-            F.when(F.col("pos") - F.lag("pos").over(by_pos) > gap, F.lit(1)).otherwise(F.lit(0)),
-        )
-        .withColumn("island", F.sum("brk").over(by_pos.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("doc_id", "island")
-        .agg(F.min("pos").alias("s"), (F.max("pos") + F.lit(k - 1)).alias("e"))
-    )
+    spans = _merge_spans(_repeat_occurrences(fps, "fp"), k, window)
     # between-span segments: each span emits the gap before it; one
     # final segment per doc runs from the last span's end to len(t).
     # Window is per doc and bounded by max_chars/k rows.
-    by_start = Window.partitionBy("doc_id").orderBy("s")
-    segs = spans.withColumn("prev_e", F.lag("e").over(by_start)).select(
+    by_start = Window.partitionBy("doc_id").orderBy("span_start")
+    segs = spans.withColumn("prev_e", F.lag("span_end").over(by_start)).select(
         "doc_id",
         (F.coalesce(F.col("prev_e"), F.lit(0)) + 1).cast("long").alias("seg_start"),
-        (F.col("s") - 1).cast("long").alias("seg_end"),
+        (F.col("span_start") - 1).cast("long").alias("seg_end"),
     )
     stats = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_spans_removed"),
-        F.max("e").alias("last_e"),
+        F.max("span_end").alias("last_e"),
     )
     doc_side = base.join(stats, "doc_id", "left")
     tail_seg = doc_side.where(F.col("n_spans_removed").isNotNull()).select(
@@ -1016,6 +943,58 @@ def remove_dup_substrings(
             (F.col("n_chars") - F.length("kept_text")).cast("long"),
         )
         .select("doc_id", "n_chars", "n_spans_removed", "n_chars_removed", "kept_text")
+    )
+
+
+def _repeat_occurrences(occurrences: DataFrame, key: str) -> DataFrame:
+    """``(doc_id, pos)`` of every occurrence of a ``key`` value that is
+    not its corpus-wide first occurrence in ``(doc_id, pos)`` order.
+
+    The first occurrence is a map-side-combinable ``min`` over the
+    ``(doc_id, pos)`` STRUCT per key, joined back — never a window over
+    a hot key. Struct ordering is lexicographic by field, so ids >=
+    10^12 and > 10^6 positions per doc stay exact (a fixed-width string
+    key would truncate them)."""
+    firsts = occurrences.groupBy(key).agg(
+        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("first_occ"),
+        F.count(F.lit(1)).alias("n_occ"),
+    )
+    return (
+        occurrences.join(firsts.where(F.col("n_occ") > 1), key)
+        .where(
+            (F.col("doc_id") != F.col("first_occ.doc_id"))
+            | (F.col("pos") != F.col("first_occ.pos"))
+        )
+        .select("doc_id", "pos")
+    )
+
+
+def _merge_spans(positions: DataFrame, k: int, window: int) -> DataFrame:
+    """Gaps-and-islands merge of a doc's selected k-gram positions into
+    maximal spans ``(doc_id, span_start, span_end, n_grams)``, where
+    ``span_end`` is the last k-gram's last char. The window is per doc,
+    bounded by ``max_chars``, so it never sees a skewed key.
+
+    Winnowing guarantees consecutive SELECTED positions inside one
+    duplicated region are <= window apart (one selection per window),
+    and adjacent duplicated k-grams overlap within k — so the merge gap
+    must be max(k, window), not k alone, or window > k fragments a
+    single duplicated region into multiple spans and breaks the
+    >= k+window-1 localization guarantee."""
+    gap = max(k, window)
+    by_pos = Window.partitionBy("doc_id").orderBy("pos")
+    return (
+        positions.withColumn(
+            "brk",
+            F.when(F.col("pos") - F.lag("pos").over(by_pos) > gap, F.lit(1)).otherwise(F.lit(0)),
+        )
+        .withColumn("island", F.sum("brk").over(by_pos.rowsBetween(Window.unboundedPreceding, 0)))
+        .groupBy("doc_id", "island")
+        .agg(
+            F.min("pos").alias("span_start"),
+            (F.max("pos") + F.lit(k - 1)).alias("span_end"),
+            F.count(F.lit(1)).cast("long").alias("n_grams"),
+        )
     )
 
 

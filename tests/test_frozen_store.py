@@ -13,7 +13,7 @@ import contextlib
 import pytest
 from pyspark.sql import functions as F
 
-from fundus_spark.operators.dedup import band_relation, exact_dedup
+from fundus_spark.operators.dedup import _same_bucket, band_relation, exact_dedup
 from fundus_spark.plans import curate_increment, read_frozen_state, write_frozen_state
 
 
@@ -143,7 +143,8 @@ def test_materialize_counts_in_the_materializing_job(spark):
 
 
 def test_band_probe_has_no_frozen_side_exchange(spark, tmp_path):
-    """Differential plan check: the (band, key) probe join against the
+    """Differential plan check: the operator's (band, key) probe join
+    (``_same_bucket``, as ``incremental_assign`` calls it) against the
     bucketed store needs exactly one fewer Exchange than the same join
     against a plain-parquet copy of the same relation — the frozen
     side reads its buckets in place (SelectedBucketsCount in the scan)
@@ -158,15 +159,7 @@ def test_band_probe_has_no_frozen_side_exchange(spark, tmp_path):
     nb = band_relation(_new_docs(spark))
 
     def probe(frozen_bands):
-        return (
-            nb.alias("n")
-            .join(
-                frozen_bands.alias("f"),
-                (F.col("n.band") == F.col("f.band")) & (F.col("n.key") == F.col("f.key")),
-            )
-            .select(F.col("n.doc_id").alias("new_id"), F.col("f.doc_id").alias("frozen_id"))
-            .distinct()
-        )
+        return _same_bucket(nb, frozen_bands).distinct()
 
     with _no_broadcast(spark):
         bucketed_plan = probe(bands)._jdf.queryExecution().executedPlan().toString()

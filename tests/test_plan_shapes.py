@@ -329,14 +329,15 @@ def test_manifest_commit_frame_is_a_local_relation(spark):
 
 
 #: Exchange operators (shuffle and broadcast) in the executed plan of the
-#: queries whose plans the round-8 optimization pass reworked; its
-#: ``explain("formatted")`` dumps (in the git history of ``plans/r08/``)
-#: show the same counts
+#: queries whose plans the round-8 optimization pass reworked (its
+#: ``explain("formatted")`` dumps, in the git history of ``plans/r08/``,
+#: show the same counts), and of the near-dup and span-dedup operators
 EXCHANGES = {
     "assemble_conversations": 4,
     "bloom_dedup": 8,
     "boilerplate_strip": 1,
     "bpe_token_count": 2,
+    "c4_span_dedup": 4,
     "cosine_neardup": 6,
     "cosine_topk": 3,
     "countmin_heavy": 8,
@@ -346,13 +347,18 @@ EXCHANGES = {
     "dup_substring_spans": 3,
     "extract_documents": 2,
     "hll_ngram_distinct": 7,
+    # 45 while the new x frozen verify expanded pairs x shingles rows
+    # and joined separate size relations; 29 on the shared array verify
+    "incremental_dedup": 29,
     "language_id": 0,
+    "lsh_jaccard_verified": 12,
     "media_decode": 1,
     "minhash_signatures": 1,
     "minhash_xxhash": 1,
     "ngram_jaccard": 9,
     "pdf_extract": 1,
     "quality_classifier": 2,
+    "remove_dup_substrings": 17,
     "robots_gate": 3,
     "semantic_dedup": 1,
 }

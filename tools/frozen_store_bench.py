@@ -22,9 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from fundus_spark.operators.dedup import incremental_assign  # noqa: E402
+from fundus_spark.operators.adaptive import materialize  # noqa: E402
+from fundus_spark.operators.dedup import _same_bucket, band_relation, incremental_assign  # noqa: E402
 from fundus_spark.plans import build_session, read_frozen_state, write_frozen_state  # noqa: E402
 from tools.scale_corpus import materialize_scaled_corpus  # noqa: E402
 
@@ -112,21 +111,10 @@ def main() -> None:
     # claim is about, measured alone so the operator's identical
     # phase-2 work (new-new dedup, verify joins) doesn't drown the
     # frozen-side shuffle difference in the totals
-    from fundus_spark.operators.dedup import band_relation
-
-    nb = band_relation(batch).localCheckpoint(eager=True)
+    nb = materialize(band_relation(batch))[0]
 
     def probe_join_only(frozen_bands):
-        return (
-            nb.alias("n")
-            .join(
-                frozen_bands.alias("f"),
-                (F.col("n.band") == F.col("f.band")) & (F.col("n.key") == F.col("f.key")),
-            )
-            .select(F.col("n.doc_id").alias("new_id"), F.col("f.doc_id").alias("frozen_id"))
-            .distinct()
-            .count()
-        )
+        return _same_bucket(nb, frozen_bands).distinct().count()
 
     join_results = {"bucketed": [], "plain": []}
     jrows = {}
