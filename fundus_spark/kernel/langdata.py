@@ -69,7 +69,6 @@ STOPWORDS: List[Tuple[str, FrozenSet[str]]] = [
     ("tl", frozenset("ang ng sa na mga ay at para hindi ito kanyang mula noong ngunit din siya".split())),
 ]
 
-STOPWORD_CODES = [code for code, _ in STOPWORDS]
 STOPWORD_MAP: Dict[str, FrozenSet[str]] = dict(STOPWORDS)
 
 # script ranges: (code, ranges) — first match with enough hits wins.

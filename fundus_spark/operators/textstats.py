@@ -19,8 +19,6 @@ from pyspark.sql import functions as F
 from ..kernel.langdata import STOPWORDS as _LANG_STOPWORDS
 
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "that", "was"]
-DE_STOPWORDS = ["der", "die", "das", "und", "ist", "ein", "zu", "den", "von", "mit"]
-ES_STOPWORDS = ["el", "la", "de", "que", "y", "en", "un", "es", "se", "no"]
 
 # full Latin-script profile set (shared with the kernel's per-article
 # heuristic and the DuckDB oracle): ordered, ties break earlier-first

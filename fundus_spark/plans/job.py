@@ -12,32 +12,34 @@ Scale design (SURVEY.md §3.2 lifecycle):
   predicate cannot prune parquet files, so a per-bucket loop would cost
   ``n_buckets`` full-table scans — 4096 buckets over 100 TB would read
   ~400 PB. One pass reads the table once regardless of bucket count.
-* Commit protocol: the partitioned data write lands first; ONE atomic
-  multi-bucket manifest append is the commit point (all pending
-  buckets' rows in a single single-task write — all-or-nothing at the
-  job-commit rename). A crash before it leaves uncommitted
-  ``bucket=K`` directories that the retry's dynamic-overwrite rewrite
-  replaces idempotently. A resume submit re-extracts only the
-  uncommitted buckets — still one scan.
-* Per-bucket metrics are read back from the written output with a
-  ``bucket IN (...)`` predicate over the partition column, aggregated
-  by ``(bucket, _partition_id)`` in ONE job, and written partitioned by
-  ``(run_id, bucket)`` with dynamic partition overwrite — a resume
-  REPLACES the crashed attempt's orphaned metrics partitions instead
-  of duplicating them, so lineage reads need no dedup rule and the
-  commit phase does not scale with bucket count.
+* **One source per fact**: the run's manifest rows are read once, at
+  the start; they give both the buckets to skip and the prior totals.
+  The per-(bucket, partition) metrics are computed once, from a
+  partition-pruned read-back of what actually landed, and that one
+  relation is both written as lineage and aggregated into the manifest
+  rows (at most ``n_buckets``). The totals are summed on the driver
+  from the prior and the new manifest rows; neither the metrics nor
+  the manifest is read back.
+* Commit protocol: the partitioned data write lands first, then the
+  metrics; ONE multi-bucket manifest append is the commit point (all
+  pending buckets' rows in a single single-task write — all-or-nothing
+  at the job-commit rename). A crash before it leaves uncommitted
+  ``bucket=K`` directories and metrics partitions, which the retry's
+  dynamic-overwrite writes replace idempotently, so lineage reads need
+  no dedup rule. A resume submit re-extracts only the uncommitted
+  buckets — still one scan.
 
-Resume read-back contract (object stores / Iceberg): the read-back and
-resume logic rely ONLY on partition-pruned scans of the output table —
-``spark.read.parquet(output).where(col("bucket").isin(...))`` here,
+Resume read-back contract (object stores / Iceberg): the read-back
+relies ONLY on partition-pruned scans of the output table —
+``spark.read.schema(...).parquet(output).where(col("bucket").isin(...))`` here,
 which on a Hive-layout store prunes to the ``bucket=K`` directories via
 the partition filter (verified by ``tests/test_spark_e2e.py``'s
 pruned-read assertion) and on Iceberg becomes the identical
 ``.where(...)`` over the table's bucket partition — a metadata-only
 prune, no directory listing. Nothing reads ``{output}/bucket=K`` paths
 directly, so swapping the parquet sink for an Iceberg catalog table
-changes only the write (``writeTo(...).overwritePartitions()``) and
-``append_rows``.
+changes only the writes (``writeTo(...).overwritePartitions()`` and
+``.append()``).
 """
 
 from __future__ import annotations
@@ -48,11 +50,12 @@ import uuid
 from dataclasses import dataclass, field
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.adaptive import materialize
 from .extract_stage import extract_articles
-from .lineage import append_rows, bucketed_partition_metrics, committed_buckets, manifest_frame
+from .lineage import bucketed_partition_metrics, manifest_frame, run_manifest
 
 
 @dataclass
@@ -81,9 +84,11 @@ def run_extraction_job(
     started = time.time()
     result = JobResult(run_id=run_id, buckets_total=n_buckets)
 
-    done = committed_buckets(spark, manifest_path, run_id)
-    result.buckets_skipped = sorted(b for b in range(n_buckets) if b in done)
+    prior = run_manifest(spark, manifest_path, run_id)
+    done = {r["bucket"] for r in prior}
+    result.buckets_skipped = [b for b in range(n_buckets) if b in done]
     remaining = [b for b in range(n_buckets) if b not in done]
+    new = []
 
     if remaining:
         # xxhash64 is type-sensitive (int32 vs int64 hash differently);
@@ -108,33 +113,27 @@ def run_extraction_job(
             .partitionBy("bucket")
             .parquet(output_path)
         )
-        # Commit phase — constant job count, idempotent under resume.
-        #
-        # Metrics for ALL pending buckets come from ONE partition-pruned
-        # read of the written output (the bucket predicate prunes to
-        # exactly the bucket=K directories of this batch — on Iceberg
-        # the same metadata-only prune) aggregated by
-        # (bucket, _partition_id). The metrics table is partitioned by
-        # (run_id, bucket) and written with DYNAMIC PARTITION OVERWRITE:
-        # a resume that re-runs not-yet-manifested buckets REPLACES
-        # their orphaned metrics partitions from the crashed attempt
-        # instead of appending duplicates (round-3 advisory: a plain
-        # append here duplicated metrics rows for every bucket whose
-        # manifest commit had not landed). Committed buckets are not in
-        # `remaining`, so their partitions are untouched.
-        written = spark.read.parquet(output_path).where(F.col("bucket").isin(remaining))
-        metrics = bucketed_partition_metrics(written, run_id)
+        # The metrics describe what landed: one partition-pruned read of
+        # the written output (on Iceberg the same metadata-only prune),
+        # with the schema the job already holds, so no footer is read to
+        # infer it. Materialized once, they are written as lineage and
+        # aggregated into the manifest rows.
+        written = spark.read.schema(extracted.schema).parquet(output_path).where(F.col("bucket").isin(remaining))
+        metrics, _ = materialize(bucketed_partition_metrics(written, run_id))
+        # Partitioned by (run_id, bucket) with DYNAMIC overwrite: a resume
+        # that re-runs not-yet-manifested buckets REPLACES the orphaned
+        # metrics partitions of the crashed attempt instead of appending
+        # duplicates. Committed buckets are not in `remaining`, so their
+        # partitions are untouched.
         (
             metrics.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("run_id", "bucket")
             .parquet(metrics_path)
         )
-        manifest_rows = {
+        landed = {
             r["bucket"]: r
-            for r in spark.read.parquet(metrics_path)
-            .where((F.col("run_id") == run_id) & F.col("bucket").isin(remaining))
-            .groupBy("bucket")
+            for r in metrics.groupBy("run_id", "bucket")
             .agg(
                 F.sum("input_turns").alias("input_turns"),
                 F.sum("output_turns").alias("output_turns"),
@@ -144,49 +143,26 @@ def run_extraction_job(
             )
             .collect()
         }
-        # ONE atomic multi-bucket manifest append (round-3 verdict #9):
-        # all pending buckets' rows land in a single single-task append
-        # — the file rename at job commit makes the batch all-or-nothing,
-        # which is strictly stronger than the old prefix-commit loop
-        # (4096 sequential driver round-trips at 4096 buckets) and keeps
-        # the same resume contract: a bucket is committed iff its
-        # manifest row is readable, and the data write preceding it is
-        # idempotent dynamic overwrite either way.
+        # A bucket can receive zero rows (a hash gap at tiny inputs); it
+        # is committed empty so a resume skips it.
         now = datetime.datetime.now(datetime.timezone.utc)
-        data = []
-        for bucket in remaining:
-            row = manifest_rows.get(bucket)
-            if row is None:
-                # a bucket can legitimately receive zero rows (hash gap
-                # at tiny inputs); commit it empty so resume skips it.
-                data.append((run_id, bucket, 0, 0, 0, 0, now))
-            else:
-                data.append(
-                    (
-                        run_id,
-                        bucket,
-                        row["input_turns"],
-                        row["output_turns"],
-                        row["parse_failures"],
-                        row["bytes_processed"],
-                        row["committed_at"],
-                    )
-                )
-        append_rows(spark, manifest_frame(spark, data).coalesce(1), manifest_path)
-        result.buckets_run.extend(remaining)
+        new = [
+            landed.get(b)
+            or Row(run_id=run_id, bucket=b, input_turns=0, output_turns=0, parse_failures=0,
+                   bytes_processed=0, committed_at=now)
+            for b in remaining
+        ]
+        # ONE manifest append is the commit point: every pending bucket's
+        # row lands in a single single-task write, all-or-nothing at the
+        # job-commit rename. A bucket is committed iff its manifest row is
+        # readable; the writes before it are idempotent dynamic overwrites.
+        manifest_frame(spark, new).coalesce(1).write.mode("append").parquet(manifest_path)
+        result.buckets_run = remaining
 
-    totals = (
-        spark.read.parquet(manifest_path)
-        .where(F.col("run_id") == run_id)
-        .agg(
-            F.sum("input_turns").alias("i"),
-            F.sum("output_turns").alias("o"),
-            F.sum("parse_failures").alias("f"),
-        )
-        .collect()[0]
-    )
-    result.input_turns = totals["i"] or 0
-    result.output_turns = totals["o"] or 0
-    result.parse_failures = totals["f"] or 0
+    # every manifest row of the run: SQL-sum semantics, NULLs count 0
+    rows = prior + new
+    result.input_turns = sum(r["input_turns"] or 0 for r in rows)
+    result.output_turns = sum(r["output_turns"] or 0 for r in rows)
+    result.parse_failures = sum(r["parse_failures"] or 0 for r in rows)
     result.wall_seconds = time.time() - started
     return result

@@ -10,19 +10,20 @@ North_rule requirements:
 Implementation notes for this sandbox: the metrics/manifest tables are
 parquet directories written via the same DataFrame API an Iceberg
 catalog would take (``saveAsTable``/``writeTo(...).append()`` on a real
-deployment — swap ``_append`` only). Commit protocol: data for bucket K
-is written under ``<output>/bucket=K/`` first; the manifest row for K
-is appended only after that write completes, so a crash between the
-two leaves a re-runnable (idempotent, overwritten on retry) bucket.
+deployment). Commit protocol: data for bucket K is written under
+``<output>/bucket=K/`` first; the manifest row for K is appended only
+after that write completes, so a crash between the two leaves a
+re-runnable (idempotent, overwritten on retry) bucket.
 """
 
 from __future__ import annotations
 
 import datetime
-from typing import List, Optional, Set
+from typing import List
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -45,26 +46,13 @@ MANIFEST_SCHEMA = StructType(
     ]
 )
 
-METRICS_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType()),
-        StructField("bucket", IntegerType()),
-        StructField("partition_id", IntegerType()),
-        StructField("input_turns", LongType()),
-        StructField("output_turns", LongType()),
-        StructField("parse_failures", LongType()),
-        StructField("bytes_processed", LongType()),
-        StructField("committed_at", TimestampType()),
-    ]
-)
-
 
 def bucketed_partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-(bucket, partition) lineage for EVERY bucket present, in one
     aggregation — the job's commit phase calls this once over a single
     partition-pruned read of the written output, so the metrics phase
-    costs one Spark job regardless of bucket count (a 4096-bucket run
-    must not pay 4096 sequential driver round-trips)."""
+    costs a constant number of Spark jobs whatever the bucket count (a
+    4096-bucket run must not pay 4096 sequential driver round-trips)."""
     return (
         extracted.groupBy("bucket", "_partition_id")
         .agg(
@@ -86,13 +74,17 @@ def bucketed_partition_metrics(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def committed_buckets(spark: SparkSession, manifest_path: str, run_id: str) -> Set[int]:
+def run_manifest(spark: SparkSession, manifest_path: str, run_id: str) -> List[Row]:
+    """The manifest rows of ``run_id`` (``MANIFEST_SCHEMA`` order); none
+    when no manifest exists yet. The schema is pinned, so the read runs
+    no footer-inference job."""
     try:
-        manifest = spark.read.parquet(manifest_path)
-    except Exception:  # noqa: BLE001 — no manifest yet
-        return set()
-    rows = manifest.where(F.col("run_id") == run_id).select("bucket").distinct().collect()
-    return {r["bucket"] for r in rows}
+        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return []
+    return manifest.where(F.col("run_id") == run_id).collect()
 
 
 def manifest_frame(spark: SparkSession, rows: List[tuple]) -> DataFrame:
@@ -106,7 +98,3 @@ def manifest_frame(spark: SparkSession, rows: List[tuple]) -> DataFrame:
         columns=MANIFEST_SCHEMA.fieldNames(),
     )
     return spark.createDataFrame(frame, MANIFEST_SCHEMA)
-
-
-def append_rows(spark: SparkSession, df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)

@@ -4,8 +4,8 @@ Wraps each row of the driver-provided ``documents`` table into a
 synthetic HTML article whose generic extraction is fully predictable —
 so the end-to-end extraction pipeline has an exact ANSI-SQL oracle
 (title/authors/date/topics/plaintext are all closed-form in doc_id and
-text). The Spark-side builder and the SQL fragments below MUST stay in
-lockstep.
+text). The column builders below and the oracles' inlined SQL twins in
+``__spark_entry__.py`` MUST stay in lockstep.
 """
 
 from __future__ import annotations
@@ -13,21 +13,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# --- closed-form attribute expressions (Spark Column + DuckDB SQL twins) ---
+# --- closed-form attribute expressions ---
 
 
 def title_col(doc_id: Column) -> Column:
     return F.concat(F.lit("Document "), doc_id.cast("string"))
 
 
-TITLE_SQL = "'Document ' || CAST(doc_id AS VARCHAR)"
-
-
 def author_col(doc_id: Column) -> Column:
     return F.concat(F.lit("Author "), (doc_id % 5).cast("string"))
-
-
-AUTHOR_SQL = "'Author ' || CAST(doc_id % 5 AS VARCHAR)"
 
 
 def pubdate_iso_col(doc_id: Column) -> Column:
@@ -35,18 +29,8 @@ def pubdate_iso_col(doc_id: Column) -> Column:
     return F.concat(F.date_format(d, "yyyy-MM-dd"), F.lit("T00:00:00+00:00"))
 
 
-PUBDATE_ISO_SQL = "strftime(DATE '2024-01-01' + INTERVAL (doc_id % 365) DAY, '%Y-%m-%d') || 'T00:00:00+00:00'"
-# the reference serializes datetimes via str(datetime):
-PUBDATE_STR_SQL = "strftime(DATE '2024-01-01' + INTERVAL (doc_id % 365) DAY, '%Y-%m-%d') || ' 00:00:00+00:00'"
-
-
 def keywords_col(doc_id: Column) -> Column:
     return F.concat(F.lit("k"), (doc_id % 7).cast("string"), F.lit(", shared"))
-
-
-KEYWORD1_SQL = "'k' || CAST(doc_id % 7 AS VARCHAR)"
-
-PLAINTEXT_SQL = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
 
 
 def doc_to_html(doc_id: Column, text: Column) -> Column:

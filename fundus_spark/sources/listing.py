@@ -19,7 +19,6 @@ from __future__ import annotations
 import bz2
 import gzip
 import lzma
-import re
 import xml.etree.ElementTree as ET
 from typing import Callable, Iterator, List, Optional, Pattern
 from urllib.parse import unquote, urlparse
@@ -81,9 +80,6 @@ def parse_sitemap(content: bytes) -> tuple:
                 if _local_name(child.tag) == "loc" and child.text:
                     (urls if name == "url" else sitemaps).append(child.text.strip())
     return urls, sitemaps
-
-
-_RSS_LINK = re.compile(r"<link(?:\s[^>]*)?>(.*?)</link>|<link\s[^>]*href=[\"']([^\"']+)[\"']", re.S)
 
 
 def parse_rss_links(content: bytes) -> List[str]:

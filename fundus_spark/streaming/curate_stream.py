@@ -32,9 +32,8 @@ so each trigger probes without rereading corpus text.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Dict, Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.adaptive import materialize
@@ -45,29 +44,38 @@ CORPUS_SCHEMA = "doc_id long, source string, text string"
 
 def _corpus_parts(
     spark: SparkSession, corpus_path: str, exclude_batch: Optional[str] = None
-) -> Optional[list]:
-    """Top-level corpus members as explicit paths: per-batch ``batch-N``
-    directories (streaming commits) plus any flat parquet files (direct
-    non-streaming appends). None iff the corpus directory does not
-    exist yet. Listing explicitly — instead of a recursive read — lets
-    a re-delivered trigger exclude its OWN ``batch-<exclude_batch>``
-    directory from the frozen side, which is what makes the re-run
-    idempotent (reading the crashed attempt's own survivors would make
-    the recompute drop every batch doc and commit an empty batch)."""
+) -> Dict[str, str]:
+    """Top-level corpus members as ``{name: path}``: per-batch
+    ``batch-N`` directories (streaming commits) plus any flat parquet
+    files (direct non-streaming appends); empty when the corpus
+    directory does not exist yet. Listing explicitly — instead of a
+    recursive read — lets a re-delivered trigger exclude its OWN
+    ``batch-<exclude_batch>`` directory from the frozen side, which is
+    what makes the re-run idempotent (reading the crashed attempt's own
+    survivors would make the recompute drop every batch doc and commit
+    an empty batch)."""
     jvm = spark._jvm
     path = jvm.org.apache.hadoop.fs.Path(corpus_path)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(path):
-        return None
-    parts = []
+        return {}
+    parts = {}
     for status in fs.listStatus(path):
         name = status.getPath().getName()
         if name.startswith(("_", ".")):
             continue  # _staging, _SUCCESS, hidden markers
         if exclude_batch is not None and name == f"batch-{exclude_batch}":
             continue  # exclude_batch is the full "<stream>-<id>" tag
-        parts.append(status.getPath().toString())
+        parts[name] = status.getPath().toString()
     return parts
+
+
+def _read_parts(spark: SparkSession, *paths: str) -> DataFrame:
+    """The listed corpus parts, read with the corpus schema. A part
+    that vanishes between the listing and the read raises: curating
+    against a silently emptied frozen side would re-append every batch
+    doc."""
+    return spark.read.schema(CORPUS_SCHEMA).parquet(*paths)
 
 
 def read_corpus(spark: SparkSession, corpus_path: str) -> Optional[DataFrame]:
@@ -76,37 +84,7 @@ def read_corpus(spark: SparkSession, corpus_path: str) -> Optional[DataFrame]:
     ``spark.read.parquet(corpus_path)`` would silently skip. Returns
     None iff the corpus does not exist or is empty."""
     parts = _corpus_parts(spark, corpus_path)
-    if not parts:
-        return None
-    return spark.read.schema(CORPUS_SCHEMA).parquet(*parts)
-
-
-def _read_corpus(
-    spark: SparkSession, corpus_path: str, exclude_batch: Optional[str] = None
-) -> Optional[DataFrame]:
-    """None iff the corpus does not exist yet (first trigger). The
-    catch is NARROW — PATH_NOT_FOUND only, checked by error condition —
-    so any other analysis failure on an EXISTING corpus propagates
-    instead of silently curating against an empty frozen side (which
-    would re-append every batch doc)."""
-    try:
-        parts = _corpus_parts(spark, corpus_path, exclude_batch)
-        if parts is None or not parts:
-            return None
-        return spark.read.schema(CORPUS_SCHEMA).parquet(*parts)
-    except AnalysisException as exc:
-        condition = None
-        for attr in ("getCondition", "getErrorClass"):
-            getter = getattr(exc, attr, None)
-            if getter is not None:
-                try:
-                    condition = getter()
-                    break
-                except Exception:  # noqa: BLE001 — fall through to message check
-                    pass
-        if condition == "PATH_NOT_FOUND" or (condition is None and "PATH_NOT_FOUND" in str(exc)):
-            return None
-        raise
+    return _read_parts(spark, *parts.values()) if parts else None
 
 
 def _stream_id(spark: SparkSession, checkpoint_path: str) -> str:
@@ -224,20 +202,23 @@ def curate_batch_into_corpus(
     self-healing with no correctness window. Corpus text is still the
     verify-stage source, read only for band-candidate docs."""
     tag = None if batch_id is None else f"{stream_id or 'direct'}-{batch_id}"
-    frozen = _read_corpus(spark, corpus_path, exclude_batch=tag)
-    if frozen is None:
-        frozen = spark.createDataFrame([], CORPUS_SCHEMA)
+    # ONE listing gives both the frozen side and the per-part reads. A
+    # fresh corpus is an empty relation the optimizer can see through:
+    # the false filter folds it to an empty LocalRelation and the
+    # frozen-side subtree is pruned; a bare empty createDataFrame plans
+    # as an opaque LogicalRDD, and that subtree would run on nothing.
+    parts = _corpus_parts(spark, corpus_path, exclude_batch=tag)
+    if parts:
+        frozen = _read_parts(spark, *parts.values())
+    else:
+        frozen = spark.createDataFrame([], CORPUS_SCHEMA).where("false")
     store_missing: list = []
     part_docs: dict = {}
     if frozen_store_path is not None and batch_id is not None:
         from ..plans.frozen_store import stream_frozen_relations
 
         lsh = _store_lsh(curate_kwargs)
-        parts = _corpus_parts(spark, corpus_path, exclude_batch=tag) or []
-        part_docs = {
-            p.rstrip("/").rsplit("/", 1)[-1]: spark.read.schema(CORPUS_SCHEMA).parquet(p)
-            for p in parts
-        }
+        part_docs = {name: _read_parts(spark, p) for name, p in parts.items()}
         fps, bnds, store_missing = stream_frozen_relations(
             spark, frozen_store_path, part_docs, **lsh
         )

@@ -230,6 +230,58 @@ def test_job_partial_resume_single_pass(spark, transcripts_df, tmp_path):
 
     written = sorted(d for d in os.listdir(out) if d.startswith("bucket="))
     assert written == ["bucket=1", "bucket=3"]
+    assert _totals(res) == _manifest_totals(spark, manifest, "partial")
+
+
+def _totals(res):
+    return res.input_turns, res.output_turns, res.parse_failures
+
+
+def _manifest_totals(spark, manifest, run_id):
+    """The sums over every manifest row of ``run_id``."""
+    row = (
+        spark.read.parquet(manifest)
+        .where(F.col("run_id") == run_id)
+        .agg(*(F.sum(c) for c in ("input_turns", "output_turns", "parse_failures")))
+        .collect()[0]
+    )
+    return tuple(v or 0 for v in row)
+
+
+def _job_count(spark, group, fn):
+    """``(fn(), number of Spark jobs it launched)``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("default", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_commit_reads_nothing_it_wrote(spark, transcripts_df, tmp_path):
+    """The manifest is read once per run and nothing the commit writes
+    is read back: a fresh run is the data write plus the metrics
+    materialization, its write, the per-bucket manifest aggregate and the
+    manifest append (8 jobs on this fixture; 12 when the commit re-read
+    the metrics and the manifest), and a full resume is the one manifest
+    read (6 jobs before). The totals are the sums of the run's manifest
+    rows either way."""
+    paths = [str(tmp_path / d) for d in ("out", "metrics", "manifest")]
+
+    def run():
+        return run_extraction_job(spark, transcripts_df, *paths, run_id="once", n_buckets=4, salt_partitions=8)
+
+    fresh, n_fresh = _job_count(spark, "commit_fresh", run)
+    assert n_fresh <= 8, n_fresh
+    assert sorted(fresh.buckets_run) == [0, 1, 2, 3]
+    assert _totals(fresh) == _manifest_totals(spark, paths[2], "once")
+    assert fresh.input_turns == transcripts_df.count()
+
+    resumed, n_resume = _job_count(spark, "commit_resume", run)
+    assert n_resume <= 1, n_resume
+    assert resumed.buckets_run == [] and resumed.buckets_skipped == [0, 1, 2, 3]
+    assert _totals(resumed) == _totals(fresh) == _manifest_totals(spark, paths[2], "once")
 
 
 def test_job_resume_does_not_duplicate_metrics(spark, transcripts_df, tmp_path):

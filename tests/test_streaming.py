@@ -529,6 +529,73 @@ def test_streaming_frozen_store_redelivery_stays_exactly_once(spark, tmp_path):
     assert sorted(r.doc_id for r in read_corpus(spark, corpus).collect()) == [1, 2]
 
 
+def test_first_batch_prunes_its_empty_frozen_side(spark, tmp_path):
+    """Batch 0 into a fresh corpus curates against an empty frozen side
+    the optimizer can see is empty (an empty ``LocalRelation``), so the
+    frozen-side subtree is pruned from the plan instead of running on
+    nothing: 49 jobs on this fixture, 55 against an empty
+    ``createDataFrame``. The batch: 20 distinct docs, an exact and a
+    near duplicate of doc 0, and one doc copying the benchmark's text."""
+    from fundus_spark.streaming import curate_batch_into_corpus, read_corpus
+
+    schema = "doc_id long, source string, text string"
+    docs = [(i, "s", " ".join("w%dx%d common%d" % (i, j, j % 7) for j in range(30))) for i in range(20)]
+    bench_text = " ".join("bench%d held%d out%d" % (j, j, j) for j in range(12))
+    docs += [(20, "s", docs[0][2]), (21, "s", docs[0][2].replace("w0x3", "edit3")), (22, "s", bench_text)]
+    batch = spark.createDataFrame(docs, schema)
+    bench = spark.createDataFrame([(900, "b", bench_text)], schema)
+    corpus = str(tmp_path / "corpus")
+    sc = spark.sparkContext
+    sc.setJobGroup("first_batch", "first_batch")
+    try:
+        n = curate_batch_into_corpus(
+            spark, batch, corpus, benchmark=bench, batch_id=0,
+            frozen_store_path=str(tmp_path / "store"), jaccard_threshold=0.2,
+        )
+    finally:
+        sc.setJobGroup("default", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup("first_batch"))
+    assert jobs <= 49, jobs
+    assert n == 20
+    assert sorted(r.doc_id for r in read_corpus(spark, corpus).collect()) == list(range(20))
+
+
+def test_vanished_corpus_part_raises_and_commits_nothing(spark, tmp_path, monkeypatch):
+    """A corpus part that is listed and then vanishes before the read
+    fails the batch: curating against a silently emptied frozen side
+    would re-append every doc the part held."""
+    import os
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    import fundus_spark.streaming.curate_stream as cs
+    from fundus_spark.streaming import curate_batch_into_corpus, read_corpus
+
+    schema = "doc_id long, source string, text string"
+    text = " ".join("vv%d ww%d xx%d" % (j, j, j) for j in range(12))
+    corpus = str(tmp_path / "corpus")
+    assert curate_batch_into_corpus(spark, spark.createDataFrame([(1, "s", text)], schema), corpus, batch_id=0) == 1
+    part = os.path.join(corpus, "batch-direct-0")
+    before = sorted(os.walk(corpus))
+    kept = str(tmp_path / "kept")
+    listed = cs._corpus_parts
+
+    def list_then_vanish(*args, **kwargs):
+        parts = listed(*args, **kwargs)
+        shutil.move(part, kept)
+        return parts
+
+    monkeypatch.setattr(cs, "_corpus_parts", list_then_vanish)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        curate_batch_into_corpus(spark, spark.createDataFrame([(2, "s", text)], schema), corpus, batch_id=1)
+    monkeypatch.undo()
+
+    shutil.move(kept, part)
+    assert sorted(os.walk(corpus)) == before
+    assert [r.doc_id for r in read_corpus(spark, corpus).collect()] == [1]
+
+
 def test_continuous_curation_with_frozen_store(spark, tmp_path):
     """End-to-end streaming query with frozen_store_path: same corpus
     as the storeless stream, store absorbs every batch."""
