@@ -5,7 +5,6 @@ from .extract_stage import EXTRACTION_SCHEMA, extract_articles
 from .frozen_store import (
     append_frozen_parts,
     read_frozen_state,
-    register_frozen_state,
     stream_frozen_relations,
     write_frozen_state,
 )
@@ -23,7 +22,6 @@ __all__ = [
     "extract_articles",
     "append_frozen_parts",
     "read_frozen_state",
-    "register_frozen_state",
     "stream_frozen_relations",
     "write_frozen_state",
     "ordered_turns",

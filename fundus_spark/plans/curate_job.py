@@ -110,7 +110,7 @@ def run_curate_job(
     result.rows_out = final.count()
 
     if freeze_state:
-        from .frozen_store import write_frozen_state
+        from .frozen_store import store_lsh, write_frozen_state
 
         store = os.path.join(workdir, "frozen_state")
         if "frozen" in done:
@@ -121,11 +121,8 @@ def run_curate_job(
                 store,
                 text_col=opts["text_col"],
                 id_col=opts["id_col"],
-                n_perm=opts["lsh_perm"],
-                bands=opts["lsh_bands"],
-                k=opts["shingle_k"],
-                hash_mode=opts["hash_mode"],
                 num_buckets=freeze_buckets,
+                **store_lsh(opts),
             )
             _commit_stage(workdir, "frozen")
             result.stages_run.append("frozen")

@@ -1,36 +1,40 @@
-"""Bucketed on-disk store for the frozen-corpus dedup state.
+"""Bucketed, part-keyed on-disk store for the frozen-corpus dedup state.
 
 The append-only curation contract (``plans/curate.py:curate_increment``,
 ``operators/dedup.py:incremental_assign``) probes two frozen-side
-relations on EVERY append:
+relations on EVERY append: the exact-dedup fingerprints ``(fp, part)``,
+anti-joined on ``fp``, and the LSH band relation ``(doc_id, band, key,
+part)``, equi-joined on ``(band, key)``. At the 100 TB shape these are
+billions of rows while a daily batch is tiny; once a batch is too large
+to broadcast (a bulk backfill, a re-crawl merge) the joins degrade to
+sort-merge and BOTH sides shuffle — the whole frozen state moves once
+per append. Storing both relations as tables bucketed on their join
+keys removes that cost class: the probe reads the frozen buckets in
+place (zero frozen-side Exchange, ``SelectedBucketsCount`` in the scan)
+and only the new batch shuffles, O(batch) instead of O(corpus). This is
+Spark's equivalent of the reference crawler's persistent URL-dedup
+state (``crawler.py:447-450``), in the layout the probe join wants.
 
-* the exact-dedup fingerprints — ``(fp, keep_id, n_dups)``, one row per
-  distinct frozen text, anti-joined on ``fp``;
-* the LSH band relation — ``(doc_id, band, key)``, one row per frozen
-  doc per band, equi-joined on ``(band, key)``.
+There is one store format: append-only tables whose rows are keyed by
+the corpus part (per-batch directory / flat file) they derive from, plus
+a manifest listing the absorbed parts. A whole-corpus freeze
+(:func:`write_frozen_state`) is the store with one part, ``frozen``;
+continuous curation appends a part per committed batch
+(:func:`append_frozen_parts`) and probes only rows whose part is in the
+corpus listing (:func:`stream_frozen_relations`), so
 
-At the 100 TB shape these are billions of rows, while a daily batch is
-tiny: the probe joins run as broadcast-hash joins of the NEW side and
-the frozen side is only scanned. But the moment a batch is too large to
-broadcast — a bulk backfill, a re-crawl merge — the joins degrade to
-sort-merge and BOTH sides shuffle, i.e. the entire frozen corpus state
-moves over the network once per append. Storage-level bucketing removes
-exactly that cost class: the frozen relations are written once as
-bucketed tables hashed on their join keys, so every later probe's
-sort-merge join reads the frozen buckets in place (zero frozen-side
-Exchange, ``SelectedBucketsCount`` visible in the scan) and only the
-new batch shuffles — the shuffled volume is O(batch), never O(corpus).
+* a re-delivered trigger excludes its own part and its re-append writes
+  byte-identical rows, harmless to the duplicate-insensitive probes;
+* a crash between the corpus commit and the store append leaves a part
+  with no store rows: the next trigger computes its relations on the
+  fly and re-appends them (self-healing, no correctness window);
+* stale rows of a part whose corpus directory was deleted drop out at
+  the presence filter.
 
-This is Spark's equivalent of the reference crawler's persistent
-URL-dedup state (``crawler.py:447-450`` keeps seen-URL identity across
-runs); here the persisted identity is the full text + near-dup
-fingerprint state, stored in the layout the probe join wants.
-
-Bucketed writes need a table catalog (``bucketBy`` is metadata, not
-file layout alone), so the store records a small manifest next to the
-data and :func:`register_frozen_state` re-issues the ``CREATE TABLE …
-CLUSTERED BY … INTO n BUCKETS`` DDL in any later session — the
-in-memory catalog is per-session, the parquet buckets on disk are not.
+Bucketing is catalog metadata, not file layout alone, and the catalog is
+per-session: the manifest records each table's DDL (the schema of the
+first append) and every session re-registers the bucketed tables over
+the parquet buckets on disk before reading or appending.
 """
 
 from __future__ import annotations
@@ -38,6 +42,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 from typing import Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -45,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import band_relation, exact_dedup
 
-_MANIFEST = "_FROZEN_STATE.json"
+_STREAM_PARTS = "_STREAM_PARTS.json"
 
 
 def _ddl(df: DataFrame) -> str:
@@ -60,18 +65,120 @@ def _table_prefix(path: str) -> str:
     return "frozen_" + hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:10]
 
 
-def _write_bucketed(
-    df: DataFrame, table: str, path: str, bucket_cols: Tuple[str, ...], num_buckets: int
-) -> None:
-    writer = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .option("path", path)
-    )
-    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-    writer.saveAsTable(table)
+def store_lsh(opts: dict) -> dict:
+    """The LSH keywords of this module's functions from the curation
+    chain's resolved options (:func:`plans.curate.chain_options`), so a
+    store is built and probed with the chain's own banding."""
+    keys = {"n_perm": "lsh_perm", "bands": "lsh_bands", "k": "shingle_k", "hash_mode": "hash_mode"}
+    return {kw: opts[opt] for kw, opt in keys.items()}
+
+
+def _stream_parts(store_path: str) -> dict:
+    path = os.path.join(store_path, _STREAM_PARTS)
+    if not os.path.exists(path):
+        return {"num_buckets": None, "lsh": None, "ddl": None, "parts": [], "generation": 0}
+    with open(path) as f:
+        manifest = json.load(f)
+    if "ddl" not in manifest:
+        raise ValueError(f"frozen store at {store_path} records no table DDL; rebuild it")
+    return manifest
+
+
+def _commit_stream_parts(store_path: str, manifest: dict) -> None:
+    os.makedirs(store_path, exist_ok=True)
+    path = os.path.join(store_path, _STREAM_PARTS)
+    with open(path + ".tmp", "w") as f:
+        json.dump(manifest, f, indent=2)
+    os.replace(path + ".tmp", path)
+
+
+def _stream_tables(store_path: str, generation: int = 0) -> dict:
+    # compaction bumps the generation: tables/dirs are suffixed so a
+    # compacted store swaps in atomically at the manifest commit and a
+    # crashed compaction leaves only orphan next-gen directories
+    suffix = "" if generation == 0 else f"_g{generation}"
+    prefix = _table_prefix(store_path) + "_stream"
+    return {
+        key: {
+            "table": f"{prefix}_{key}{suffix}",
+            "path": os.path.join(store_path, f"stream_{key}{suffix}"),
+            "bucket_cols": cols,
+        }
+        for key, cols in (("fps", ("fp",)), ("bands", ("band", "key")))
+    }
+
+
+def _register_stream_tables(spark: SparkSession, store_path: str, manifest: dict) -> dict:
+    """The current generation's tables, registered in THIS session's
+    catalog (idempotent). Before the first committed append there is
+    no DDL and nothing to register: whatever a crashed first append left
+    on disk is uncommitted, and the next append's ``saveAsTable``
+    creates the tables over it."""
+    tables = _stream_tables(store_path, manifest["generation"])
+    for key, spec in tables.items():
+        if manifest["ddl"] is None or spark.catalog.tableExists(spec["table"]):
+            continue
+        cols = ", ".join(spec["bucket_cols"])
+        spark.sql(
+            f"CREATE TABLE {spec['table']} ({manifest['ddl'][key]}) USING PARQUET "
+            f"CLUSTERED BY ({cols}) SORTED BY ({cols}) INTO {manifest['num_buckets']} BUCKETS "
+            f"LOCATION '{os.path.abspath(spec['path'])}'"
+        )
+    return tables
+
+
+def _write_bucketed(df: DataFrame, spec: dict, num_buckets: int, mode: str) -> None:
+    cols = spec["bucket_cols"]
+    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *cols).sortBy(*cols)
+    writer.option("path", spec["path"]).saveAsTable(spec["table"])
+
+
+def _check_lsh(manifest: dict, store_path: str, **lsh) -> dict:
+    # the first append pins the banding: mixing band keys of different
+    # LSH parameters would silently miss every cross-part candidate
+    if manifest["lsh"] is not None and manifest["lsh"] != lsh:
+        raise ValueError(
+            f"frozen store at {store_path} was created with lsh={manifest['lsh']}, "
+            f"requested lsh={lsh}"
+        )
+    return lsh
+
+
+def _part_relations(docs: DataFrame, part: Column, lsh: dict) -> Tuple[DataFrame, DataFrame]:
+    fps = exact_dedup(docs).select("fp").withColumn("part", part)
+    return fps, band_relation(docs, **lsh).withColumn("part", part)
+
+
+def append_frozen_parts(
+    spark: SparkSession,
+    store_path: str,
+    part_docs: dict,
+    n_perm: int = 8,
+    bands: int = 4,
+    k: int = 4,
+    hash_mode: str = "md5",
+    num_buckets: int = 64,
+) -> dict:
+    """Append the fp/band relations of the given corpus parts
+    (``{part_name: docs DataFrame}`` with ``doc_id`` and ``text``
+    columns) to the store and return its manifest. The first call
+    creates the bucketed tables and pins the bucket count, the LSH
+    parameters and the table DDL; later calls append with the same
+    bucket spec, and an LSH mismatch raises rather than mixing
+    incompatible band keys."""
+    manifest = _stream_parts(store_path)
+    lsh = _check_lsh(manifest, store_path, n_perm=n_perm, bands=bands, k=k, hash_mode=hash_mode)
+    manifest["num_buckets"] = manifest["num_buckets"] or num_buckets
+    tables = _register_stream_tables(spark, store_path, manifest)
+    for name, docs in part_docs.items():
+        rels = dict(zip(("fps", "bands"), _part_relations(docs, F.lit(name), lsh)))
+        manifest["ddl"] = manifest["ddl"] or {key: _ddl(df) for key, df in rels.items()}
+        for key, df in rels.items():
+            _write_bucketed(df, tables[key], manifest["num_buckets"], "append")
+    manifest["lsh"] = lsh
+    manifest["parts"] = sorted(set(manifest["parts"]) | set(part_docs))
+    _commit_stream_parts(store_path, manifest)
+    return manifest
 
 
 def write_frozen_state(
@@ -85,10 +192,10 @@ def write_frozen_state(
     hash_mode: str = "md5",
     num_buckets: int = 64,
 ) -> dict:
-    """Materialize the frozen corpus's dedup state at ``store_path`` as
-    two bucketed parquet tables (fingerprints hashed on ``fp``, band
-    relation hashed on ``(band, key)``) plus a manifest. One-time cost
-    per freeze; every later append probes these without shuffling them.
+    """Freeze a whole corpus: replace whatever store is at ``store_path``
+    with one holding ``frozen_docs`` as its single part, ``frozen``.
+    One-time cost per freeze; every later append probes these tables
+    without shuffling them.
 
     ``num_buckets`` sizes the per-bucket file count — pick so a bucket
     is a few hundred MB at the target corpus size (100 TB of text →
@@ -96,214 +203,29 @@ def write_frozen_state(
     test/bench scale). Returns the manifest dict.
     """
     spark = frozen_docs.sparkSession
-    prefix = _table_prefix(store_path)
-    fps = exact_dedup(frozen_docs, text_col=text_col, id_col=id_col)
-    bnd = band_relation(
-        frozen_docs, text_col=text_col, id_col=id_col, n_perm=n_perm, bands=bands, k=k, hash_mode=hash_mode
+    for spec in _stream_tables(store_path, _stream_parts(store_path)["generation"]).values():
+        spark.sql(f"DROP TABLE IF EXISTS {spec['table']}")
+    shutil.rmtree(store_path, ignore_errors=True)
+    docs = frozen_docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    return append_frozen_parts(
+        spark, store_path, {"frozen": docs}, n_perm=n_perm, bands=bands, k=k,
+        hash_mode=hash_mode, num_buckets=num_buckets,
     )
-    tables = {
-        "fps": {
-            "table": f"{prefix}_fps",
-            "path": os.path.join(store_path, "fps"),
-            "bucket_cols": ["fp"],
-            "ddl_schema": _ddl(fps),
-        },
-        "bands": {
-            "table": f"{prefix}_bands",
-            "path": os.path.join(store_path, "bands"),
-            "bucket_cols": ["band", "key"],
-            "ddl_schema": _ddl(bnd),
-        },
-    }
-    _write_bucketed(fps, tables["fps"]["table"], tables["fps"]["path"], ("fp",), num_buckets)
-    _write_bucketed(bnd, tables["bands"]["table"], tables["bands"]["path"], ("band", "key"), num_buckets)
-    manifest = {
-        "num_buckets": num_buckets,
-        "lsh": {"n_perm": n_perm, "bands": bands, "k": k, "hash_mode": hash_mode},
-        "tables": tables,
-    }
-    os.makedirs(store_path, exist_ok=True)
-    tmp = os.path.join(store_path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2)
-    os.replace(tmp, os.path.join(store_path, _MANIFEST))
-    return manifest
-
-
-def register_frozen_state(spark: SparkSession, store_path: str) -> dict:
-    """Re-register the store's bucketed tables in THIS session's catalog
-    (idempotent). The parquet buckets persist on disk; only the catalog
-    entry carrying the bucketing spec is session-scoped, so a fresh
-    session (a new day's append job) calls this before probing."""
-    with open(os.path.join(store_path, _MANIFEST)) as f:
-        manifest = json.load(f)
-    for spec in manifest["tables"].values():
-        if spark.catalog.tableExists(spec["table"]):
-            continue
-        cols = ", ".join(spec["bucket_cols"])
-        ddl = spec.get("ddl_schema")
-        if not ddl:
-            raise ValueError(f"manifest for {spec['table']} lacks a DDL schema")
-        abspath = os.path.abspath(spec["path"])
-        spark.sql(
-            f"CREATE TABLE {spec['table']} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({cols}) SORTED BY ({cols}) INTO {manifest['num_buckets']} BUCKETS "
-            f"LOCATION '{abspath}'"
-        )
-    return manifest
 
 
 def read_frozen_state(
     spark: SparkSession, store_path: str
 ) -> Tuple[DataFrame, DataFrame, dict]:
     """``(frozen_fps, frozen_bands, manifest)`` ready to pass to
-    :func:`plans.curate.curate_increment` / ``incremental_assign``.
-    Both are catalog-backed bucketed scans: metadata-cheap to count
-    (the broadcast guard's requirement) and exchange-free on the
-    frozen side of the probe joins."""
-    manifest = register_frozen_state(spark, store_path)
-    fps = spark.table(manifest["tables"]["fps"]["table"])
-    bnd = spark.table(manifest["tables"]["bands"]["table"])
-    return fps, bnd, manifest
-
-
-# ---------------------------------------------------------------------------
-# Streaming variant: an APPEND-ONLY bucketed store whose rows are keyed
-# by the corpus part (per-batch directory / flat file) they derive
-# from. The continuous-curation loop appends each committed batch's
-# fp/band rows after the corpus commit, and probes read only rows whose
-# part is actually present in the corpus listing — so
-#
-# * a re-delivered trigger excludes its own part (same contract as the
-#   corpus read) and its re-append writes byte-identical rows
-#   (recompute is deterministic), making duplicates harmless to the
-#   duplicate-insensitive probes (anti-join / distinct candidates);
-# * a crash AFTER the stream checkpoint commit but before the store
-#   append leaves a corpus part with no store rows — the next trigger
-#   detects it (corpus listing vs store manifest) and computes that
-#   part's relations on the fly, then the commit path re-appends it:
-#   self-healing, no correctness window;
-# * stale store rows for a part whose corpus directory was deleted
-#   (an attempt that recomputed to zero rows) are excluded by the
-#   presence filter automatically.
-# ---------------------------------------------------------------------------
-
-_STREAM_PARTS = "_STREAM_PARTS.json"
-
-
-def _stream_manifest_path(store_path: str) -> str:
-    return os.path.join(store_path, _STREAM_PARTS)
-
-
-def _stream_parts(store_path: str) -> dict:
-    path = _stream_manifest_path(store_path)
-    if not os.path.exists(path):
-        return {"num_buckets": None, "lsh": None, "parts": [], "generation": 0}
-    with open(path) as f:
-        manifest = json.load(f)
-    manifest.setdefault("generation", 0)
-    return manifest
-
-
-def _commit_stream_parts(store_path: str, manifest: dict) -> None:
-    os.makedirs(store_path, exist_ok=True)
-    tmp = _stream_manifest_path(store_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2)
-    os.replace(tmp, _stream_manifest_path(store_path))
-
-
-def _stream_tables(store_path: str, generation: int = 0) -> dict:
-    # compaction bumps the generation: tables/dirs are suffixed so a
-    # compacted store swaps in atomically at the manifest commit and a
-    # crashed compaction leaves only orphan next-gen directories
-    suffix = "" if generation == 0 else f"_g{generation}"
-    prefix = _table_prefix(store_path) + "_stream"
-    return {
-        "fps": {
-            "table": f"{prefix}_fps{suffix}",
-            "path": os.path.join(store_path, f"stream_fps{suffix}"),
-            "bucket_cols": ("fp",),
-            "ddl": "fp string, part string",
-        },
-        "bands": {
-            "table": f"{prefix}_bands{suffix}",
-            "path": os.path.join(store_path, f"stream_bands{suffix}"),
-            "bucket_cols": ("band", "key"),
-            "ddl": "doc_id bigint, band int, key string, part string",
-        },
-    }
-
-
-def _register_stream_tables(
-    spark: SparkSession, store_path: str, num_buckets: int, generation: int = 0
-) -> dict:
-    tables = _stream_tables(store_path, generation)
-    for spec in tables.values():
-        if spark.catalog.tableExists(spec["table"]):
-            continue
-        if not os.path.exists(spec["path"]):
-            continue  # nothing written yet; saveAsTable will create it
-        cols = ", ".join(spec["bucket_cols"])
-        spark.sql(
-            f"CREATE TABLE {spec['table']} ({spec['ddl']}) USING PARQUET "
-            f"CLUSTERED BY ({cols}) SORTED BY ({cols}) INTO {num_buckets} BUCKETS "
-            f"LOCATION '{os.path.abspath(spec['path'])}'"
-        )
-    return tables
-
-
-def _part_relations(
-    docs: DataFrame, part: Column, lsh: dict
-) -> Tuple[DataFrame, DataFrame]:
-    fps = exact_dedup(docs).select("fp").withColumn("part", part)
-    bnd = band_relation(
-        docs, n_perm=lsh["n_perm"], bands=lsh["bands"], k=lsh["k"], hash_mode=lsh["hash_mode"]
-    ).withColumn("part", part)
-    return fps, bnd
-
-
-def append_frozen_parts(
-    spark: SparkSession,
-    store_path: str,
-    part_docs: dict,
-    n_perm: int = 8,
-    bands: int = 4,
-    k: int = 4,
-    hash_mode: str = "md5",
-    num_buckets: int = 64,
-) -> None:
-    """Append the fp/band relations of the given corpus parts
-    (``{part_name: docs DataFrame}``) to the streaming store. First
-    call creates the bucketed tables; later calls append with the same
-    bucket spec. LSH parameters are pinned by the first append — a
-    mismatch raises rather than silently mixing incompatible band
-    keys."""
+    :func:`plans.curate.curate_increment` / ``incremental_assign``: the
+    whole store, every part. Both are catalog-backed bucketed scans:
+    metadata-cheap to count (the broadcast guard's requirement) and
+    exchange-free on the frozen side of the probe joins."""
     manifest = _stream_parts(store_path)
-    lsh = {"n_perm": n_perm, "bands": bands, "k": k, "hash_mode": hash_mode}
-    if manifest["lsh"] is not None and manifest["lsh"] != lsh:
-        raise ValueError(
-            f"streaming store at {store_path} was created with lsh={manifest['lsh']}, "
-            f"append requested lsh={lsh}"
-        )
-    if manifest["num_buckets"] is not None:
-        num_buckets = manifest["num_buckets"]
-    tables = _register_stream_tables(spark, store_path, num_buckets, manifest["generation"])
-    for name, docs in part_docs.items():
-        fps, bnd = _part_relations(docs, F.lit(name), lsh)
-        for df, spec in ((fps, tables["fps"]), (bnd, tables["bands"])):
-            (
-                df.write.mode("append")
-                .format("parquet")
-                .bucketBy(num_buckets, *spec["bucket_cols"])
-                .sortBy(*spec["bucket_cols"])
-                .option("path", spec["path"])
-                .saveAsTable(spec["table"])
-            )
-    manifest["lsh"] = lsh
-    manifest["num_buckets"] = num_buckets
-    manifest["parts"] = sorted(set(manifest["parts"]) | set(part_docs))
-    _commit_stream_parts(store_path, manifest)
+    if manifest["ddl"] is None:
+        raise ValueError(f"no frozen store at {store_path}")
+    tables = _register_stream_tables(spark, store_path, manifest)
+    return spark.table(tables["fps"]["table"]), spark.table(tables["bands"]["table"]), manifest
 
 
 def stream_frozen_relations(
@@ -329,22 +251,14 @@ def stream_frozen_relations(
     if not corpus_parts:
         return None, None, []
     manifest = _stream_parts(store_path)
-    lsh = {"n_perm": n_perm, "bands": bands, "k": k, "hash_mode": hash_mode}
-    if manifest["lsh"] is not None and manifest["lsh"] != lsh:
-        raise ValueError(
-            f"streaming store at {store_path} was created with lsh={manifest['lsh']}, "
-            f"probe requested lsh={lsh}"
-        )
-    stored = set(manifest["parts"]) & set(corpus_parts)
-    missing = sorted(set(corpus_parts) - stored)
+    lsh = _check_lsh(manifest, store_path, n_perm=n_perm, bands=bands, k=k, hash_mode=hash_mode)
+    stored = sorted(set(manifest["parts"]) & set(corpus_parts))
+    missing = sorted(set(corpus_parts) - set(stored))
     fps = bnd = None
     if stored:
-        tables = _register_stream_tables(
-            spark, store_path, manifest["num_buckets"] or 64, manifest["generation"]
-        )
-        live = sorted(stored)
-        fps = spark.table(tables["fps"]["table"]).where(F.col("part").isin(live))
-        bnd = spark.table(tables["bands"]["table"]).where(F.col("part").isin(live))
+        tables = _register_stream_tables(spark, store_path, manifest)
+        fps = spark.table(tables["fps"]["table"]).where(F.col("part").isin(stored))
+        bnd = spark.table(tables["bands"]["table"]).where(F.col("part").isin(stored))
     for name in missing:
         mfps, mbnd = _part_relations(corpus_parts[name], F.lit(name), lsh)
         fps = mfps if fps is None else fps.unionByName(mfps)
@@ -355,10 +269,10 @@ def stream_frozen_relations(
 def compact_stream_store(
     spark: SparkSession, store_path: str, live_parts: Optional[list] = None
 ) -> dict:
-    """Offline maintenance for the streaming store: rewrite both tables
-    keeping only rows of ``live_parts`` (default: the manifest's own
-    part list) and dropping exact-duplicate rows left by re-delivered
-    appends. Run while the stream is stopped.
+    """Offline maintenance for the store: rewrite both tables keeping
+    only rows of ``live_parts`` (default: the manifest's own part list)
+    and dropping exact-duplicate rows left by re-delivered appends. Run
+    while the stream is stopped.
 
     The rewrite lands in generation-suffixed tables/directories; the
     manifest commit (atomic rename) is the swap point — the stream's
@@ -367,33 +281,20 @@ def compact_stream_store(
     orphan next-generation directories (re-running cleans them by
     overwriting). Old-generation directories are deleted after the
     commit. Returns the new manifest."""
-    import shutil
-
     manifest = _stream_parts(store_path)
-    if manifest["num_buckets"] is None:
-        raise ValueError(f"no streaming store at {store_path}")
+    if manifest["ddl"] is None:
+        raise ValueError(f"no frozen store at {store_path}")
     live = sorted(set(manifest["parts"] if live_parts is None else live_parts))
-    old_gen, new_gen = manifest["generation"], manifest["generation"] + 1
-    old_tables = _register_stream_tables(spark, store_path, manifest["num_buckets"], old_gen)
-    new_tables = _stream_tables(store_path, new_gen)
+    old_tables = _register_stream_tables(spark, store_path, manifest)
+    new_tables = _stream_tables(store_path, manifest["generation"] + 1)
     for key in ("fps", "bands"):
-        src, dst = old_tables[key], new_tables[key]
-        rows = (
-            spark.table(src["table"]).where(F.col("part").isin(live)).dropDuplicates()
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {dst['table']}")
-        (
-            rows.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(manifest["num_buckets"], *dst["bucket_cols"])
-            .sortBy(*dst["bucket_cols"])
-            .option("path", dst["path"])
-            .saveAsTable(dst["table"])
-        )
-    manifest["generation"] = new_gen
+        rows = spark.table(old_tables[key]["table"]).where(F.col("part").isin(live)).dropDuplicates()
+        spark.sql(f"DROP TABLE IF EXISTS {new_tables[key]['table']}")
+        _write_bucketed(rows, new_tables[key], manifest["num_buckets"], "overwrite")
+    manifest["generation"] += 1
     manifest["parts"] = live
     _commit_stream_parts(store_path, manifest)  # the swap point
-    for key in ("fps", "bands"):
-        spark.sql(f"DROP TABLE IF EXISTS {old_tables[key]['table']}")
-        shutil.rmtree(old_tables[key]["path"], ignore_errors=True)
+    for spec in old_tables.values():
+        spark.sql(f"DROP TABLE IF EXISTS {spec['table']}")
+        shutil.rmtree(spec["path"], ignore_errors=True)
     return manifest

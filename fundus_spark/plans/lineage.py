@@ -22,7 +22,6 @@ import datetime
 from typing import List
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -78,12 +77,10 @@ def run_manifest(spark: SparkSession, manifest_path: str, run_id: str) -> List[R
     """The manifest rows of ``run_id`` (``MANIFEST_SCHEMA`` order); none
     when no manifest exists yet. The schema is pinned, so the read runs
     no footer-inference job."""
-    try:
-        manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
-    except AnalysisException as exc:
-        if exc.getCondition() != "PATH_NOT_FOUND":
-            raise
+    path = spark._jvm.org.apache.hadoop.fs.Path(manifest_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return []
+    manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
     return manifest.where(F.col("run_id") == run_id).collect()
 
 

@@ -24,10 +24,12 @@ nested directories).
 
 Scale notes: every stage inside the batch function keeps its
 documented 100 TB shape (banded probes, broadcast benchmark shingles,
-narrow gates); the frozen side's band keys are recomputed from the
-corpus read here — a production deployment passes ``frozen_bands``
-from a persisted band-key table (see ``operators.dedup.band_relation``)
-so each trigger probes without rereading corpus text.
+narrow gates). Without a store the frozen side's fingerprints and band
+keys are recomputed from the corpus text on every trigger;
+``frozen_store_path`` (see :func:`curate_batch_into_corpus`) persists
+them per corpus part in the bucketed tables of
+:mod:`plans.frozen_store`, so a steady-state trigger probes that stored
+state instead of recomputing corpus minhashes.
 """
 
 from __future__ import annotations
@@ -137,19 +139,6 @@ def _stream_id(spark: SparkSession, checkpoint_path: str) -> str:
     return sid
 
 
-def _store_lsh(curate_kwargs: dict) -> dict:
-    """The LSH parameters curate_increment will use, in the streaming
-    store's vocabulary — the store pins them so a probe/append with
-    different banding fails loudly instead of mixing key spaces."""
-    opts = chain_options(**curate_kwargs)
-    return {
-        "n_perm": opts["lsh_perm"],
-        "bands": opts["lsh_bands"],
-        "k": opts["shingle_k"],
-        "hash_mode": opts["hash_mode"],
-    }
-
-
 def curate_batch_into_corpus(
     spark: SparkSession,
     batch: DataFrame,
@@ -215,9 +204,9 @@ def curate_batch_into_corpus(
     store_missing: list = []
     part_docs: dict = {}
     if frozen_store_path is not None and batch_id is not None:
-        from ..plans.frozen_store import stream_frozen_relations
+        from ..plans.frozen_store import store_lsh, stream_frozen_relations
 
-        lsh = _store_lsh(curate_kwargs)
+        lsh = store_lsh(chain_options(**curate_kwargs))
         part_docs = {name: _read_parts(spark, p) for name, p in parts.items()}
         fps, bnds, store_missing = stream_frozen_relations(
             spark, frozen_store_path, part_docs, **lsh
@@ -267,9 +256,7 @@ def curate_batch_into_corpus(
         if n:
             to_absorb[f"batch-{tag}"] = out
         if to_absorb:
-            append_frozen_parts(
-                spark, frozen_store_path, to_absorb, **_store_lsh(curate_kwargs)
-            )
+            append_frozen_parts(spark, frozen_store_path, to_absorb, **lsh)
     return n
 
 

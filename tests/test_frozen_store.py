@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from fundus_spark.operators.dedup import _same_bucket, band_relation, exact_dedup
 from fundus_spark.plans import curate_increment, read_frozen_state, write_frozen_state
+from fundus_spark.plans.frozen_store import _stream_tables
 
 
 def _frozen_docs(spark):
@@ -73,8 +74,8 @@ def test_store_roundtrip_matches_inline_relations(spark, tmp_path):
     # stored relations carry the same rows as inline computation
     inline_fps = exact_dedup(frozen)
     inline_bands = band_relation(frozen)
-    assert {tuple(r) for r in fps.collect()} == {tuple(r) for r in inline_fps.collect()}
-    assert {tuple(r) for r in bands.collect()} == {tuple(r) for r in inline_bands.collect()}
+    assert {r.fp for r in fps.collect()} == {r.fp for r in inline_fps.collect()}
+    assert {tuple(r) for r in bands.drop("part").collect()} == {tuple(r) for r in inline_bands.collect()}
 
     key = lambda r: (r.doc_id, r.cluster_id, r.split, r.pack_offset, r.pack_bin)  # noqa: E731
     got = curate_increment(new, frozen, frozen_fps=fps, frozen_bands=bands, jaccard_threshold=0.2)
@@ -207,7 +208,7 @@ def test_store_reregisters_in_a_fresh_catalog(spark, tmp_path):
     frozen = _frozen_docs(spark)
     store = str(tmp_path / "store")
     manifest = write_frozen_state(frozen, store, num_buckets=4)
-    for spec in manifest["tables"].values():
+    for spec in _stream_tables(store, manifest["generation"]).values():
         spark.sql(f"DROP TABLE {spec['table']}")
         assert not spark.catalog.tableExists(spec["table"])
 
@@ -253,3 +254,88 @@ def test_curate_job_freeze_then_increment_lifecycle(spark, tmp_path):
     )
     want = curate_increment(new, corpus, jaccard_threshold=0.2)
     assert {key(r) for r in got.collect()} == {key(r) for r in want.collect()}
+
+
+def test_freeze_path_job_counts_pinned(spark, tmp_path):
+    """Jobs per freeze-path call on the ``_frozen_docs`` fixture: a
+    freeze (fresh or over an existing store) writes two bucketed tables
+    in 4 jobs, a read registers them with none, and the curate job's
+    freeze stage adds its writes to a fresh run and nothing to a
+    resumed one."""
+    from fundus_spark.plans import run_curate_job
+
+    frozen = _frozen_docs(spark)
+    store = str(tmp_path / "store")
+    for group in ("freeze_fresh", "freeze_again"):
+        _, jobs = _jobs(spark, group, lambda: write_frozen_state(frozen, store, num_buckets=4))
+        assert jobs == 4, (group, jobs)
+    _, jobs = _jobs(spark, "freeze_read", lambda: read_frozen_state(spark, store))
+    assert jobs == 0
+    wd = str(tmp_path / "job")
+    for group, want in (("curate_job_fresh", 31), ("curate_job_resumed", 6)):
+        run = lambda: run_curate_job(spark, frozen, wd, jaccard_threshold=0.2, freeze_state=True)  # noqa: E731
+        _, jobs = _jobs(spark, group, run)
+        assert jobs == want, (group, jobs)
+
+
+def test_freeze_then_append_is_one_store(spark, tmp_path):
+    """A freeze is the part-keyed store with one part: a later append
+    adds a second part to the same tables, and the probe over both
+    parts reads them from the store with nothing missing."""
+    from fundus_spark.plans import append_frozen_parts, stream_frozen_relations
+
+    frozen, new = _frozen_docs(spark), _new_docs(spark)
+    store = str(tmp_path / "store")
+    write_frozen_state(frozen, store, num_buckets=4)
+    manifest = append_frozen_parts(spark, store, {"batch-1": new}, num_buckets=4)
+    assert manifest["parts"] == ["batch-1", "frozen"] and manifest["num_buckets"] == 4
+    fps, bands, missing = stream_frozen_relations(spark, store, {"frozen": frozen, "batch-1": new})
+    assert missing == []
+    assert fps.count() == exact_dedup(frozen).count() + exact_dedup(new).count()
+    assert bands.count() == band_relation(frozen).count() + band_relation(new).count()
+
+
+def test_append_with_other_lsh_than_the_freeze_raises(spark, tmp_path):
+    """The freeze pins the banding; an append with other LSH parameters
+    would mix incompatible band keys, so it raises and commits nothing."""
+    from fundus_spark.plans import append_frozen_parts
+
+    store = str(tmp_path / "store")
+    write_frozen_state(_frozen_docs(spark), store, num_buckets=4)
+    with pytest.raises(ValueError, match="lsh"):
+        append_frozen_parts(spark, store, {"batch-1": _new_docs(spark)}, bands=2)
+    assert read_frozen_state(spark, store)[2]["parts"] == ["frozen"]
+
+
+def test_string_id_freeze_reregisters_with_its_own_schema(spark, tmp_path):
+    """The table DDL comes from the schema the freeze wrote, so a
+    non-long ``doc_id`` survives re-registration in a fresh catalog."""
+    frozen = _frozen_docs(spark).select(
+        F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"), "source", "text"
+    )
+    store = str(tmp_path / "store")
+    manifest = write_frozen_state(frozen, store, num_buckets=4)
+    for spec in _stream_tables(store, manifest["generation"]).values():
+        spark.sql(f"DROP TABLE {spec['table']}")
+
+    fps, bands, _ = read_frozen_state(spark, store)
+    assert dict(bands.dtypes)["doc_id"] == "string"
+    assert {r.doc_id for r in bands.select("doc_id").distinct().collect()} == {
+        r.doc_id for r in frozen.collect()
+    }
+    assert fps.count() == exact_dedup(frozen).count()
+
+
+def test_store_without_recorded_ddl_raises(spark, tmp_path):
+    """A directory without a part manifest is not a store, and a part
+    manifest without table DDL cannot be registered: both raise instead
+    of reading or overwriting the tables."""
+    import json
+
+    with pytest.raises(ValueError, match="no frozen store"):
+        read_frozen_state(spark, str(tmp_path))
+    (tmp_path / "_STREAM_PARTS.json").write_text(
+        json.dumps({"num_buckets": 4, "lsh": None, "parts": ["p"], "generation": 0})
+    )
+    with pytest.raises(ValueError, match="no table DDL"):
+        read_frozen_state(spark, str(tmp_path))
