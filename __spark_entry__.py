@@ -3333,6 +3333,7 @@ def _q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     confirm flagged docs exactly. Output gates the probe bit algebra
     (``possibly_seen`` — false positives included) AND the exact novel
     decision; re-keyed dups must probe true (no false negatives)."""
+    from fundus_spark.operators.adaptive import checkpoint
     from fundus_spark.operators.bloom import (
         bloom_build,
         bloom_dedup_increment,
@@ -3350,12 +3351,8 @@ def _q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and probe ONCE, reusing the result inside the increment — the
     # demo previously rebuilt the filter and re-ran the probe pipeline
     # per consumer (round-7 advice)
-    bloom = bloom_build(frozen, n_bits=_BLOOM_NBITS, n_hashes=_BLOOM_K).localCheckpoint(
-        eager=True
-    )
-    probed = bloom_probe(batch, bloom, n_bits=_BLOOM_NBITS, n_hashes=_BLOOM_K).localCheckpoint(
-        eager=True
-    )
+    bloom = checkpoint(bloom_build(frozen, n_bits=_BLOOM_NBITS, n_hashes=_BLOOM_K))[0]
+    probed = checkpoint(bloom_probe(batch, bloom, n_bits=_BLOOM_NBITS, n_hashes=_BLOOM_K))[0]
     novel = bloom_dedup_increment(
         frozen, batch, n_bits=_BLOOM_NBITS, n_hashes=_BLOOM_K, bloom=bloom, probed=probed
     )

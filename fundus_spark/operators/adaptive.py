@@ -28,21 +28,25 @@ the size estimate and the logical plan, and reads a partition count
 from the planner (``df.rdd`` only for narrow plans, where it runs
 nothing).
 
-Materialization policy: an operator that reads a relation more than
-once calls :func:`materialize` (or :func:`broadcast_if_small` for a
-size-guarded broadcast), never ``localCheckpoint`` and ``count`` by
-hand. A relation that :func:`is_cheap_rescan` is used as-is and
-counted; anything else is checkpointed eagerly, its row count observed
-by the same job. Only per-iteration lineage cuts in loops call
-``localCheckpoint`` directly; a deployment that must survive executor
-loss swaps in a reliable ``checkpoint`` here.
+Materialization policy: :func:`checkpoint` is the one lineage cut in
+the package, an eager ``localCheckpoint`` that observes its row count
+and any caller-named aggregates on the same job, so a check over a
+just-cut relation needs no second job. An operator that reads a
+relation more than once calls :func:`materialize` (or
+:func:`broadcast_if_small` for a size-guarded broadcast), never
+``localCheckpoint`` and ``count`` by hand: a relation that
+:func:`is_cheap_rescan` is used as-is and counted, anything else goes
+through :func:`checkpoint`. Loops that must bound their lineage or
+codegen (bpe merge chunks, connected-components rounds) call
+:func:`checkpoint` directly. A deployment that must survive executor
+loss swaps in a reliable ``checkpoint`` in that one function.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Dict, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: size-per-core threshold below which an input counts as "small": one
@@ -129,16 +133,26 @@ def is_cheap_rescan(df: DataFrame) -> bool:
     return not any(tok in plan for tok in _EXPENSIVE_TOKENS)
 
 
+def checkpoint(df: DataFrame, **observed: Column) -> Tuple[DataFrame, Dict[str, object]]:
+    """``(relation, metrics)``: ``df`` cut from its lineage by an eager
+    ``localCheckpoint``. The same job observes ``rows`` (the row count)
+    and each ``name=aggregate`` in ``observed``, so ``metrics`` maps
+    those names to their values without a second job."""
+    obs = Observation()
+    out = df.observe(
+        obs, F.count(F.lit(1)).alias("rows"), *[c.alias(k) for k, c in observed.items()]
+    ).localCheckpoint(eager=True)
+    return out, obs.get
+
+
 def materialize(df: DataFrame) -> Tuple[DataFrame, int]:
     """``(relation, row count)`` for a relation the caller reads more
-    than once: ``df`` itself when :func:`is_cheap_rescan`, else an eager
-    ``localCheckpoint`` whose row count is observed by the same job
-    (no second job to count it)."""
+    than once: ``df`` itself when :func:`is_cheap_rescan`, else
+    :func:`checkpoint`, whose job also counts the rows."""
     if is_cheap_rescan(df):
         return df, df.count()
-    obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
-    return out, int(obs.get["rows"])
+    out, metrics = checkpoint(df)
+    return out, int(metrics["rows"])
 
 
 def broadcast_if_small(df: DataFrame, max_rows: int) -> DataFrame:

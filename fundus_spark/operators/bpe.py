@@ -20,9 +20,10 @@ Scale shape — the part that survives 100 TB:
 * Merge application is a chain of LITERAL ``replace`` calls inside
   one whole-stage-codegen projection — no UDF, no Python on any
   hot path. (Production vocabularies of 32k merges chunk the chain:
-  apply ~256 merges per projection with a localCheckpoint between
-  chunks, keeping each codegen unit and the lineage bounded; the
-  driver-scale queries use tens of merges in one projection.)
+  apply ~256 merges per projection with a
+  :func:`operators.adaptive.checkpoint` between chunks, keeping each
+  codegen unit and the lineage bounded; the driver-scale queries use
+  tens of merges in one projection.)
 * The only driver-side state is the merge table itself — ``n_merges``
   rows, the persistable model — same bounded-metadata contract as the
   job manifests in ``plans/job.py``.
@@ -46,7 +47,7 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .adaptive import adaptive_repartition, materialize
+from .adaptive import adaptive_repartition, checkpoint, materialize
 
 #: symbol separator inside the spaced encoding (U+001F unit separator)
 SEP = "\x1f"
@@ -242,7 +243,7 @@ def _train_distributed(
         pat, rep = _merge_pattern(l, r)
         words = words.withColumn("s", F.replace(F.col("s"), F.lit(pat), F.lit(rep)))
         if (rank + 1) % _CHECKPOINT_EVERY == 0:
-            words = words.localCheckpoint(eager=True)
+            words = checkpoint(words)[0]
     return merges
 
 
@@ -258,9 +259,12 @@ def bpe_apply_to_vocab(
     ``chunk_size`` merges: a production 32k-merge vocabulary as ONE
     expression would blow the codegen method-size limit and the
     constant pool, while per-merge materialization pays 32k tiny jobs
-    — ~256 replaces per projection with a localCheckpoint between
-    chunks keeps each codegen unit and the lineage bounded (the
-    vocabulary relation is small; the checkpoints are cheap)."""
+    — ~256 replaces per projection with a
+    :func:`operators.adaptive.checkpoint` between chunks keeps each
+    codegen unit and the lineage bounded (the vocabulary relation is
+    small; the checkpoints are cheap). The cut is unconditional:
+    ``materialize`` would skip it on a cheap-rescan plan, and the
+    codegen bound is needed there too."""
     if chunk_size < 1:
         raise ValueError(f"chunk_size must be >= 1, got {chunk_size}")
     s = _spaced(F.col(word_col))
@@ -274,7 +278,7 @@ def bpe_apply_to_vocab(
         out = out.withColumn("_bpe_s", expr)
         col_ready = True
         if start + chunk_size < len(merge_list):
-            out = out.localCheckpoint(eager=True)
+            out = checkpoint(out)[0]
     final = F.col("_bpe_s") if col_ready else s
     # every symbol carries exactly two separators -> n = sep_count / 2
     n_tok = (

@@ -79,7 +79,7 @@ from typing import Dict, List, Optional, Sequence, Tuple, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .adaptive import adaptive_repartition, materialize
+from .adaptive import adaptive_repartition, checkpoint, materialize
 
 #: fixed-point scales: weights, features
 W_SCALE = 10_000
@@ -301,15 +301,18 @@ def quality_classifier_fit(
     """
     if method not in ("gram", "iterative"):
         raise ValueError(f"unknown method {method!r}: expected 'gram' or 'iterative'")
-    feats = materialize(classifier_features(
-        docs, text_col=text_col, id_col=id_col, label_col=label_col,
-        n_features=n_features, salt=salt, feature_mode=feature_mode,
-    ))[0]
+    feats, m = checkpoint(
+        classifier_features(
+            docs, text_col=text_col, id_col=id_col, label_col=label_col,
+            n_features=n_features, salt=salt, feature_mode=feature_mode,
+        ),
+        null_labels=F.count_if(F.col("y").isNull()),
+    )
     # a label that CASTS to null (e.g. a 'true'/'false' string column,
     # or nulls from an outer join) would silently train as y=0 in the
     # gram path — its docs enter XᵀX and n but vanish from Xᵀy (review
-    # finding). Fail fast; the scan is over the checkpointed relation.
-    if feats.where(F.col("y").isNull()).limit(1).count() > 0:
+    # finding). Fail fast; the checkpoint job counted them.
+    if m["null_labels"] > 0:
         raise ValueError(
             f"quality_classifier_fit: {label_col!r} contains values that "
             "cast to NULL — labels must be 0/1 (castable to long)"

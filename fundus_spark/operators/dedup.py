@@ -32,7 +32,7 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .adaptive import adaptive_repartition, broadcast_if_small, materialize
+from .adaptive import adaptive_repartition, broadcast_if_small, checkpoint, materialize
 
 
 def _portable_hash32(col: Column, salt: str = "", mode: str = "md5") -> Column:
@@ -382,21 +382,18 @@ def connected_components(
     one-to-two shuffles per round and O(component diameter) rounds.
     Near-dup clusters from LSH banding are quasi-cliques (diameter 2-3),
     so the loop converges in a handful of rounds even at 10^12 edges;
-    ``localCheckpoint`` after every round truncates the lineage so the
+    every round is cut by :func:`operators.adaptive.checkpoint`, so the
     plan does not grow with the iteration count (the edge relation and
-    the initial labels go through :func:`operators.adaptive.materialize`,
-    which owns the reliable-checkpoint choice). Convergence is detected
-    by counting label changes, one tiny action per round on the label
+    the initial labels go through :func:`operators.adaptive.materialize`).
+    Convergence is observed on the round's own checkpoint job, which
+    counts the labels that changed: one job per round, over the label
     relation (|nodes| rows, never the documents).
 
     Cache lifecycle: each round's eager checkpoint caches a |clustered
     nodes|-row RDD; superseded rounds are released by Spark's
     ContextCleaner once the driver-side DataFrame is garbage-collected
     (``spark.cleaner.referenceTracking``, on by default), so steady
-    state holds O(1) label snapshots. On clusters where lazy GC-driven
-    cleanup is too slow, set a checkpoint dir with
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` and make
-    the same swap in :func:`operators.adaptive.materialize` and here.
+    state holds O(1) label snapshots.
     """
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
@@ -430,13 +427,13 @@ def connected_components(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        updated = (
+        updated, m = checkpoint(
             labels.join(neighbor_min, "node", "left")
-            .select("node", F.least(F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))).alias("new_lbl"), "lbl")
-        ).localCheckpoint(eager=True)
-        changed = updated.where(F.col("new_lbl") < F.col("lbl")).limit(1).count()
+            .select("node", F.least(F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))).alias("new_lbl"), "lbl"),
+            changed=F.count_if(F.col("new_lbl") < F.col("lbl")),
+        )
         labels = updated.select("node", F.col("new_lbl").alias("lbl"))
-        if changed == 0:
+        if m["changed"] == 0:
             converged = True
             break
     if not converged:

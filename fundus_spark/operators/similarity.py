@@ -15,7 +15,7 @@
 from __future__ import annotations
 
 import math
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -127,25 +127,15 @@ def lsh_bucket_key(vec_col: Column, planes: List[List[float]]) -> Column:
     return F.concat(*bits)
 
 
-def cosine_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.9,
-    bands: int = 4,
-    rows_per_band: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    bucket_cap: Optional[int] = 1024,
-) -> DataFrame:
-    """Embedding-cosine NEAR-DUPLICATE pairs — the dedup-family twin of
-    :func:`lsh_bucketed_topk`: banded random-hyperplane LSH proposes
-    candidate pairs (asymmetric, ``a < b``, each pair once), exact
-    cosine verifies them against ``threshold``. Same two-phase shape as
-    the MinHash->Jaccard text path: the quadratic term is bounded by
-    ``bucket_cap`` sub-buckets, the exact math runs only on candidates,
-    and nothing ever forms an all-pairs join. Returns
-    ``(a, b, cos)`` with cos rounded to 4 decimals."""
+def _hyperplane_bands(
+    embeddings: DataFrame, bands: int, rows_per_band: int, dim: int,
+    id_col: str, vec_col: str, seed: int, bucket_cap: Optional[int],
+) -> Tuple[DataFrame, List[str]]:
+    """``(banded, join_cols)``: one ``(vid, vec, nrm, band, key[, sub])``
+    row per embedding and band, ``key`` the band's sign pattern over
+    ``rows_per_band`` hyperplanes. With ``bucket_cap`` each
+    ``(band, key)`` bucket is split into id-ordered sub-buckets of at
+    most ``bucket_cap`` rows; ``join_cols`` is the self-join key."""
     planes = _hyperplanes(dim, bands * rows_per_band, seed)
     band_keys = [
         F.struct(
@@ -166,6 +156,31 @@ def cosine_neardup_pairs(
         wsub = Window.partitionBy("band", "key").orderBy(F.asc("vid"))
         banded = banded.withColumn("sub", ((F.row_number().over(wsub) - 1) / F.lit(bucket_cap)).cast("int"))
         join_cols.append("sub")
+    return banded, join_cols
+
+
+def cosine_neardup_pairs(
+    embeddings: DataFrame,
+    threshold: float = 0.9,
+    bands: int = 4,
+    rows_per_band: int = 2,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    bucket_cap: Optional[int] = 1024,
+) -> DataFrame:
+    """Embedding-cosine NEAR-DUPLICATE pairs — the dedup-family twin of
+    :func:`lsh_bucketed_topk`: banded random-hyperplane LSH proposes
+    candidate pairs (asymmetric, ``a < b``, each pair once), exact
+    cosine verifies them against ``threshold``. Same two-phase shape as
+    the MinHash->Jaccard text path: the quadratic term is bounded by
+    ``bucket_cap`` sub-buckets, the exact math runs only on candidates,
+    and nothing ever forms an all-pairs join. Returns
+    ``(a, b, cos)`` with cos rounded to 4 decimals."""
+    banded, join_cols = _hyperplane_bands(
+        embeddings, bands, rows_per_band, dim, id_col, vec_col, seed, bucket_cap
+    )
     # Score INSIDE the band join and dedup afterwards on (a, b, cos):
     # the cross-band dedup shuffle then carries ~24 bytes per candidate
     # instead of both 64-dim vectors (~1 KB) — shuffle the proxy, not
@@ -318,26 +333,9 @@ def lsh_bucketed_topk(
     * Candidate (query, cand) pairs are deduped across bands BEFORE the
       cosine, so each pair is scored once.
     """
-    planes = _hyperplanes(dim, bands * rows_per_band, seed)
-    band_keys = [
-        F.struct(
-            F.lit(b).alias("band"),
-            lsh_bucket_key(F.col("vec"), planes[b * rows_per_band : (b + 1) * rows_per_band]).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    banded = (
-        adaptive_repartition(embeddings, cols=(id_col,)).select(
-            F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), _norm(F.col(vec_col)).alias("nrm")
-        )
-        .select("vid", "vec", "nrm", F.explode(F.array(*band_keys)).alias("bk"))
-        .select("vid", "vec", "nrm", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    banded, join_cols = _hyperplane_bands(
+        embeddings, bands, rows_per_band, dim, id_col, vec_col, seed, bucket_cap
     )
-    join_cols = ["band", "key"]
-    if bucket_cap is not None:
-        wsub = Window.partitionBy("band", "key").orderBy(F.asc("vid"))
-        banded = banded.withColumn("sub", ((F.row_number().over(wsub) - 1) / F.lit(bucket_cap)).cast("int"))
-        join_cols.append("sub")
     candidates = (
         banded.alias("l")
         .join(banded.alias("r"), join_cols)

@@ -14,8 +14,7 @@ Two row populations:
   (seeded, fully deterministic) with a Zipf-ish conversation-size
   distribution so a few "hot" conv_ids own most turns (skew fixture).
 
-No Spark imports here; emits plain row dicts / pandas DataFrames and
-can write parquet via pyarrow.
+No Spark imports here; emits plain row dicts.
 """
 
 from __future__ import annotations
@@ -160,22 +159,3 @@ def build_transcripts(n_bulk_turns: int = 200, seed: int = 42, include_golden: b
     rows.extend(bulk_rows(n_bulk_turns, seed=seed))
     return rows
 
-
-def write_transcripts_parquet(path: str, n_bulk_turns: int = 200, seed: int = 42, include_golden: bool = True) -> int:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rows = build_transcripts(n_bulk_turns=n_bulk_turns, seed=seed, include_golden=include_golden)
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us")),
-        ]
-    )
-    table = pa.Table.from_pylist(rows, schema=schema)
-    pq.write_table(table, path)
-    return len(rows)
