@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .adaptive import broadcast_if_small
+from .dedup import normalized_text, text_fingerprint
 
 #: bits per filter word. 32 (not 64) so the per-bit contribution
 #: ``1 << bit`` stays strictly positive in a signed BIGINT in BOTH
@@ -81,11 +82,6 @@ def bloom_positions(key: Column, n_bits: int, n_hashes: int) -> Column:
     )[0]
 
 
-def _normalized_key(text_col: str) -> Column:
-    """The same whitespace-normalized content key ``exact_dedup`` uses."""
-    return F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
-
-
 def bloom_build(
     df: DataFrame,
     text_col: str = "text",
@@ -104,7 +100,7 @@ def bloom_build(
     contribute no bits (they previously leaked one junk
     ``(NULL, NULL)`` word row into the filter relation).
     """
-    key = _normalized_key(text_col)
+    key = normalized_text(text_col)
     pos = df.where(key.isNotNull()).select(
         F.explode(bloom_positions(key, n_bits, n_hashes)).alias("pos")
     )
@@ -165,7 +161,7 @@ def bloom_probe(
     probes ``possibly_seen = false`` EXPLICITLY rather than silently
     vanishing from the output (the old explode dropped its row).
     """
-    key = _normalized_key(text_col)
+    key = normalized_text(text_col)
     pos = batch.where(key.isNotNull()).select(
         F.col(id_col).alias("doc_id"),
         F.explode(bloom_positions(key, n_bits, n_hashes)).alias("pos"),
@@ -243,10 +239,10 @@ def bloom_dedup_increment(
     else:
         probed = probed.select("doc_id", "possibly_seen")
     batch_fp = batch.select(
-        F.col(id_col).alias("doc_id"), F.md5(_normalized_key(text_col)).alias("fp")
+        F.col(id_col).alias("doc_id"), text_fingerprint(text_col).alias("fp")
     ).join(probed, "doc_id")
     clear = batch_fp.where(~F.col("possibly_seen")).select("doc_id")
     flagged = batch_fp.where(F.col("possibly_seen"))
-    frozen_fp = frozen.select(F.md5(_normalized_key(text_col)).alias("fp")).distinct()
+    frozen_fp = frozen.select(text_fingerprint(text_col).alias("fp")).distinct()
     confirmed_novel = flagged.join(frozen_fp, "fp", "left_anti").select("doc_id")
     return clear.unionByName(confirmed_novel)

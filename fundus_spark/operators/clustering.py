@@ -26,37 +26,24 @@ each component is scaled by 10^6 and rounded to BIGINT once at fit
 entry (``round-half-up``, portable), the aggregation sums INTEGERS
 (exact, order-independent), and the only floating division happens at
 one point — sum/(count*10^6) — with identical IEEE operands in both
-engines. Assignment ties (exactly equal dots) break toward the lower
-cell id via lexicographic struct ordering, as in ``ivf_topk``.
+engines. Assignment is :func:`similarity.ranked_cells`, the same
+centroid ranking ``ivf_topk`` and ``semantic_dedup`` use, so exactly
+equal dots (an all-zero vector ties every cell) go to the lower cell
+id, as the oracle's ``ORDER BY s DESC, i ASC`` does.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .adaptive import materialize
-from .similarity import _dot, ivf_centroids, lit_double_array
+from .similarity import ivf_centroids, ranked_cells
 
 #: fixed-point scale for the exact integer centroid update
 _FP_SCALE = 1_000_000
-
-
-def _argmax_cell(vec_col, cents: Sequence[Sequence[float]]):
-    """argmax-dot cell id over literal centroids; ties -> lower id
-    (same reverse(sort_array(struct(s, i)))[0] device as ivf_topk)."""
-    scores = F.array(
-        *[
-            F.struct(
-                _dot(vec_col, lit_double_array(c)).alias("s"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(cents)
-        ]
-    )
-    return F.reverse(F.sort_array(scores))[0]["i"]
 
 
 def kmeans_fit(
@@ -95,7 +82,7 @@ def kmeans_fit(
         # for |qvec| < 2^52), so argmax parity is bit-for-bit
         dv = F.transform(F.col("qvec"), lambda x: x.cast("double") / F.lit(float(_FP_SCALE)))
         assigned = q.select(
-            "vid", "qvec", _argmax_cell(dv, cents).alias("cell")
+            "vid", "qvec", ranked_cells(dv, cents)[0]["i"].alias("cell")
         )
         sums = (
             assigned.select("cell", F.posexplode("qvec").alias("pos", "v"))
@@ -137,11 +124,12 @@ def assign_to_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Assign every vector to its argmax-dot centroid — the narrow
-    projection a fitted codebook turns cluster assignment into.
+    """Assign every vector to its argmax-dot centroid (ties toward the
+    lower cell id) — the narrow projection a fitted codebook turns
+    cluster assignment into.
     ``centroids`` is the collected model (k×d floats)."""
     return embeddings.select(
         F.col(id_col),
         F.col(vec_col),
-        _argmax_cell(F.col(vec_col), centroids).alias("cell"),
+        ranked_cells(F.col(vec_col), centroids)[0]["i"].alias("cell"),
     )

@@ -19,15 +19,19 @@ Scale notes (the part the judge grades):
   (distinct-shingle intersection/union), the classic
   LSH-candidates -> exact-verify two-phase design.
 
-Each near-dup step is written once: ``_same_bucket`` is the band-bucket
-join behind both the LSH self-join and the incremental new x frozen
-probe, and ``_verify_pairs`` is the exact Jaccard verify behind both
+Each near-dup step is written once: ``text_fingerprint`` is the md5 of
+the whitespace-normalized text (``normalized_text``) behind every exact
+dedup, bloom key and frozen fingerprint; ``explode_bands`` is the per-band
+key explode behind the minhash bands, the simhash blocks and the
+embedding hyperplane bands; ``_same_bucket`` is the band-bucket join
+behind both the LSH self-join and the incremental new x frozen probe,
+and ``_verify_pairs`` is the exact Jaccard verify behind both
 ``ngram_jaccard_pairs(candidates=…)`` and ``incremental_assign``.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -75,12 +79,30 @@ def word_shingles(text_col: Column, k: int = 4) -> Column:
     )[0]
 
 
+def normalized_text(text_col: str) -> Column:
+    """``text_col`` with every whitespace run collapsed to one space and
+    the ends trimmed: the content key of exact dedup."""
+    return F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
+
+
+def text_fingerprint(text_col: str) -> Column:
+    """md5 of :func:`normalized_text`: the portable content fingerprint."""
+    return F.md5(normalized_text(text_col))
+
+
+def explode_bands(df: DataFrame, keys: Sequence[Column], *cols: str) -> DataFrame:
+    """``(*cols, band, key)``: one row per row of ``df`` and band ``b``,
+    ``key`` the value of ``keys[b]`` on that row — the banded relation a
+    ``(band, key)`` bucket join reads."""
+    bk = F.explode(F.array(*[F.struct(F.lit(b).alias("band"), key.alias("key")) for b, key in enumerate(keys)]))
+    return df.select(*cols, bk.alias("bk")).select(*cols, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """First-wins exact dedup (reference ``only_unique`` semantics,
     ``crawler.py:447-450``): keep the smallest id per normalized text."""
-    normalized = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
     return (
-        df.select(F.md5(normalized).alias("fp"), F.col(id_col))
+        df.select(text_fingerprint(text_col).alias("fp"), F.col(id_col))
         .groupBy("fp")
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).cast("long").alias("n_dups"))
     )
@@ -138,22 +160,11 @@ def band_relation(
     the existing corpus without recomputing its signatures."""
     rows_per_band = n_perm // bands
     sig = minhash_signatures(df, text_col, id_col, n_perm, k, hash_mode=hash_mode, shingles=shingles)
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(",", *[F.col("signature")[b * rows_per_band + r] for r in range(rows_per_band)]).alias(
-                            "key"
-                        ),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    keys = [
+        F.concat_ws(",", *[F.col("signature")[b * rows_per_band + r] for r in range(rows_per_band)])
+        for b in range(bands)
+    ]
+    return explode_bands(sig, keys, "doc_id")
 
 
 def lsh_candidate_pairs(
@@ -387,7 +398,8 @@ def connected_components(
     the initial labels go through :func:`operators.adaptive.materialize`).
     Convergence is observed on the round's own checkpoint job, which
     counts the labels that changed: one job per round, over the label
-    relation (|nodes| rows, never the documents).
+    relation (|nodes| rows, never the documents). An empty pair relation
+    returns no rows after the one job that counts its edges.
 
     Cache lifecycle: each round's eager checkpoint caches a |clustered
     nodes|-row RDD; superseded rounds are released by Spark's
@@ -408,7 +420,9 @@ def connected_components(
     # propagation round re-executes the whole upstream pair-producing
     # pipeline (LSH banding + verify) inside its join — measured 43s ->
     # 9s on the sf0.1 curation chain
-    edges = materialize(edges)[0]
+    edges, n_edges = materialize(edges)
+    if n_edges == 0:
+        return edges.where(F.lit(False)).select(F.col("src").alias("doc_id"), F.col("dst").alias("cluster_id"))
     # fused first round: the identity labeling's first propagation is
     # exactly min(own id, neighbor ids), which one groupBy over the
     # edge relation computes directly — saving the identity-label
@@ -623,7 +637,8 @@ def simhash_neardup_pairs(
     space is ~2^16 and buckets stay small; a corpus-hot block value
     (e.g. all-zero signatures from empty docs) is the skew key, so
     filter empty/trivial docs upstream. Shuffles: one groupBy(doc) for
-    the signature, one equi-join on (block, key), one distinct.
+    the signature, one equi-join on (band, key) with each bit block a
+    band (:func:`explode_bands`), one distinct.
     """
     nblocks = max_hamming + 1
     sig = simhash(df, text_col, id_col, bits, hash_mode)
@@ -635,24 +650,11 @@ def simhash_neardup_pairs(
         starts.append(off)
         widths.append(w)
         off += w
-    blocked = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("block"),
-                        F.shiftright(F.col("simhash"), starts[b]).bitwiseAND(F.lit(2 ** widths[b] - 1)).alias("key"),
-                    )
-                    for b in range(nblocks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", F.col("bk.block").alias("block"), F.col("bk.key").alias("key"))
+    keys = [F.shiftright(F.col("simhash"), starts[b]).bitwiseAND(F.lit(2 ** widths[b] - 1)) for b in range(nblocks)]
+    blocked = explode_bands(sig, keys, "doc_id", "simhash")
     cand = (
         blocked.alias("l")
-        .join(blocked.alias("r"), ["block", "key"])
+        .join(blocked.alias("r"), ["band", "key"])
         .where(F.col("l.doc_id") < F.col("r.doc_id"))
         .select(
             F.col("l.doc_id").alias("a"),
@@ -871,9 +873,7 @@ def remove_dup_substrings(
 
     base = df.select(
         F.col(id_col).alias("doc_id"),
-        F.substring(
-            F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), 1, max_chars
-        ).alias("t"),
+        F.substring(normalized_text(text_col), 1, max_chars).alias("t"),
     )
     fps = winnowing_fingerprints(
         df, k=k, window=window, max_chars=max_chars, text_col=text_col,

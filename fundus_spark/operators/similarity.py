@@ -1,26 +1,36 @@
-"""Similarity search over the ``embeddings`` table
-(``vec_id, embedding: array<float>, label``).
+"""Similarity search and embedding dedup over the ``embeddings`` table
+(``vec_id, embedding: array<float>, label``). Every operator is JVM
+column algebra (``F.zip_with``/``F.aggregate``; no Python):
 
-* **cosine_topk** — brute-force exact top-k neighbors per query via
-  ``F.zip_with``/``F.aggregate`` column algebra (JVM-side; no Python).
-  The cross join is the O(n·q) baseline; at scale you bound q (query
-  batch) and broadcast it, so the big side streams once.
-* **lsh_bucketed_topk** — random-hyperplane LSH: deterministic
-  md5-seeded hyperplanes, sign-pattern bucket key, candidates only
-  within matching buckets (multi-probe = exact bucket here). The scale
-  path: shuffle keys are small bucket ids; each bucket's local top-k
-  is a bounded group.
+* **cosine_topk** — brute-force exact top-k per query; the cross join
+  is the O(n·q) baseline, with the bounded query side broadcast.
+* **quantized_topk** — the same ranking over int8-quantized vectors
+  (:func:`quantize_embeddings`), scores rounded before ranking.
+* **lsh_bucketed_topk** / **cosine_neardup_pairs** — banded random-
+  hyperplane LSH: candidates only within matching ``(band, key)``
+  buckets, the quadratic term bounded by ``bucket_cap`` sub-buckets.
+* **ivf_topk** / **semantic_dedup** — coarse-quantizer cells: each
+  vector goes to its best centroid, pairs are scored within cells only,
+  and each inverted list is truncated to its first ``cell_cap`` ids.
+
+Each concept is written once: :func:`ranked_cells` is the centroid
+ranking (ties toward the lower cell id), ``_cos`` the pair cosine (NULL
+for a zero vector), ``_first_per_cell`` the inverted-list cap,
+``relational.grouped_topk`` every per-query top-k and
+``dedup.explode_bands`` the band explode.
 """
 
 from __future__ import annotations
 
 import math
-from typing import List, Optional, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .adaptive import adaptive_repartition, broadcast_if_small, materialize
+from .dedup import explode_bands
+from .relational import grouped_topk
 
 
 def lit_double_array(vals) -> Column:
@@ -46,8 +56,47 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _cos(a: str, b: str) -> Column:
+    """Cosine of the pair whose columns are ``<a>vec``/``<a>nrm`` and
+    ``<b>vec``/``<b>nrm``, over norms computed once per vector: computing
+    them inside the pair loop costs two extra interpreted array folds
+    per pair (higher-order functions are not codegen'd). A zero vector
+    has norm 0 and its cosine is NULL, as in DuckDB's ``x / 0.0``; NULL
+    sorts last under a descending rank and fails every threshold, so a
+    zero vector is never a neighbour and never a near-duplicate."""
+    return F.try_divide(_dot(F.col(f"{a}vec"), F.col(f"{b}vec")), F.col(f"{a}nrm") * F.col(f"{b}nrm"))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, rank, cand_id)``: the ``k`` best ``cos`` per query,
+    ties toward the lower ``cand_id``."""
+    return grouped_topk(scored, ["query_id"], "cos", k, tiebreak_col="cand_id").select(
+        "query_id", "rank", "cand_id"
+    )
+
+
+def ranked_cells(vec: Column, cents: Sequence[Sequence[float]]) -> Column:
+    """Every centroid cell best-first by dot with ``vec``: an array of
+    ``struct(s, neg_i, i)``, sorted ascending and reversed, so exactly
+    equal dots rank the lower cell id ``i`` first, as ``ORDER BY s
+    DESC, i ASC`` does. ``[0]["i"]`` is the argmax cell."""
+    scores = F.array(
+        *[
+            F.struct(_dot(vec, lit_double_array(c)).alias("s"), F.lit(-i).alias("neg_i"), F.lit(i).alias("i"))
+            for i, c in enumerate(cents)
+        ]
+    )
+    return F.reverse(F.sort_array(scores))
+
+
+def _first_per_cell(df: DataFrame, id_col: str, cap: Optional[int]) -> DataFrame:
+    """``df`` with each ``cell``'s inverted list truncated to its first
+    ``cap`` members by ``id_col`` (deterministic, so the SQL oracle
+    recomputes the identical cut); ``None`` keeps every member."""
+    if cap is None:
+        return df
+    w = Window.partitionBy("cell").orderBy(F.asc(id_col))
+    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= cap).drop("_rn")
 
 
 def cosine_topk(
@@ -69,7 +118,7 @@ def cosine_topk(
     skip the check (e.g. when the caller already knows the bound).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), _norm(F.col(vec_col)).alias("qnorm")
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), _norm(F.col(vec_col)).alias("qnrm")
     )
     if broadcast_queries:
         if max_queries is not None and q.limit(max_queries + 1).count() > max_queries:
@@ -78,28 +127,15 @@ def cosine_topk(
                 "brute force would not broadcast — use lsh_bucketed_topk for large query sets"
             )
         q = F.broadcast(q)
-    # norms are precomputed ONCE per vector on each side: computing
-    # them inside the pair loop costs two extra interpreted array folds
-    # PER PAIR (higher-order functions are not codegen'd) — 3x the hot
-    # path for identical arithmetic.
     corpus = adaptive_repartition(embeddings, cols=(id_col,)).select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"), _norm(F.col(vec_col)).alias("cnorm")
+        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"), _norm(F.col(vec_col)).alias("cnrm")
     )
     scored = (
         corpus.crossJoin(q)
         .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (_dot(F.col("cvec"), F.col("qvec")) / (F.col("cnorm") * F.col("qnorm"))).alias("cos"),
-        )
+        .select("query_id", "cand_id", _cos("q", "c").alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id")
-    )
+    return _topk(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> List[List[float]]:
@@ -137,19 +173,12 @@ def _hyperplane_bands(
     ``(band, key)`` bucket is split into id-ordered sub-buckets of at
     most ``bucket_cap`` rows; ``join_cols`` is the self-join key."""
     planes = _hyperplanes(dim, bands * rows_per_band, seed)
-    band_keys = [
-        F.struct(
-            F.lit(b).alias("band"),
-            lsh_bucket_key(F.col("vec"), planes[b * rows_per_band : (b + 1) * rows_per_band]).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    banded = (
+    banded = explode_bands(
         adaptive_repartition(embeddings, cols=(id_col,)).select(
             F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), _norm(F.col(vec_col)).alias("nrm")
-        )
-        .select("vid", "vec", "nrm", F.explode(F.array(*band_keys)).alias("bk"))
-        .select("vid", "vec", "nrm", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        ),
+        [lsh_bucket_key(F.col("vec"), planes[b * rows_per_band : (b + 1) * rows_per_band]) for b in range(bands)],
+        "vid", "vec", "nrm",
     )
     join_cols = ["band", "key"]
     if bucket_cap is not None:
@@ -198,9 +227,7 @@ def cosine_neardup_pairs(
         .select(
             F.col("l.vid").alias("a"),
             F.col("r.vid").alias("b"),
-            F.round(
-                _dot(F.col("l.vec"), F.col("r.vec")) / (F.col("l.nrm") * F.col("r.nrm")), 4
-            ).alias("cos"),
+            F.round(_cos("l.", "r."), 4).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
         .dropDuplicates(["a", "b"])
@@ -254,55 +281,29 @@ def ivf_topk(
     (one narrow pass) — and probe against the stored inverted lists;
     the oracle-gated query keeps the self-contained shape so every
     stage stays recomputable by the SQL twin."""
-    cents = ivf_centroids(dim, n_centroids, seed)
-    scores = F.array(
-        *[
-            F.struct(
-                _dot(F.col("vec"), lit_double_array(c)).alias("s"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(cents)
-        ]
-    )
-    # sort_array on struct(s, i) ascending -> reverse for best-first;
-    # ties (exactly equal dots) break toward the LOWER centroid id on
-    # both engines because (s, i) sorts lexicographically.
-    ranked = F.reverse(F.sort_array(scores))
     base = adaptive_repartition(embeddings, cols=(id_col,)).select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
-    ).withColumn("_ranked", ranked)
-    assigned = base.select("vid", "vec", F.col("_ranked")[0]["i"].alias("cell"))
-    cand_side = assigned.select(
-        F.col("vid").alias("cand_id"), F.col("vec").alias("cvec"), _norm(F.col("vec")).alias("cnorm"), "cell"
+    ).withColumn("_ranked", ranked_cells(F.col("vec"), ivf_centroids(dim, n_centroids, seed)))
+    # the standard IVF list-length cap: a hot cell costs
+    # n_probe*cell_cap per query instead of |cell|
+    cand_side = _first_per_cell(
+        base.select(
+            F.col("vid").alias("cand_id"), F.col("vec").alias("cvec"), _norm(F.col("vec")).alias("cnrm"),
+            F.col("_ranked")[0]["i"].alias("cell"),
+        ),
+        "cand_id", cell_cap,
     )
-    if cell_cap is not None:
-        # bound per-cell fan-out by TRUNCATING the inverted list to its
-        # first cell_cap members (deterministic by id, so the SQL
-        # oracle recomputes the identical cut) — the standard IVF
-        # list-length cap; a hot cell costs n_probe*cell_cap per query
-        # instead of |cell|.
-        wcell = Window.partitionBy("cell").orderBy(F.asc("cand_id"))
-        cand_side = (
-            cand_side.withColumn("_rn", F.row_number().over(wcell))
-            .where(F.col("_rn") <= cell_cap)
-            .drop("_rn")
-        )
     probes = base.select(
         F.col("vid").alias("query_id"),
         F.col("vec").alias("qvec"),
-        _norm(F.col("vec")).alias("qnorm"),
+        _norm(F.col("vec")).alias("qnrm"),
         F.explode(F.slice("_ranked", 1, n_probe)).alias("probe"),
-    ).select("query_id", "qvec", "qnorm", F.col("probe")["i"].alias("cell"))
+    ).select("query_id", "qvec", "qnrm", F.col("probe")["i"].alias("cell"))
     joined = probes.join(cand_side, "cell").where(F.col("query_id") != F.col("cand_id"))
-    scored = joined.select(
-        "query_id",
-        "cand_id",
-        (_dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-    ).dropDuplicates(["query_id", "cand_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k).select(
-        "query_id", "rank", "cand_id"
+    scored = joined.select("query_id", "cand_id", _cos("q", "c").alias("cos")).dropDuplicates(
+        ["query_id", "cand_id"]
     )
+    return _topk(scored, k)
 
 
 def lsh_bucketed_topk(
@@ -345,20 +346,12 @@ def lsh_bucketed_topk(
             F.col("r.vid").alias("cand_id"),
             F.col("l.vec").alias("qvec"),
             F.col("r.vec").alias("cvec"),
-            F.col("l.nrm").alias("qnorm"),
-            F.col("r.nrm").alias("cnorm"),
+            F.col("l.nrm").alias("qnrm"),
+            F.col("r.nrm").alias("cnrm"),
         )
         .dropDuplicates(["query_id", "cand_id"])
     )
-    scored = candidates.select(
-        "query_id",
-        "cand_id",
-        (_dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm"))).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k).select(
-        "query_id", "rank", "cand_id"
-    )
+    return _topk(candidates.select("query_id", "cand_id", _cos("q", "c").alias("cos")), k)
 
 
 def quantize_embeddings(
@@ -417,29 +410,18 @@ def quantized_topk(
     )
     q_ids = queries.select(F.col(id_col).alias("_qid"))
     corpus = dq.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"), _norm(F.col(vec_col)).alias("cnorm")
+        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cvec"), _norm(F.col(vec_col)).alias("cnrm")
     )
     qside = (
         dq.join(F.broadcast(q_ids), dq[id_col] == q_ids["_qid"], "left_semi")
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), _norm(F.col(vec_col)).alias("qnorm"))
+        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), _norm(F.col(vec_col)).alias("qnrm"))
     )
     scored = (
         corpus.crossJoin(F.broadcast(qside))
         .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(
-                _dot(F.col("cvec"), F.col("qvec")) / (F.col("cnorm") * F.col("qnorm")), round_decimals
-            ).alias("cos"),
-        )
+        .select("query_id", "cand_id", F.round(_cos("q", "c"), round_decimals).alias("cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id")
-    )
+    return _topk(scored, k)
 
 
 def semantic_dedup(
@@ -497,17 +479,8 @@ def semantic_dedup(
         if centroids is not None
         else ivf_centroids(dim, n_centroids, seed)
     )
-    scores = F.array(
-        *[
-            F.struct(
-                _dot(F.col("vec"), lit_double_array(c)).alias("s"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(cents)
-        ]
-    )
     base = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-    assigned = base.withColumn("cell", F.reverse(F.sort_array(scores))[0]["i"])
+    assigned = base.withColumn("cell", ranked_cells(F.col("vec"), cents)[0]["i"])
     # materialize the assignment ONCE: three consumers follow (both
     # sides of the within-cell pair join and the output join-back), and
     # each would otherwise re-plan and re-execute the k x dim literal
@@ -519,16 +492,10 @@ def semantic_dedup(
     # the within-cell pair join is quadratic per cell — compute-bound,
     # not byte-bound — so keep it parallel when the (small) checkpointed
     # assignment would otherwise ride one byte-coalesced partition
-    members = adaptive_repartition(assigned, cols=("cell",)).select(
-        "vid", "vec", _norm(F.col("vec")).alias("nrm"), "cell"
+    members = _first_per_cell(
+        adaptive_repartition(assigned, cols=("cell",)).select("vid", "vec", _norm(F.col("vec")).alias("nrm"), "cell"),
+        "vid", cell_cap,
     )
-    if cell_cap is not None:
-        wcell = Window.partitionBy("cell").orderBy(F.asc("vid"))
-        members = (
-            members.withColumn("_rn", F.row_number().over(wcell))
-            .where(F.col("_rn") <= cell_cap)
-            .drop("_rn")
-        )
     a = members.select(
         F.col("vid").alias("a_id"), F.col("vec").alias("avec"), F.col("nrm").alias("anrm"), "cell"
     )
@@ -538,13 +505,7 @@ def semantic_dedup(
     pruned = (
         a.join(b, "cell")
         .where(F.col("a_id") < F.col("b_id"))
-        .where(
-            F.round(
-                _dot(F.col("avec"), F.col("bvec")) / (F.col("anrm") * F.col("bnrm")),
-                round_decimals,
-            )
-            >= threshold
-        )
+        .where(F.round(_cos("a", "b"), round_decimals) >= threshold)
         .groupBy("b_id")
         .agg(F.min("a_id").alias("pruned_by"))
     )

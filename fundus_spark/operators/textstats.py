@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.langdata import STOPWORDS as _LANG_STOPWORDS
+from .dedup import normalized_text, text_fingerprint
+from .relational import grouped_topk
 
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "that", "was"]
 
@@ -126,8 +128,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic content fingerprint: md5 of the
     whitespace-normalized text (portable across engines)."""
-    normalized = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    return df.select("doc_id", F.md5(normalized).alias("fp"))
+    return df.select("doc_id", text_fingerprint(text_col).alias("fp"))
 
 
 def winnowing_fingerprints(
@@ -180,8 +181,7 @@ def winnowing_fingerprints(
 
     from .adaptive import adaptive_repartition
 
-    normalized = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    clipped = F.substring(normalized, 1, max_chars)
+    clipped = F.substring(normalized_text(text_col), 1, max_chars)
     ng = F.length("_wt") - F.lit(k - 1)
     # the per-character hash projection below is the compute-bound part;
     # lift a small under-partitioned input to full parallelism first
@@ -577,8 +577,6 @@ def tfidf_topk(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k:
     window top-k (WindowGroupLimit pushes the rank filter below the
     sort at 100 TB). N is one count on the input relation.
     """
-    from pyspark.sql import Window
-
     # corpus size as a lazy scalar aggregate (no eager .count() job,
     # no extra scan; see bigram_logprob_score note)
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -593,11 +591,8 @@ def tfidf_topk(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k:
         "term",
         F.round(F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")), 6).alias("tfidf"),
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "term", "tfidf", F.col("rank").cast("long").alias("rank"))
+    return grouped_topk(scored, ["doc_id"], "tfidf", k, tiebreak_col="term").select(
+        "doc_id", "term", "tfidf", F.col("rank").cast("long").alias("rank")
     )
 
 

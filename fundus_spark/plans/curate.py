@@ -72,7 +72,7 @@ from ..operators import (
     split_assign,
 )
 from ..operators.adaptive import broadcast_if_small, materialize
-from ..operators.dedup import shingle_relation
+from ..operators.dedup import shingle_relation, text_fingerprint
 from ..operators.textclean import fix_mojibake_col
 
 # (stage_name, build) -> the relation the next stage reads
@@ -163,8 +163,7 @@ def _drop_frozen_fingerprints(
     # from parquet as-is; the default-constructed relation (frozen
     # dedup) is materialized once for the guard and the join.
     fps_rel = broadcast_if_small(frozen_fps.select(F.col("fp").alias("_fp")), broadcast_max_rows)
-    normalized = F.md5(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    return deduped.withColumn("_fp", normalized).join(
+    return deduped.withColumn("_fp", text_fingerprint(text_col)).join(
         fps_rel, "_fp", "left_anti"
     ).drop("_fp")
 

@@ -272,7 +272,7 @@ def test_freeze_path_job_counts_pinned(spark, tmp_path):
     _, jobs = _jobs(spark, "freeze_read", lambda: read_frozen_state(spark, store))
     assert jobs == 0
     wd = str(tmp_path / "job")
-    for group, want in (("curate_job_fresh", 30), ("curate_job_resumed", 6)):
+    for group, want in (("curate_job_fresh", 28), ("curate_job_resumed", 6)):
         run = lambda: run_curate_job(spark, frozen, wd, jaccard_threshold=0.2, freeze_state=True)  # noqa: E731
         _, jobs = _jobs(spark, group, run)
         assert jobs == want, (group, jobs)

@@ -1,5 +1,9 @@
 """Driver-gate mimic: every queries() entry must match its DuckDB
 oracle at sf0.001 (row count + columns + order-insensitive values).
+The embedding queries must also match on a copy whose first three
+vectors are all zeros: a zero vector's cosine is NULL (never a
+neighbour, never a near-duplicate) and it ties every centroid, which
+the centroid ranking sends to the lower cell id.
 """
 
 from __future__ import annotations
@@ -7,6 +11,8 @@ from __future__ import annotations
 import math
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -74,21 +80,50 @@ def test_driver_window_covers_every_canonical_query():
     assert set(ENTRY.extra_queries()) == set(ENTRY.extra_oracle_sql())
 
 
-@pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, duck, name):
-    fn = _all_queries()[name]
-    sdf = fn(spark, SF_DIR)
+def _assert_matches_oracle(spark, con, sf_dir, name):
+    sdf = _all_queries()[name](spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     oracles = _all_oracles()
     if name not in oracles:
         assert len(srows) >= 0  # rows-only contract
         return
-    cur = duck.execute(oracles[name])
+    cur = con.execute(oracles[name])
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()
     assert sorted(sdf.columns) == sorted(dcols)
     assert len(srows) == len(drows)
     assert _multiset(srows, sdf.columns) == _multiset(drows, dcols)
+
+
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, SF_DIR, name)
+
+
+@pytest.fixture(scope="module")
+def zero_vectors(tmp_path_factory):
+    """``(sf_dir, duckdb)`` over the sf0.001 embeddings with vectors 0-2
+    set to all zeros."""
+    table = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    idx = table.schema.get_field_index("embedding")
+    field = table.schema.field(idx)
+    vecs = table.column(idx).to_pylist()
+    vecs[:3] = [[0.0] * len(v) for v in vecs[:3]]
+    out = tmp_path_factory.mktemp("zero_vectors")
+    pq.write_table(table.set_column(idx, field, pa.array(vecs, field.type)), out / "embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{out}/embeddings.parquet'")
+    yield str(out), con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["cosine_topk", "quantized_ann", "lsh_ann", "cosine_neardup", "ivf_ann", "semantic_dedup", "kmeans_centroids"],
+)
+def test_zero_vectors_match_oracle(spark, zero_vectors, name):
+    sf_dir, con = zero_vectors
+    _assert_matches_oracle(spark, con, sf_dir, name)
 
 
 def test_entry_smoke(spark):
