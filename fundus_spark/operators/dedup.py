@@ -108,11 +108,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Only fingerprints with >1 member (the dup report)."""
-    return exact_dedup(df, text_col, id_col).where(F.col("n_dups") > 1)
-
-
 def shingle_relation(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 4) -> DataFrame:
     # the explode multiplies per-row work ~|tokens|-fold and every
     # consumer hashes each shingle — lift a small under-partitioned

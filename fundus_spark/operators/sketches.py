@@ -180,16 +180,10 @@ def hll_ngram_distinct(
     state per group, no distinct-shuffle of the grams themselves.
     """
     from .adaptive import adaptive_repartition
+    from .dedup import word_shingles
 
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
     grams = adaptive_repartition(df).select(
-        F.col(group_col).alias("grp"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-        ).alias("item"),
+        F.col(group_col).alias("grp"), F.explode(word_shingles(F.col(text_col), n)).alias("item")
     )
     regs = hll_registers(grams, "item", ["grp"], p)
     ests = hll_estimate(regs, ["grp"], p)

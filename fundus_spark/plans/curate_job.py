@@ -22,22 +22,28 @@ selection, which subsumes the pair graph), and ``final`` (decontaminate
 read back instead of recomputing hours of upstream work.
 
 Commit protocol mirrors ``run_extraction_job``: the stage's parquet
-write lands first, the manifest append is the commit point. A crash
+write lands first, the manifest commit is the commit point. A crash
 between the two leaves a stage directory that the retry overwrites
 idempotently; a stage is only ever read back when its manifest row
-exists. Outputs are plain parquet here; on Iceberg each stage is a
-table and the manifest is the catalog's snapshot log (same contract).
+exists. The manifest is ``{workdir}/_curate_manifest.json``, one JSON
+line per committed stage, rewritten whole by
+:func:`plans.lake.write_text` at each commit (a temp sibling renamed
+over the old file), so a crash mid-commit leaves the previous stage
+list, never a torn line. ``workdir`` is any URI Spark can write; stage
+directories and manifest land under it whatever the working directory.
+Outputs are plain parquet here; on Iceberg each stage is a table and the
+manifest is the catalog's snapshot log (same contract).
 """
 
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass, field
 from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import lake
 from .curate import _curate, chain_options
 
 
@@ -48,23 +54,6 @@ class CurateJobResult:
     stages_resumed: List[str] = field(default_factory=list)
     rows_out: int = 0
     frozen_store: Optional[str] = None
-
-
-def _manifest_path(workdir: str) -> str:
-    return os.path.join(workdir, "_curate_manifest.json")
-
-
-def _committed_stages(workdir: str) -> set:
-    path = _manifest_path(workdir)
-    if not os.path.exists(path):
-        return set()
-    with open(path) as fh:
-        return {json.loads(line)["stage"] for line in fh if line.strip()}
-
-
-def _commit_stage(workdir: str, stage: str) -> None:
-    with open(_manifest_path(workdir), "a") as fh:
-        fh.write(json.dumps({"stage": stage}) + "\n")
 
 
 def run_curate_job(
@@ -92,18 +81,24 @@ def run_curate_job(
     into the frozen side of every later :func:`plans.curate.curate_increment`
     append without recomputing or re-shuffling corpus state."""
     opts = chain_options(**options)
-    os.makedirs(workdir, exist_ok=True)
-    done = _committed_stages(workdir)
+    root = lake.qualify(spark, workdir)
+    manifest = f"{root}/_curate_manifest.json"
+    lines = (lake.read_text(spark, manifest) or "").splitlines()
+    committed = [json.loads(line)["stage"] for line in lines if line.strip()]
     result = CurateJobResult(workdir=workdir)
 
+    def commit(stage: str) -> None:
+        committed.append(stage)
+        lake.write_text(spark, manifest, "".join(json.dumps({"stage": s}) + "\n" for s in committed))
+        result.stages_run.append(stage)
+
     def to_lake(name: str, build: Callable[[], DataFrame]) -> DataFrame:
-        path = os.path.join(workdir, name)
-        if name in done:
+        path = f"{root}/{name}"
+        if name in committed:
             result.stages_resumed.append(name)
         else:
             build().write.mode("overwrite").parquet(path)
-            _commit_stage(workdir, name)
-            result.stages_run.append(name)
+            commit(name)
         return spark.read.parquet(path)
 
     final = _curate(docs, None, benchmark, to_lake, **opts)
@@ -112,8 +107,8 @@ def run_curate_job(
     if freeze_state:
         from .frozen_store import store_lsh, write_frozen_state
 
-        store = os.path.join(workdir, "frozen_state")
-        if "frozen" in done:
+        store = f"{root}/frozen_state"
+        if "frozen" in committed:
             result.stages_resumed.append("frozen")
         else:
             write_frozen_state(
@@ -124,7 +119,6 @@ def run_curate_job(
                 num_buckets=freeze_buckets,
                 **store_lsh(opts),
             )
-            _commit_stage(workdir, "frozen")
-            result.stages_run.append("frozen")
+            commit("frozen")
         result.frozen_store = store
     return result

@@ -141,36 +141,6 @@ def _row_extract(conv_id, turn_idx, role, tool, ts, html, partition_id):
     )
 
 
-def _arrow_output_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("conv_id", pa.string()),
-            pa.field("turn_idx", pa.int32()),
-            pa.field("role", pa.string()),
-            pa.field("tool", pa.string()),
-            pa.field("ts", pa.timestamp("us", tz="UTC")),
-            pa.field("publisher", pa.string()),
-            pa.field("parser_version", pa.string()),
-            pa.field("title", pa.string()),
-            pa.field("body_json", pa.string()),
-            pa.field("plaintext", pa.string()),
-            pa.field("authors", pa.list_(pa.string())),
-            pa.field("publishing_date", pa.string()),
-            pa.field("publishing_date_ts", pa.timestamp("us", tz="UTC")),
-            pa.field("topics", pa.list_(pa.string())),
-            pa.field("free_access", pa.bool_()),
-            pa.field("images_json", pa.string()),
-            pa.field("lang", pa.string()),
-            pa.field("parse_ok", pa.bool_()),
-            pa.field("error", pa.string()),
-            pa.field("_partition_id", pa.int32()),
-            pa.field("_bytes", pa.int64()),
-        ]
-    )
-
-
 def _extract_batches_arrow(batches):
     """The extraction stage's ``mapInArrow`` body: one bulk
     ``to_pylist`` per column in, one ``pa.array`` per column out, so no
@@ -183,10 +153,12 @@ def _extract_batches_arrow(batches):
     import pyarrow as pa
 
     from pyspark import TaskContext
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     ctx = TaskContext.get()
     partition_id = ctx.partitionId() if ctx is not None else -1
-    schema = _arrow_output_schema()
+    schema = to_arrow_schema(EXTRACTION_SCHEMA)
+    date_ts = schema.get_field_index("publishing_date_ts")
 
     for batch in batches:
         cols = {name: batch.column(i).to_pylist() for i, name in enumerate(batch.schema.names)}
@@ -200,9 +172,9 @@ def _extract_batches_arrow(batches):
         # tz-normalize: the kernel's fuzzy date parser yields datetimes
         # in the article's own offset; pa.array refuses mixed
         # naive/aware lists, so pin everything to UTC here.
-        out[12] = [
+        out[date_ts] = [
             (dt.astimezone(timezone.utc) if dt.tzinfo else dt.replace(tzinfo=timezone.utc)) if dt else None
-            for dt in out[12]
+            for dt in out[date_ts]
         ]
         arrays = [pa.array(col, type=field.type) for col, field in zip(out, schema)]
         yield pa.RecordBatch.from_arrays(arrays, schema=schema)

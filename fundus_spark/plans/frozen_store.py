@@ -35,20 +35,27 @@ Bucketing is catalog metadata, not file layout alone, and the catalog is
 per-session: the manifest records each table's DDL (the schema of the
 first append) and every session re-registers the bucketed tables over
 the parquet buckets on disk before reading or appending.
+
+The manifest is ``{store_path}/_STREAM_PARTS.json``, next to the
+``stream_fps``/``stream_bands`` directories, at any URI Spark can write
+(``hdfs://``, ``s3a://``, ``file://`` or a plain path). It is the commit
+point of every freeze, append and compaction, written by
+:func:`plans.lake.write_text`: a temp sibling renamed over the old file,
+so a reader sees the old part list or the new one, never a torn file,
+and table rows written before a crashed commit belong to no listed part.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
-import shutil
 from typing import Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import band_relation, exact_dedup
+from . import lake
 
 _STREAM_PARTS = "_STREAM_PARTS.json"
 
@@ -59,12 +66,6 @@ def _ddl(df: DataFrame) -> str:
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
 
 
-def _table_prefix(path: str) -> str:
-    # catalog identifiers are per-session; derive a stable one from the
-    # store path so re-registration is idempotent across sessions
-    return "frozen_" + hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:10]
-
-
 def store_lsh(opts: dict) -> dict:
     """The LSH keywords of this module's functions from the curation
     chain's resolved options (:func:`plans.curate.chain_options`), so a
@@ -73,35 +74,34 @@ def store_lsh(opts: dict) -> dict:
     return {kw: opts[opt] for kw, opt in keys.items()}
 
 
-def _stream_parts(store_path: str) -> dict:
-    path = os.path.join(store_path, _STREAM_PARTS)
-    if not os.path.exists(path):
+def _stream_parts(spark: SparkSession, store_path: str) -> dict:
+    text = lake.read_text(spark, f"{store_path}/{_STREAM_PARTS}")
+    if text is None:
         return {"num_buckets": None, "lsh": None, "ddl": None, "parts": [], "generation": 0}
-    with open(path) as f:
-        manifest = json.load(f)
+    manifest = json.loads(text)
     if "ddl" not in manifest:
         raise ValueError(f"frozen store at {store_path} records no table DDL; rebuild it")
     return manifest
 
 
-def _commit_stream_parts(store_path: str, manifest: dict) -> None:
-    os.makedirs(store_path, exist_ok=True)
-    path = os.path.join(store_path, _STREAM_PARTS)
-    with open(path + ".tmp", "w") as f:
-        json.dump(manifest, f, indent=2)
-    os.replace(path + ".tmp", path)
+def _commit_stream_parts(spark: SparkSession, store_path: str, manifest: dict) -> None:
+    lake.write_text(spark, f"{store_path}/{_STREAM_PARTS}", json.dumps(manifest, indent=2))
 
 
-def _stream_tables(store_path: str, generation: int = 0) -> dict:
+def _stream_tables(spark: SparkSession, store_path: str, generation: int = 0) -> dict:
     # compaction bumps the generation: tables/dirs are suffixed so a
     # compacted store swaps in atomically at the manifest commit and a
-    # crashed compaction leaves only orphan next-gen directories
+    # crashed compaction leaves only orphan next-gen directories.
+    # Catalog identifiers are per-session; the prefix hashes the
+    # qualified store URI so re-registration is idempotent across
+    # sessions and working directories.
     suffix = "" if generation == 0 else f"_g{generation}"
-    prefix = _table_prefix(store_path) + "_stream"
+    root = lake.qualify(spark, store_path)
+    prefix = "frozen_" + hashlib.md5(root.encode()).hexdigest()[:10] + "_stream"
     return {
         key: {
             "table": f"{prefix}_{key}{suffix}",
-            "path": os.path.join(store_path, f"stream_{key}{suffix}"),
+            "path": f"{root}/stream_{key}{suffix}",
             "bucket_cols": cols,
         }
         for key, cols in (("fps", ("fp",)), ("bands", ("band", "key")))
@@ -114,7 +114,7 @@ def _register_stream_tables(spark: SparkSession, store_path: str, manifest: dict
     no DDL and nothing to register: whatever a crashed first append left
     on disk is uncommitted, and the next append's ``saveAsTable``
     creates the tables over it."""
-    tables = _stream_tables(store_path, manifest["generation"])
+    tables = _stream_tables(spark, store_path, manifest["generation"])
     for key, spec in tables.items():
         if manifest["ddl"] is None or spark.catalog.tableExists(spec["table"]):
             continue
@@ -122,7 +122,7 @@ def _register_stream_tables(spark: SparkSession, store_path: str, manifest: dict
         spark.sql(
             f"CREATE TABLE {spec['table']} ({manifest['ddl'][key]}) USING PARQUET "
             f"CLUSTERED BY ({cols}) SORTED BY ({cols}) INTO {manifest['num_buckets']} BUCKETS "
-            f"LOCATION '{os.path.abspath(spec['path'])}'"
+            f"LOCATION '{spec['path']}'"
         )
     return tables
 
@@ -166,7 +166,7 @@ def append_frozen_parts(
     parameters and the table DDL; later calls append with the same
     bucket spec, and an LSH mismatch raises rather than mixing
     incompatible band keys."""
-    manifest = _stream_parts(store_path)
+    manifest = _stream_parts(spark, store_path)
     lsh = _check_lsh(manifest, store_path, n_perm=n_perm, bands=bands, k=k, hash_mode=hash_mode)
     manifest["num_buckets"] = manifest["num_buckets"] or num_buckets
     tables = _register_stream_tables(spark, store_path, manifest)
@@ -177,7 +177,7 @@ def append_frozen_parts(
             _write_bucketed(df, tables[key], manifest["num_buckets"], "append")
     manifest["lsh"] = lsh
     manifest["parts"] = sorted(set(manifest["parts"]) | set(part_docs))
-    _commit_stream_parts(store_path, manifest)
+    _commit_stream_parts(spark, store_path, manifest)
     return manifest
 
 
@@ -203,9 +203,9 @@ def write_frozen_state(
     test/bench scale). Returns the manifest dict.
     """
     spark = frozen_docs.sparkSession
-    for spec in _stream_tables(store_path, _stream_parts(store_path)["generation"]).values():
+    for spec in _stream_tables(spark, store_path, _stream_parts(spark, store_path)["generation"]).values():
         spark.sql(f"DROP TABLE IF EXISTS {spec['table']}")
-    shutil.rmtree(store_path, ignore_errors=True)
+    lake.delete(spark, store_path)
     docs = frozen_docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     return append_frozen_parts(
         spark, store_path, {"frozen": docs}, n_perm=n_perm, bands=bands, k=k,
@@ -221,7 +221,7 @@ def read_frozen_state(
     whole store, every part. Both are catalog-backed bucketed scans:
     metadata-cheap to count (the broadcast guard's requirement) and
     exchange-free on the frozen side of the probe joins."""
-    manifest = _stream_parts(store_path)
+    manifest = _stream_parts(spark, store_path)
     if manifest["ddl"] is None:
         raise ValueError(f"no frozen store at {store_path}")
     tables = _register_stream_tables(spark, store_path, manifest)
@@ -250,7 +250,7 @@ def stream_frozen_relations(
     shuffle in the sort-merge regime."""
     if not corpus_parts:
         return None, None, []
-    manifest = _stream_parts(store_path)
+    manifest = _stream_parts(spark, store_path)
     lsh = _check_lsh(manifest, store_path, n_perm=n_perm, bands=bands, k=k, hash_mode=hash_mode)
     stored = sorted(set(manifest["parts"]) & set(corpus_parts))
     missing = sorted(set(corpus_parts) - set(stored))
@@ -281,20 +281,20 @@ def compact_stream_store(
     orphan next-generation directories (re-running cleans them by
     overwriting). Old-generation directories are deleted after the
     commit. Returns the new manifest."""
-    manifest = _stream_parts(store_path)
+    manifest = _stream_parts(spark, store_path)
     if manifest["ddl"] is None:
         raise ValueError(f"no frozen store at {store_path}")
     live = sorted(set(manifest["parts"] if live_parts is None else live_parts))
     old_tables = _register_stream_tables(spark, store_path, manifest)
-    new_tables = _stream_tables(store_path, manifest["generation"] + 1)
+    new_tables = _stream_tables(spark, store_path, manifest["generation"] + 1)
     for key in ("fps", "bands"):
         rows = spark.table(old_tables[key]["table"]).where(F.col("part").isin(live)).dropDuplicates()
         spark.sql(f"DROP TABLE IF EXISTS {new_tables[key]['table']}")
         _write_bucketed(rows, new_tables[key], manifest["num_buckets"], "overwrite")
     manifest["generation"] += 1
     manifest["parts"] = live
-    _commit_stream_parts(store_path, manifest)  # the swap point
+    _commit_stream_parts(spark, store_path, manifest)  # the swap point
     for spec in old_tables.values():
         spark.sql(f"DROP TABLE IF EXISTS {spec['table']}")
-        shutil.rmtree(spec["path"], ignore_errors=True)
+        lake.delete(spark, spec["path"])
     return manifest

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from . import lake
+
 MANIFEST_SCHEMA = StructType(
     [
         StructField("run_id", StringType()),
@@ -77,8 +79,7 @@ def run_manifest(spark: SparkSession, manifest_path: str, run_id: str) -> List[R
     """The manifest rows of ``run_id`` (``MANIFEST_SCHEMA`` order); none
     when no manifest exists yet. The schema is pinned, so the read runs
     no footer-inference job."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(manifest_path)
-    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+    if not lake.exists(spark, manifest_path):
         return []
     manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
     return manifest.where(F.col("run_id") == run_id).collect()

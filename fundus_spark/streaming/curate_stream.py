@@ -22,6 +22,13 @@ files from direct non-streaming appends); read it with
 :func:`read_corpus`, not a plain ``spark.read.parquet`` (which skips
 nested directories).
 
+Every file operation outside Spark's readers and writers goes through
+:mod:`plans.lake` at the URI given: the corpus listing, the batch
+directory's delete-then-rename commit, and the stream-id marker
+``{checkpoint}/_curation_stream_id``, committed by
+:func:`plans.lake.write_text` (temp sibling renamed over it), so it
+exists complete or not at all.
+
 Scale notes: every stage inside the batch function keeps its
 documented 100 TB shape (banded probes, broadcast benchmark shingles,
 narrow gates). Without a store the frozen side's fingerprints and band
@@ -39,6 +46,7 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.adaptive import materialize
+from ..plans import lake
 from ..plans.curate import chain_options, curate_increment
 
 CORPUS_SCHEMA = "doc_id long, source string, text string"
@@ -56,19 +64,9 @@ def _corpus_parts(
     what makes the re-run idempotent (reading the crashed attempt's own
     survivors would make the recompute drop every batch doc and commit
     an empty batch)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return {}
-    parts = {}
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue  # _staging, _SUCCESS, hidden markers
-        if exclude_batch is not None and name == f"batch-{exclude_batch}":
-            continue  # exclude_batch is the full "<stream>-<id>" tag
-        parts[name] = status.getPath().toString()
+    parts = lake.children(spark, corpus_path)
+    if exclude_batch is not None:
+        parts.pop(f"batch-{exclude_batch}", None)  # the full "<stream>-<id>" tag
     return parts
 
 
@@ -98,44 +96,18 @@ def _stream_id(spark: SparkSession, checkpoint_path: str) -> str:
     a shared corpus)."""
     import uuid
 
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_path}/_curation_stream_id")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(marker):
-        stream = fs.open(marker)
-        try:
-            data = bytearray()
-            b = stream.read()
-            while b >= 0 and len(data) < 64:
-                data.append(b)
-                b = stream.read()
-            sid = bytes(data).decode("ascii")
-        finally:
-            stream.close()
-        # an EMPTY marker is a crash artifact (died between create and
-        # write under the old create-then-write protocol, or a torn
-        # copy): adopting it would put this checkpoint in the ""
-        # namespace — shared with every other torn checkpoint, which
-        # re-enables the cross-stream batch-directory clobber the
-        # namespace exists to prevent. Treat as absent and re-mint.
-        if sid:
-            return sid
-    # mint via the same write-temp-then-atomic-rename idiom as the
-    # batch-directory commit: the marker either exists complete or not
-    # at all, never empty/torn.
-    sid = uuid.uuid4().hex[:12]
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{checkpoint_path}/_curation_stream_id.tmp-{uuid.uuid4().hex[:8]}"
-    )
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(sid.encode("ascii")))
-    finally:
-        out.close()
-    if fs.exists(marker):
-        fs.delete(marker, False)
-    if not fs.rename(tmp, marker):
-        raise IOError(f"stream-id marker commit failed at {marker}")
+    marker = f"{checkpoint_path}/_curation_stream_id"
+    # an EMPTY marker is a crash artifact (a torn copy, or a checkpoint
+    # written before the marker commit was atomic): adopting it would
+    # put this checkpoint in the "" namespace — shared with every other
+    # torn checkpoint, which re-enables the cross-stream batch-directory
+    # clobber the namespace exists to prevent. Treat as absent and
+    # re-mint; lake.write_text commits the new marker complete or not
+    # at all.
+    sid = lake.read_text(spark, marker)
+    if not sid:
+        sid = uuid.uuid4().hex[:12]
+        lake.write_text(spark, marker, sid)
     return sid
 
 
@@ -222,27 +194,20 @@ def curate_batch_into_corpus(
         if n:
             out.write.mode("append").parquet(corpus_path)
         return n
-    jvm = spark._jvm
-    fs_path = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    final = jvm.org.apache.hadoop.fs.Path(f"{corpus_path}/batch-{tag}")
+    final = f"{corpus_path}/batch-{tag}"
+    staged = f"{corpus_path}/_staging/batch-{tag}"
     if n:
-        staged = f"{corpus_path}/_staging/batch-{tag}"
         out.coalesce(max(1, min(out.rdd.getNumPartitions(), 32))).write.mode(
             "overwrite"
         ).parquet(staged)
-        # the rename is the commit point: atomic on HDFS/local FS. A
-        # pre-existing final dir can only be a crashed or re-delivered
-        # prior attempt of THIS batch (it was excluded from the frozen
-        # side above), so replacing it is the idempotent outcome.
-        if fs.exists(final):
-            fs.delete(final, True)
-        if not fs.rename(jvm.org.apache.hadoop.fs.Path(staged), final):
-            raise IOError(f"atomic commit rename failed for batch {tag}")
-    elif fs.exists(final):
-        # recompute says this batch contributes nothing — clear the
-        # partial/stale directory a crashed attempt may have left
-        fs.delete(final, True)
+    # a pre-existing final dir can only be a crashed or re-delivered
+    # prior attempt of THIS batch (it was excluded from the frozen side
+    # above), so replacing it (or, when the recompute contributes
+    # nothing, clearing it) is the idempotent outcome. The rename is
+    # the commit point: atomic on HDFS/local FS.
+    lake.delete(spark, final)
+    if n:
+        lake.move(spark, staged, final)
     if frozen_store_path is not None:
         # absorb AFTER the corpus commit: this batch's survivors plus
         # any part the probe had to compute on the fly (self-heal). A

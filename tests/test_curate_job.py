@@ -11,7 +11,7 @@ import os
 
 import pytest
 
-from fundus_spark.plans import curate_corpus, run_curate_job
+from fundus_spark.plans import curate_corpus, lake, run_curate_job
 
 
 def _docs(spark):
@@ -56,7 +56,7 @@ def test_job_resumes_from_last_committed_stage(spark, tmp_path):
     # manifest commits (their stage dirs may exist — retry overwrites)
     manifest = os.path.join(wd, "_curate_manifest.json")
     lines = [l for l in open(manifest) if json.loads(l)["stage"] in ("gated", "deduped")]
-    open(manifest, "w").writelines(lines)
+    lake.write_text(spark, manifest, "".join(lines))
 
     r = run_curate_job(spark, corpus, wd, jaccard_threshold=0.2)
     assert r.stages_resumed == ["gated", "deduped"]

@@ -208,7 +208,7 @@ def test_store_reregisters_in_a_fresh_catalog(spark, tmp_path):
     frozen = _frozen_docs(spark)
     store = str(tmp_path / "store")
     manifest = write_frozen_state(frozen, store, num_buckets=4)
-    for spec in _stream_tables(store, manifest["generation"]).values():
+    for spec in _stream_tables(spark, store, manifest["generation"]).values():
         spark.sql(f"DROP TABLE {spec['table']}")
         assert not spark.catalog.tableExists(spec["table"])
 
@@ -315,7 +315,7 @@ def test_string_id_freeze_reregisters_with_its_own_schema(spark, tmp_path):
     )
     store = str(tmp_path / "store")
     manifest = write_frozen_state(frozen, store, num_buckets=4)
-    for spec in _stream_tables(store, manifest["generation"]).values():
+    for spec in _stream_tables(spark, store, manifest["generation"]).values():
         spark.sql(f"DROP TABLE {spec['table']}")
 
     fps, bands, _ = read_frozen_state(spark, store)

@@ -303,6 +303,17 @@ def test_hll_ngram_distinct_exact_column_is_exact(spark):
     assert len(row) == 5
 
 
+def test_hll_ngram_distinct_null_text_adds_no_gram(spark):
+    """A NULL-text document has no n-grams: it takes no HLL register
+    and adds nothing to the exact count, as in the DuckDB oracle."""
+    rows = [(1, "g", "a b c d"), (2, "g", None), (3, "h", "a b c d")]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    got = {r["source"]: r.asDict() for r in hll_ngram_distinct(df, n=3, p=10).collect()}
+    assert got["g"]["exact_distinct"] == got["h"]["exact_distinct"] == 2
+    assert got["g"]["n_registers"] == got["h"]["n_registers"] == 2
+    assert got["g"]["est"] == got["h"]["est"]
+
+
 # ---------------------------------------------------------------------------
 # Count-Min
 # ---------------------------------------------------------------------------

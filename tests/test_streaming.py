@@ -448,7 +448,7 @@ def test_streaming_frozen_store_matches_recompute_path(spark, tmp_path):
     assert got == {r.doc_id for r in read_corpus(spark, without).collect()} == {1, 2, 11}
 
     # every committed corpus part is absorbed
-    manifest = _stream_parts(store)
+    manifest = _stream_parts(spark, store)
     assert set(manifest["parts"]) >= {"batch-direct-0", "batch-direct-1"}
     # steady-state probe: nothing missing, relations are catalog scans
     parts = {
@@ -483,7 +483,7 @@ def test_streaming_frozen_store_self_heals_unabsorbed_parts(spark, tmp_path):
     assert curate_batch_into_corpus(
         spark, spark.createDataFrame([(1, "s", base)], schema), corpus, batch_id=0
     ) == 1
-    assert _stream_parts(store)["parts"] == []
+    assert _stream_parts(spark, store)["parts"] == []
     # batch 1 probes via the store: near-dup of frozen doc 1 absorbed,
     # fresh doc survives, and BOTH parts are absorbed afterwards
     b1 = spark.createDataFrame(
@@ -500,7 +500,7 @@ def test_streaming_frozen_store_self_heals_unabsorbed_parts(spark, tmp_path):
         == 1
     )
     assert sorted(r.doc_id for r in read_corpus(spark, corpus).collect()) == [1, 11]
-    assert set(_stream_parts(store)["parts"]) == {"batch-direct-0", "batch-direct-1"}
+    assert set(_stream_parts(spark, store)["parts"]) == {"batch-direct-0", "batch-direct-1"}
 
 
 def test_streaming_frozen_store_redelivery_stays_exactly_once(spark, tmp_path):
@@ -626,7 +626,7 @@ def test_continuous_curation_with_frozen_store(spark, tmp_path):
     query.awaitTermination(120)
     assert not query.isActive
     assert {r.doc_id for r in read_corpus(spark, corpus).collect()} == {1, 2, 11}
-    assert len(_stream_parts(store)["parts"]) == 2
+    assert len(_stream_parts(spark, store)["parts"]) == 2
 
 
 def test_stream_store_compaction_reclaims_and_preserves_probes(spark, tmp_path):
@@ -661,7 +661,7 @@ def test_stream_store_compaction_reclaims_and_preserves_probes(spark, tmp_path):
     live = ["batch-direct-0", "batch-direct-1"]
     manifest = compact_stream_store(spark, store, live_parts=live)
     assert manifest["generation"] == 1 and manifest["parts"] == live
-    tables = _stream_tables(store, 1)
+    tables = _stream_tables(spark, store, 1)
     fps = spark.table(tables["fps"]["table"])
     # dead part gone, duplicates collapsed: one fp row per live doc
     assert fps.count() == 2
@@ -685,7 +685,7 @@ def test_stream_store_compaction_reclaims_and_preserves_probes(spark, tmp_path):
     )
     assert curate_batch_into_corpus(spark, b2, corpus, batch_id=2, **kw) == 1
     assert sorted(r.doc_id for r in read_corpus(spark, corpus).collect()) == [1, 2, 11]
-    assert set(_stream_parts(store)["parts"]) == set(live) | {"batch-direct-2"}
+    assert set(_stream_parts(spark, store)["parts"]) == set(live) | {"batch-direct-2"}
 
 
 def test_stream_trained_quality_scoring_matches_batch(spark, tmp_path):
