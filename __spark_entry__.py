@@ -31,7 +31,7 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """documents -> synthetic HTML transcripts -> mapInPandas extraction."""
+    """documents -> synthetic HTML transcripts -> Arrow-boundary extraction."""
     return _q_extract_documents(spark, SF_DEFAULT)
 
 
@@ -994,7 +994,7 @@ def _q_curate_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_crawl_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone end-to-end: .warc.gz bytes -> WARC records -> HTML
-    -> article extraction (the zero-shuffle mapInArrow kernel stage) ->
+    -> article extraction (the zero-shuffle Arrow-boundary kernel stage) ->
     the FULL curation chain (quality gate, exact + near-dup dedup,
     decontamination, split, packing). A user's entire
     crawl-to-training-corpus pipeline as one gated plan; the oracle is

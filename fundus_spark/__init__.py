@@ -5,7 +5,7 @@ Layout:
     kernel/     pure-Python extraction (DOM, XPath/CSS, JSON-LD, body,
                 images, generics) — zero Spark imports
     rules/      declarative per-publisher parser specs + registry
-    plans/      Spark pipeline stages (mapInPandas extraction, window
+    plans/      Spark pipeline stages (Arrow-boundary extraction, window
                 reassembly, lineage/metrics, checkpoint/resume, skew)
     operators/  large-scale data ops (dedup, similarity, text stats)
     sources/    transcripts fixtures/readers

@@ -1,7 +1,7 @@
 """Pure-Python extraction kernel (zero Spark imports).
 
-Everything here runs inside Arrow-batched ``mapInPandas`` stages on
-executors, but is unit-testable standalone against the reference's
+Everything here runs inside row generators on the Arrow boundary
+(``operators.adaptive.map_rows``) on executors, but is unit-testable standalone against the reference's
 golden parser corpus.
 """
 

@@ -18,8 +18,9 @@ evaluation the reference's README benchmarks against):
    content; medium blocks are content only when low-link (standalone
    approximation of jusText's neighbor pass, kept deterministic).
 
-Everything is pure Python over the from-scratch DOM — runs batched
-inside ``mapInArrow`` like the rule-driven kernel.
+Everything is pure Python over the from-scratch DOM — runs as a row
+generator on the Arrow boundary (``operators.adaptive.map_rows``) like
+the rule-driven kernel.
 """
 
 from __future__ import annotations

@@ -40,14 +40,33 @@ through :func:`checkpoint`. Loops that must bound their lineage or
 codegen (bpe merge chunks, connected-components rounds) call
 :func:`checkpoint` directly. A deployment that must survive executor
 loss swaps in a reliable ``checkpoint`` in that one function.
+
+Arrow boundary: :func:`map_rows` is the one ``mapInArrow`` in the
+package, and every row-wise Python stage (article extraction, robots,
+WARC records, media decode, PDF text, boilerplate strip, URL fetch and
+the synthetic payload sources) is a generator it runs. The generator
+sees the task's rows as tuples and yields output tuples, any number per
+input row, so per-task state (a matcher cache, a politeness clock, the
+partition id) lives in its locals. The door converts with one
+``to_pylist`` per input column and one ``pa.array`` per output column,
+typed from the Spark schema, and cuts output batches at the session's
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, so a stage that
+explodes a row (WARC records, frame schedules) never builds an
+unbounded batch. Grouped stages (``applyInPandas``) see a whole group,
+not a row stream, and stay where they are. Rows built on the driver go
+the other way through :func:`local_rows`, as one Arrow table: that
+plans as a ``LocalRelation``, where a list of tuples plans as a
+``LogicalRDD`` whose one-task stage each reading job pays.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Sequence, Tuple
+from itertools import islice
+from typing import Callable, Dict, Iterable, Iterator, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: size-per-core threshold below which an input counts as "small": one
 #: modest scan split per core. 32 MB x cores is far under any real
@@ -219,3 +238,39 @@ def adaptive_repartition(
     if cols:
         return df.repartition(target, *[F.col(c) for c in cols])
     return df.repartition(target)
+
+
+def _record_batch(rows: Iterable[tuple], schema: StructType):
+    """``rows`` (tuples in ``schema`` field order) as one Arrow record
+    batch typed from the Spark schema: one ``pa.array`` per column."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fields = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(fields)
+    return pa.RecordBatch.from_arrays([pa.array(c, type=f.type) for c, f in zip(cols, fields)], schema=fields)
+
+
+def map_rows(df: DataFrame, rows: Callable[[Iterator[tuple]], Iterator[tuple]], schema: StructType) -> DataFrame:
+    """Run the row-wise Python stage ``rows`` over ``df``: called once
+    per task with the task's rows as tuples in ``df``'s column order, it
+    yields tuples in ``schema`` field order, any number per input row.
+    Output batches hold at most the session's Arrow batch size."""
+    size = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+    def batches(it):
+        out = rows(row for batch in it for row in zip(*[c.to_pylist() for c in batch.columns]))
+        while chunk := list(islice(out, size)):
+            yield _record_batch(chunk, schema)
+
+    return df.mapInArrow(batches, schema)
+
+
+def local_rows(spark: SparkSession, rows: Iterable[tuple], schema: Union[StructType, str]) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` field order; a DDL
+    string is accepted) as one Arrow table, which plans as a
+    ``LocalRelation`` and runs no job of its own when read."""
+    import pyarrow as pa
+
+    schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    return spark.createDataFrame(pa.Table.from_batches([_record_batch(rows, schema)]), schema)

@@ -1,5 +1,6 @@
 """Generic boilerplate-strip operator over raw HTML (no publisher
-rules): mapInArrow + the jusText-style block classifier.
+rules): the jusText-style block classifier as a row generator on the
+Arrow boundary (:func:`operators.adaptive.map_rows`).
 """
 
 from __future__ import annotations
@@ -18,52 +19,28 @@ MAIN_TEXT_SCHEMA = StructType(
 )
 
 
-def _strip_batches(batches):
-    import pyarrow as pa
-
+def _strip_rows(rows):
     from ..kernel.boilerplate import classify_blocks
     from ..kernel.dom import parse_html
 
-    schema = pa.schema(
-        [
-            pa.field("doc_id", pa.int64()),
-            pa.field("main_text", pa.string()),
-            pa.field("n_content_blocks", pa.int64()),
-            pa.field("n_boilerplate_blocks", pa.int64()),
-        ]
-    )
-    for batch in batches:
-        ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-        htmls = batch.column(batch.schema.get_field_index("html")).to_pylist()
-        texts, n_content, n_boiler = [], [], []
-        for html in htmls:
-            blocks = classify_blocks(parse_html(html or ""))
-            content = [b["text"] for b in blocks if b["label"] == "content"]
-            texts.append("\n\n".join(content) if content else None)
-            n_content.append(len(content))
-            n_boiler.append(sum(1 for b in blocks if b["label"] == "boilerplate"))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ids, pa.int64()),
-                pa.array(texts, pa.string()),
-                pa.array(n_content, pa.int64()),
-                pa.array(n_boiler, pa.int64()),
-            ],
-            schema=schema,
-        )
+    for doc_id, html in rows:
+        blocks = classify_blocks(parse_html(html or ""))
+        content = [b["text"] for b in blocks if b["label"] == "content"]
+        n_boilerplate = sum(1 for b in blocks if b["label"] == "boilerplate")
+        yield doc_id, "\n\n".join(content) if content else None, len(content), n_boilerplate
 
 
 def boilerplate_strip(docs: DataFrame, html_col: str = "html", id_col: str = "doc_id") -> DataFrame:
     """``docs``: (doc_id long, html string) -> content text + block
     counts. Narrow map — no shuffle (small under-partitioned inputs are
     lifted to full parallelism first, see operators.adaptive)."""
-    from .adaptive import adaptive_repartition
+    from .adaptive import adaptive_repartition, map_rows
 
     base = adaptive_repartition(
         docs.select(F.col(id_col).alias("doc_id"), F.col(html_col).alias("html")),
         cols=("doc_id",),
     )
-    return base.mapInArrow(_strip_batches, schema=MAIN_TEXT_SCHEMA)
+    return map_rows(base, _strip_rows, MAIN_TEXT_SCHEMA)
 
 
 def boilerplate_page(doc_id: Column, text: Column) -> Column:

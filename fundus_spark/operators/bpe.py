@@ -47,7 +47,7 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .adaptive import adaptive_repartition, checkpoint, materialize
+from .adaptive import adaptive_repartition, checkpoint, local_rows, materialize
 
 #: symbol separator inside the spaced encoding (U+001F unit separator)
 SEP = "\x1f"
@@ -157,9 +157,7 @@ def bpe_train(
         )
     else:
         merges = _train_distributed(words, n_merges)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count bigint"
-    )
+    return local_rows(spark, merges, "rank int, left string, right string, pair_count bigint")
 
 
 def _train_local(

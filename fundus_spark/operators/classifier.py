@@ -79,7 +79,7 @@ from typing import Dict, List, Optional, Sequence, Tuple, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .adaptive import adaptive_repartition, checkpoint, materialize
+from .adaptive import adaptive_repartition, checkpoint, local_rows, materialize
 
 #: fixed-point scales: weights, features
 W_SCALE = 10_000
@@ -319,8 +319,8 @@ def quality_classifier_fit(
         )
     fit = _fit_gram if method == "gram" else _fit_iterative
     wq, _n = fit(feats, n_features, n_iter, lr)
-    spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_rows(
+        docs.sparkSession,
         [(j, wq[j], wq[j] / W_SCALE) for j in range(n_features + 1)],
         "j int, w_q long, weight double",
     )

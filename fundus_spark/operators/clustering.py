@@ -39,7 +39,7 @@ from typing import List, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .adaptive import materialize
+from .adaptive import local_rows, materialize
 from .similarity import ivf_centroids, ranked_cells
 
 #: fixed-point scale for the exact integer centroid update
@@ -111,8 +111,8 @@ def kmeans_fit(
             new_counts.append(comp[0][1])
         cents, counts = new_cents, new_counts
 
-    spark = embeddings.sparkSession
-    return spark.createDataFrame(
+    return local_rows(
+        embeddings.sparkSession,
         [(i, cents[i], counts[i]) for i in range(k)],
         "cell int, centroid array<double>, n_members bigint",
     )

@@ -1,5 +1,6 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed
-metadata, processed by Arrow-batched ``mapInPandas`` stages.
+metadata, processed by row generators on the Arrow boundary
+(:func:`operators.adaptive.map_rows`).
 
 Decode status (all via the pure-Python/stdlib kernel in
 ``kernel/media.py``, no codec libraries):
@@ -39,9 +40,8 @@ Decode status (all via the pure-Python/stdlib kernel in
 from __future__ import annotations
 
 import hashlib
-from typing import Iterable, Iterator, Optional, Union
+from typing import Optional, Union
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -82,32 +82,20 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _feature_rows(rows):
     from ..kernel.media import parse_media_header
 
-    for batch in batches:
-        out = {name: [] for name in FEATURE_SCHEMA.fieldNames()}
-        for row in batch.itertuples(index=False):
-            payload = bytes(row.payload or b"")
-            digest = hashlib.md5(payload).hexdigest()
-            header = parse_media_header(payload)
-            if header is not None:
-                fmt, width, height, duration = header.format, header.width, header.height, header.duration_ms
-            else:
-                # honest NULLs for unrecognized containers (round-6
-                # change; previously digest-derived fake dimensions)
-                fmt = width = height = duration = None
-            out["media_id"].append(row.media_id)
-            out["kind"].append(row.kind)
-            out["n_bytes"].append(len(payload))
-            out["content_digest"].append(digest)
-            out["format"].append(fmt)
-            out["width"].append(width)
-            out["height"].append(height)
-            out["duration_ms"].append(duration)
-            out["feature_dim"].append(64)
-            out["decoded"].append(header is not None)
-        yield pd.DataFrame(out)
+    for media_id, kind, payload in rows:
+        payload = bytes(payload or b"")
+        header = parse_media_header(payload)
+        if header is not None:
+            fmt, width, height, duration = header.format, header.width, header.height, header.duration_ms
+        else:
+            # honest NULLs for unrecognized containers (round-6
+            # change; previously digest-derived fake dimensions)
+            fmt = width = height = duration = None
+        digest = hashlib.md5(payload).hexdigest()
+        yield media_id, kind, len(payload), digest, fmt, width, height, duration, 64, header is not None
 
 
 def _maybe_repartition(media: DataFrame, repartition_on: Optional[Union[str, Column]]) -> DataFrame:
@@ -131,7 +119,10 @@ def media_features(
     """Binary payloads -> typed feature rows via a zero-shuffle
     Arrow-batched map (see :func:`_maybe_repartition` for when to opt
     into a redistribution first)."""
-    return _maybe_repartition(media, repartition_on).mapInPandas(_extract_batches, schema=FEATURE_SCHEMA)
+    from .adaptive import map_rows
+
+    base = _maybe_repartition(media, repartition_on).select("media_id", "kind", "payload")
+    return map_rows(base, _feature_rows, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -149,52 +140,41 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def _resize_batches(max_w: int, max_h: int):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _resize_rows(max_w: int, max_h: int):
+    def fn(rows):
         from ..kernel.media import decode_image_luma, parse_media_header, resize_nearest
 
-        for batch in batches:
-            out = {name: [] for name in RESIZE_SCHEMA.fieldNames()}
-            for row in batch.itertuples(index=False):
-                payload = bytes(row.payload or b"")
-                header = parse_media_header(payload)
-                if header is None or header.width is None:
-                    continue  # not an image we can size
-                if header.format in ("avi", "mp4"):
-                    # video is per-frame work: the schedule lives in
-                    # media_frame_sample; resizing frames composes the
-                    # two operators
-                    continue
-                w, h = header.width, header.height
-                # aspect-preserving fit, never upscaled
-                scale = min(max_w / w, max_h / h, 1.0)
-                ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
-                # REAL pixel resample: decode the payload (24-bit BMP;
-                # PNG filters 0-4 via stdlib zlib; GIF via the
-                # from-scratch LZW decoder; baseline AND progressive
-                # JPEG via the from-scratch Huffman+IDCT in
-                # kernel.jpeg; Adam7 PNG reassembles and
-                # partial-screen GIF frames compose onto the
-                # background, round 5) and nearest-neighbor sample it.
-                # Only refused inputs yield NULL pixel stats:
-                # compressed BMP and arithmetic-coded/12-bit JPEG.
-                rows_l = decode_image_luma(payload)
-                if rows_l is not None:
-                    resized = resize_nearest(rows_l, ow, oh)
-                    lsum = sum(map(sum, resized))
-                    corner, last = resized[0][0], resized[oh - 1][ow - 1]
-                else:
-                    lsum = corner = last = None
-                out["media_id"].append(row.media_id)
-                out["kind"].append(row.kind)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["out_width"].append(ow)
-                out["out_height"].append(oh)
-                out["sum_luma"].append(lsum)
-                out["corner_luma"].append(corner)
-                out["last_luma"].append(last)
-            yield pd.DataFrame(out)
+        for media_id, kind, payload in rows:
+            payload = bytes(payload or b"")
+            header = parse_media_header(payload)
+            if header is None or header.width is None:
+                continue  # not an image we can size
+            if header.format in ("avi", "mp4"):
+                # video is per-frame work: the schedule lives in
+                # media_frame_sample; resizing frames composes the
+                # two operators
+                continue
+            w, h = header.width, header.height
+            # aspect-preserving fit, never upscaled
+            scale = min(max_w / w, max_h / h, 1.0)
+            ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
+            # REAL pixel resample: decode the payload (24-bit BMP;
+            # PNG filters 0-4 via stdlib zlib; GIF via the
+            # from-scratch LZW decoder; baseline AND progressive
+            # JPEG via the from-scratch Huffman+IDCT in
+            # kernel.jpeg; Adam7 PNG reassembles and
+            # partial-screen GIF frames compose onto the
+            # background, round 5) and nearest-neighbor sample it.
+            # Only refused inputs yield NULL pixel stats:
+            # compressed BMP and arithmetic-coded/12-bit JPEG.
+            rows_l = decode_image_luma(payload)
+            if rows_l is not None:
+                resized = resize_nearest(rows_l, ow, oh)
+                lsum = sum(map(sum, resized))
+                corner, last = resized[0][0], resized[oh - 1][ow - 1]
+            else:
+                lsum = corner = last = None
+            yield media_id, kind, w, h, ow, oh, lsum, corner, last
 
     return fn
 
@@ -212,9 +192,10 @@ def media_resize(
     parseable images are dropped (audio goes through
     :func:`media_frame_sample`). Zero-shuffle by default — see
     :func:`_maybe_repartition`."""
-    return _maybe_repartition(media, repartition_on).mapInPandas(
-        _resize_batches(max_w, max_h), schema=RESIZE_SCHEMA
-    )
+    from .adaptive import map_rows
+
+    base = _maybe_repartition(media, repartition_on).select("media_id", "kind", "payload")
+    return map_rows(base, _resize_rows(max_w, max_h), RESIZE_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = StructType(
@@ -230,50 +211,38 @@ FRAME_SAMPLE_SCHEMA = StructType(
 )
 
 
-def _frame_batches(every_ms: int):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _frame_rows(every_ms: int):
+    def fn(rows):
         from ..kernel.media import decode_avi_frames, decode_wav_samples, parse_media_header
 
-        for batch in batches:
-            out = {name: [] for name in FRAME_SAMPLE_SCHEMA.fieldNames()}
-            for row in batch.itertuples(index=False):
-                payload = bytes(row.payload or b"")
-                header = parse_media_header(payload)
-                if header is None or header.duration_ms is None:
-                    continue
-                # REAL content decode (round 4) at each schedule point:
-                # audio -> the PCM16 sample value; video -> the summed
-                # luma of the uncompressed-DIB frame covering t_ms.
-                # Codec-needing streams yield NULL values (the schedule
-                # stays real either way).
-                samples = frame_sums = None
-                if header.format == "avi":
-                    frames = decode_avi_frames(payload)
-                    # sum each frame ONCE: with every_ms < frame_ms the
-                    # schedule hits the same frame repeatedly, and
-                    # re-summing per point is O(points * pixels)
-                    if frames is not None:
-                        frame_sums = [sum(map(sum, f)) for f in frames]
-                else:
-                    samples = decode_wav_samples(payload)
-                rate = header.sample_rate or 0
-                t = 0
-                idx = 0
-                while t < header.duration_ms:
-                    val = None
-                    if samples and rate:  # empty sample list -> NULL values
-                        si = min(t * rate // 1000, len(samples) - 1)
-                        val = samples[si]
-                    elif frame_sums and header.frame_ms:
-                        fi = min(t // header.frame_ms, len(frame_sums) - 1)
-                        val = frame_sums[fi]
-                    out["media_id"].append(row.media_id)
-                    out["frame_idx"].append(idx)
-                    out["t_ms"].append(t)
-                    out["sample_value"].append(val)
-                    idx += 1
-                    t += every_ms
-            yield pd.DataFrame(out)
+        for media_id, payload in rows:
+            payload = bytes(payload or b"")
+            header = parse_media_header(payload)
+            if header is None or header.duration_ms is None:
+                continue
+            # REAL content decode (round 4) at each schedule point:
+            # audio -> the PCM16 sample value; video -> the summed
+            # luma of the uncompressed-DIB frame covering t_ms.
+            # Codec-needing streams yield NULL values (the schedule
+            # stays real either way).
+            samples = frame_sums = None
+            if header.format == "avi":
+                frames = decode_avi_frames(payload)
+                # sum each frame ONCE: with every_ms < frame_ms the
+                # schedule hits the same frame repeatedly, and
+                # re-summing per point is O(points * pixels)
+                if frames is not None:
+                    frame_sums = [sum(map(sum, f)) for f in frames]
+            else:
+                samples = decode_wav_samples(payload)
+            rate = header.sample_rate or 0
+            for idx, t in enumerate(range(0, header.duration_ms, every_ms)):
+                val = None
+                if samples and rate:  # empty sample list -> NULL values
+                    val = samples[min(t * rate // 1000, len(samples) - 1)]
+                elif frame_sums and header.frame_ms:
+                    val = frame_sums[min(t // header.frame_ms, len(frame_sums) - 1)]
+                yield media_id, idx, t, val
 
     return fn
 
@@ -288,7 +257,11 @@ def media_frame_sample(
     payload, indexed per schedule point). Only codec-bound streams
     (MP3, compressed-fourcc video) yield NULL values; their schedule
     stays real. Zero-shuffle by default — see
-    :func:`_maybe_repartition`."""
-    return _maybe_repartition(media, repartition_on).mapInPandas(
-        _frame_batches(every_ms), schema=FRAME_SAMPLE_SCHEMA
-    )
+    :func:`_maybe_repartition`. ``every_ms`` must be positive: the
+    schedule would never reach the duration otherwise."""
+    from .adaptive import map_rows
+
+    if every_ms <= 0:
+        raise ValueError(f"media_frame_sample: every_ms must be positive, got {every_ms}")
+    base = _maybe_repartition(media, repartition_on).select("media_id", "payload")
+    return map_rows(base, _frame_rows(every_ms), FRAME_SAMPLE_SCHEMA)

@@ -1,10 +1,11 @@
 """PDF text extraction over a binary column (Spark operator).
 
-Same execution shape as the HTML stage: Arrow batches into a
-``mapInArrow`` stage, pure-Python kernel per row, no per-row Python
-dispatch from the driver. At 100 TB the input is a table of
-``(doc_id, payload binary)`` rows (e.g. Iceberg with a blob column or
-parquet pointers); the stage is a narrow map — no shuffle.
+Same execution shape as the HTML stage: a row generator on the Arrow
+boundary (:func:`operators.adaptive.map_rows`), pure-Python kernel per
+row, no per-row Python dispatch from the driver. At 100 TB the input
+is a table of ``(doc_id, payload binary)`` rows (e.g. Iceberg with a
+blob column or parquet pointers); the stage is a narrow map — no
+shuffle.
 """
 
 from __future__ import annotations
@@ -21,29 +22,16 @@ PDF_TEXT_SCHEMA = StructType(
 )
 
 
-def _pdf_batches(batches):
-    import pyarrow as pa
-
+def _pdf_rows(rows):
     from ..kernel.pdf import extract_pdf_text
 
-    schema = pa.schema(
-        [
-            pa.field("doc_id", pa.int64()),
-            pa.field("pdf_text", pa.string()),
-            pa.field("n_pdf_bytes", pa.int64()),
-        ]
-    )
-    for batch in batches:
-        ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-        payloads = batch.column(batch.schema.get_field_index("payload")).to_pylist()
-        texts = [extract_pdf_text(p or b"") for p in payloads]
-        sizes = [len(p or b"") for p in payloads]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, pa.int64()), pa.array(texts, pa.string()), pa.array(sizes, pa.int64())],
-            schema=schema,
-        )
+    for doc_id, payload in rows:
+        payload = payload or b""
+        yield doc_id, extract_pdf_text(payload), len(payload)
 
 
 def pdf_extract_text(pdfs: DataFrame) -> DataFrame:
     """``pdfs``: DataFrame with (doc_id long, payload binary)."""
-    return pdfs.select("doc_id", "payload").mapInArrow(_pdf_batches, schema=PDF_TEXT_SCHEMA)
+    from .adaptive import map_rows
+
+    return map_rows(pdfs.select("doc_id", "payload"), _pdf_rows, PDF_TEXT_SCHEMA)

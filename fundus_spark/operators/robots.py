@@ -6,15 +6,13 @@ crawl-delay consultation at ``html.py:133-140`` maps to the
 
 Scale shape: the robots side is one row per source/domain — a tiny
 dimension — so it BROADCASTS onto the URL frontier (no shuffle of the
-big side); evaluation is an Arrow-batched stage with the parsed
-matcher cached per distinct robots payload within each batch.
+big side); evaluation is a row generator on the Arrow boundary
+(:func:`operators.adaptive.map_rows`) with the parsed matcher cached
+per distinct robots payload within each task.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,25 +35,18 @@ ROBOTS_GATE_SCHEMA = StructType(
 )
 
 
-def _gate_batches(user_agent: str):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _gate_rows(user_agent: str):
+    def fn(rows):
         from ..kernel.robots import RobotsMatcher
 
         cache: dict = {}
-        for batch in batches:
-            out = {name: [] for name in ROBOTS_GATE_SCHEMA.fieldNames()}
-            for row in batch.itertuples(index=False):
-                text = row.robots_txt or ""
-                matcher = cache.get(text)
-                if matcher is None:
-                    matcher = cache[text] = RobotsMatcher(text)
-                out["url_id"].append(row.url_id)
-                out["source"].append(row.source)
-                out["url"].append(row.url)
-                out["allowed"].append(matcher.can_fetch(user_agent, row.url))
-                delay = matcher.crawl_delay(user_agent)
-                out["crawl_delay"].append(float(delay) if delay is not None else None)
-            yield pd.DataFrame(out)
+        for url_id, source, url, robots_txt in rows:
+            text = robots_txt or ""
+            matcher = cache.get(text)
+            if matcher is None:
+                matcher = cache[text] = RobotsMatcher(text)
+            delay = matcher.crawl_delay(user_agent)
+            yield url_id, source, url, matcher.can_fetch(user_agent, url), None if delay is None else float(delay)
 
     return fn
 
@@ -68,9 +59,11 @@ def robots_gate(
     """``urls (url_id, source, url)`` x ``robots (source, robots_txt)``
     -> per-URL ``allowed`` + ``crawl_delay`` under RFC 9309 semantics
     (kernel/robots.py). The robots dimension broadcasts."""
-    from .adaptive import adaptive_repartition
+    from .adaptive import adaptive_repartition, map_rows
 
     joined = adaptive_repartition(urls, cols=("url_id",)).join(
         F.broadcast(robots), "source", "left"
     )
-    return joined.mapInPandas(_gate_batches(user_agent), schema=ROBOTS_GATE_SCHEMA)
+    return map_rows(
+        joined.select("url_id", "source", "url", "robots_txt"), _gate_rows(user_agent), ROBOTS_GATE_SCHEMA
+    )

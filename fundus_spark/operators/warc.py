@@ -5,14 +5,13 @@ URL from WARC-Target-URI, charset-decoded body).
 
 Scale shape: WARC files are the scan unit (CC-NEWS ships ~1 GB files);
 each row of the input carries one file's bytes and explodes into its
-records inside an Arrow-batched stage — a pure narrow map, no shuffle.
+records inside a row generator on the Arrow boundary
+(:func:`operators.adaptive.map_rows`) — a pure narrow map, no shuffle.
 At 100 TB the parallelism is the file count, exactly how the reference
 distributes CC-NEWS paths across processes (crawler.py:742-780).
 """
 
 from __future__ import annotations
-
-from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -35,25 +34,19 @@ WARC_RECORD_SCHEMA = StructType(
 )
 
 
-def _extract_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _record_rows(rows):
     from ..kernel.warc import warc_response_records
 
-    for batch in batches:
-        out = {name: [] for name in WARC_RECORD_SCHEMA.fieldNames()}
-        for row in batch.itertuples(index=False):
-            records = warc_response_records(bytes(row.payload or b""))
-            for idx, record in enumerate(records):
-                out["source"].append(row.source)
-                out["record_idx"].append(idx)
-                out["url"].append(record.target_uri)
-                out["warc_date"].append(record.warc_date)
-                out["html"].append(record.body)
-        yield pd.DataFrame(out)
+    for source, payload in rows:
+        for idx, record in enumerate(warc_response_records(bytes(payload or b""))):
+            yield source, idx, record.target_uri, record.warc_date, record.body
 
 
 def warc_extract(warcs: DataFrame) -> DataFrame:
     """``warcs (source, payload: binary)`` -> response records."""
-    return warcs.mapInPandas(_extract_batches, schema=WARC_RECORD_SCHEMA)
+    from .adaptive import map_rows
+
+    return map_rows(warcs.select("source", "payload"), _record_rows, WARC_RECORD_SCHEMA)
 
 
 RESHARD_SCHEMA = StructType(

@@ -1,9 +1,10 @@
-"""The extraction stage: batched kernel execution inside ``mapInArrow``.
+"""The extraction stage: the kernel as a row generator on the Arrow boundary.
 
 Design (SURVEY.md §2.4, §7):
 * **No per-row Python dispatch** — Spark hands the stage Arrow record
-  batches; the kernel parses each document once per row within the
-  batch (the ``Precomputed`` analogue lives and dies inside the batch).
+  batches through :func:`operators.adaptive.map_rows`; the kernel
+  parses each document once per row (the ``Precomputed`` analogue
+  lives and dies inside the row).
 * **Rules by module import, not closure capture** — the publisher
   registry is resolved on the executor via ``fundus_spark.rules``
   import, so the task closure stays tiny and selector compilation
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import json
 import re
+from datetime import timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -105,7 +107,9 @@ def _row_extract(conv_id, turn_idx, role, tool, ts, html, partition_id):
         topics = extraction.get("topics") or []
         if (dt := extraction.get("publishing_date")) is not None:
             publishing_date = str(dt)
-            publishing_date_ts = dt
+            # the fuzzy date parser yields the article's own offset;
+            # pa.array refuses mixed naive/aware lists, so pin to UTC
+            publishing_date_ts = dt.astimezone(timezone.utc) if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
         free_access = extraction.get("free_access")
         if (images := extraction.get("images")) is not None:
             images_json = json.dumps(images, ensure_ascii=False)
@@ -141,43 +145,16 @@ def _row_extract(conv_id, turn_idx, role, tool, ts, html, partition_id):
     )
 
 
-def _extract_batches_arrow(batches):
-    """The extraction stage's ``mapInArrow`` body: one bulk
-    ``to_pylist`` per column in, one ``pa.array`` per column out, so no
-    Arrow<->pandas block-manager round trip on either side. Measured
-    ~15-20% less Python-worker CPU per turn than a pandas
-    (``mapInPandas``) version of the stage on the bench corpus; at 32
-    saturated cores that CPU comes straight out of throughput."""
-    from datetime import timezone
-
-    import pyarrow as pa
-
+def _extract_rows(rows):
+    """The extraction stage's row generator: ``(conv_id, turn_idx,
+    role, tool, ts, text)`` in, one ``EXTRACTION_SCHEMA`` row out per
+    turn, tagged with the task's partition id."""
     from pyspark import TaskContext
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     ctx = TaskContext.get()
     partition_id = ctx.partitionId() if ctx is not None else -1
-    schema = to_arrow_schema(EXTRACTION_SCHEMA)
-    date_ts = schema.get_field_index("publishing_date_ts")
-
-    for batch in batches:
-        cols = {name: batch.column(i).to_pylist() for i, name in enumerate(batch.schema.names)}
-        rows = [
-            _row_extract(c, i, r, tl, ts, tx, partition_id)
-            for c, i, r, tl, ts, tx in zip(
-                cols["conv_id"], cols["turn_idx"], cols["role"], cols["tool"], cols["ts"], cols["text"]
-            )
-        ]
-        out = list(zip(*rows)) if rows else [[] for _ in schema.names]
-        # tz-normalize: the kernel's fuzzy date parser yields datetimes
-        # in the article's own offset; pa.array refuses mixed
-        # naive/aware lists, so pin everything to UTC here.
-        out[date_ts] = [
-            (dt.astimezone(timezone.utc) if dt.tzinfo else dt.replace(tzinfo=timezone.utc)) if dt else None
-            for dt in out[date_ts]
-        ]
-        arrays = [pa.array(col, type=field.type) for col, field in zip(out, schema)]
-        yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+    for conv_id, turn_idx, role, tool, ts, text in rows:
+        yield _row_extract(conv_id, turn_idx, role, tool, ts, text, partition_id)
 
 
 def extract_articles(transcripts: DataFrame, salt_partitions: Optional[int] = None) -> DataFrame:
@@ -199,10 +176,11 @@ def extract_articles(transcripts: DataFrame, salt_partitions: Optional[int] = No
     :func:`operators.adaptive.adaptive_repartition` — size-gated, so a
     genuinely large scan keeps the zero-shuffle narrow-map plan.
     """
+    from ..operators.adaptive import adaptive_repartition, map_rows
+
+    transcripts = transcripts.select("conv_id", "turn_idx", "role", "tool", "ts", "text")
     if salt_partitions:
         transcripts = transcripts.repartition(salt_partitions, F.col("conv_id"), F.col("turn_idx"))
     else:
-        from ..operators.adaptive import adaptive_repartition
-
         transcripts = adaptive_repartition(transcripts, cols=("conv_id", "turn_idx"))
-    return transcripts.mapInArrow(_extract_batches_arrow, schema=EXTRACTION_SCHEMA)
+    return map_rows(transcripts, _extract_rows, EXTRACTION_SCHEMA)

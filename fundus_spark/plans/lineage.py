@@ -21,7 +21,6 @@ from __future__ import annotations
 import datetime
 from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -33,6 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.adaptive import local_rows
 from . import lake
 
 MANIFEST_SCHEMA = StructType(
@@ -87,12 +87,13 @@ def run_manifest(spark: SparkSession, manifest_path: str, run_id: str) -> List[R
 
 def manifest_frame(spark: SparkSession, rows: List[tuple]) -> DataFrame:
     """``rows`` (``MANIFEST_SCHEMA`` order) as an Arrow-backed
-    ``LocalRelation``. A list of tuples would plan as a ``LogicalRDD``
-    whose one-task append stage costs most of a second. Timestamps go in
-    as UTC-aware values: a naive one is local time, as Spark returns it
-    from ``collect()``, whatever the session time zone."""
-    frame = pd.DataFrame(
+    ``LocalRelation`` (:func:`operators.adaptive.local_rows`). A list of
+    tuples would plan as a ``LogicalRDD`` whose one-task append stage
+    costs most of a second. Timestamps go in as UTC-aware values: a
+    naive one is local time, as Spark returns it from ``collect()``,
+    whatever the session time zone."""
+    return local_rows(
+        spark,
         [row[:-1] + (row[-1].astimezone(datetime.timezone.utc),) for row in rows],
-        columns=MANIFEST_SCHEMA.fieldNames(),
+        MANIFEST_SCHEMA,
     )
-    return spark.createDataFrame(frame, MANIFEST_SCHEMA)

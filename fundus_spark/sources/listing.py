@@ -146,6 +146,8 @@ def listing_dataframe(spark, urls: Iterator[str], publisher: str):
     relational pipeline (regex_filter / first_wins_dedup) consumes."""
     from pyspark.sql import functions as F
 
+    from ..operators.adaptive import local_rows
+
     rows = [(publisher, u, i) for i, u in enumerate(urls)]
-    df = spark.createDataFrame(rows, schema="publisher string, url string, list_rank long")
+    df = local_rows(spark, rows, "publisher string, url string, list_rank long")
     return df.withColumn("url_norm", F.regexp_replace("url", r"\?.*$", ""))

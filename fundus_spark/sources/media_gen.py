@@ -53,15 +53,13 @@ constant 8x8 blocks round-trip bit-exactly through the lossy DCT path
 (see :mod:`..kernel.jpeg`), keeping the decoded-pixel oracle exact for
 a genuinely lossy codec.
 
-Payload construction runs in an Arrow-batched ``mapInPandas`` stage
-(binary building is per-row Python, but tiny: images are <= 64x48).
+Payload construction is a row generator on the Arrow boundary
+(:func:`operators.adaptive.map_rows`; binary building is per-row
+Python, but tiny: images are <= 64x48).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernel.jpeg import build_jpeg
@@ -90,80 +88,73 @@ def media_frames(doc_id: int) -> int:
     return 3 + doc_id % 5
 
 
-def _build_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for batch in batches:
-        out = {"media_id": [], "kind": [], "payload": [], "mime": []}
-        for doc_id in batch["doc_id"]:
-            doc_id = int(doc_id)
-            width, height = media_dims(doc_id)
-            sel = doc_id % 3
-            if sel == 0 and doc_id % 6 == 3:
-                payload, kind, mime = (
-                    build_gif(width, height, seed=doc_id, interlaced=doc_id % 12 == 9),
-                    "image",
-                    "image/gif",
-                )
-            elif sel == 0 and doc_id % 12 == 6:
-                payload, kind, mime = build_bmp_rle8(width, height, seed=doc_id), "image", "image/bmp"
-            elif sel == 0:
-                payload, kind, mime = build_bmp(width, height, seed=doc_id), "image", "image/bmp"
-            elif sel == 1 and doc_id % 6 == 4:
-                payload, kind, mime = (
-                    build_jpeg(
-                        width,
-                        height,
-                        seed=doc_id,
-                        gray=doc_id % 24 == 16,
-                        subsampling=(2, 2) if doc_id % 12 == 10 else (1, 1),
-                        restart_interval=2 if doc_id % 24 == 4 else 0,
-                        progressive=doc_id % 24 in (10, 22),
-                        successive=doc_id % 24 == 22,
-                    ),
-                    "image",
-                    "image/jpeg",
-                )
-            elif sel == 1:
-                payload, kind, mime = (
-                    build_png(width, height, seed=doc_id, interlaced=doc_id % 12 == 7),
-                    "image",
-                    "image/png",
-                )
-            elif doc_id % 6 == 5:
-                payload, kind, mime = (
-                    build_avi(width, height, media_frames(doc_id), seed=doc_id),
-                    "video",
-                    "video/avi",
-                )
-            elif doc_id % 12 == 8:
-                payload, kind, mime = (
-                    build_mp3(
-                        media_frames(doc_id),
-                        version=1 if doc_id % 24 == 8 else 2,
-                        rate=32000 if doc_id % 24 == 8 else 24000,
-                        bitrate=64000 if doc_id % 24 == 8 else 48000,
-                        seed=doc_id,
-                        id3=doc_id % 24 == 20,
-                    ),
-                    "audio",
-                    "audio/mpeg",
-                )
-            elif doc_id % 24 == 14:
-                payload, kind, mime = (
-                    build_mp4(width, height, media_frames(doc_id), seed=doc_id),
-                    "video",
-                    "video/mp4",
-                )
-            else:
-                payload, kind, mime = build_wav(media_samples(doc_id), seed=doc_id), "audio", "audio/wav"
-            out["media_id"].append(doc_id)
-            out["kind"].append(kind)
-            out["payload"].append(payload)
-            out["mime"].append(mime)
-        yield pd.DataFrame(out)
+def _media_rows(rows):
+    for (doc_id,) in rows:
+        width, height = media_dims(doc_id)
+        sel = doc_id % 3
+        if sel == 0 and doc_id % 6 == 3:
+            payload, kind, mime = (
+                build_gif(width, height, seed=doc_id, interlaced=doc_id % 12 == 9),
+                "image",
+                "image/gif",
+            )
+        elif sel == 0 and doc_id % 12 == 6:
+            payload, kind, mime = build_bmp_rle8(width, height, seed=doc_id), "image", "image/bmp"
+        elif sel == 0:
+            payload, kind, mime = build_bmp(width, height, seed=doc_id), "image", "image/bmp"
+        elif sel == 1 and doc_id % 6 == 4:
+            payload, kind, mime = (
+                build_jpeg(
+                    width,
+                    height,
+                    seed=doc_id,
+                    gray=doc_id % 24 == 16,
+                    subsampling=(2, 2) if doc_id % 12 == 10 else (1, 1),
+                    restart_interval=2 if doc_id % 24 == 4 else 0,
+                    progressive=doc_id % 24 in (10, 22),
+                    successive=doc_id % 24 == 22,
+                ),
+                "image",
+                "image/jpeg",
+            )
+        elif sel == 1:
+            payload, kind, mime = (
+                build_png(width, height, seed=doc_id, interlaced=doc_id % 12 == 7),
+                "image",
+                "image/png",
+            )
+        elif doc_id % 6 == 5:
+            payload, kind, mime = (
+                build_avi(width, height, media_frames(doc_id), seed=doc_id),
+                "video",
+                "video/avi",
+            )
+        elif doc_id % 12 == 8:
+            payload, kind, mime = (
+                build_mp3(
+                    media_frames(doc_id),
+                    version=1 if doc_id % 24 == 8 else 2,
+                    rate=32000 if doc_id % 24 == 8 else 24000,
+                    bitrate=64000 if doc_id % 24 == 8 else 48000,
+                    seed=doc_id,
+                    id3=doc_id % 24 == 20,
+                ),
+                "audio",
+                "audio/mpeg",
+            )
+        elif doc_id % 24 == 14:
+            payload, kind, mime = (
+                build_mp4(width, height, media_frames(doc_id), seed=doc_id),
+                "video",
+                "video/mp4",
+            )
+        else:
+            payload, kind, mime = build_wav(media_samples(doc_id), seed=doc_id), "audio", "audio/wav"
+        yield doc_id, kind, payload, mime
 
 
 def documents_as_media(documents: DataFrame) -> DataFrame:
-    from ..operators.adaptive import adaptive_repartition
+    from ..operators.adaptive import adaptive_repartition, map_rows
 
     base = adaptive_repartition(documents.select("doc_id"), cols=("doc_id",))
-    return base.mapInPandas(_build_batches, schema=MEDIA_SCHEMA)
+    return map_rows(base, _media_rows, MEDIA_SCHEMA)

@@ -24,21 +24,15 @@ _PDF_DOCS_SCHEMA = StructType(
 _WS = re.compile(r"\s+")
 
 
-def _build_batches(batches):
-    import pyarrow as pa
-
+def _pdf_rows(rows):
     from .pdf_gen import build_pdf
 
-    schema = pa.schema([pa.field("doc_id", pa.int64()), pa.field("payload", pa.binary())])
-    for batch in batches:
-        ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
-        texts = batch.column(batch.schema.get_field_index("text")).to_pylist()
-        payloads = [build_pdf([[_WS.sub(" ", t or "").strip()]]) for t in texts]
-        yield pa.RecordBatch.from_arrays([pa.array(ids, pa.int64()), pa.array(payloads, pa.binary())], schema=schema)
+    for doc_id, text in rows:
+        yield doc_id, build_pdf([[_WS.sub(" ", text or "").strip()]])
 
 
 def documents_as_pdfs(documents: DataFrame) -> DataFrame:
-    from ..operators.adaptive import adaptive_repartition
+    from ..operators.adaptive import adaptive_repartition, map_rows
 
     base = adaptive_repartition(documents.select("doc_id", "text"), cols=("doc_id",))
-    return base.mapInArrow(_build_batches, schema=_PDF_DOCS_SCHEMA)
+    return map_rows(base, _pdf_rows, _PDF_DOCS_SCHEMA)

@@ -21,9 +21,8 @@ the unit test drives the operator against a local ``http.server``.
 from __future__ import annotations
 
 import time
-from typing import Iterable, Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -47,8 +46,8 @@ FETCH_SCHEMA = StructType(
 )
 
 
-def _fetch_batches(user_agent: str, default_delay: float, timeout: float):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fetch_rows(user_agent: str, default_delay: float, timeout: float):
+    def fn(rows):
         import re
         import urllib.request
 
@@ -58,46 +57,34 @@ def _fetch_batches(user_agent: str, default_delay: float, timeout: float):
         last_fetch: dict = {}  # source -> monotonic timestamp
         charset_re = re.compile(r"charset=([A-Za-z0-9_\-]+)", re.I)
 
-        for batch in batches:
-            out = {name: [] for name in FETCH_SCHEMA.fieldNames()}
-            for row in batch.itertuples(index=False):
-                robots_txt = getattr(row, "robots_txt", None) or ""
-                matcher = matchers.get(robots_txt)
-                if matcher is None:
-                    matcher = matchers[robots_txt] = RobotsMatcher(robots_txt)
-                status = None
-                html = None
-                skipped = None
-                error = None
-                if not matcher.can_fetch(user_agent, row.url):
-                    skipped = "disallowed"  # html.py:163-167 semantics
-                else:
-                    delay = max(matcher.crawl_delay(user_agent) or 0.0, default_delay)
-                    waited = time.monotonic() - last_fetch.get(row.source, -1e9)
-                    if waited < delay:
-                        time.sleep(delay - waited)
-                    last_fetch[row.source] = time.monotonic()
-                    try:
-                        req = urllib.request.Request(row.url, headers={"User-Agent": user_agent})
-                        with urllib.request.urlopen(req, timeout=timeout) as resp:
-                            status = resp.status
-                            body = resp.read()
-                            ctype = resp.headers.get("Content-Type", "")
-                            m = charset_re.search(ctype)
-                            try:
-                                html = body.decode(m.group(1) if m else "utf-8")
-                            except (UnicodeDecodeError, LookupError):
-                                html = body.decode("utf-8", errors="replace")
-                    except Exception as err:  # noqa: BLE001 — degrade, never lose the row
-                        error = f"{type(err).__name__}: {err}"
-                out["url_id"].append(row.url_id)
-                out["source"].append(row.source)
-                out["url"].append(row.url)
-                out["status"].append(status)
-                out["html"].append(html)
-                out["skipped_by_robots"].append(skipped)
-                out["error"].append(error)
-            yield pd.DataFrame(out)
+        for url_id, source, url, robots_txt in rows:
+            robots_txt = robots_txt or ""
+            matcher = matchers.get(robots_txt)
+            if matcher is None:
+                matcher = matchers[robots_txt] = RobotsMatcher(robots_txt)
+            status = html = skipped = error = None
+            if not matcher.can_fetch(user_agent, url):
+                skipped = "disallowed"  # html.py:163-167 semantics
+            else:
+                delay = max(matcher.crawl_delay(user_agent) or 0.0, default_delay)
+                waited = time.monotonic() - last_fetch.get(source, -1e9)
+                if waited < delay:
+                    time.sleep(delay - waited)
+                last_fetch[source] = time.monotonic()
+                try:
+                    req = urllib.request.Request(url, headers={"User-Agent": user_agent})
+                    with urllib.request.urlopen(req, timeout=timeout) as resp:
+                        status = resp.status
+                        body = resp.read()
+                        ctype = resp.headers.get("Content-Type", "")
+                        m = charset_re.search(ctype)
+                        try:
+                            html = body.decode(m.group(1) if m else "utf-8")
+                        except (UnicodeDecodeError, LookupError):
+                            html = body.decode("utf-8", errors="replace")
+                except Exception as err:  # noqa: BLE001 — degrade, never lose the row
+                    error = f"{type(err).__name__}: {err}"
+            yield url_id, source, url, status, html, skipped, error
 
     return fn
 
@@ -117,5 +104,9 @@ def web_fetch(
         urls = urls.join(F.broadcast(robots), "source", "left")
     else:
         urls = urls.withColumn("robots_txt", F.lit(None).cast("string"))
-    frontier = urls.repartition(partitions or urls.sparkSession.sparkContext.defaultParallelism, "source")
-    return frontier.mapInPandas(_fetch_batches(user_agent, default_delay, timeout), schema=FETCH_SCHEMA)
+    from ..operators.adaptive import map_rows
+
+    frontier = urls.select("url_id", "source", "url", "robots_txt").repartition(
+        partitions or urls.sparkSession.sparkContext.defaultParallelism, "source"
+    )
+    return map_rows(frontier, _fetch_rows(user_agent, default_delay, timeout), FETCH_SCHEMA)

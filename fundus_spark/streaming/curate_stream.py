@@ -45,7 +45,7 @@ from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.adaptive import materialize
+from ..operators.adaptive import local_rows, materialize
 from ..plans import lake
 from ..plans.curate import chain_options, curate_increment
 
@@ -164,15 +164,12 @@ def curate_batch_into_corpus(
     verify-stage source, read only for band-candidate docs."""
     tag = None if batch_id is None else f"{stream_id or 'direct'}-{batch_id}"
     # ONE listing gives both the frozen side and the per-part reads. A
-    # fresh corpus is an empty relation the optimizer can see through:
-    # the false filter folds it to an empty LocalRelation and the
-    # frozen-side subtree is pruned; a bare empty createDataFrame plans
-    # as an opaque LogicalRDD, and that subtree would run on nothing.
+    # fresh corpus is an empty LocalRelation the optimizer can see
+    # through, so the frozen-side subtree is pruned; an empty list
+    # would plan as an opaque LogicalRDD, and that subtree would run on
+    # nothing.
     parts = _corpus_parts(spark, corpus_path, exclude_batch=tag)
-    if parts:
-        frozen = _read_parts(spark, *parts.values())
-    else:
-        frozen = spark.createDataFrame([], CORPUS_SCHEMA).where("false")
+    frozen = _read_parts(spark, *parts.values()) if parts else local_rows(spark, [], CORPUS_SCHEMA)
     store_missing: list = []
     part_docs: dict = {}
     if frozen_store_path is not None and batch_id is not None:

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.extract_stage import EXTRACTION_SCHEMA, _extract_batches_arrow
+from ..plans.extract_stage import extract_articles
 
 
 def stream_extract_articles(
@@ -30,15 +30,11 @@ def stream_extract_articles(
     On a real deployment the source is the Iceberg table's incremental
     read; the stage graph below is identical either way.
     """
-    stream = (
+    return extract_articles(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
-    # Same Arrow-native stage twin as the batch path (measured ~15-20%
-    # less worker CPU than the pandas twin); mapInArrow is a stateless
-    # map so it is stream-safe unchanged.
-    return stream.mapInArrow(_extract_batches_arrow, schema=EXTRACTION_SCHEMA)
 
 
 def stream_first_wins_dedup(

@@ -782,27 +782,20 @@ def test_media_features_unknown_container_is_honest_null():
     yields NULL format/width/height/duration and decoded=False — never
     the old digest-derived fake dimensions a stats pipeline could
     mistake for real data."""
-    import pandas as pd
-
     from fundus_spark.kernel.media import build_bmp
-    from fundus_spark.operators.multimodal import _extract_batches
+    from fundus_spark.operators.multimodal import FEATURE_SCHEMA, _feature_rows
 
-    batch = pd.DataFrame(
-        {
-            "media_id": [1, 2],
-            "kind": ["image", "image"],
-            "payload": [b"definitely not a media container, long enough to sniff", build_bmp(5, 4)],
-            "mime": ["application/octet-stream", "image/bmp"],
-        }
-    )
-    (out,) = list(_extract_batches([batch]))
-    unknown = out[out.media_id == 1].iloc[0]
-    assert not unknown.decoded
-    # int columns with missing values surface as NaN in pandas; Arrow
-    # maps both None and NaN to SQL NULL
-    assert unknown.format is None and pd.isna(unknown.width) and pd.isna(unknown.height)
-    known = out[out.media_id == 2].iloc[0]
-    assert bool(known.decoded) and known.format == "bmp" and known.width == 5 and known.height == 4
+    rows = [
+        (1, "image", b"definitely not a media container, long enough to sniff"),
+        (2, "image", build_bmp(5, 4)),
+    ]
+    out = {r[0]: dict(zip(FEATURE_SCHEMA.fieldNames(), r)) for r in _feature_rows(iter(rows))}
+    unknown = out[1]
+    assert not unknown["decoded"]
+    # missing values are None, which the Arrow boundary writes as NULL
+    assert unknown["format"] is None and unknown["width"] is None and unknown["height"] is None
+    known = out[2]
+    assert known["decoded"] and known["format"] == "bmp" and known["width"] == 5 and known["height"] == 4
 
 
 def test_robots_matcher_rfc9309():

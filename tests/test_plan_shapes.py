@@ -328,6 +328,79 @@ def test_manifest_commit_frame_is_a_local_relation(spark):
     assert df.collect() == spark.createDataFrame(rows, MANIFEST_SCHEMA).collect()
 
 
+def _is_local_relation(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def test_kmeans_model_is_a_local_relation(spark):
+    """The fitted codebook is built on the driver; as one Arrow table it
+    plans as a LocalRelation, where a list would plan as a LogicalRDD
+    with a one-task stage per reading job."""
+    from fundus_spark.operators.clustering import kmeans_fit
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 2), 0.5]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    model = kmeans_fit(emb, k=2, n_iter=1, dim=4)
+    assert _is_local_relation(model)
+    assert model.count() == 2
+
+
+def test_bpe_merge_table_is_a_local_relation(spark):
+    from fundus_spark.operators.bpe import bpe_train
+
+    df = spark.createDataFrame([(1, "low lower lowest"), (2, "newer newest")], "doc_id long, text string")
+    model = bpe_train(df, n_merges=4)
+    assert _is_local_relation(model)
+    assert model.count() == 4
+
+
+def test_classifier_model_is_a_local_relation(spark):
+    from fundus_spark.operators.classifier import quality_classifier_fit
+
+    docs = spark.createDataFrame(
+        [(i, "good clean text %d" % i if i % 2 else "spam buy now %d" % i, i % 2) for i in range(8)],
+        "doc_id long, text string, y int",
+    )
+    model = quality_classifier_fit(docs, n_features=8, n_iter=1)
+    assert _is_local_relation(model)
+    assert model.count() == 9
+
+
+def test_listing_frame_is_a_local_relation(spark):
+    from fundus_spark.sources.listing import listing_dataframe
+
+    df = listing_dataframe(spark, iter(["https://a.example/1?x=1", "https://a.example/2"]), "pub")
+    assert _is_local_relation(df)
+    assert [r.url_norm for r in df.orderBy("list_rank").collect()] == ["https://a.example/1", "https://a.example/2"]
+
+
+def test_fresh_corpus_frozen_side_is_a_local_relation(spark, tmp_path, monkeypatch):
+    """Batch 0 into a fresh corpus curates against an empty frozen side
+    that is an empty LocalRelation, which the optimizer prunes. The
+    frozen side is captured where it enters the curate chain; no job
+    runs."""
+    import fundus_spark.streaming.curate_stream as cs
+
+    class Captured(Exception):
+        pass
+
+    seen = {}
+
+    def capture(batch, frozen, **kwargs):
+        seen["frozen"] = frozen
+        raise Captured
+
+    monkeypatch.setattr(cs, "curate_increment", capture)
+    batch = spark.createDataFrame([(1, "s", "some text")], "doc_id long, source string, text string")
+    with pytest.raises(Captured):
+        cs.curate_batch_into_corpus(spark, batch, str(tmp_path / "corpus"), batch_id=0)
+    assert _is_local_relation(seen["frozen"])
+    assert "<empty>" in seen["frozen"]._jdf.queryExecution().optimizedPlan().toString()
+
+
 #: Exchange operators (shuffle and broadcast) in the executed plan of the
 #: queries whose plans the round-8 optimization pass reworked (its
 #: ``explain("formatted")`` dumps, in the git history of ``plans/r08/``,

@@ -53,8 +53,7 @@ def test_stream_sessionized_conversations(spark, tmp_path):
     """Native session-window assembly: conv 'a' goes quiet, a much
     later conv advances the watermark past a's gap, a's session emits
     with turns in turn_idx order."""
-    from fundus_spark.plans.extract_stage import EXTRACTION_SCHEMA
-    from fundus_spark.streaming import sessionized_conversations, write_stream_to_parquet
+    from fundus_spark.streaming import sessionized_conversations, stream_extract_articles
 
     in_path = str(tmp_path / "in")
     # file 1: conv a (3 turns inside one 10-min session, out of order)
@@ -64,12 +63,7 @@ def test_stream_sessionized_conversations(spark, tmp_path):
     # file 3: conv c even later -> watermark passes b's gap too
     _write_turn_file(spark, in_path, [_turn("c", 0, 400)])
 
-    stream = (
-        spark.readStream.schema("conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
-        .mapInArrow(__import__("fundus_spark.plans.extract_stage", fromlist=["_extract_batches_arrow"])._extract_batches_arrow, schema=EXTRACTION_SCHEMA)
-    )
+    stream = stream_extract_articles(spark, in_path, max_files_per_trigger=1)
     sessions = sessionized_conversations(stream, gap="10 minutes", watermark="5 minutes")
     out = str(tmp_path / "out")
     q = (
@@ -90,20 +84,14 @@ def test_stream_sessionized_conversations(spark, tmp_path):
 def test_stream_inactivity_timeout_state(spark, tmp_path):
     """applyInPandasWithState twin: conversation emits exactly when the
     watermark passes its latest turn + gap."""
-    from fundus_spark.plans.extract_stage import EXTRACTION_SCHEMA, _extract_batches_arrow
-    from fundus_spark.streaming import conversations_with_inactivity_timeout
+    from fundus_spark.streaming import conversations_with_inactivity_timeout, stream_extract_articles
 
     in_path = str(tmp_path / "in")
     _write_turn_file(spark, in_path, [_turn("a", 1, 2), _turn("a", 0, 0)])
     _write_turn_file(spark, in_path, [_turn("b", 0, 120)])
     _write_turn_file(spark, in_path, [_turn("c", 0, 400)])
 
-    stream = (
-        spark.readStream.schema("conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
-        .mapInArrow(_extract_batches_arrow, schema=EXTRACTION_SCHEMA)
-    )
+    stream = stream_extract_articles(spark, in_path, max_files_per_trigger=1)
     convs = conversations_with_inactivity_timeout(stream, gap_ms=600_000, watermark="5 minutes")
     out = str(tmp_path / "out")
     q = (

@@ -64,7 +64,7 @@ SCAN_SPLIT_CONF = {
 def run_visit(cores: int, transcripts_path: str, n_turns: int, timed_runs: int) -> list:
     """Fresh SparkContext at local[cores] (pinned), one full warm-up
     pass (JIT + Python worker spawn + kernel import + page cache), then
-    `timed_runs` timed passes of the scan->mapInArrow extraction stage
+    `timed_runs` timed passes of the scan->map_rows extraction stage
     (zero shuffles in the plan). Returns turns/sec per timed pass."""
     from fundus_spark.plans import build_session, extract_articles
 
