@@ -4,8 +4,13 @@ The reference engine (fundus) leans on lxml/libxml2 for HTML parsing
 (``lxml.html.document_fromstring``, see reference
 ``src/fundus/parser/base_parser.py:277-279``). lxml is not available in
 this environment, so this module implements an equivalent DOM from
-scratch on top of :class:`html.parser.HTMLParser`:
+scratch:
 
+* :func:`tokenize` is one regex-driven pass over the document that
+  yields the token stream of CPython's ``html.parser`` (the parser the
+  golden trees were fitted against), recovery branches and data-chunk
+  boundaries included, without its per-token method dispatch and
+  position bookkeeping.
 * ``Element`` mirrors the lxml text/tail model: ``text`` is the text
   before the first child, every node's ``tail`` is the text that
   follows it inside its parent.
@@ -24,10 +29,11 @@ a general-purpose browser parser.
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
+import re
+from html import unescape
 from typing import Dict, Iterator, List, Optional, Tuple
 
-__all__ = ["Element", "Comment", "parse_html", "document_order_index"]
+__all__ = ["Element", "Comment", "parse_html", "document_order_index", "tokenize"]
 
 
 # libxml2's HTML4 element table (the reference's parser) — NOT the
@@ -178,14 +184,6 @@ class Element:
         walk(self)
         return "".join(parts)
 
-    def deepcopy(self) -> "Element":
-        clone = Comment(self.text or "") if isinstance(self, Comment) else Element(self.tag, dict(self.attrib))
-        clone.text = self.text
-        clone.tail = self.tail
-        for child in self._children:
-            clone.append(child.deepcopy())
-        return clone
-
     def __repr__(self) -> str:
         return f"<Element {self.tag} at 0x{id(self):x}>"
 
@@ -225,9 +223,239 @@ def document_order_index(root: Element) -> Dict[int, int]:
     return {id(node): i for i, node in enumerate(root.iter())}
 
 
-class _TreeBuilder(HTMLParser):
+# --- tokenizer ---------------------------------------------------------------
+#
+# html.parser's token grammar (CPython 3.11 ``html/parser.py`` and
+# ``_markupbase.py``), kept pattern for pattern: the trees the golden
+# corpus was fitted against were built on its token stream, recovery
+# branches and data-chunk boundaries included.
+_TAGFIND = re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
+_ATTRFIND = re.compile(
+    r"((?<=[\'\"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"
+    r"(\'[^\']*\'|\"[^\"]*\"|(?![\'\"])[^>\s]*))?(?:\s|/(?!>))*"
+)
+_LOCATE_STARTTAG_END = re.compile(
+    r"""
+  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
+  (?:[\s/]*                          # optional whitespace before attribute name
+    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
+      (?:\s*=+\s*                    # value indicator
+        (?:'[^']*'                   # LITA-enclosed value
+          |"[^"]*"                   # LIT-enclosed value
+          |(?!['"])[^>\s]*           # bare value
+         )
+        \s*                          # possibly followed by a space
+       )?(?:\s|/(?!>))*
+     )*
+   )?
+  \s*                                # trailing whitespace
+""",
+    re.VERBOSE,
+)
+_ENDTAGFIND = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+_COMMENT_CLOSE = re.compile(r"--\s*>")
+_DECL_NAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_MARKED_SECTION_CLOSE = re.compile(r"]\s*]\s*>")
+_MS_MARKED_SECTION_CLOSE = re.compile(r"]\s*>")
+# An attribute-free start tag: where this matches, the general start-tag
+# grammar above yields the same tag, no attributes and a plain ``>``.
+_BARE_STARTTAG = re.compile(r"<([a-zA-Z][^\t\n\r\f />\x00]*)>")
+# script/style content runs raw up to the first matching end tag. A
+# self-closed <script/> or <style/> opens it too: the tree keeps those
+# elements open (they are in HTML4_ELEMENTS), and il Giornale's rewrap
+# re-parses <script/> that way.
+_CDATA_END = {tag: re.compile(r"</\s*%s\s*>" % tag, re.I) for tag in ("script", "style")}
+_ASCII_LETTERS = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
+_ATTR_STOP = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+
+def _starttag_end(html: str, i: int) -> int:
+    """End of the start tag at ``i``, or -1 when it is unterminated
+    (html.parser's ``check_for_whole_start_tag``)."""
+    j = _LOCATE_STARTTAG_END.match(html, i).end()  # type: ignore[union-attr]
+    nxt = html[j : j + 1]
+    if nxt == ">":
+        return j + 1
+    if nxt == "/":
+        return j + 2 if html.startswith("/>", j) else -1
+    if nxt == "" or nxt in _ATTR_STOP:
+        return -1
+    return j  # bogus input: the tag ends where the grammar stopped
+
+
+def _marked_section_end(html: str, i: int) -> int:
+    """End of the ``<![name ...]>`` section at ``i``, or -1 when it is
+    unterminated; raises where html.parser raises."""
+    n = len(html)
+    if i + 3 == n:
+        return -1
+    m = _DECL_NAME.match(html, i + 3)
+    if m is None:
+        raise AssertionError("expected name token at %r" % html[i : i + 20])
+    if m.end() == n:
+        return -1
+    name = m.group().strip().lower()
+    if name in ("temp", "cdata", "ignore", "include", "rcdata"):
+        close = _MARKED_SECTION_CLOSE.search(html, i + 3)
+    elif name in ("if", "else", "endif"):
+        close = _MS_MARKED_SECTION_CLOSE.search(html, i + 3)
+    else:
+        raise AssertionError("unknown status keyword %r in marked section" % html[i + 3 : m.end()])
+    return close.end() if close is not None else -1
+
+
+def _attributes(html: str, pos: int, end: int) -> Tuple[List[Tuple[str, Optional[str]]], int]:
+    """The attributes of a start tag from ``pos`` up to ``end``, and
+    where they stop: lowercased names, ``None`` for a bare attribute,
+    quotes stripped and character references unescaped in values."""
+    attrs: List[Tuple[str, Optional[str]]] = []
+    while pos < end:
+        m = _ATTRFIND.match(html, pos)
+        if m is None:
+            break
+        name, rest, value = m.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        if value:
+            value = unescape(value)
+        attrs.append((name.lower(), value))
+        pos = m.end()
+    return attrs, pos
+
+
+def tokenize(html: str, sink) -> None:
+    """Feed ``html`` to ``sink`` as CPython's ``html.parser`` does for
+    one ``feed`` + ``close`` with ``convert_charrefs``: ``sink.starttag(tag, attrs)``,
+    ``startendtag(tag, attrs)``, ``endtag(tag)``, ``data(text)``,
+    ``comment(text)`` and ``pi(text)`` arrive in the same order, with
+    the same arguments and the same data chunks.
+
+    * a ``<`` that starts no construct is data, and a construct still
+      open at the end of input becomes data up to its next ``>`` (or
+      ``<``);
+    * ``</`` + non-letter is a bogus comment (``</>`` is dropped), and
+      so is ``<!...>`` other than a comment, a doctype or a marked
+      section;
+    * a data run's character references are unescaped, except inside
+      script/style, whose raw content ends at ``</script\\s*>``
+      (case-insensitive) and is dropped when that never comes;
+    * a start tag whose tail the grammar cannot read is data, raw.
+    """
+    starttag, startendtag, endtag = sink.starttag, sink.startendtag, sink.endtag
+    data, comment, pi = sink.data, sink.comment, sink.pi
+    find, startswith = html.find, html.startswith
+    n = len(html)
+    i = 0
+    cdata = None  # the open script/style element
+    cdata_end = None
+    while i < n:
+        if cdata is None:
+            j = find("<", i)
+            if j < 0:
+                break
+            if i < j:
+                data(unescape(html[i:j]))
+        else:
+            m = cdata_end.search(html, i)  # type: ignore[union-attr]
+            if m is None:
+                break
+            j = m.start()
+            if i < j:
+                data(html[i:j])
+        i = j
+        c = html[i + 1 : i + 2]
+        k = -1
+        if c in _ASCII_LETTERS:
+            m = _BARE_STARTTAG.match(html, i)
+            if m is not None:
+                tag = m.group(1).lower()
+                starttag(tag, [])
+                k = m.end()
+            else:
+                end = _starttag_end(html, i)
+                if end >= 0:
+                    m = _TAGFIND.match(html, i + 1)
+                    tag = m.group(1).lower()  # type: ignore[union-attr]
+                    attrs, pos = _attributes(html, m.end(), end)  # type: ignore[union-attr]
+                    tail = html[pos:end].strip()
+                    if tail == ">":
+                        starttag(tag, attrs)
+                    elif tail == "/>":
+                        startendtag(tag, attrs)
+                    else:
+                        data(html[i:end])
+                        tag = None
+                    k = end
+            if k >= 0 and tag in _CDATA_END:
+                cdata, cdata_end = tag, _CDATA_END[tag]
+        elif c == "/":
+            m = _ENDTAGFIND.match(html, i)
+            if m is not None:
+                k = m.end()
+                tag = m.group(1).lower()
+                if cdata is not None and tag != cdata:
+                    data(html[i:k])
+                else:
+                    endtag(tag)
+                    cdata = None
+            elif (gt := find(">", i + 1)) >= 0:
+                k = gt + 1
+                if cdata is not None:
+                    data(html[i:k])
+                elif (m := _TAGFIND.match(html, i + 2)) is not None:
+                    endtag(m.group(1).lower())
+                elif not startswith("</>", i):
+                    comment(html[i + 2 : gt])
+        elif c == "!":
+            if startswith("<!--", i):
+                m = _COMMENT_CLOSE.search(html, i + 4)
+                if m is not None:
+                    comment(html[i + 4 : m.start()])
+                    k = m.end()
+            elif startswith("<![", i):
+                k = _marked_section_end(html, i)
+            elif html[i : i + 9].lower() == "<!doctype":
+                gt = find(">", i + 9)
+                k = gt + 1 if gt >= 0 else -1
+            else:
+                gt = find(">", i + 2)
+                if gt >= 0:
+                    comment(html[i + 2 : gt])
+                    k = gt + 1
+        elif c == "?":
+            gt = find(">", i + 2)
+            if gt >= 0:
+                pi(html[i + 2 : gt])
+                k = gt + 1
+        elif i + 1 < n:
+            data("<")
+            k = i + 1
+        else:
+            break
+        if k < 0:
+            # unterminated at the end of input: data up to the next '>'
+            k = find(">", i + 1)
+            if k < 0:
+                k = find("<", i + 1)
+                if k < 0:
+                    k = i + 1
+            else:
+                k += 1
+            data(unescape(html[i:k]) if cdata is None else html[i:k])
+        i = k
+    if i < n and cdata is None:
+        data(unescape(html[i:]))
+
+
+# --- tree builder ------------------------------------------------------------
+
+
+class _TreeBuilder:
+    """Builds the tree from :func:`tokenize`'s callbacks."""
+
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         self.root: Optional[Element] = None
         self._stack: List[Element] = []
         self._phase = "initial"  # initial -> head -> body
@@ -297,8 +525,8 @@ class _TreeBuilder(HTMLParser):
         if self._stack:
             self._stack.pop()
 
-    # --- parser callbacks ---------------------------------------------------
-    def handle_starttag(self, tag: str, attrs: List[Tuple[str, Optional[str]]]) -> None:
+    # --- tokenizer callbacks ------------------------------------------------
+    def starttag(self, tag: str, attrs: List[Tuple[str, Optional[str]]]) -> None:
         attrib: Dict[str, str] = {}
         for name, value in attrs:
             if name not in attrib:
@@ -350,7 +578,7 @@ class _TreeBuilder(HTMLParser):
         if tag not in VOID_ELEMENTS:
             self._stack.append(el)
 
-    def handle_startendtag(self, tag: str, attrs: List[Tuple[str, Optional[str]]]) -> None:
+    def startendtag(self, tag: str, attrs: List[Tuple[str, Optional[str]]]) -> None:
         # Empty-tag semantics fitted to the golden corpus (generated
         # with lxml 5.x / libxml2 >= 2.12, whose HTML parser differs
         # from the system 2.9.14 here): elements KNOWN to the HTML4
@@ -358,18 +586,11 @@ class _TreeBuilder(HTMLParser):
         # following siblings (il Giornale's rewrap depends on it) —
         # while HTML5-era elements like <source/> are childless
         # (Correctiv's golden depends on THAT).
-        if tag in VOID_ELEMENTS or tag in HTML4_ELEMENTS:
-            self.handle_starttag(tag, attrs)
-            if tag in ("script", "style"):
-                # slash ignored -> the element is OPEN, so subsequent
-                # content is CDATA until the next real end tag (il
-                # Giornale's rewrap re-parses <script/> this way)
-                self.set_cdata_mode(tag)
-        else:
-            self.handle_starttag(tag, attrs)
-            self.handle_endtag(tag)
+        self.starttag(tag, attrs)
+        if tag not in VOID_ELEMENTS and tag not in HTML4_ELEMENTS:
+            self.endtag(tag)
 
-    def handle_endtag(self, tag: str) -> None:
+    def endtag(self, tag: str) -> None:
         if tag == "br":
             # browsers turn a stray </br> into <br>, but libxml2 (the
             # reference's parser) just drops it — golden document-order
@@ -395,7 +616,7 @@ class _TreeBuilder(HTMLParser):
                 break
         # no matching open tag: ignore stray end tag
 
-    def handle_data(self, data: str) -> None:
+    def data(self, data: str) -> None:
         if not data:
             return
         if self._phase in ("initial", "head", "initial-after-head"):
@@ -426,10 +647,10 @@ class _TreeBuilder(HTMLParser):
         else:
             parent.text = (parent.text or "") + data
 
-    def handle_comment(self, data: str) -> None:
+    def comment(self, data: str) -> None:
         self._append_non_element(Comment(data))
 
-    def handle_pi(self, data: str) -> None:
+    def pi(self, data: str) -> None:
         self._append_non_element(ProcessingInstruction(data))
 
     def _append_non_element(self, node: "Comment") -> None:
@@ -449,14 +670,7 @@ class _TreeBuilder(HTMLParser):
             # between <html> and <head>, or between </head> and <body>
             self.root.append(node)
 
-    def handle_decl(self, decl: str) -> None:
-        pass
-
-    def unknown_decl(self, data: str) -> None:
-        pass
-
-    def close_all(self) -> Element:
-        self.close()
+    def finish(self) -> Element:
         if self.root is None:
             self._ensure_root()
         if self._body is None:
@@ -471,5 +685,5 @@ def parse_html(html: str) -> Element:
     ``lxml.html.document_fromstring`` (``base_parser.py:277``).
     """
     builder = _TreeBuilder()
-    builder.feed(html)
-    return builder.close_all()
+    tokenize(html, builder)
+    return builder.finish()

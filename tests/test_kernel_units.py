@@ -271,6 +271,166 @@ def test_date_parsing_two_digit_years_follow_the_calendar_year(monkeypatch):
     assert generic_date_parsing("1 January 31").year == this_year
 
 
+def _iso_inputs():
+    """(text, strict) pairs: ``strict`` marks an in-range
+    ``YYYY-MM-DDTHH:MM:SS[.f]`` stamp with ``Z``, ``±HH:MM`` or no zone
+    and nothing around it; the rest are near misses."""
+    import random
+
+    rng = random.Random("iso-fast-path")
+    out = []
+    for _ in range(600):
+        stamp = "%04d-%02d-%02dT%02d:%02d:%02d" % (
+            rng.randint(1, 9999), rng.randint(1, 12), rng.randint(1, 28),
+            rng.randint(0, 23), rng.randint(0, 59), rng.randint(0, 59),
+        )  # fmt: skip
+        frac = rng.choice(["", ".000", ".123", ".5", ".120000", ".999999", ".123456789", ".000000001"])
+        zone = rng.choice(["", "Z", "+00:00", "-00:00", "+01:00", "-08:00", "+05:30", "+23:59", "-23:59"])
+        text, strict = stamp + frac + zone, True
+        roll = rng.random()
+        if roll < 0.08:
+            text, strict = text.replace("T", "t"), False
+        elif roll < 0.12 and zone == "Z":
+            text, strict = text[:-1] + "z", False
+        elif roll < 0.2:
+            text, strict = rng.choice([" ", "\t", "  "]) + text + rng.choice(["", " "]), False
+        elif roll < 0.26:
+            text, strict = stamp[:10], False
+        elif roll < 0.36:
+            i, bad = rng.choice([(5, "13"), (8, "31" if stamp[5:7] == "02" else "32"), (11, "24"), (14, "60"), (17, "60")])
+            text, strict = text[:i] + bad + text[i + 2 :], False
+        elif roll < 0.4:
+            text, strict = stamp + rng.choice(["+24:00", "+05:99", "+0530", ".", ".1234567890", ",5"]), False
+        out.append((text, strict))
+    return out
+
+
+def _observe(parse, text):
+    """What a caller can see of ``parse(text)``: the value, its repr,
+    ``str()``, ``utcoffset()``, ``tzname()`` and tzinfo type, or the
+    error each of them raises."""
+    try:
+        d = parse(text)
+    except Exception as exc:  # noqa: BLE001 — the error is part of the behaviour
+        return ("error", type(exc).__name__, str(exc))
+    seen = []
+    for view in (lambda: d, lambda: repr(d), lambda: str(d), d.utcoffset, d.tzname, lambda: type(d.tzinfo)):
+        try:
+            seen.append(view())
+        except Exception as exc:  # noqa: BLE001
+            seen.append(("error", type(exc).__name__, str(exc)))
+    return tuple(seen)
+
+
+def _date_observation(text):
+    from fundus_spark.kernel import generics
+
+    return _observe(generics.generic_date_parsing, text)
+
+
+def _dateutil_observation(text):
+    import time
+
+    from dateutil import parser as dateutil_parser
+
+    from fundus_spark.kernel import generics
+
+    info = generics._parserinfo_for_year(time.localtime().tm_year)
+    return _observe(lambda t: dateutil_parser.parse(t, tzinfos=generics._TZ_OFFSETS, parserinfo=info, fuzzy=True), text)
+
+
+def iso_fast_path_mismatches():
+    return [text for text, _ in _iso_inputs() if _date_observation(text) != _dateutil_observation(text)]
+
+
+def test_iso_date_fast_path_matches_dateutil(monkeypatch):
+    """Value, ``str()``, ``utcoffset()``, ``tzname()`` and tzinfo type
+    equal dateutil's on every input; only in-range strict stamps skip
+    dateutil, everything else still reaches it."""
+    from dateutil import parser as dateutil_parser
+
+    inputs = _iso_inputs()
+    assert sum(strict for _, strict in inputs) >= 200 and sum(not strict for _, strict in inputs) >= 150
+    assert iso_fast_path_mismatches() == []
+
+    calls = []
+    real_parse = dateutil_parser.parse
+    monkeypatch.setattr(dateutil_parser, "parse", lambda *a, **k: calls.append(a[0]) or real_parse(*a, **k))
+    for text, strict in inputs:
+        del calls[:]
+        _date_observation(text)
+        assert calls == ([] if strict else [text]), text
+
+
+def test_iso_date_fast_path_matches_dateutil_in_other_zones():
+    """dateutil gives a ``Z``/zero-offset stamp ``tzlocal()`` on a host
+    whose zone is called UTC and ``tzutc()`` elsewhere; so does the
+    fast path."""
+    import subprocess
+    import sys
+
+    code = "from tests.test_kernel_units import iso_fast_path_mismatches as m; print(len(m()))"
+    for zone in ("UTC", "Europe/Berlin", "America/New_York", "Asia/Kolkata"):
+        env = {**__import__("os").environ, "TZ": zone}
+        out = subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True)
+        assert out.stdout.strip() == "0", (zone, out.stdout, out.stderr[-2000:])
+
+
+def _generic_page():
+    import random
+
+    from fundus_spark.sources.transcripts import synth_article_html
+
+    return synth_article_html(random.Random(11), 11)
+
+
+def test_generic_page_extraction_copies_no_node_and_parses_no_date_with_dateutil(monkeypatch):
+    """Body text is read off the parsed tree (no node is copied) and the
+    page's ISO date never reaches dateutil."""
+    from dateutil import parser as dateutil_parser
+
+    from fundus_spark.kernel import dom, run_extraction
+    from fundus_spark.rules.generic import GENERIC
+
+    html = _generic_page()
+    parsed = sum(1 for _ in parse_html(html).iter())
+    built, parses = [], []
+    real_init, real_parse = dom.Element.__init__, dateutil_parser.parse
+
+    def counting_init(self, tag, attrib=None):
+        built.append(tag)
+        real_init(self, tag, attrib)
+
+    monkeypatch.setattr(dom.Element, "__init__", counting_init)
+    monkeypatch.setattr(dateutil_parser, "parse", lambda *a, **k: parses.append(a) or real_parse(*a, **k))
+    out = run_extraction(GENERIC, html)
+    assert out["body"]["sections"] and out["publishing_date"] is not None
+    assert len([tag for tag in built if tag != "#document"]) == parsed  # the parse, and nothing else
+    assert parses == []
+
+
+def test_parse_html_constructs_no_html_parser(monkeypatch):
+    import html.parser
+
+    made = []
+    real_init = html.parser.HTMLParser.__init__
+    monkeypatch.setattr(html.parser.HTMLParser, "__init__", lambda self, *a, **k: made.append(1) or real_init(self, *a, **k))
+    assert parse_html(_generic_page()).tag == "html"
+    assert made == []
+
+
+def test_name_test_descendant_steps_compare_tags_in_the_walk(monkeypatch):
+    from fundus_spark.kernel import xpath
+
+    tests = []
+    real_node_test = xpath._node_test
+    monkeypatch.setattr(xpath, "_node_test", lambda *a: tests.append(1) or real_node_test(*a))
+    doc = parse_html("<body><article><p>a</p><!--c--><div><p>b</p></div></article><p>c</p></body>")
+    assert [p.text for p in XPath("//article//p")(doc)] == ["a", "b"]
+    assert [el.tag for el in XPath("descendant-or-self::article")(doc[0][0])] == ["article"]
+    assert tests == []
+
+
 def test_srcset_parsing_sorted_by_descriptor():
     srcset = "u1 480w, u2 1024w, u3 2x"
     assert parse_srcset(srcset) == {"2x": "u3", "480w": "u1", "1024w": "u2"}
