@@ -31,6 +31,7 @@ from .xpath import _xpath_normalize_space
 __all__ = ["assemble_body", "body_to_plaintext", "empty_body"]
 
 _SUMMARY, _SUBHEAD, _PARAGRAPH = 0, 1, 2
+_SCRIPT = ("script",)
 
 
 def empty_body() -> Dict[str, Any]:
@@ -119,7 +120,7 @@ def assemble_body(
         run_kinds.insert(1, _SUBHEAD)
 
     def text_of(el: Element) -> str:
-        return normalize_whitespace(break_preserved_text(el, excluded_tags=["script"], tag_filter=tag_filter))
+        return normalize_whitespace(break_preserved_text(el, _SCRIPT, tag_filter))
 
     summary = [text_of(n) for n in runs[0]]
     sections: List[Dict[str, Any]] = []

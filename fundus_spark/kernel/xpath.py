@@ -23,6 +23,25 @@ XPath 1.0 subset those rules actually use:
 Reverse axes number their positions nearest-first, per spec — relied on
 by rules like ``p[not(preceding-sibling::*[1][self::h2 ...])]``.
 
+An expression is parsed and compiled once, in ``XPath.__init__``, into
+a tree of closures ``f(node, pos, size)``; a call runs the closures and
+never looks at the AST again. A few shapes compile to closures of their
+own:
+
+* a name-test ``child`` step compares child tags, and a name-test
+  ``descendant(-or-self)`` step compares tags in one preorder walk;
+* ``@name = 'lit'`` is one ``attrib.get``, true on a non-comment
+  element whose value equals ``lit``; ``@name != 'lit'`` is true only
+  when the attribute is there and differs; ``@name`` as a string or a
+  boolean reads ``attrib`` directly;
+* an order-free predicate (:func:`_is_order_free`) filters with a
+  comprehension; ``[k]`` slices; other predicates keep the position
+  loop.
+
+An unknown function or a wrong argument count fails at construction;
+type errors (a union of non-node-sets, ``count`` of a string) fail
+when evaluated.
+
 Results are node lists in document order without duplicates. The order
 comes from the walk itself wherever it can: ``//T[preds]`` compiles to
 one ``descendant::T[preds]`` step when no predicate depends on position,
@@ -36,6 +55,7 @@ name). Attribute hits are returned as :class:`AttrNode`.
 
 from __future__ import annotations
 
+import operator
 import re
 from typing import Any, Callable, Iterable, List, Optional, Sequence, Tuple, Union
 
@@ -407,7 +427,7 @@ class _Parser:
 
 
 # --------------------------------------------------------------------------
-# Evaluator
+# Semantics shared by the compiled closures
 # --------------------------------------------------------------------------
 
 
@@ -448,11 +468,73 @@ def _to_bool(value: Any) -> bool:
     return bool(value)
 
 
+_ORDER_CMP = {"<": operator.lt, ">": operator.gt, "<=": operator.le, ">=": operator.ge}
+
+
+def _cmp_scalar(op: str, a: Any, b: Any) -> bool:
+    if op in _ORDER_CMP:
+        return _ORDER_CMP[op](_to_number(a), _to_number(b))
+    if isinstance(a, float) or isinstance(b, float):
+        a, b = _to_number(a), _to_number(b)
+    elif isinstance(a, bool) or isinstance(b, bool):
+        a, b = _to_bool(a), _to_bool(b)
+    else:
+        a, b = _to_string(a), _to_string(b)
+    return a == b if op == "=" else a != b
+
+
+def _compare(op: str, left: Any, right: Any) -> bool:
+    """XPath 1.0 §3.4: a node-set compares through its nodes' string
+    values, true when any pair satisfies ``op``."""
+    lset = left if isinstance(left, list) else None
+    rset = right if isinstance(right, list) else None
+    if lset is not None and rset is not None:
+        lvals = {xpath_string_value(n) for n in lset}
+        return any(_cmp_scalar(op, lv, xpath_string_value(rn)) for lv in lvals for rn in rset)
+    if lset is not None:
+        return any(_cmp_scalar(op, xpath_string_value(n), right) for n in lset)
+    if rset is not None:
+        return any(_cmp_scalar(op, left, xpath_string_value(n)) for n in rset)
+    return _cmp_scalar(op, left, right)
+
+
+def _translate(s: str, frm: str, to: str) -> str:
+    table = {}
+    for i, ch in enumerate(frm):
+        if ch not in table:  # first occurrence wins (XPath 1.0 §4.2)
+            table[ch] = to[i] if i < len(to) else None
+    return "".join(table.get(ch, ch) for ch in s if table.get(ch, ch) is not None)
+
+
+def _regex_flags(flags: str) -> int:
+    out = 0
+    if "i" in flags:
+        out |= re.IGNORECASE
+    if "s" in flags:
+        out |= re.DOTALL
+    if "m" in flags:
+        out |= re.MULTILINE
+    return out
+
+
 def _text_nodes(el: Element) -> List[TextNode]:
     out: List[TextNode] = []
     if el.text:
         out.append(TextNode(el, el.text, 0))
     for i, child in enumerate(el._children, start=1):  # noqa: SLF001
+        if child.tail:
+            out.append(TextNode(el, child.tail, i))
+    return out
+
+
+def _child_nodes(el: Element) -> List[XNode]:
+    """``child::node()``: elements, comments AND text children,
+    interleaved in document order."""
+    out: List[XNode] = []
+    if el.text:
+        out.append(TextNode(el, el.text, 0))
+    for i, child in enumerate(el._children, start=1):  # noqa: SLF001
+        out.append(child)
         if child.tail:
             out.append(TextNode(el, child.tail, i))
     return out
@@ -544,242 +626,436 @@ def _node_test(node: XNode, axis: str, test: Tuple) -> bool:
     return False
 
 
-class _Evaluator:
-    def __init__(self, namespaces: Optional[dict] = None, variables: Optional[dict] = None):
-        self.variables = variables or {}
+# --------------------------------------------------------------------------
+# Compiler
+# --------------------------------------------------------------------------
+# Every AST node compiles to a closure ``f(node, pos, size)``: the context
+# node, its position and the context size. ``_compile_bool`` and
+# ``_compile_string`` compile the same node to a closure that returns
+# ``_to_bool`` / ``_to_string`` of its value directly. A location step
+# compiles to ``(one, ordered)``: ``one(ctx)`` is the step's node list
+# from one context node, predicates applied; ``ordered`` says whether
+# that list is in document order already. Closures name
+# ``_document_sort`` and ``_node_test`` as module globals, so they are
+# looked up at call time.
 
-    # --- expression dispatch ------------------------------------------
-    def eval(self, ast: Any, node: XNode, pos: int, size: int) -> Any:
-        op = ast[0]
-        if op == "num":
-            return ast[1]
-        if op == "str":
-            return ast[1]
+Fn = Callable[[XNode, int, int], Any]
+Step = Tuple[Callable[[XNode], List[XNode]], bool]
+NodeFilter = Callable[[List[XNode]], List[XNode]]
+
+#: accepted argument counts; ``None`` accepts any count
+_ARITY = {
+    "contains": (2,),
+    "starts-with": (2,),
+    "ends-with": (2,),
+    "not": (1,),
+    "boolean": (1,),
+    "string": (0, 1),
+    "number": (0, 1),
+    "string-length": (0, 1),
+    "normalize-space": (0, 1),
+    "concat": None,
+    "translate": (3,),
+    "position": (0,),
+    "last": (0,),
+    "count": (1,),
+    "name": (0, 1),
+    "local-name": (0, 1),
+    "hasclass": (1,),
+    "re:test": (2, 3),
+    "re:match": (2, 3),
+}
+
+
+def _attribute_name(ast: Any) -> Optional[str]:
+    """``X`` when ``ast`` is the relative path ``@X`` alone."""
+    if ast[0] == "path" and not ast[1] and ast[3] is None and len(ast[2]) == 1:
+        _, axis, nodetest, predicates = ast[2][0]
+        if axis == "attribute" and nodetest[0] == "name" and not predicates:
+            return nodetest[1]
+    return None
+
+
+def _is_self_node(ast: Any) -> bool:
+    """``ast`` is ``.`` (``self::node()``) alone."""
+    return ast == ("path", False, [("step", "self", ("node",), [])], None)
+
+
+def _compile(ast: Any) -> Fn:
+    op = ast[0]
+    if op in ("num", "str"):
+        value = ast[1]
+        return lambda node, pos, size: value
+    if op in ("or", "and"):
+        return _compile_bool(ast)
+    if op == "cmp":
+        return _compile_cmp(ast[1], ast[2], ast[3])
+    if op == "union":
+        return _compile_union(ast[1])
+    if op == "path":
+        return _compile_path(ast)
+    if op == "func":
+        return _compile_func(ast[1], ast[2])
+    if op == "filtered":
+        return _compile_filtered(ast[1], ast[2])
+    if op == "arith":
+        left, right = _compile(ast[2]), _compile(ast[3])
+        if ast[1] == "+":
+            return lambda node, pos, size: _to_number(left(node, pos, size)) + _to_number(right(node, pos, size))
+        return lambda node, pos, size: _to_number(left(node, pos, size)) - _to_number(right(node, pos, size))
+    raise XPathError(f"Bad AST node {op!r}")
+
+
+def _compile_bool(ast: Any) -> Fn:
+    """``_to_bool`` of ``ast``'s value; every closure returns a bool."""
+    op = ast[0]
+    if op in ("or", "and"):
+        left, right = _compile_bool(ast[1]), _compile_bool(ast[2])
         if op == "or":
-            return _to_bool(self.eval(ast[1], node, pos, size)) or _to_bool(self.eval(ast[2], node, pos, size))
-        if op == "and":
-            return _to_bool(self.eval(ast[1], node, pos, size)) and _to_bool(self.eval(ast[2], node, pos, size))
-        if op == "cmp":
-            return self.eval_cmp(ast[1], self.eval(ast[2], node, pos, size), self.eval(ast[3], node, pos, size))
-        if op == "union":
-            merged: List[XNode] = []
-            for sub in ast[1]:
-                res = self.eval(sub, node, pos, size)
-                if not isinstance(res, list):
-                    raise XPathError("Union of non-node-sets")
-                merged.extend(res)
-            return _document_sort(merged)
-        if op == "path":
-            return self.eval_path(ast, node, pos, size)
-        if op == "func":
-            return self.eval_func(ast[1], ast[2], node, pos, size)
-        if op == "filtered":
-            base = self.eval(ast[1], node, pos, size)
-            if not isinstance(base, list):
-                raise XPathError("Predicates on non-node-set")
-            return self.apply_predicates(base, ast[2])
-        if op == "arith":
-            a = _to_number(self.eval(ast[2], node, pos, size))
-            b = _to_number(self.eval(ast[3], node, pos, size))
-            return a + b if ast[1] == "+" else a - b
-        raise XPathError(f"Bad AST node {op!r}")
+            return lambda node, pos, size: left(node, pos, size) or right(node, pos, size)
+        return lambda node, pos, size: left(node, pos, size) and right(node, pos, size)
+    if op == "cmp" or (op == "func" and ast[1] in _BOOLEAN_FUNCS):
+        return _compile(ast)
+    if op == "path":
+        name = _attribute_name(ast)
+        if name is not None:
+            return lambda node, pos, size: (
+                isinstance(node, Element) and not isinstance(node, Comment) and name in node.attrib
+            )
+        path = _compile(ast)
+        return lambda node, pos, size: bool(path(node, pos, size))
+    value = _compile(ast)
+    return lambda node, pos, size: _to_bool(value(node, pos, size))
 
-    def eval_cmp(self, op: str, left: Any, right: Any) -> bool:
-        def cmp_scalar(a: Any, b: Any) -> bool:
-            if op in ("<", ">", "<=", ">="):
-                a, b = _to_number(a), _to_number(b)
-                return {"<": a < b, ">": a > b, "<=": a <= b, ">=": a >= b}[op]
-            if isinstance(a, float) or isinstance(b, float):
-                a, b = _to_number(a), _to_number(b)
-            elif isinstance(a, bool) or isinstance(b, bool):
-                a, b = _to_bool(a), _to_bool(b)
-            else:
-                a, b = _to_string(a), _to_string(b)
-            return a == b if op == "=" else a != b
 
-        lset = left if isinstance(left, list) else None
-        rset = right if isinstance(right, list) else None
-        if lset is not None and rset is not None:
-            lvals = {xpath_string_value(n) for n in lset}
-            return any(cmp_scalar(lv, xpath_string_value(rn)) for lv in lvals for rn in rset)
-        if lset is not None:
-            return any(cmp_scalar(xpath_string_value(n), right) for n in lset)
-        if rset is not None:
-            return any(cmp_scalar(left, xpath_string_value(n)) for n in rset)
-        return cmp_scalar(left, right)
+def _compile_string(ast: Any) -> Fn:
+    """``_to_string`` of ``ast``'s value."""
+    if ast[0] == "str":
+        value = ast[1]
+        return lambda node, pos, size: value
+    name = _attribute_name(ast)
+    if name is not None:
+        return lambda node, pos, size: (
+            node.attrib.get(name, "") if isinstance(node, Element) and not isinstance(node, Comment) else ""
+        )
+    if _is_self_node(ast):
+        return lambda node, pos, size: xpath_string_value(node)
+    value = _compile(ast)
+    return lambda node, pos, size: _to_string(value(node, pos, size))
 
-    # --- paths -----------------------------------------------------------
-    def eval_path(self, ast: Any, node: XNode, pos: int, size: int) -> List[XNode]:
-        _, absolute, steps, base = ast
-        if base is not None:
-            current = self.eval(base, node, pos, size)
+
+def _compile_cmp(op: str, left_ast: Any, right_ast: Any) -> Fn:
+    name = _attribute_name(left_ast)
+    if name is not None and op in ("=", "!=") and right_ast[0] == "str":
+        # the attribute step yields at most one node: @name = 'lit' is
+        # one dict lookup, and != needs the attribute present
+        literal = right_ast[1]
+        if op == "=":
+            return lambda node, pos, size: (
+                isinstance(node, Element) and not isinstance(node, Comment) and node.attrib.get(name) == literal
+            )
+
+        def attribute_differs(node: XNode, pos: int, size: int) -> bool:
+            if isinstance(node, Element) and not isinstance(node, Comment):
+                value = node.attrib.get(name)
+                return value is not None and value != literal
+            return False
+
+        return attribute_differs
+    left, right = _compile(left_ast), _compile(right_ast)
+    return lambda node, pos, size: _compare(op, left(node, pos, size), right(node, pos, size))
+
+
+def _compile_union(paths: List[Any]) -> Fn:
+    members = [_compile(p) for p in paths]
+
+    def union(node: XNode, pos: int, size: int) -> List[XNode]:
+        merged: List[XNode] = []
+        for member in members:
+            res = member(node, pos, size)
+            if not isinstance(res, list):
+                raise XPathError("Union of non-node-sets")
+            merged.extend(res)
+        return _document_sort(merged)
+
+    return union
+
+
+def _compile_filtered(base_ast: Any, predicates: List[Any]) -> Fn:
+    base = _compile(base_ast)
+    keep = _compile_predicates(predicates)
+
+    def filtered(node: XNode, pos: int, size: int) -> List[XNode]:
+        nodes = base(node, pos, size)
+        if not isinstance(nodes, list):
+            raise XPathError("Predicates on non-node-set")
+        return keep(nodes) if keep is not None else nodes
+
+    return filtered
+
+
+def _walk(current: List[XNode], steps: Sequence[Step]) -> List[XNode]:
+    for one, ordered in steps:
+        if len(current) == 1:
+            current = one(current[0])
+            if not ordered and len(current) > 1:
+                current = _document_sort(current)
+        else:
+            results: List[XNode] = []
+            for ctx in current:
+                results.extend(one(ctx))
+            current = results if len(results) < 2 else _document_sort(results)
+    return current
+
+
+def _compile_path(ast: Any) -> Fn:
+    _, absolute, step_asts, base_ast = ast
+    steps = [_compile_step(s) for s in step_asts]
+    if base_ast is not None:
+        base = _compile(base_ast)
+
+        def from_base(node: XNode, pos: int, size: int) -> List[XNode]:
+            current = base(node, pos, size)
             if not isinstance(current, list):
                 raise XPathError("Path base is not a node-set")
-        else:
-            if absolute:
-                root: XNode = node
-                while isinstance(root, Element) and root.getparent() is not None:
-                    root = root.getparent()  # type: ignore[assignment]
-                # XPath '/' is the DOCUMENT node sitting above <html>
-                # (lxml resolves '/html/body/...' that way); our tree
-                # root IS <html>, so wrap it in a virtual document node.
-                doc_node = Element("#document")
-                doc_node._children = [root]  # noqa: SLF001 — root keeps _parent=None
-                current = [doc_node]
-            else:
-                current = [node]
-        for step in steps:
-            current = self.eval_step(step, current)
-        return current
+            return _walk(current, steps)
 
-    def eval_step(self, step: Any, context: List[XNode]) -> List[XNode]:
-        _, axis, nodetest, predicates = step
-        results: List[XNode] = []
-        for ctx in context:
-            if axis == "attribute":
-                if isinstance(ctx, Element) and not isinstance(ctx, Comment):
-                    candidates: List[XNode] = [
-                        AttrNode(ctx, name, value)
-                        for name, value in ctx.attrib.items()
-                        if _node_test(AttrNode(ctx, name, value), axis, nodetest)
-                    ]
-                else:
-                    candidates = []
-            elif nodetest[0] == "text":
-                if axis == "child" and isinstance(ctx, Element):
-                    candidates = list(_text_nodes(ctx))
-                else:
-                    candidates = []
-            elif nodetest[0] == "node" and axis == "child" and isinstance(ctx, Element):
-                # node() spans elements, comments AND text children,
-                # interleaved in document order
-                candidates = []
-                if ctx.text:
-                    candidates.append(TextNode(ctx, ctx.text, 0))
-                for i, child in enumerate(ctx._children, start=1):  # noqa: SLF001
-                    candidates.append(child)
-                    if child.tail:
-                        candidates.append(TextNode(ctx, child.tail, i))
-            elif nodetest[0] == "name" and axis in ("descendant", "descendant-or-self"):
-                candidates = _descendants_named(ctx, nodetest[1], axis == "descendant-or-self")
-            else:
-                candidates = [n for n in _axis_nodes(ctx, axis) if _node_test(n, axis, nodetest)]
-            filtered = self.apply_predicates(candidates, predicates)
-            results.extend(filtered)
-        if len(results) < 2 or (len(context) == 1 and axis in _ORDERED_AXES):
-            return results
-        return _document_sort(results)
+        return from_base
+    if absolute:
 
-    def apply_predicates(self, nodes: List[XNode], predicates: List[Any]) -> List[XNode]:
-        current = nodes
-        for pred in predicates:
-            size = len(current)
-            kept: List[XNode] = []
-            for idx, n in enumerate(current, start=1):
-                value = self.eval(pred, n, idx, size)
-                if isinstance(value, float):
-                    if value == idx:
-                        kept.append(n)
-                elif _to_bool(value):
-                    kept.append(n)
-            current = kept
-        return current
+        def from_root(node: XNode, pos: int, size: int) -> List[XNode]:
+            root: XNode = node
+            while isinstance(root, Element) and root.getparent() is not None:
+                root = root.getparent()  # type: ignore[assignment]
+            # XPath '/' is the DOCUMENT node sitting above <html> (lxml
+            # resolves '/html/body/...' that way); our tree root IS
+            # <html>, so wrap it in a virtual document node.
+            doc_node = Element("#document")
+            doc_node._children = [root]  # noqa: SLF001 — root keeps _parent=None
+            return _walk([doc_node], steps)
 
-    # --- functions ---------------------------------------------------------
-    def eval_func(self, name: str, args: List[Any], node: XNode, pos: int, size: int) -> Any:
-        def ev(i: int) -> Any:
-            return self.eval(args[i], node, pos, size)
+        return from_root
+    if len(steps) == 1:
+        one, ordered = steps[0]
+        if ordered:
+            return lambda node, pos, size: one(node)
 
-        if name == "contains":
-            return _to_string(ev(0)).__contains__(_to_string(ev(1)))
-        if name == "starts-with":
-            return _to_string(ev(0)).startswith(_to_string(ev(1)))
-        if name == "ends-with":
-            return _to_string(ev(0)).endswith(_to_string(ev(1)))
-        if name == "not":
-            return not _to_bool(ev(0))
-        if name == "boolean":
-            return _to_bool(ev(0))
-        if name == "string":
-            if not args:
-                return xpath_string_value(node)
-            return _to_string(ev(0))
-        if name == "number":
-            return _to_number(ev(0)) if args else _to_number(xpath_string_value(node))
-        if name == "string-length":
-            return float(len(_to_string(ev(0)) if args else xpath_string_value(node)))
-        if name == "normalize-space":
-            return _xpath_normalize_space(_to_string(ev(0)) if args else xpath_string_value(node))
-        if name == "concat":
-            return "".join(_to_string(ev(i)) for i in range(len(args)))
-        if name == "translate":
-            s, frm, to = _to_string(ev(0)), _to_string(ev(1)), _to_string(ev(2))
-            table = {}
-            for i, ch in enumerate(frm):
-                if ch not in table:  # first occurrence wins (XPath 1.0 §4.2)
-                    table[ch] = to[i] if i < len(to) else None
-            return "".join(table.get(ch, ch) for ch in s if table.get(ch, ch) is not None)
-        if name == "position":
-            return float(pos)
-        if name == "last":
-            return float(size)
-        if name == "count":
-            val = ev(0)
-            if not isinstance(val, list):
-                raise XPathError("count() expects a node-set")
-            return float(len(val))
-        if name == "name" or name == "local-name":
-            if args:
-                val = ev(0)
-                if isinstance(val, list) and val:
-                    target = val[0]
-                else:
-                    return ""
-            else:
-                target = node
-            if isinstance(target, AttrNode):
-                return target.name
-            if isinstance(target, Element) and not isinstance(target, Comment):
-                return target.tag
-            return ""
-        if name == "hasclass":
-            # extension: CSS class-token membership on the context node
-            cls = _to_string(ev(0))
-            return isinstance(node, Element) and cls in node.classes()
-        if name in ("re:test", "re:match"):
-            input_str = _to_string(ev(0))
-            pattern = _to_string(ev(1))
-            flags_str = _to_string(ev(2)) if len(args) > 2 else ""
-            flags = 0
-            if "i" in flags_str:
-                flags |= re.IGNORECASE
-            if "s" in flags_str:
-                flags |= re.DOTALL
-            if "m" in flags_str:
-                flags |= re.MULTILINE
-            match = re.search(pattern, input_str, flags)
-            if name == "re:test":
-                return match is not None
-            # EXSLT re:match returns a node-set: whole match + one node
-            # per capture group (e.g. BR's image-credit selector
-            # re:match(./@title, '(?<=\|\sBild:\s).*$'))
-            if match is None:
+        def single_step(node: XNode, pos: int, size: int) -> List[XNode]:
+            nodes = one(node)
+            return nodes if len(nodes) < 2 else _document_sort(nodes)
+
+        return single_step
+    return lambda node, pos, size: _walk([node], steps)
+
+
+def _compile_step(step: Any) -> Step:
+    _, axis, nodetest, predicates = step
+    kind = nodetest[0]
+    name = nodetest[1] if kind == "name" else None
+    candidates: Callable[[XNode], List[XNode]]
+    if axis == "attribute":
+        if kind == "name":
+
+            def candidates(ctx: XNode) -> List[XNode]:
+                if isinstance(ctx, Element) and not isinstance(ctx, Comment) and name in ctx.attrib:
+                    return [AttrNode(ctx, name, ctx.attrib[name])]
                 return []
-            owner = node if isinstance(node, Element) else getattr(node, "owner", node)
-            return [TextNode(owner, g) for g in (match.group(0), *match.groups()) if g is not None]
+
+        else:
+
+            def candidates(ctx: XNode) -> List[XNode]:
+                if isinstance(ctx, Element) and not isinstance(ctx, Comment):
+                    attrs = [AttrNode(ctx, k, v) for k, v in ctx.attrib.items()]
+                    return [a for a in attrs if _node_test(a, "attribute", nodetest)]
+                return []
+
+    elif kind == "text":
+        if axis == "child":
+            candidates = lambda ctx: _text_nodes(ctx) if isinstance(ctx, Element) else []  # noqa: E731
+        else:
+            candidates = lambda ctx: []  # noqa: E731
+    elif kind == "node" and axis == "child":
+        candidates = lambda ctx: _child_nodes(ctx) if isinstance(ctx, Element) else []  # noqa: E731
+    elif kind == "name" and axis in ("descendant", "descendant-or-self"):
+        or_self = axis == "descendant-or-self"
+        candidates = lambda ctx: _descendants_named(ctx, name, or_self)  # noqa: E731
+    elif kind == "name" and axis == "child":
+        # a name never starts with '#', so comments and PIs never match
+        candidates = lambda ctx: [c for c in ctx._children if c.tag == name] if isinstance(ctx, Element) else []  # noqa: E731, SLF001
+    elif kind == "node" and axis == "self":
+        candidates = lambda ctx: [ctx]  # noqa: E731
+    else:
+        candidates = lambda ctx: [n for n in _axis_nodes(ctx, axis) if _node_test(n, axis, nodetest)]  # noqa: E731
+    keep = _compile_predicates(predicates)
+    if keep is None:
+        return candidates, axis in _ORDERED_AXES
+    return (lambda ctx: keep(candidates(ctx))), axis in _ORDERED_AXES
+
+
+def _compile_predicates(predicates: List[Any]) -> Optional[NodeFilter]:
+    """One filter applying ``predicates`` in turn, or None for none."""
+    filters = [_compile_predicate(p) for p in predicates]
+    if not filters:
+        return None
+    if len(filters) == 1:
+        return filters[0]
+
+    def apply_all(nodes: List[XNode]) -> List[XNode]:
+        for keep in filters:
+            nodes = keep(nodes)
+        return nodes
+
+    return apply_all
+
+
+def _compile_predicate(predicate: Any) -> NodeFilter:
+    if predicate[0] == "num":
+        # [k] keeps the node at position k
+        k = predicate[1]
+        if k >= 1 and k == int(k):
+            i = int(k)
+            return lambda nodes: nodes[i - 1 : i]
+        return lambda nodes: []
+    if _is_order_free(predicate):
+        test = _compile_bool(predicate)
+        return lambda nodes: [n for n in nodes if test(n, 0, 0)]
+    value_of = _compile(predicate)
+
+    def positional(nodes: List[XNode]) -> List[XNode]:
+        size = len(nodes)
+        kept: List[XNode] = []
+        for idx, n in enumerate(nodes, start=1):
+            value = value_of(n, idx, size)
+            if isinstance(value, float):
+                if value == idx:
+                    kept.append(n)
+            elif _to_bool(value):
+                kept.append(n)
+        return kept
+
+    return positional
+
+
+def _compile_func(name: str, arg_asts: List[Any]) -> Fn:
+    if name not in _ARITY:
         raise XPathError(f"Unsupported function {name!r}")
+    allowed = _ARITY[name]
+    if allowed is not None and len(arg_asts) not in allowed:
+        raise XPathError(f"{name}() takes {' or '.join(map(str, allowed))} arguments, got {len(arg_asts)}")
+    if name == "position":
+        return lambda node, pos, size: float(pos)
+    if name == "last":
+        return lambda node, pos, size: float(size)
+    if name == "not":
+        inner = _compile_bool(arg_asts[0])
+        return lambda node, pos, size: not inner(node, pos, size)
+    if name == "boolean":
+        return _compile_bool(arg_asts[0])
+    if name == "count":
+        nodes_of = _compile(arg_asts[0])
+
+        def count(node: XNode, pos: int, size: int) -> float:
+            nodes = nodes_of(node, pos, size)
+            if not isinstance(nodes, list):
+                raise XPathError("count() expects a node-set")
+            return float(len(nodes))
+
+        return count
+    if name == "number":
+        if not arg_asts:
+            return lambda node, pos, size: _to_number(xpath_string_value(node))
+        value = _compile(arg_asts[0])
+        return lambda node, pos, size: _to_number(value(node, pos, size))
+    if name in ("name", "local-name"):
+        return _compile_name(arg_asts)
+    if name == "re:match":
+        return _compile_regex(arg_asts, True)
+    strings = [_compile_string(a) for a in arg_asts]
+    if name in ("string", "string-length", "normalize-space"):
+        text: Fn = strings[0] if strings else (lambda node, pos, size: xpath_string_value(node))
+        if name == "string":
+            return text
+        if name == "string-length":
+            return lambda node, pos, size: float(len(text(node, pos, size)))
+        return lambda node, pos, size: _xpath_normalize_space(text(node, pos, size))
+    if name == "concat":
+        return lambda node, pos, size: "".join([s(node, pos, size) for s in strings])
+    if name == "translate":
+        s, frm, to = strings
+        # evaluated in argument order: s, then frm, then to
+        return lambda node, pos, size: _translate(s(node, pos, size), frm(node, pos, size), to(node, pos, size))
+    if name == "hasclass":
+        # extension: CSS class-token membership on the context node
+        cls = strings[0]
+
+        def hasclass(node: XNode, pos: int, size: int) -> bool:
+            token = cls(node, pos, size)
+            return isinstance(node, Element) and token in node.classes()
+
+        return hasclass
+    if name == "re:test":
+        return _compile_regex(arg_asts, False)
+    haystack, needle = strings
+    method = {"contains": str.__contains__, "starts-with": str.startswith, "ends-with": str.endswith}[name]
+    return lambda node, pos, size: method(haystack(node, pos, size), needle(node, pos, size))
+
+
+def _compile_name(arg_asts: List[Any]) -> Fn:
+    value = _compile(arg_asts[0]) if arg_asts else None
+
+    def name_of(node: XNode, pos: int, size: int) -> str:
+        target = node
+        if value is not None:
+            nodes = value(node, pos, size)
+            if not (isinstance(nodes, list) and nodes):
+                return ""
+            target = nodes[0]
+        if isinstance(target, AttrNode):
+            return target.name
+        if isinstance(target, Element) and not isinstance(target, Comment):
+            return target.tag
+        return ""
+
+    return name_of
+
+
+def _compile_regex(arg_asts: List[Any], groups: bool) -> Fn:
+    """EXSLT ``re:test`` (a bool) or ``re:match`` (a node-set: the whole
+    match and one text node per capture group, e.g. BR's image-credit
+    selector ``re:match(./@title, '(?<=\\|\\sBild:\\s).*$')``), with
+    Python ``re`` semantics; flags ``i``, ``s`` and ``m``."""
+    subject, pattern, *flags = [_compile_string(a) for a in arg_asts]
+
+    def search(node: XNode, pos: int, size: int) -> Optional[re.Match]:
+        s = subject(node, pos, size)
+        p = pattern(node, pos, size)
+        return re.search(p, s, _regex_flags(flags[0](node, pos, size) if flags else ""))
+
+    if not groups:
+        return lambda node, pos, size: search(node, pos, size) is not None
+
+    def match(node: XNode, pos: int, size: int) -> List[XNode]:
+        m = search(node, pos, size)
+        if m is None:
+            return []
+        owner = node if isinstance(node, Element) else getattr(node, "owner", node)
+        return [TextNode(owner, g) for g in (m.group(0), *m.groups()) if g is not None]
+
+    return match
 
 
 class XPath:
-    """Compiled XPath expression. Call with a context Element."""
+    """An XPath expression compiled once into closures. Call with a
+    context node; returns a node list in document order, a string, a
+    number (float) or a bool."""
 
     def __init__(self, expr: str, namespaces: Optional[dict] = None):
         self.expr = expr
         self._ast = _Parser(expr).parse()
-        self._evaluator = _Evaluator(namespaces)
+        self._fn = _compile(self._ast)
 
     def __call__(self, node: Element) -> Any:
-        return self._evaluator.eval(self._ast, node, 1, 1)
+        return self._fn(node, 1, 1)
 
     def __repr__(self) -> str:
         return f"XPath({self.expr!r})"

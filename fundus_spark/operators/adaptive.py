@@ -52,15 +52,22 @@ partition id) lives in its locals. The door converts with one
 typed from the Spark schema, and cuts output batches at the session's
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, so a stage that
 explodes a row (WARC records, frame schedules) never builds an
-unbounded batch. Grouped stages (``applyInPandas``) see a whole group,
-not a row stream, and stay where they are. Rows built on the driver go
-the other way through :func:`local_rows`, as one Arrow table: that
-plans as a ``LocalRelation``, where a list of tuples plans as a
-``LogicalRDD`` whose one-task stage each reading job pays.
+unbounded batch. When a task's rows run out, the door drops the
+``zipimporter`` entries from ``sys.path_importer_cache``
+(:func:`_forget_zip_importers`): the next task on the reused worker
+starts with ``importlib.invalidate_caches()``, which would otherwise
+re-read ``pyspark.zip`` once per cached importer. Grouped stages
+(``applyInPandas``) see a whole group, not a row stream, and stay where
+they are. Rows built on the driver go the other way through
+:func:`local_rows`, as one Arrow table: that plans as a
+``LocalRelation``, where a list of tuples plans as a ``LogicalRDD``
+whose one-task stage each reading job pays.
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from itertools import islice
 from typing import Callable, Dict, Iterable, Iterator, Optional, Sequence, Tuple, Union
 
@@ -260,10 +267,28 @@ def map_rows(df: DataFrame, rows: Callable[[Iterator[tuple]], Iterator[tuple]], 
 
     def batches(it):
         out = rows(row for batch in it for row in zip(*[c.to_pylist() for c in batch.columns]))
-        while chunk := list(islice(out, size)):
-            yield _record_batch(chunk, schema)
+        try:
+            while chunk := list(islice(out, size)):
+                yield _record_batch(chunk, schema)
+        finally:
+            _forget_zip_importers()
 
     return df.mapInArrow(batches, schema)
+
+
+def _forget_zip_importers() -> None:
+    """Drop every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    A reused Python worker calls ``importlib.invalidate_caches()`` before
+    each task (pyspark ``worker_util.setup_spark_files``), and on CPython
+    3.11 that makes every cached ``zipimporter`` re-read its whole
+    archive directory: about 0.2 s of CPU per task for the importers
+    into ``pyspark.zip``. A dropped entry costs nothing to invalidate;
+    an import that needs it again gets a new importer from ``zipimport``'s
+    own directory cache. Modules already imported keep their loaders."""
+    cache = sys.path_importer_cache
+    for path in [p for p, finder in cache.items() if isinstance(finder, zipimport.zipimporter)]:
+        del cache[path]
 
 
 def local_rows(spark: SparkSession, rows: Iterable[tuple], schema: Union[StructType, str]) -> DataFrame:

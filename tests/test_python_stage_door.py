@@ -118,3 +118,86 @@ def test_media_frame_sample_rejects_a_nonpositive_step_at_plan_time(spark):
     finally:
         sc.setJobGroup("default", "")
     assert list(sc.statusTracker().getJobIdsForGroup("frame_sample_step")) == []
+
+
+def test_forget_zip_importers_drops_only_zip_entries(tmp_path):
+    """The helper the door runs after a task's rows: no ``zipimporter``
+    stays cached, a module from the zip still imports, and every other
+    cached finder is the same object as before."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from fundus_spark.operators.adaptive import _forget_zip_importers
+
+    archive = tmp_path / "zipped_mods.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zipdoor_pkg/__init__.py", "")
+        zf.writestr("zipdoor_pkg/first.py", "VALUE = 1\n")
+        zf.writestr("zipdoor_pkg/second.py", "VALUE = 2\n")
+    sys.path.insert(0, str(archive))
+    try:
+        assert importlib.import_module("zipdoor_pkg.first").VALUE == 1
+        cache = sys.path_importer_cache
+        assert any(isinstance(f, zipimport.zipimporter) for f in cache.values())
+        others = {p: f for p, f in cache.items() if not isinstance(f, zipimport.zipimporter)}
+        _forget_zip_importers()
+        assert not any(isinstance(f, zipimport.zipimporter) for f in cache.values())
+        assert {p: f for p, f in cache.items() if p in others} == others
+        assert importlib.import_module("zipdoor_pkg.second").VALUE == 2
+        del sys.modules["zipdoor_pkg.first"]
+        assert importlib.import_module("zipdoor_pkg.first").VALUE == 1
+    finally:
+        sys.path.remove(str(archive))
+        for name in [m for m in sys.modules if m.startswith("zipdoor_pkg")]:
+            del sys.modules[name]
+        _forget_zip_importers()
+
+
+_ZIP_CACHE_JOB = """
+import json, os, sys, zipimport
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from fundus_spark.operators.adaptive import map_rows
+from fundus_spark.plans import build_session
+
+def cached_zip_importers(rows):
+    n = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+    for (i,) in rows:
+        yield i, n, os.getpid()
+
+spark = build_session(app_name="zip-cache", cores=1, shuffle_partitions=1)
+schema = StructType([StructField("i", LongType()), StructField("n", IntegerType()), StructField("pid", LongType())])
+rows = map_rows(spark.range(0, 3, 1, 3), cached_zip_importers, schema).collect()
+print(json.dumps(sorted(tuple(r) for r in rows)))
+spark.stop()
+"""
+
+
+def test_reused_worker_starts_each_task_without_zip_importers(tmp_path):
+    """A ``local[1]`` session runs a three-partition ``map_rows`` job on
+    one reused Python worker. Each task records how many zipimporters
+    are cached when its rows start: the second and third task see none,
+    because the door dropped them when the task before ran out of rows,
+    so the worker's ``importlib.invalidate_caches()`` re-read no archive.
+    The check is vacuous where the workers do not import pyspark from a
+    zip (``$SPARK_HOME/python/lib/pyspark.zip``)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = str(PACKAGE.parent)
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]),
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", _ZIP_CACHE_JOB], env=env, cwd=str(tmp_path), capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    rows = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert [i for i, _, _ in rows] == [0, 1, 2]
+    assert len({pid for _, _, pid in rows}) == 1  # one reused worker
+    assert [n for _, n, _ in rows][1:] == [0, 0]
